@@ -109,7 +109,7 @@ object Bench {
     // Profiling mode: per-query Spark JOB counts (the driver-host cost model
     // is scheduling rounds, not row work — see AQE comment above). The
     // status store is fed asynchronously: drain the listener bus before
-    // each sample (the JobCount/PlanSpec technique) instead of a fixed
+    // each sample (the PlanSpec technique) instead of a fixed
     // sleep — under load the bus can still be posting >300 ms after a
     // query finishes, misattributing its tail jobs to the NEXT query's
     // delta (drainListenerBus's own doc calls the fixed sleep out).

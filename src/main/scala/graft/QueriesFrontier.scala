@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.functions.Geo
 import graft.Queries._
 
 /** Registry chunk of [[Queries.all]] — round-10+ waves: graph frontier ops, sequence patterns, table diff, recall certifications, gzip ingest, SQL-surface end-to-end, and later additions.

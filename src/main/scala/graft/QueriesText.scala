@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.functions.Geo
 import graft.Queries._
 
 /** Registry chunk of [[Queries.all]] — text-analysis family part 1: quality, language, tokenization/BPE, fingerprinting, contamination, PII, curation pipelines, mixing, web curation.
@@ -264,9 +262,7 @@ private[graft] object QueriesText {
       // positives are killed by an exact verify join over the flagged
       // sliver only, so the output EQUALS the exact contamination scores —
       // the sketch accelerates the plan but no longer appears in the
-      // answer, and the oracle is the same SQL as txt_contamination. The
-      // raw one-sided upper-bound form (contaminationFlagsBloom) remains
-      // ScalaTest-proven (no-false-negative containment in TextPipelineSpec).
+      // answer, and the oracle is the same SQL as txt_contamination.
       (s, d) => {
         val docs = t(s, d, "documents")
         Dedup.contaminationScoresBloomVerified(docs, docs.where(col("doc_id") % 37 === 0),

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.ops.Lineage._
-import graft.functions.Geo
 import graft.Queries._
 
 /** Registry chunk of [[Queries.all]] — text-analysis family part 2: record linkage, graph ops over link/text corpora, vocab/LM scoring, C4 filters, dedup registry entries, privacy, batch pipelines.

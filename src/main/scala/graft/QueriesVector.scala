@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.Queries._
@@ -138,8 +137,8 @@ private[graft] object QueriesVector {
       // even neighbor for odd values — so the real 36-way argmin the
       // operator runs has the closed form per dim
       //   q(v) = greatest(-4, least(6, v - abs(v % 2)))
-      // which is what the oracle replays (pqTrain's Lloyd's trainer is
-      // exercised in SimilaritySpec; grid books keep the SQL analytic).
+      // which is what the oracle replays (SimilaritySpec runs the operators
+      // on k-means-trained books; grid books keep the SQL analytic).
       (s, d) => {
         val base = t(s, d, "embeddings").select(col("vec_id"), latticeVec.as("v"))
         val codes = Similarity.pqEncode(base, "vec_id", "v", pqGridBooks)

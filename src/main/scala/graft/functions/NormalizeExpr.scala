@@ -119,8 +119,6 @@ object NormalizeOps {
   private def mk(c: Column, mode: Int): Column =
     GraftBridge.column(NormalizeExpr(GraftBridge.expr(c), mode))
   def nfc(c: Column): Column = mk(c, NormalizeKernel.NFC)
-  def nfd(c: Column): Column = mk(c, NormalizeKernel.NFD)
   def nfkc(c: Column): Column = mk(c, NormalizeKernel.NFKC)
-  def nfkd(c: Column): Column = mk(c, NormalizeKernel.NFKD)
   def stripAccents(c: Column): Column = mk(c, NormalizeKernel.STRIP_ACCENTS)
 }

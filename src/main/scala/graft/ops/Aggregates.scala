@@ -22,9 +22,6 @@ object Aggregates {
     df.withColumn(rn, row_number().over(w)).where(col(rn) === 1).drop(rn)
   }
 
-  /** Op 17, pandas-faithful variant: any-wins (no ordering guarantee). */
-  def dedupAny(df: DataFrame, keys: Seq[String]): DataFrame = df.dropDuplicates(keys)
-
   /** MERGE/upsert semantics relationally: rows of `updates` replace
     * same-key rows of `base`; unmatched update rows insert. One anti-join
     * + one union — the last-write-wins half of a MERGE statement (the

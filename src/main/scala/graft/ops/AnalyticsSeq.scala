@@ -26,10 +26,6 @@ trait AnalyticsSeqOps extends AnalyticsBase {
       .drop(flagN)
   }
 
-  /** Timestamp-typed convenience wrapper (second granularity). */
-  def sessionize(df: DataFrame, key: Column, ts: Column, gapSeconds: Long): DataFrame =
-    sessionizeNumeric(df, key, unix_timestamp(ts), gapSeconds)
-
   /** Ordered funnel analysis: per entity, how far through the stage
     * sequence it progressed, where stage k counts only if its FIRST
     * occurrence is strictly after stage k-1's first occurrence (the

@@ -110,6 +110,11 @@ object Dedup {
     * verify derives doc sizes from its own per-doc sets (`size(_set)` in
     * [[jaccardVerifySets]]), so a signature-side count would be dead weight
     * shuffled with every row.
+    *
+    * The mh columns are INT, not the 4-char hex strings they once were, so
+    * the `sig` column a [[graft.streaming.Streaming.nearDupFilterSink]]
+    * store persists is `array<int>` (it was `array<string>`); stores
+    * written in the old format must be rebuilt.
     */
   def minhashSignatures(shingleTbl: DataFrame, idCol: String, numHashes: Int): DataFrame = {
     require(numHashes <= 8, "md5 yields 8 disjoint 16-bit slices")
@@ -138,21 +143,16 @@ object Dedup {
       .select(col(idCol), col("bb.band"), col("bb.bucket"))
   }
 
-  /** Candidate pairs (a < b) sharing at least one LSH bucket.
+  /** Candidate pairs (a < b) sharing at least one LSH bucket, with a
+    * bucket-width cap — the 100-TB form (`Int.MaxValue` disables the cap).
     *
     * The self-join is hinted sort-merge: both sides are the corpus-sized
     * bucket table, so a broadcast is never the right plan — but at bench SF
     * the static size estimator undercounts the derived side and would
     * broadcast it, which both breaks the 100-TB posture and costs a
-    * broadcast-build JOB per join (the r5 driver regression on the md5
-    * form was exactly these builds: 5 broadcast jobs across the LSH
-    * pipeline on a host where scheduling rounds, not rows, set the price).
-    */
-  def lshCandidatePairs(buckets: DataFrame, idCol: String): DataFrame =
-    lshCandidatePairsCapped(buckets, idCol, Int.MaxValue)
-
-  /** [[lshCandidatePairs]] with a bucket-width cap — the 100-TB form. A
-    * degenerate band value (empty-string fingerprints, boilerplate pages)
+    * broadcast-build JOB per join.
+    *
+    * A degenerate band value (empty-string fingerprints, boilerplate pages)
     * puts B docs in one bucket and the self-join emits B² candidate pairs:
     * at web scale a single 10⁷-doc bucket is 10¹⁴ pairs — the last
     * quadratic corner in the family. Buckets wider than `maxBucketSize`
@@ -522,7 +522,7 @@ object Dedup {
                                   signatures: DataFrame => DataFrame,
                                   buckets: DataFrame => DataFrame,
                                   threshold: Double,
-                                  maxBucketSize: Int = Int.MaxValue): DataFrame = {
+                                  maxBucketSize: Int): DataFrame = {
     val cand = lshCandidatePairsCapped(buckets(signatures(sh)), idCol, maxBucketSize)
     jaccardVerify(cand, sh, idCol, threshold)
   }
@@ -566,10 +566,8 @@ object Dedup {
     * corpus scale.
     */
   val SimhashBits = 60
-  private val SimhashHexChars = SimhashBits / 4 // one hex char per 4 bits
   private val SimhashChunks = 4
   private val SimhashChunkBits = SimhashBits / SimhashChunks
-  private val SimhashChunkMask = (1L << SimhashChunkBits) - 1
 
   /** 60-bit SimHash per doc over md5-hashed tokens (term-frequency weighted:
     * duplicate tokens count). Bit i of the hash is set iff the sum over
@@ -649,7 +647,7 @@ object Dedup {
   private def simhashPairsByChunks(sh: DataFrame, idCol: String,
                                    numChunks: Int, chunkBits: Int,
                                    maxHamming: Int,
-                                   maxBucketWidth: Int = Int.MaxValue): DataFrame = {
+                                   maxBucketWidth: Int): DataFrame = {
     val kept = capBuckets(chunkBuckets(sh, idCol, numChunks, chunkBits),
       Seq("k", "chunk"), maxBucketWidth)
     val a = kept.select(col("k"), col("chunk"), col(idCol).as("doc_a"), col("simhash").as("h_a"))
@@ -665,10 +663,6 @@ object Dedup {
       .where(col("hamming") <= lit(maxHamming))
       .distinct()
   }
-
-  /** Exact dedup (first-wins deterministic) — see also Aggregates.dedupFirst. */
-  def exactDedup(docs: DataFrame, textCol: String, orderCol: String): DataFrame =
-    Aggregates.dedupFirst(docs, Seq(textCol), Seq(col(orderCol).asc))
 
   /** Production SimHash: all 64 bits of `xxhash64(token)` directly — no
     * digest-to-hex parsing and no 60-bit portable-oracle ceiling — with
@@ -1120,56 +1114,6 @@ object Dedup {
         col("n_contaminated").cast("double") / col("n_shingles").cast("double"))
   }
 
-  /** [[contaminationScores]] at the scale where the benchmark shingle set no
-    * longer broadcasts exactly: the benchmark side collapses to a Bloom
-    * filter — a fixed ~1.44·log₂(1/fpp) bits per distinct shingle (~14 bits
-    * at the 0.1% default) instead of the full strings, a 10-50× smaller
-    * broadcast — and the corpus probes it map-side with NO join and NO
-    * shuffle of the shingle table at all (the only exchange is the per-doc
-    * aggregation). The filter is one-sided by construction: every truly
-    * contaminated shingle is flagged (no false negatives — safe for
-    * decontamination, which must never *miss*), and false positives inflate
-    * the score by at most fpp in expectation, so `contamination_ub` is an
-    * upper bound on the exact fraction. The probe is a Scala UDF by
-    * necessity (no built-in bloom probe exists for a driver-built sketch);
-    * it sits on a linear scan stage where the codegen break costs far less
-    * than the exchange it removes.
-    *
-    * `expectedShingles` defaults to auto (-1): the filter is sized from an
-    * exact distinct count of the benchmark shingles — one extra pass over
-    * the benchmark (small) side, sharing its scan via persist — because an
-    * under-sized filter silently degrades the achieved fpp and the
-    * "inflated by at most fpp" bound above would no longer hold. Callers
-    * that already know the cardinality can pass it to skip the count.
-    *
-    * Broadcast lifetime: the filter is captured in the returned plan's UDF
-    * closure and stays on executors until Spark's ContextCleaner reclaims
-    * it after the last reference to the returned DataFrame is dropped. A
-    * long-lived session issuing many decontamination passes should drop
-    * those references promptly rather than accumulate plans.
-    */
-  def contaminationFlagsBloom(corpus: DataFrame, benchmark: DataFrame,
-                              idCol: String, textCol: String, shingleN: Int = 3,
-                              expectedShingles: Long = -1L,
-                              fpp: Double = 0.001): DataFrame = {
-    val spark = corpus.sparkSession
-    val distinctSh = shingleTable(benchmark, idCol, textCol, shingleN)
-      .select(col("shingle")).distinct()
-    val sized =
-      if (expectedShingles > 0) expectedShingles
-      else { distinctSh.persist(); math.max(1L, distinctSh.count()) }
-    val bf = distinctSh.stat.bloomFilter("shingle", sized, fpp)
-    distinctSh.unpersist() // bloomFilter is an action; the sketch is built
-    val bfB = spark.sparkContext.broadcast(bf)
-    val mightContain = udf((s: String) => s != null && bfB.value.mightContainString(s))
-    shingleTable(corpus, idCol, textCol, shingleN)
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_shingles"),
-        sum(when(mightContain(col("shingle")), 1L).otherwise(0L)).as("n_flagged"))
-      .withColumn("contamination_ub",
-        col("n_flagged").cast("double") / col("n_shingles").cast("double"))
-  }
-
   /** Incremental near-dedup — the daily-batch shape: pair each INCOMING
     * doc against the HISTORICAL corpus without ever re-pairing history
     * against itself. Candidates come from a band-bucket equi-join of the
@@ -1213,7 +1157,7 @@ object Dedup {
         Seq("band", "bucket"), maxBucketSize)
       .select(col("band"), col("bucket"), col(idCol).as("doc_new"))
     // both bucket tables are corpus-sized derivations — merge-hinted for
-    // the same reason as lshCandidatePairs (broadcast is wrong at scale)
+    // the same reason as lshCandidatePairsCapped (broadcast is wrong at scale)
     val cand = bNew.join(bOld.hint("merge"), Seq("band", "bucket"))
       .select("doc_new", "doc_old").distinct()
     // verify over both sides' shingles: rename to the jaccardVerify pair
@@ -1238,7 +1182,9 @@ object Dedup {
     incoming.join(pairs.select(col("doc_new").as(idCol)), Seq(idCol), "left_anti")
 
   /** EXACT contamination scores at beyond-broadcast benchmark scale: the
-    * Bloom prefilter of [[contaminationFlagsBloom]] followed by an exact
+    * benchmark shingle set collapses to a driver-built Bloom filter (~14
+    * bits per distinct shingle at the 0.1% default fpp, a 10-50× smaller
+    * broadcast than the strings), probed map-side, followed by an exact
     * verify join that kills its false positives — the production
     * decontamination shape. One pass over the corpus shingle stream
     * computes, per doc, the total shingle count AND the (tiny) list of

@@ -35,9 +35,6 @@ object Joins {
   def antiJoin(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame =
     left.join(right, keys, "left_anti")
 
-  def semiJoin(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame =
-    left.join(right, keys, "left_semi")
-
   /** Op 16 — spatial radius θ-join, the reference's flagship analytic
     * ("deaths within 10 km of a power plant", docs/Report.md:85-89).
     *

@@ -71,36 +71,15 @@ object Lineage {
       }
     }
 
-  // Per-trigger/transient loops opt OUT of durable mode ([[forceLocal]]):
-  // a streaming sink's in-batch cluster resolution re-runs wholly with its
-  // trigger on failure, so reliable files buy nothing — and a stream's
-  // lifetime is unbounded, so per-trigger reliable files (never freed;
-  // freeCheckpoint is a no-op on them) would grow storage without bound.
-  private val forceLocalFlag = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
-  /** Run `body` with every [[DatasetCheckpointOps.graftCheckpoint]] on THIS
-    * thread pinned to `localCheckpoint`, knob or no knob — for transient
-    * per-trigger truncations whose durability window is their own trigger.
-    * Plan construction (where graftCheckpoint runs) is single-threaded per
-    * caller, so a thread-local covers the loops it wraps.
-    */
-  def forceLocal[A](body: => A): A = {
-    val prev = forceLocalFlag.get()
-    forceLocalFlag.set(java.lang.Boolean.TRUE)
-    try body finally forceLocalFlag.set(prev)
-  }
-
   implicit final class DatasetCheckpointOps[T](private val ds: Dataset[T]) extends AnyVal {
     /** `localCheckpoint(eager)` by default; reliable `checkpoint(eager)`
-      * into [[CheckpointDirKey]] when the knob is set (unless inside
-      * [[forceLocal]]). Same eagerness contract as the methods it fronts:
+      * into [[CheckpointDirKey]] when the knob is set. Same eagerness
+      * contract as the methods it fronts:
       * eager runs the truncation job now, lazy defers it to the first
       * action (the loops' convergence `count()` is that action).
       */
     def graftCheckpoint(eager: Boolean = true): Dataset[T] =
-      reliableDir(ds.sparkSession).filter(_ => !forceLocalFlag.get()) match {
+      reliableDir(ds.sparkSession) match {
         case None => ds.localCheckpoint(eager)
         case Some(dir) =>
           val sc = ds.sparkSession.sparkContext

@@ -599,11 +599,7 @@ final class ManifestTable private (
               parentGuard = Some(base)) match {
             case Some(nv) => return nv
             case None =>
-              try fs.delete(new Path(dataDir, dir), /* recursive = */ true)
-              catch { case scala.util.control.NonFatal(e) =>
-                System.err.println(s"ManifestTable $rootStr: best-effort cleanup of " +
-                  s"conflict-losing compaction dir $dir failed (vacuum will collect it): ${e.getMessage}")
-              }
+              bestEffortDelete(dir, "conflict-losing compaction dir")
               attempt += 1
               if (attempt > maxRetries) failRetries(maxRetries)
               Thread.sleep(RetrySleepMs * attempt)
@@ -739,9 +735,6 @@ final class ManifestTable private (
 
   // ------------------------------------------------------------ internals
 
-  /** Writes a batch to a fresh dir with NO stats pass (used for merge's
-    * scratch materialization of the update batch).
-    */
   /** Best-effort delete of a data-dir that NO manifest references: a
     * transient FS error collecting an orphan must never abort an operation
     * whose real work already succeeded — the orphan stays vacuum's to
@@ -760,11 +753,13 @@ final class ManifestTable private (
       s"ManifestTable $rootStr: append schema [$ddl] does not match table " +
         s"schema [${prev.schemaDdl}] — schema evolution is not supported; use overwrite")
 
-  /** `prefix` distinguishes SCRATCH dirs (merge/delete single-execution
-    * staging — consumed by the same operation, never referenced by a
-    * manifest) from committed data dirs: [[vacuum]] grants scratch dirs a
-    * longer grace so a long-running merge cannot have its staging deleted
-    * mid-read (see [[ScratchVacuumGraceMs]]).
+  /** Writes a batch to a fresh dir with NO stats pass (used for merge's
+    * scratch materialization of the update batch). `prefix` distinguishes
+    * SCRATCH dirs (merge/delete single-execution staging — consumed by the
+    * same operation, never referenced by a manifest) from committed data
+    * dirs: [[vacuum]] grants scratch dirs a longer grace so a long-running
+    * merge cannot have its staging deleted mid-read (see
+    * [[ScratchVacuumGraceMs]]).
     */
   private def writeRaw(df: DataFrame, prefix: String = ""): String = {
     val dir = prefix + java.util.UUID.randomUUID().toString
@@ -968,7 +963,7 @@ final class ManifestTable private (
             if (mn == NullMark) None else Some(dec(mn)),
             if (mx == NullMark) None else Some(dec(mx)),
             hn.toBoolean))
-        case other => sys.error(s"ManifestTable $rootStr: v$v bad dirstat line '$l'")
+        case _ => sys.error(s"ManifestTable $rootStr: v$v bad dirstat line '$l'")
       }
     }.groupBy(_._1).map { case (d, rows) =>
       d -> rows.map(r => r._2 -> r._3).toMap
@@ -976,7 +971,7 @@ final class ManifestTable private (
     val txns = lines.toSeq.collect {
       case l if l.startsWith("txn=") => l.substring(4).split('|') match {
         case Array(sid, b) => dec(sid) -> b.toLong
-        case other => sys.error(s"ManifestTable $rootStr: v$v bad txn line '$l'")
+        case _ => sys.error(s"ManifestTable $rootStr: v$v bad txn line '$l'")
       }
     }.toMap
     Manifest(field("version").toLong, field("action"), dec(field("schema")),
@@ -1022,8 +1017,8 @@ object ManifestTable {
     * list the MERGE key(s) of the table to enable stats-pruned merges.
     * Stats cost one small aggregation per commit and only numeric-family
     * columns participate (see [[ManifestTable.isPrunableType]]).
-    */
-  /** `checkpointInterval`: every Nth commit writes the advisory `_ckpt`
+    *
+    * `checkpointInterval`: every Nth commit writes the advisory `_ckpt`
     * hint (0 disables). The default keeps cold starts at one read + <N
     * probes on long-lived tables.
     */

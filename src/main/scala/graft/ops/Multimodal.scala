@@ -2,31 +2,21 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column handling: image/audio/video payloads as opaque
   * `BinaryType` columns with typed metadata.
   *
-  * IMAGE decode, feature extraction, and resize are REAL: `javax.imageio`
-  * (PNG/JPEG/BMP/GIF) ships with the JDK, so [[decodeImageFeatures]] and
-  * [[resizeImages]] run actual codecs inside typed `Dataset.mapPartitions`
-  * — one iterator per partition, no driver involvement, the Scala analogue
-  * of `mapInPandas`. VIDEO pixel decode is REAL too (round 17):
-  * [[videoFrameFeatures]] decodes every sampled frame of animated-GIF and
-  * MJPEG containers through the same JDK codecs — the two motion formats
-  * expressible pure-JVM; an H.264-class codec would slot into the same
-  * sniff-and-decode seam. [[decodeFeatures]] remains as the byte-level
-  * FALLBACK for formats with no available codec (proprietary containers),
-  * and [[sampleFrames]]/[[resampleStub]] model the reshape without
-  * decoding.
+  * IMAGE decode and feature extraction are REAL: `javax.imageio`
+  * (PNG/JPEG/BMP/GIF) ships with the JDK, so [[decodeImageFeatures]] runs
+  * actual codecs inside typed `Dataset.mapPartitions` — one iterator per
+  * partition, no driver involvement, the Scala analogue of `mapInPandas`.
+  * VIDEO pixel decode is REAL too: [[videoFrameFeatures]] decodes every
+  * sampled frame of animated-GIF and MJPEG containers through the same JDK
+  * codecs — the two motion formats expressible pure-JVM; an H.264-class
+  * codec would slot into the same sniff-and-decode seam. [[sampleFrames]]
+  * models the reshape without decoding.
   */
 object Multimodal {
-
-  /** Typed metadata every payload carries. */
-  val metaSchema: StructType = StructType(Seq(
-    StructField("mime", StringType),
-    StructField("n_bytes", IntegerType),
-    StructField("checksum", StringType)))
 
   /** Wrap a string column as a binary payload with metadata — stands in for
     * reading real media bytes; pure expressions, codegen'd.
@@ -37,69 +27,6 @@ object Multimodal {
         lit(mime).as("mime"),
         octet_length(col(srcCol).cast("binary")).as("n_bytes"),
         md5(col(srcCol)).as("checksum")))
-
-  /** One decoded payload's features (the stub's output row type). */
-  final case class MediaFeatures(id: Long, n_bytes: Int, feat: Seq[Double])
-
-  /** Feature-extraction over payload batches via typed
-    * `Dataset.mapPartitions` — the Scala analogue of `mapInPandas`: one
-    * iterator per partition, vectorizable batch shape, no driver
-    * involvement. Typed (encoder-backed) rather than `.rdd` +
-    * `createDataFrame`: the plan stays Deserialize→MapPartitions→Serialize
-    * with column pruning intact up to the boundary and no `Row` boxing or
-    * `RDDScanExec` break in the middle.
-    *
-    * Byte-level form for payloads with NO JDK codec (video, proprietary
-    * formats): emits a deterministic 4-bucket byte histogram + length.
-    * For images use [[decodeImageFeatures]], which runs a real decoder.
-    */
-  def decodeFeatures(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          // NULL payload → empty features, never an NPE: the module's
-          // quarantine contract (a bad row must not kill the stage)
-          if (bytes == null) MediaFeatures(id, 0, Seq(0.0, 0.0, 0.0, 0.0))
-          else {
-            // STUB decode: byte-value histogram over 4 buckets, L1-normalized.
-            val hist = new Array[Double](4)
-            bytes.foreach(b => hist((b & 0xff) / 64) += 1.0)
-            val n = math.max(bytes.length, 1).toDouble
-            MediaFeatures(id, bytes.length, hist.map(_ / n).toSeq)
-          }
-        }
-      }
-      .toDF()
-  }
-
-  /** Resize/resample plumbing — the image-resize / audio-resample analog:
-    * keep every `factor`-th byte of the payload. The byte-decimation body is
-    * a deterministic STUB (a real scaler needs codec libraries this
-    * container lacks); the distributed shape — typed `mapPartitions`,
-    * encoder-backed, no driver involvement — is the real part, as with
-    * [[decodeFeatures]].
-    */
-  def resampleStub(df: DataFrame, idCol: String, factor: Int): DataFrame = {
-    require(factor >= 1)
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        // NULL payload → empty output (quarantine, don't crash)
-        if (bytes == null) (id, Array.emptyByteArray)
-        else {
-          val out = new Array[Byte]((bytes.length + factor - 1) / factor)
-          var i = 0
-          while (i < out.length) { out(i) = bytes(i * factor); i += 1 }
-          (id, out)
-        }
-      })
-      .toDF(idCol, "payload_resampled")
-  }
 
   /** One decoded image's features: dimensions, per-channel means, and a
     * 4-bucket luminance histogram (L1-normalized). `ok = false` rows carry
@@ -249,93 +176,6 @@ object Multimodal {
       .toDF()
   }
 
-  /** REAL image resize (area-averaging scaler, the right kernel for
-    * downscale) + PNG re-encode, partition-parallel. Undecodable payloads
-    * are dropped (flatMap) — the 100-TB ingest posture is "quarantine,
-    * don't crash"; pair with [[decodeImageFeatures]]'s `ok` flag to audit
-    * what was dropped.
-    *
-    * The scaler is a hand-rolled exact box filter (fractional source-pixel
-    * coverage weights) rather than `Image.getScaledInstance`: that API
-    * returns an ASYNCHRONOUSLY produced image, and `drawImage(..., null)`
-    * can return before production completes on some JDK pipelines —
-    * partially blank output, nondeterministically. This loop is
-    * synchronous, deterministic (fixed pixel order, double weights), and
-    * the correct kernel for arbitrary downscale ratios.
-    */
-  def resizeImages(df: DataFrame, idCol: String, outW: Int, outH: Int): DataFrame = {
-    require(outW >= 1 && outH >= 1)
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val img = decodeOrNull(bytes)
-          if (img == null) Iterator.empty
-          else {
-            val out = areaAverage(img, outW, outH)
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            Iterator.single((id, bos.toByteArray, outW, outH))
-          }
-        }
-      }
-      .toDF(idCol, "payload_resized", "width", "height")
-  }
-
-  /** Exact area-averaging downscale/upscale: output pixel (ox, oy) is the
-    * coverage-weighted mean of the source rectangle it maps onto, with
-    * fractional edge pixels weighted by their overlap area. Deterministic
-    * by construction.
-    */
-  private def areaAverage(src: java.awt.image.BufferedImage,
-                          outW: Int, outH: Int): java.awt.image.BufferedImage = {
-    val out = new java.awt.image.BufferedImage(outW, outH,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val sw = src.getWidth; val sh = src.getHeight
-    val xr = sw.toDouble / outW; val yr = sh.toDouble / outH
-    var oy = 0
-    while (oy < outH) {
-      val y0 = oy * yr; val y1 = (oy + 1) * yr
-      val syEnd = math.min(math.ceil(y1).toInt, sh)
-      var ox = 0
-      while (ox < outW) {
-        val x0 = ox * xr; val x1 = (ox + 1) * xr
-        val sxEnd = math.min(math.ceil(x1).toInt, sw)
-        var sr = 0.0; var sg = 0.0; var sb = 0.0; var area = 0.0
-        var sy = math.floor(y0).toInt
-        val sxStart = math.floor(x0).toInt
-        // per-scanline getRGB segment (the cellLuma8x8 discipline) — the
-        // source window per output pixel is a few pixels wide, but the
-        // per-pixel form still paid the ColorModel conversion per call
-        val rowLen = math.max(1, sxEnd - sxStart)
-        val rowBuf = new Array[Int](rowLen)
-        while (sy < syEnd) {
-          val wy = math.min(y1, sy + 1.0) - math.max(y0, sy.toDouble)
-          src.getRGB(sxStart, sy, rowLen, 1, rowBuf, 0, rowLen)
-          var sx = sxStart
-          while (sx < sxEnd) {
-            val wx = math.min(x1, sx + 1.0) - math.max(x0, sx.toDouble)
-            val rgb = rowBuf(sx - sxStart)
-            val w = wx * wy
-            sr += ((rgb >> 16) & 0xff) * w
-            sg += ((rgb >> 8) & 0xff) * w
-            sb += (rgb & 0xff) * w
-            area += w
-            sx += 1
-          }
-          sy += 1
-        }
-        def ch(s: Double): Int = math.max(0, math.min(255, math.round(s / area).toInt))
-        out.setRGB(ox, oy, (ch(sr) << 16) | (ch(sg) << 8) | ch(sb))
-        ox += 1
-      }
-      oy += 1
-    }
-    out
-  }
-
   /** One decoded audio payload's features. `ok = false` (with zeroed
     * fields) marks payloads that did not parse as WAV/PCM.
     */
@@ -445,58 +285,6 @@ object Multimodal {
       .toDF()
   }
 
-  /** REAL audio downsample by integer factor: decode WAV/PCM, keep every
-    * `factor`-th FRAME (all channels of it — frame-aligned, unlike naive
-    * byte decimation), re-encode WAV at rate/factor. Plain decimation
-    * (no low-pass) — documented aliasing tradeoff; the distributed shape
-    * and the codec are real. Undecodable payloads are dropped.
-    */
-  def downsampleAudio(df: DataFrame, idCol: String, factor: Int): DataFrame = {
-    require(factor >= 1)
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          try {
-            val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            val fmt = in.getFormat
-            // PCM only, like the decoders: the AudioFormat constructor
-            // below can only express PCM_(UN)SIGNED, so a ULAW/ALAW
-            // payload would have its companded bytes RE-LABELED as PCM —
-            // a syntactically valid, sonically garbage WAV. Quarantine it.
-            if (fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-                fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED)
-              throw new javax.sound.sampled.UnsupportedAudioFileException(
-                s"non-PCM encoding ${fmt.getEncoding}")
-            val frameSz = fmt.getFrameSize
-            val data = in.readAllBytes()
-            val nFrames = data.length / frameSz
-            val outFrames = (nFrames + factor - 1) / factor
-            val outData = new Array[Byte](outFrames * frameSz)
-            var f = 0
-            while (f < outFrames) {
-              System.arraycopy(data, f * factor * frameSz, outData, f * frameSz, frameSz)
-              f += 1
-            }
-            val outFmt = new javax.sound.sampled.AudioFormat(
-              fmt.getSampleRate / factor, fmt.getSampleSizeInBits, fmt.getChannels,
-              fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-              fmt.isBigEndian)
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.sound.sampled.AudioSystem.write(
-              new javax.sound.sampled.AudioInputStream(
-                new java.io.ByteArrayInputStream(outData), outFmt, outFrames.toLong),
-              javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-            Iterator.single((id, bos.toByteArray, outFmt.getSampleRate.toInt, outFrames.toLong))
-          } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
-        }
-      }
-      .toDF(idCol, "payload_resampled", "sample_rate", "n_frames")
-  }
-
   /** Big-endian 4-byte encoding of the LOW 32 bits of a value — the byte
     * order PNG/network formats use. The mask matters: `lpad` TRUNCATES to
     * the leftmost 8 hex chars, so an unmasked value ≥ 2³² (or negative)
@@ -522,7 +310,7 @@ object Multimodal {
     * `substring`/`hex`/`conv` expressions — codegen'd, linear, no UDF.
     * Non-PNG payloads (signature mismatch) yield null dims. This is the
     * header-metadata half of multimodal ingest that genuinely does not
-    * need a decoder; pixel work stays behind [[decodeFeatures]]'s stub.
+    * need a decoder; pixel work goes through [[decodeImageFeatures]].
     */
   def imageDims(df: DataFrame, payloadCol: String): DataFrame = {
     // length gate BEFORE the header parse: a payload truncated inside the
@@ -549,10 +337,9 @@ object Multimodal {
     * movie timescale/duration (`moov`→`mvhd`, version 0 and 1 layouts),
     * and the box inventory parse with pure byte arithmetic. This extends
     * the multimodal surface beyond image/audio to video CONTAINERS while
-    * staying honest: pixels still need a codec this container lacks
-    * ([[decodeFeatures]]' documented stub); header metadata genuinely does
-    * not. Partition-parallel `mapPartitions` like every decoder here;
-    * malformed payloads flag `ok = false` (with whatever fields parsed)
+    * staying honest: H.264-class pixels still need a codec the JDK lacks;
+    * header metadata does not. Partition-parallel `mapPartitions` like
+    * every decoder here; malformed payloads flag `ok = false` (with whatever fields parsed)
     * rather than failing the task.
     */
   def mp4Meta(df: DataFrame, idCol: String): DataFrame = {

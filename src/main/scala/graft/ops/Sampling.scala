@@ -39,15 +39,6 @@ object Sampling {
   /** Uniform bucket in [0, 100) from the row key. */
   def hashBucket(key: Column): Column = hashBucketMod(key, 100L)
 
-  /** Production form: xxhash64 bucket (codegen, no hex strings). */
-  def hashBucketFast(key: Column): Column = pmod(xxhash64(key.cast("string")), lit(100L))
-
-  /** Keep ~pct% of rows, deterministically by key. */
-  def sampleByHash(df: DataFrame, key: Column, pct: Int): DataFrame = {
-    require(pct >= 0 && pct <= 100)
-    df.where(hashBucket(key) < pct)
-  }
-
   /** Stratified deterministic sampling: per-stratum keep rates (percent),
     * rows in unlisted strata kept at `defaultPct`. One pass, pure filter.
     */

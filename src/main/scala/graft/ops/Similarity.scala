@@ -22,8 +22,6 @@ object Similarity {
     */
   def dot(a: Column, b: Column): Column = graft.functions.VectorOps.dotProduct(a, b)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** One-pass cosine similarity (identical arithmetic to dot/(|a||b|)). */
   def cosine(a: Column, b: Column): Column = graft.functions.VectorOps.cosineSim(a, b)
 
@@ -91,12 +89,6 @@ object Similarity {
             v => floor(v.cast("double") / col("scale") * 127 + 0.5).cast("int")))
           .as("q"),
         col("scale"))
-
-  /** Inverse of [[quantizeInt8]]: `x̂_i = q_i·scale/127` (max abs error
-    * scale/254 per component).
-    */
-  def dequantizeInt8(q: Column, scale: Column): Column =
-    transform(q, v => v.cast("double") * scale / 127)
 
   /** Brute-force top-k over int8-quantized vectors: both sides quantize via
     * [[quantizeInt8]], similarity is the quantized cosine
@@ -201,24 +193,12 @@ object Similarity {
     (-array_max(array(entries.toIndexedSeq: _*)).getField("nj")).cast("int")
   }
 
-  /** [[kmeansFit]] + assignment in one call: the corpus with a `cluster`
-    * column routed by the fitted centroids — exactly the shape
-    * [[ivfTopK]]'s `clusterCol` consumes. The assignment column is a lazy
-    * expression (no extra job beyond the fit's `iters + 1`).
-    */
-  def kmeansAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                   k: Int, iters: Int = 5, clusterCol: String = "cluster",
-                   seedKey: Column => Column = xxhash64(_)): DataFrame = {
-    val cents = kmeansFit(corpus, idCol, vecCol, k, iters, seedKey)
-    corpus.withColumn(clusterCol, nearestCentroid(col(vecCol), cents))
-  }
-
   /** IVF-style ANN: route each query to its `nprobe` nearest centroids, then
     * brute-force only within those clusters. The corpus never cross-joins the
     * query set — the join key is the cluster id, so cost is
     * |Q|·nprobe·avgClusterSize. Cluster assignments come from `clusterCol` —
-    * either a precomputed label or [[kmeansAssign]]'s fitted output (the
-    * end-to-end fresh-corpus path).
+    * either a precomputed label or [[nearestCentroid]] over [[kmeansFit]]'s
+    * centroids (the end-to-end fresh-corpus path).
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
               clusterCol: String, k: Int, nprobe: Int): DataFrame =
@@ -518,7 +498,7 @@ object Similarity {
         .map(p => col("bucket").bitwiseXOR(lit(1L << p)))): _*)
     val b = buckets.select(col("tbl"), explode(probes).as("bucket"), col(idCol).as("id_b"))
     // corpus-sized self-join: sort-merge, never a broadcast (same static-
-    // estimator trap and 100-TB argument as Dedup.lshCandidatePairs)
+    // estimator trap and 100-TB argument as Dedup.lshCandidatePairsCapped)
     a.join(b.hint("merge"), Seq("tbl", "bucket"))
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
@@ -600,29 +580,6 @@ object Similarity {
   // IVF-PQ/FAISS-scale billion-vector search. Codebooks are metadata-sized
   // (m·ksub·dsub doubles) and always travel as plan-time literals: the
   // corpus never shuffles for encoding or scoring.
-
-  /** Per-subspace codebooks for [[pqEncode]]/[[pqAdcTopK]]: `books(j)(c)`
-    * is sub-centroid `c` of subspace `j`, each of length `dims / books.length`.
-    * Trained with the same distributed Lloyd's as [[kmeansFit]], once per
-    * subspace over the sliced subvectors (m · (iters+1) bounded-output
-    * jobs; the corpus is scanned, never collected). L2 codebooks use
-    * mean-vector updates, so cosine-vs-L2 differences live only in the
-    * assignment step — [[kmeansFit]]'s argmax-cosine assignment is reused
-    * deliberately: PQ for cosine retrieval quantizes direction, and unit-
-    * normalizing upstream makes the two objectives coincide.
-    */
-  def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
-              m: Int, ksub: Int, dims: Int, iters: Int = 5,
-              seedKey: Column => Column = xxhash64(_)): Array[Array[Array[Double]]] = {
-    require(m >= 1 && dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
-    val dsub = dims / m
-    (0 until m).map { j =>
-      // array<float>: the contract of kmeansFit's VectorAvg update
-      val sub = corpus.select(col(idCol),
-        slice(col(vecCol), j * dsub + 1, dsub).cast("array<float>").as("_sub"))
-      kmeansFit(sub, idCol, "_sub", ksub, iters, seedKey)
-    }.toArray
-  }
 
   /** PQ encoding: `codes` = for each subspace, the index of the nearest
     * (squared-L2, ties → lowest index) codebook entry. Pure expression —

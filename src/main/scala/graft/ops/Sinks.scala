@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.broadcast
 
 /** Sink operators (SURVEY.md §2.5, ops 21-25).
   *
@@ -71,72 +70,6 @@ object Sinks {
       n
     } finally newRows.unpersist()
   }
-
-  /** Group-atomic parquet append: append `df` to `path` so that every
-    * distinct value of `groupCol` becomes visible ATOMICALLY — at any
-    * point (including mid-crash) a reader of `path` sees either ALL of a
-    * group's rows or NONE of them. Three steps make that true:
-    * (1) repartition on `groupCol`, so one data file holds each group's
-    * rows entirely; (2) stage the write in a sibling directory (readers
-    * of `path` never list it); (3) publish each finished data file into
-    * the table with a single `FileSystem.rename` — atomic per file on
-    * local/HDFS rename semantics. A crash mid-publish exposes only whole
-    * groups; the rest are absent entirely, so a consumer that keys its
-    * redelivery idempotence on "any visible row for this group"
-    * ([[graft.streaming.Streaming.annServeSink]]'s per-query contract) can
-    * never be tricked by a torn batch into skipping a half-written group
-    * forever. Orphaned staging directories from a crash sit OUTSIDE the
-    * table path and are invisible to readers; re-runs use fresh UUIDs, so
-    * they are inert garbage (cleaned by any later successful call against
-    * the same table, which best-effort sweeps its siblings' leftovers is
-    * intentionally NOT done — a concurrent writer's live staging dir is
-    * indistinguishable from an orphan; single-writer callers may sweep).
-    *
-    * At 100 TB the repartition is one shuffle of the BATCH (not the
-    * table), and the publish is O(#files) metadata renames — the same
-    * cost class as a commit-protocol job commit.
-    */
-  def groupAtomicAppend(
-      spark: SparkSession, df: DataFrame, path: String, groupCol: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val uuid = java.util.UUID.randomUUID().toString
-    val stagePath = s"$path-stage-$uuid"
-    // maxRecordsPerFile = 0 per-write: a session-level cap would split a
-    // large group across files, voiding the one-file-per-group invariant
-    // the whole publish protocol rests on
-    df.repartition(col(groupCol)).write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", 0).parquet(stagePath)
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dest)
-    val stage = new org.apache.hadoop.fs.Path(stagePath)
-    // publish only finished DATA files (skip _SUCCESS/.crc markers); the
-    // uuid prefix keeps names unique across batches sharing one table.
-    // rename reports most failures by RETURNING FALSE (quota, permission),
-    // not throwing — a dropped return value here would silently discard
-    // the group's rows when the stage dir is deleted below. Fail loudly
-    // instead: the staged file survives (delete is skipped by the throw)
-    // and the caller's redelivery re-serves the unpublished groups.
-    for (st <- fs.listStatus(stage) if st.isFile) {
-      val name = st.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        val target = new org.apache.hadoop.fs.Path(dest, s"$uuid-$name")
-        if (!fs.rename(st.getPath, target))
-          throw new java.io.IOException(
-            s"groupAtomicAppend: publish rename ${st.getPath} -> $target failed")
-      }
-    }
-    fs.delete(stage, /* recursive = */ true)
-    ()
-  }
-
-  /** Op 24 passthrough — the reference's relational store as a REAL JDBC
-    * write (global_dag.py:381-397 replays INSERTs against Postgres; here the
-    * batch lands in one distributed `df.write.jdbc`).
-    */
-  def jdbcSink(df: DataFrame, url: String, table: String,
-               props: java.util.Properties = new java.util.Properties()): Unit =
-    df.write.mode(SaveMode.Append).jdbc(url, table, props)
 
   /** Idempotent JDBC append: the same dedup + anti-join-on-key contract as
     * [[idempotentParquetAppend]] (`ON CONFLICT DO NOTHING` done

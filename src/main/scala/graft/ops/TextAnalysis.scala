@@ -516,8 +516,7 @@ object TextAnalysis {
     * on tf ties, so a tf=3 boilerplate term (df ≈ N) outranked a tf=2
     * rare term — the opposite of what "top TF-IDF terms" promises.
     * Log-idf reranking (which compresses the df axis but orders the same
-    * way for fixed tf) is the documented float-discipline trade;
-    * [[tfidfScore]] provides the float score for in-engine use.
+    * way for fixed tf) is the documented float-discipline trade.
     *
     * Shuffle shape at scale: explode → (doc,term) count (map-side partial),
     * term df (partial agg, auto-broadcast when vocab is small), one window
@@ -536,10 +535,6 @@ object TextAnalysis {
       .where(col("rank") <= k)
       .select(col(idCol), col("rank"), col("token"), col("tf"), col("df"))
   }
-
-  /** Smoothed TF-IDF: tf · (ln((N+1)/(df+1)) + 1). */
-  def tfidfScore(tf: Column, df: Column, nDocs: Column): Column =
-    tf.cast("double") * (log((nDocs.cast("double") + 1) / (df.cast("double") + 1)) + 1)
 
   /** Repetition signals (Gopher-style quality rules) over token n-grams,
     * keeping DUPLICATE occurrences (unlike the dedup shingle table):
@@ -590,8 +585,26 @@ object TextAnalysis {
     * in minhashNearDupPairs).
     */
   def substringDupStats(docs: DataFrame, idCol: String, textCol: String,
-                        windowTokens: Int = 8): DataFrame =
-    substringDupStatsKeyed(docs, idCol, textCol, windowTokens, identity)
+                        windowTokens: Int = 8): DataFrame = {
+    require(windowTokens >= 1)
+    val wins = docs.select(col(idCol), tokens(col(textCol)).as("_toks"))
+      .select(col(idCol),
+        posexplode(Dedup.gramsFromTokens(col("_toks"), windowTokens)).as(Seq("_p0", "w")))
+      .select(col(idCol), (col("_p0") + 1).cast("int").as("pos"), col("w"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val winCounts = wins.groupBy(col("w")).agg(count(lit(1)).as("_cnt"))
+    // window table × window counts: both corpus-sized — sort-merge, never
+    // a broadcast (the small-SF static estimator would otherwise build one
+    // and pay a driver job for a join shape that dies at 100 TB)
+    wins.join(winCounts.hint("merge"), Seq("w"))
+      .groupBy(col(idCol)).agg(
+        count(lit(1)).as("n_windows"),
+        sum(when(col("_cnt") > 1, 1L).otherwise(0L)).as("n_dup_windows"),
+        min(when(col("_cnt") > 1, col("pos"))).as("_first"))
+      .select(col(idCol), col("n_windows"), col("n_dup_windows"),
+        coalesce(col("_first"), lit(0)).cast("int").as("first_dup_pos"),
+        (col("n_dup_windows").cast("double") / col("n_windows").cast("double")).as("dup_frac"))
+  }
 
   /** Per-document n-gram NOVELTY against the stream so far: the fraction
     * of a doc's distinct shingles whose FIRST occurrence (by ascending
@@ -625,46 +638,6 @@ object TextAnalysis {
         coalesce(col("n_novel"), lit(0L)).as("n_novel"))
       .withColumn("novelty_millionths",
         expr("CAST(CASE WHEN n_shingles > 0 THEN 1000000 * n_novel div n_shingles END AS BIGINT)"))
-  }
-
-  /** [[substringDupStats]] with windows keyed by `xxhash64(window)` instead
-    * of the window string — the production form: the corpus-wide groupBy
-    * and join-back shuffle 8-byte keys instead of multi-hundred-byte token
-    * strings (a 10-50× exchange-volume cut at 100 TB). A 64-bit collision
-    * falsely marks a window duplicated with probability ~n²/2⁶⁴ — fine for
-    * *stats/filtering*; the span-removal APPLY path and the oracle-checked
-    * exact form key on the string itself. Equivalence on collision-free
-    * corpora is a ScalaTest property.
-    */
-  def substringDupStatsFast(docs: DataFrame, idCol: String, textCol: String,
-                            windowTokens: Int = 8): DataFrame =
-    substringDupStatsKeyed(docs, idCol, textCol, windowTokens, xxhash64(_))
-
-  /** The shared stats pipeline, parameterized by the corpus-wide grouping
-    * key (window string for the oracle-exact form, `xxhash64` for the
-    * production form) — one definition, like the `winnow` gram-hash
-    * parameterization.
-    */
-  private def substringDupStatsKeyed(docs: DataFrame, idCol: String, textCol: String,
-                                     windowTokens: Int, key: Column => Column): DataFrame = {
-    require(windowTokens >= 1)
-    val wins = docs.select(col(idCol), tokens(col(textCol)).as("_toks"))
-      .select(col(idCol),
-        posexplode(Dedup.gramsFromTokens(col("_toks"), windowTokens)).as(Seq("_p0", "w")))
-      .select(col(idCol), (col("_p0") + 1).cast("int").as("pos"), key(col("w")).as("wk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val winCounts = wins.groupBy(col("wk")).agg(count(lit(1)).as("_cnt"))
-    // window table × window counts: both corpus-sized — sort-merge, never
-    // a broadcast (the small-SF static estimator would otherwise build one
-    // and pay a driver job for a join shape that dies at 100 TB)
-    wins.join(winCounts.hint("merge"), Seq("wk"))
-      .groupBy(col(idCol)).agg(
-        count(lit(1)).as("n_windows"),
-        sum(when(col("_cnt") > 1, 1L).otherwise(0L)).as("n_dup_windows"),
-        min(when(col("_cnt") > 1, col("pos"))).as("_first"))
-      .select(col(idCol), col("n_windows"), col("n_dup_windows"),
-        coalesce(col("_first"), lit(0)).cast("int").as("first_dup_pos"),
-        (col("n_dup_windows").cast("double") / col("n_windows").cast("double")).as("dup_frac"))
   }
 
   /** The APPLY half of exact substring dedup: remove every duplicated
@@ -858,26 +831,12 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "y", "es")
   )
 
-  /** Fraction of tokens that are members of `words` (0.0 when no tokens). */
-  def stopwordRatio(text: Column, words: Seq[String]): Column = {
-    val toks = tokens(text)
-    val hits = size(filter(toks, t => t.isin(words.map(lit(_): Any): _*)))
-    when(size(toks) > 0, hits.cast("double") / size(toks).cast("double")).otherwise(lit(0.0))
-  }
-
-  /** Language-ID heuristic: argmax of per-language stopword hit counts, with a
-    * fixed preference order (en > de > fr > es > unknown) on ties.
-    *
-    * Column form — convenient but re-evaluates the tokenizer per hit-count
-    * reference; prefer [[languageGuessed]] on hot paths.
-    */
-  def languageGuess(text: Column): Column =
-    guessFromHits(h => size(filter(tokens(text), t => t.isin(stopwords(h).map(lit(_): Any): _*))))
-
-  /** DataFrame form: tokenizes once (or reuses `toksCol` if the caller
-    * already materialized tokens), materializes the four hit counts as
-    * attributes, then applies the argmax — each stage is a projection, so
-    * nothing is recomputed.
+  /** Language-ID heuristic: argmax of per-language stopword hit counts,
+    * with a fixed preference order (en > de > fr > es > unknown) on ties.
+    * Tokenizes once (or reuses `toksCol` if the caller already
+    * materialized tokens), materializes the four hit counts as attributes,
+    * then applies the argmax — each stage is a projection, so nothing is
+    * recomputed.
     */
   def languageGuessed(df: DataFrame, textCol: String, outCol: String = "guess",
                       toksCol: Option[String] = None): DataFrame = {

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
 
 /** Row-level transforms (SURVEY.md §2.2, ops 7-14). All pure column
   * expressions — codegen-friendly, no UDFs.
@@ -154,10 +153,6 @@ object Transforms {
   /** Op 13 — constant discriminator column (global_dag.py:206,213). */
   def tag(df: DataFrame, name: String, value: String): DataFrame =
     df.withColumn(name, lit(value))
-
-  /** Op 14 — JSON encode/decode of records (global_dag.py:104,125-126). */
-  def toJsonCol(cols: Seq[Column]): Column = to_json(struct(cols: _*))
-  def fromJsonCol(c: Column, schema: DataType): Column = from_json(c, schema)
 
   /** Wide→long unpivot (melt): one output row per (id, measure) pair via
     * `stack` — a generated projection, zero shuffles, linear. The inverse

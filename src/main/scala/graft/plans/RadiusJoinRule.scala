@@ -112,7 +112,7 @@ object RadiusJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(left, right, Cross | Inner, Some(cond), _) if !hasEquiCondition(left, right, cond) =>
       val hit = splitConjunctivePredicates(cond).collectFirst {
-        case p @ HaversinePredicate(lat1, lon1, lat2, lon2, r, twoR) if r > 0 && twoR > 0 &&
+        case HaversinePredicate(lat1, lon1, lat2, lon2, r, twoR) if r > 0 && twoR > 0 &&
             lat1.references.subsetOf(left.outputSet) && lon1.references.subsetOf(left.outputSet) &&
             lat2.references.subsetOf(right.outputSet) && lon2.references.subsetOf(right.outputSet) =>
           (lat1, lon1, lat2, lon2, r, twoR)
@@ -121,7 +121,7 @@ object RadiusJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         // its two points); without this case the rewrite silently declined
         // and the query ran as the full Cartesian product it was written
         // naively against
-        case p @ HaversinePredicate(lat1, lon1, lat2, lon2, r, twoR) if r > 0 && twoR > 0 &&
+        case HaversinePredicate(lat1, lon1, lat2, lon2, r, twoR) if r > 0 && twoR > 0 &&
             lat1.references.subsetOf(right.outputSet) && lon1.references.subsetOf(right.outputSet) &&
             lat2.references.subsetOf(left.outputSet) && lon2.references.subsetOf(left.outputSet) =>
           (lat2, lon2, lat1, lon1, r, twoR)

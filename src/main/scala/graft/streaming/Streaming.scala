@@ -1,18 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.ops.Sources
-
-/** Running aggregate carried in keyed stream state. */
-final case class UserStats(user_id: Long, n_events: Long, last_value: Double)
-
-/** One open session per key — the constant-size flatMapGroupsWithState state. */
-final case class OpenSession(user_id: Long, start_us: Long, last_us: Long, n_events: Long)
-
-/** A session emitted exactly once, when the gap after `end_us` is exceeded. */
-final case class ClosedSession(user_id: Long, start_us: Long, end_us: Long, n_events: Long)
 
 /** Structured Streaming restatement of the reference's incremental batch
   * machinery (SURVEY.md §2.6, ops 20-22):
@@ -25,8 +14,7 @@ final case class ClosedSession(user_id: Long, start_us: Long, end_us: Long, n_ev
   *  - `INSERT ... ON CONFLICT DO NOTHING` (global_dag.py:144) →
   *    `dropDuplicates` over a watermark-bounded id state.
   *
-  * Plus the windowed-aggregation surface the north star needs on the
-  * `events` table (tumbling windows, late-data watermarks).
+  * Plus the streaming near-dup filter behind the `op_stream_neardup` key.
   */
 object Streaming {
 
@@ -40,6 +28,14 @@ object Streaming {
     * together in time. Ids recurring beyond `lateness` apart are caught by
     * the exact at-rest layer (`Sinks.idempotentParquetAppend`), mirroring
     * the reference's split between the Redis ledger and the Postgres PK.
+    *
+    * An available-now run over one new file reports two triggers. The
+    * second is Spark's no-data micro-batch (`numInputRows` = 0): arrival
+    * time is `current_timestamp()`, so every restart advances the
+    * watermark, and Spark runs one more batch to evict expired dedup
+    * state. That batch still executes the stateful stage over every
+    * shuffle partition and commits its state: 0.7-0.9 s per restart with
+    * 8 shuffle partitions on a 4-core host, paid by every daily file.
     */
   def deathFileStream(spark: SparkSession, dir: String, lateness: String = "30 days"): DataFrame = {
     graft.Prep.ensure(spark)
@@ -58,333 +54,16 @@ object Streaming {
       .select("id", "date_of_birth", "date_of_death", "insee")
   }
 
-  /** Tumbling-window event counts with a late-data watermark — the streaming
-    * form of the batch `events_window` query. `ts` must be TimestampType.
-    */
-  def windowedEventCounts(events: DataFrame, windowLen: String, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      // THE batch twin's decimal sum (graft.Queries.dsum, same 18,2
-      // widths): double addition is not associative, so a raw double sum
-      // varies with partial-agg order — across triggers AND versus the
-      // batch result; calling the shared definition keeps the two from
-      // ever drifting
-      .agg(count(lit(1)).as("n"), graft.Queries.dsum(col("value"), 2).as("total_value"))
-      .select(col("window.start").as("w_start"), col("event_type"), col("n"), col("total_value"))
-
-  /** Watermarked streaming dedup by id — exactly-once-per-id within the
-    * lateness bound; state is pruned by the watermark, so memory is bounded
-    * regardless of stream length (the 100-TB-stream concern).
-    */
-  def dedupByIdWithWatermark(df: DataFrame, tsCol: String, watermark: String, idCols: String*): DataFrame = {
-    // loud contract error, not a bare NoSuchElementException from .head
-    // (the ManifestTable.mergeCore empty-keys discipline)
-    require(idCols.nonEmpty, "dedupByIdWithWatermark: at least one id column is required")
-    df.withWatermark(tsCol, watermark).dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
-  }
-
-  /** Session windows (gap-based) on a stream — the streaming form of
-    * Analytics.sessionizeNumeric, using the built-in session_window state
-    * machine: a session closes once the watermark passes lastEvent + gap.
-    */
-  def sessionWindowCounts(events: DataFrame, gap: String, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"), col("user_id"), col("n_events"))
-
-  /** Watermarked stream-stream inner join: each side keeps only
-    * `watermark`-bounded state, and the time-range condition
-    * (right.ts ∈ [left.ts, left.ts + joinWindow]) lets Spark expire buffered
-    * rows — the unbounded-state stream join made safe for 100-TB streams.
-    * Both sides must share the key column name `keyCol`.
-    */
-  def streamStreamJoin(left: DataFrame, right: DataFrame, keyCol: String,
-                       leftTs: String, rightTs: String,
-                       watermark: String, joinWindow: String): DataFrame = {
-    require(leftTs != rightTs, "timestamp columns must have distinct names")
-    require(keyCol != leftTs && keyCol != rightTs,
-      "the join key must not be a timestamp column")
-    // collision-safe helper name: a hardcoded "_rkey" would duplicate (or
-    // mis-resolve against) a caller column of the same name
-    val rk = s"__ssj_${keyCol}_r"
-    require(!left.columns.contains(rk) && !right.columns.contains(rk),
-      s"column name $rk is reserved by streamStreamJoin")
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark).withColumnRenamed(keyCol, rk)
-    l.join(r,
-        col(keyCol) === col(rk) &&
-          col(rightTs) >= col(leftTs) &&
-          col(rightTs) <= col(leftTs) + expr(s"interval $joinWindow"))
-      .drop(rk)
-  }
-
-  /** Stream-static enrichment join: a streaming fact joined to a bounded
-    * dimension, broadcast explicitly — per micro-batch this plans exactly
-    * like the batch broadcast lookup (op 15), so the stream side never
-    * shuffles and no join state accumulates (unlike stream-stream joins,
-    * a static side needs no watermark). The standard shape for decorating
-    * a 100-TB/day event stream with reference data.
-    */
-  def enrichStream(stream: DataFrame, dim: DataFrame, keyCol: String): DataFrame =
-    stream.join(broadcast(dim), Seq(keyCol), "left")
-
-  /** Stream → idempotent store bridge: lands every micro-batch through
-    * [[graft.ops.Sinks.idempotentParquetAppend]] (anti-join on `keys` before
-    * append), so the at-rest table holds exactly one row per key even when
-    * the stream re-delivers beyond the watermark horizon — checkpointed
-    * source progress (the file ledger) + keyed idempotence (the PK) is the
-    * reference's Redis + `ON CONFLICT DO NOTHING` split, end to end.
-    */
-  def idempotentStoreSink(df: DataFrame, path: String, keys: Seq[String],
-                          partitionBy: Seq[String] = Nil): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      graft.ops.Sinks.idempotentParquetAppend(batch.sparkSession, batch, path, keys, partitionBy)
-      ()
-    }
-
-  /** Streaming ANN index ingest — the continuous form of the
-    * `ann_index_incremental` batch key: each micro-batch's vectors are
-    * assigned to the FROZEN centroids (no refit in the hot path — refits
-    * are offline compaction events) and idempotent-appended to the
-    * cluster-partitioned index store keyed on the vector id, so an
-    * at-least-once upstream can never duplicate an index row and a
-    * replayed micro-batch appends nothing. Serving reads the store and
-    * probes with the same frozen centroids ([[graft.ops.Similarity
-    * .ivfTopKFitted]]) — batch/stream parity is exact, and the
-    * cluster-partition layout gives readers the same dynamic-partition-
-    * pruned probe scans the batch lifecycle keys plan-assert.
-    */
-  def annIngestSink(vecs: DataFrame, idCol: String, vecCol: String,
-                    cents: Array[Array[Double]], path: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val assigned = batch.withColumn("cluster",
-        graft.ops.Similarity.nearestCentroid(col(vecCol), cents))
-      graft.ops.Sinks.idempotentParquetAppend(batch.sparkSession, assigned,
-        path, Seq(idCol), Seq("cluster"))
-      ()
-    }
-
-  /** [[annIngestSink]] on a [[graft.ops.ManifestTable]] — the
-    * snapshot-isolated tier for when ingest and serve must run
-    * CONCURRENTLY: every micro-batch's surviving vectors land as ONE
-    * atomic versioned commit, so a serve trigger pinning a committed
-    * snapshot can never list a torn subset of an in-progress append (the
-    * plain-parquet tier's documented limit). Idempotence is the same
-    * double layer as the plain tier: new ids are anti-joined against the
-    * committed snapshot (an at-least-once upstream re-delivering a vector
-    * in a LATER batch appends nothing), and the batch itself commits via
-    * `appendOnce`'s (sinkId, batchId) transaction token (a replay of the
-    * SAME batch after a crash between commit and checkpoint is recognized
-    * on the manifest and skipped without re-reading the corpus). Vector-id
-    * uniqueness still assumes one ingest writer per table — two ingest
-    * streams racing the same id can both pass the anti-join (their commits
-    * serialize, their snapshots don't); the CAS protects serve readers and
-    * heterogeneous writers (compaction, vacuum), not duplicate-id intent.
-    */
-  def annIngestSink(vecs: DataFrame, idCol: String, vecCol: String,
-                    cents: Array[Array[Double]], index: graft.ops.ManifestTable,
-                    sinkId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // token FAST PATH first — the scaladoc's cheap-replay contract: a
-      // crash-replayed batch whose token already rides the manifest costs
-      // ONE manifest read here, never the corpus-sized snapshot anti-join
-      // below (which would also recognize it, a full scan later)
-      if (!index.txnVersion(sinkId).exists(_ >= batchId)) {
-        // WITHIN-batch dedup mirrors idempotentParquetAppend's first layer:
-        // a coalesced trigger can carry one id twice (two source blocks
-        // drained in one batch), and the snapshot anti-join below only sees
-        // PRIOR commits — without this, both copies would land in one
-        // append. Deterministic by the vector's total order (the serve-side
-        // discipline); NULL ids are outside the corpus-id-space contract
-        // and would defeat the plain-equality anti-join on every
-        // redelivery.
-        val assigned = graft.ops.Aggregates.dedupFirst(
-            batch.filter(col(idCol).isNotNull), Seq(idCol), Seq(col(vecCol).asc))
-          .withColumn("cluster",
-            graft.ops.Similarity.nearestCentroid(col(vecCol), cents))
-        val fresh = index.latestVersion() match {
-          case Some(v) =>
-            val existing = index.snapshotAt(v)
-              .select(col(idCol).as("_graft_indexed_id")).distinct()
-            assigned.join(existing,
-              assigned(idCol) === existing("_graft_indexed_id"), "left_anti")
-          case None => assigned
-        }
-        // an all-duplicates batch appends nothing AND spends no version —
-        // a replay anti-joins to empty again, so skipping the token commit
-        // here cannot double-append (the ids are already the dedup key)
-        graft.ops.Sinks.writeIfNonEmpty(fresh, f => {
-          index.appendOnce(f, sinkId, batchId); ()
-        })
-      }
-      ()
-    }
-
-  /** Streaming ANN QUERY side — the serving half of [[annIngestSink]]:
-    * each micro-batch of query vectors probes the PERSISTED
-    * cluster-partitioned index with the same FROZEN centroids the ingest
-    * side assigns with (the frozen-centroid contract: router and assigner
-    * must share one centroid epoch, or probes visit cells the vectors
-    * were never filed under). The probe is [[graft.ops.Similarity
-    * .ivfTopKFitted]] against a per-batch read of the store, so the join
-    * on the partition column gives every micro-batch the same
-    * dynamic-partition-pruned cell scans the batch lifecycle key
-    * (ann_index_persist) plan-asserts — each trigger scans only the
-    * probed cells, never the full index. Idempotence is PER QUERY, not
-    * per (query, rank): a query's whole top-k list commits atomically in
-    * one batch, and any later redelivery of that query appends NOTHING —
-    * rank-level anti-joining would merge rankings computed against
-    * different index states (ingest between delivery and redelivery can
-    * reshuffle ranks, and a rank-keyed merge could store one neighbor at
-    * two ranks: a list that is the top-k of no index version). The
-    * served table therefore always holds ONE internally-consistent list
-    * per query — the list as of that query's first successful serve.
-    * The per-query contract is made CRASH-SAFE by the publish protocol:
-    * lists land via [[graft.ops.Sinks.groupAtomicAppend]] (one data file
-    * per query group, staged then renamed in), so a serve batch that
-    * dies mid-commit can never leave a PARTIAL list visible — any
-    * visible row for a query_id really does mean its whole list landed,
-    * which is exactly the signal the redelivery anti-join keys on. (A
-    * plain committer write would break this: its task/job commits move
-    * files non-atomically, so a crash could expose some of a query's
-    * rows, and the redelivered query would anti-join away forever with
-    * a permanently incomplete list.)
-    * Stream-served top-k is EQUAL to the batch ivfTopKFitted answer over
-    * the same store (StreamingSpec pins the parity).
-    *
-    * Contracts of the serve surface: (1) query ids share the CORPUS id
-    * space — ivfTopKFitted's self-match exclusion means a query whose id
-    * equals an UNRELATED corpus vector's id loses that one neighbor, so
-    * request-id-style query spaces must be made disjoint (prefix/offset)
-    * before this sink. (2) A query whose probed cells hold no vectors
-    * serves the EMPTY list: no row persists, and since its offsets
-    * commit, absence-after-serve IS the result — consumers read "no rows
-    * for a served query id" as "no neighbors found", not "pending".
-    * (3) A batch arriving before the first ingest commit fails the
-    * trigger (offsets uncommitted → replayed once ingest exists); see
-    * the body comment.
-    *
-    * Snapshot limit (documented, by design of the plain-parquet tier):
-    * the index read has no commit protocol, so a serve trigger racing a
-    * CONCURRENT ingest job's in-progress append can list a torn subset
-    * of that batch's files (idempotentParquetAppend's documented
-    * single-writer contract, extended to this reader). Alternate the
-    * sinks (ingest, then serve) — or use the [[graft.ops.ManifestTable]]
-    * overloads of both sinks, which pin every serve trigger to a
-    * committed index version and close this window entirely.
-    */
-  def annServeSink(queries: DataFrame, idCol: String, vecCol: String,
-                   cents: Array[Array[Double]], indexPath: String, outPath: String,
-                   k: Int, nprobe: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // a query batch arriving before the FIRST ingest commit FAILS THE
-      // TRIGGER: a committed micro-batch's offsets are never re-presented
-      // by a structured-streaming source, so the previous silently-skip
-      // behavior dropped those queries FOREVER (no redelivery exists for
-      // committed offsets). Failing leaves the offsets uncommitted — the
-      // stream (or its restart) re-presents the batch once ingest has
-      // committed, which is the documented alternate-the-sinks contract.
-      if (!graft.ops.Sinks.existsNonEmpty(batch.sparkSession, indexPath))
-        throw new IllegalStateException(
-          s"annServeSink: no committed index at $indexPath — failing the " +
-            "trigger so these queries replay once ingest commits (a skipped " +
-            "batch would commit its offsets and drop them forever)")
-      // (no bare block after the throw: `new X(...) { ... }` would parse
-      // as an anonymous subclass body and swallow the whole serve path)
-      locally {
-        serveTopKCore(batch, batch.sparkSession.read.parquet(indexPath),
-          idCol, vecCol, cents, outPath, k, nprobe)
-      }
-      ()
-    }
-
-  /** [[annServeSink]] against a [[graft.ops.ManifestTable]]-backed index —
-    * the snapshot-isolated tier closing the plain-parquet tier's documented
-    * torn-read window: each serve trigger pins ONE committed manifest
-    * version up front and probes exactly that version's immutable file set,
-    * so a CONCURRENT ingest commit ([[annIngestSink]]'s ManifestTable
-    * overload) can never expose a torn subset of its in-progress append —
-    * every served list is the exact batch `ivfTopKFitted` answer over some
-    * committed index version. All other contracts (per-query idempotence,
-    * group-atomic publish, fail-closed serve-before-ingest, NULL-id drop,
-    * deterministic within-trigger dedup) are identical to the plain tier.
-    */
-  def annServeSink(queries: DataFrame, idCol: String, vecCol: String,
-                   cents: Array[Array[Double]], index: graft.ops.ManifestTable,
-                   outPath: String, k: Int, nprobe: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // same fail-closed stance as the plain tier: committing a skipped
-      // batch's offsets would drop its queries forever
-      val version = index.latestVersion().getOrElse(
-        throw new IllegalStateException(
-          "annServeSink: no committed index version yet — failing the " +
-            "trigger so these queries replay once ingest commits"))
-      serveTopKCore(batch, index.snapshotAt(version),
-        idCol, vecCol, cents, outPath, k, nprobe)
-      ()
-    }
-
-  /** The shared serve-trigger body of both [[annServeSink]] tiers: score the
-    * not-yet-served queries of one micro-batch against `corpus` and publish
-    * each query's complete top-k group-atomically.
-    *
-    * Per-QUERY idempotence: only queries with no served list yet are scored
-    * and appended, each with its complete top-k landing group-atomically —
-    * the (query_id, rank)-keyed form could interleave two index versions'
-    * rankings for one query (see [[annServeSink]]'s scaladoc). The served
-    * side is ALIASED before the anti-join: a caller whose idCol is
-    * literally "query_id" would otherwise put that name on both join sides
-    * and fail ambiguous at runtime. Within-trigger duplicate ids resolve
-    * DETERMINISTICALLY by the vector's total order (dedupFirst) — a bare
-    * dropDuplicates kept whichever copy the shuffle delivered first, so a
-    * crash replay could persist a different list for the same query. NULL
-    * ids are dropped FIRST: the served-ids anti-join is plain equality, so
-    * a NULL id never matches its own served row and would be re-scored and
-    * re-appended on EVERY redelivery, accumulating duplicate lists forever
-    * — and a NULL key is outside the corpus-id-space contract anyway
-    * (corpus ids are non-null by construction).
-    */
-  private def serveTopKCore(batch: DataFrame, corpus: DataFrame,
-                            idCol: String, vecCol: String,
-                            cents: Array[Array[Double]], outPath: String,
-                            k: Int, nprobe: Int): Unit = {
-    val deduped = graft.ops.Aggregates.dedupFirst(
-      batch.filter(col(idCol).isNotNull), Seq(idCol), Seq(col(vecCol).asc))
-    val pending =
-      if (graft.ops.Sinks.existsNonEmpty(batch.sparkSession, outPath)) {
-        val servedIds = batch.sparkSession.read.parquet(outPath)
-          .select(col("query_id").as("_graft_served_qid")).distinct()
-        deduped.join(servedIds,
-          deduped(idCol) === servedIds("_graft_served_qid"), "left_anti")
-      } else deduped
-    // all-redelivered triggers are routine under at-least-once
-    // upstreams: gate on pending (one limit-1 probe) so a zero-query
-    // trigger never pays the probe + repartition + staged write
-    if (!pending.isEmpty) {
-      val served = graft.ops.Similarity.ivfTopKFitted(
-        pending, corpus, idCol, vecCol, "cluster", k, nprobe, cents)
-      graft.ops.Sinks.groupAtomicAppend(batch.sparkSession, served,
-        outPath, "query_id")
-    }
-  }
-
   /** Stream → ACID table bridge: every micro-batch lands as one atomic
     * last-write-wins MERGE commit on a [[graft.ops.ManifestTable]]. Versus
-    * [[idempotentStoreSink]] (insert-only idempotence on a plain path),
-    * this gives UPDATE semantics — a re-delivered or late row REPLACES the
-    * key's row instead of being dropped — plus snapshot-isolated readers
-    * while the stream writes, and safe coexistence with other writers on
-    * the same table (the commit CAS serializes them). Replayed micro-batches
-    * after a restart re-merge the same rows; last-write-wins makes that a
-    * no-op at rest — exactly-once per key without sink-side dedup state.
+    * [[graft.ops.Sinks.idempotentParquetAppend]] (insert-only idempotence
+    * on a plain path), this gives UPDATE semantics — a re-delivered or
+    * late row REPLACES the key's row instead of being dropped — plus
+    * snapshot-isolated readers while the stream writes, and safe
+    * coexistence with other writers on the same table (the commit CAS
+    * serializes them). Replayed micro-batches after a restart re-merge the
+    * same rows; last-write-wins makes that a no-op at rest — exactly-once
+    * per key without sink-side dedup state.
     *
     * `intraBatchOrder` resolves duplicate keys WITHIN one micro-batch: pass
     * the event-time (or sequence) column descending and the surviving row
@@ -405,8 +84,8 @@ object Streaming {
     * replayed after a crash re-merges STALE values, silently reverting any
     * update another writer landed on the same keys in between —
     * last-write-wins cannot tell a replay from fresh data, the token can.
-    * Same contract as [[exactlyOnceAppendSink]]: keep the id stable across
-    * restarts of the same checkpoint; never share it between queries.
+    * Keep the id stable across restarts of the same checkpoint; never
+    * share it between queries.
     */
   def acidMergeSink(df: DataFrame, table: graft.ops.ManifestTable, keys: Seq[String],
                     intraBatchOrder: Seq[Column] = Nil,
@@ -433,38 +112,12 @@ object Streaming {
       ()
     }
 
-  /** Exactly-once APPEND sink through [[graft.ops.ManifestTable.appendOnce]]
-    * — the ACID-grade fusion of the idempotent-insert + ledger-anti-join +
-    * checkpoint trio (reference: the Redis import ledger,
-    * dags/global_dag.py:83-91,106): each micro-batch commits atomically
-    * WITH its `(sinkId, batchId)` token in the manifest, so a batch
-    * replayed after a crash between commit and checkpoint — the window
-    * checkpointing alone cannot close for an APPEND (unlike
-    * [[acidMergeSink]], where last-write-wins absorbs the replay) — is
-    * recognized by its token and appends nothing. The dedup decision and
-    * the commit are one conditional PUT on the object-store log; zombie
-    * attempts racing their replacement lose the CAS, observe the token,
-    * and clean up their orphan dir.
-    *
-    * `sinkId` names THIS query's token stream in the table (Delta's
-    * `txnAppId`); two different queries appending to one table need two
-    * ids, and a query restarted from the same checkpoint must keep its id.
-    * Empty micro-batches spend no version and record no token — a replayed
-    * empty batch is naturally a no-op.
-    */
-  def exactlyOnceAppendSink(df: DataFrame, table: graft.ops.ManifestTable, sinkId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.ops.Sinks.writeIfNonEmpty(batch, b => { table.appendOnce(b, sinkId, batchId); () })
-      ()
-    }
-
   /** Streaming near-dedup against HISTORY — "dedupe the firehose against
     * the corpus so far", the layout a continuously-ingesting training-data
     * pipeline needs. Each micro-batch's documents are MinHash-signed and
     * LSH-checked against every previously-ACCEPTED document before they
     * are admitted; accepted signatures land in a [[graft.ops.ManifestTable]]
-    * via an atomic MERGE. The dedup state is deliberately NOT stream-engine
+    * via an atomic append. The dedup state is deliberately NOT stream-engine
     * state: table state is unbounded-corpus-sized (stream state must stay
     * bounded), restart-safe, snapshot-isolated for concurrent readers, and
     * shared with batch jobs writing the same table.
@@ -504,8 +157,8 @@ object Streaming {
     * upstream that REDELIVERS an already-accepted id in a later trigger
     * re-emits it to `onAccepted` — that is the same document identity (an
     * update/no-op), so route `onAccepted` to an id-keyed idempotent sink
-    * ([[idempotentStoreSink]] / [[acidMergeSink]] semantics); the CONTENT
-    * dedup this sink provides guards different-id duplicates. Within-
+    * ([[acidMergeSink]] semantics); the CONTENT dedup this sink provides
+    * guards different-id duplicates. Within-
     * trigger near-dups ARE deduped against each other: the batch's bucket
     * table self-joins (banded — linear in batch size, never quadratic),
     * pairs meeting the same signature-agreement threshold resolve to
@@ -533,6 +186,13 @@ object Streaming {
     * checkpoint-recovery re-execution of the same micro-batch re-presents
     * the same id, so the token no-ops, where any sink-side counter would
     * draw a fresh token and double-append.
+    *
+    * Store format: `sigTable` rows are (id, band, bucket, sig), and `sig`
+    * is `array<int>`, the int MinHash images of
+    * [[graft.ops.Dedup.minhashSignatures]]. Stores written while `sig` was
+    * `array<string>` (4-hex-char slices) cannot be resumed: the first
+    * non-empty append fails the table's schema check, so rebuild such a
+    * store from its corpus.
     */
   def nearDupFilterSink(docs: DataFrame, idCol: String, textCol: String,
                         sigTable: graft.ops.ManifestTable,
@@ -592,7 +252,7 @@ object Streaming {
         // (the Dedup.simhashPairsByChunks trade): a pair surfacing from
         // several bands carries identical signatures in every copy, so
         // filtering first changes nothing — while distinct-ing the raw
-        // candidate rows would shuffle two array<string>(8) payloads per
+        // candidate rows would shuffle two array<int>(8) payloads per
         // pair instead of two ids
         val inPairs = state.alias("x").join(state.alias("y"),
             col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
@@ -607,17 +267,13 @@ object Streaming {
         // policy bounds the batch; LSH pairs are a sliver of it), so the
         // adaptive entry's strategy-count job + eager checkpoint job are
         // pure per-trigger scheduling tax. The bounded form is a LAZY
-        // single-task union-find that rides its first consumer's job;
-        // persist (not checkpoint) keeps lineage intact — transient
-        // per-trigger state, recomputed (not failed) on cache eviction,
-        // and nothing durable to leak over an unbounded stream lifetime.
-        // no persist of its own (r20, VERDICT r19 item 7):
-        // dedupClustersBounded's union-find output is already persisted
-        // inside Dedup, and everything on top is a cheap filter+projection
-        // its two consumers (shielded's anti-join, dupIds' union) re-derive
-        // from those cached blocks — the r20 trigger A/B measured the extra
-        // cache layer at zero (16 jobs both ways, isolated wall inside the
-        // noise band), so it paid per-trigger cache bookkeeping for nothing
+        // single-task union-find that rides its first consumer's job and
+        // persists nothing, so no durable state leaks over an unbounded
+        // stream lifetime. Its two consumers (shielded's anti-join,
+        // dupIds' union) each re-run the banded self-join + union-find,
+        // but that recompute reads the persisted `state` blocks, not the
+        // batch's sign pipeline; a trigger A/B measured a persist here at
+        // zero gain (16 jobs both ways, wall time inside the noise band)
         val inBatchDrops = Dedup.dedupClustersBounded(inPairs, "doc_a", "doc_b")
           .where(col("doc_id") =!= col("cluster_rep"))
           .select(col("doc_id").as(idCol))
@@ -708,414 +364,4 @@ object Streaming {
       }
       ()
     }
-
-  /** Custom keyed state via mapGroupsWithState: running per-user event count
-    * and representative value, emitted once per micro-batch per active key —
-    * the §2.7 stateful-processing surface (GroupState is partition-local;
-    * state volume is O(distinct keys), shuffled once on the grouping key).
-    *
-    * `last_value` is the MAX of the most recent batch containing the key,
-    * carried across batches: a micro-batch's group Iterator has NO defined
-    * intra-batch order (it reflects shuffle-fetch order), so a literal
-    * "last element seen" would vary run to run — breaking the repo's
-    * determinism contract. Sources with real event time should carry it in
-    * the value and max-by it instead.
-    *
-    * `idleTimeoutMs` (opt-in; 0 = never, the default and the historical
-    * behavior) bounds state on churn-heavy key spaces: a key quiet for at
-    * least that long (processing time) is flushed at a subsequent trigger —
-    * its final snapshot is emitted once more and its state row FREED, so
-    * total state tracks the ACTIVE key set instead of every key ever seen
-    * (the 100-TB churn story: user-id spaces grow without bound; their
-    * active window doesn't). A later event for a flushed key restarts its
-    * count from zero — callers needing lifetime totals keep the default or
-    * fold flushed snapshots downstream.
-    *
-    * Engine note (applies to every opt-in timeout here): a processing-time
-    * timeout makes Spark construct micro-batches CONTINUOUSLY (timeouts
-    * must fire with no data arriving, so `shouldRunAnotherBatch` is
-    * always true) — run the query with a real ProcessingTime trigger
-    * interval, and don't wait on `processAllAvailable` (with batches
-    * always pending it can block forever); await the sink's contents.
-    */
-  def runningUserStats(events: Dataset[(Long, Double)],
-                       idleTimeoutMs: Long = 0L): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val timeoutConf = if (idleTimeoutMs > 0L) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.groupByKey(_._1)
-      .mapGroupsWithState[UserStats, UserStats](timeoutConf) {
-        (user: Long, batch: Iterator[(Long, Double)], state: GroupState[UserStats]) =>
-          val prev = state.getOption.getOrElse(UserStats(user, 0L, 0.0))
-          if (state.hasTimedOut) {
-            // quiet key: emit the final snapshot once more and free the row
-            state.remove()
-            prev
-          } else {
-            var n = prev.n_events
-            // an explicit seen flag, NOT a NaN sentinel: a batch of all-NaN
-            // values must surface as NaN (math.max propagates it, matching
-            // Spark's max-treats-NaN-as-greatest), not silently keep the
-            // previous batch's value
-            var seen = false
-            var batchMax = Double.NegativeInfinity
-            batch.foreach { case (_, v) =>
-              n += 1
-              seen = true
-              batchMax = math.max(batchMax, v)
-            }
-            val next = UserStats(user, n, if (seen) batchMax else prev.last_value)
-            state.update(next)
-            if (idleTimeoutMs > 0L) state.setTimeoutDuration(idleTimeoutMs)
-            next
-          }
-      }
-  }
-
-  /** Per-user funnel progress ([[funnelDepthStream]]'s state/output). */
-  final case class FunnelProgress(user: Long, last_view_us: Long,
-                                  best_anchor_us: Long, depth: Int)
-
-  /** Streaming mirror of [[graft.ops.Analytics.windowFunnel3]]: per-user
-    * view→click→purchase depth with every step inside `windowUs` of the
-    * chain's FIRST event, maintained incrementally in CONSTANT per-key
-    * state (latest view ts + best surviving chain anchor + depth — never
-    * the event list). Each micro-batch sorts its events by (ts, stable
-    * id) before folding, so intra-batch arrival order is irrelevant;
-    * cross-batch LATE events fold in arrival order (the at-least-once
-    * trade [[nearDupFilterSink]] documents — an upstream watermark sort
-    * removes it). Emits the key's current progress once per batch it
-    * appears in (update semantics, the [[runningUserStats]] shape).
-    *
-    * `idleTimeoutMs` (opt-in; 0 = never) frees a quiet key's state after
-    * that much processing time, emitting its final progress once more —
-    * the [[runningUserStats]] contract, including its engine note (use a
-    * real trigger interval; don't wait on `processAllAvailable`). A later
-    * event restarts the key at depth 0; pick an idle timeout comfortably
-    * ≥ the funnel `windowUs` (in wall terms) so only chains that could no
-    * longer advance are dropped.
-    */
-  def funnelDepthStream(events: Dataset[(Long, Long, Long, String)],
-                        windowUs: Long, idleTimeoutMs: Long = 0L): Dataset[FunnelProgress] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val None_ = Long.MinValue
-    val timeoutConf = if (idleTimeoutMs > 0L) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.groupByKey(_._1)
-      .mapGroupsWithState[FunnelProgress, FunnelProgress](timeoutConf) {
-        (user: Long, batch: Iterator[(Long, Long, Long, String)],
-         state: GroupState[FunnelProgress]) =>
-          var st = state.getOption.getOrElse(FunnelProgress(user, None_, None_, 0))
-          if (state.hasTimedOut) {
-            // quiet key: emit the final progress once more and free the row
-            state.remove()
-            st
-          } else {
-            batch.toArray.sortBy(e => (e._2, e._3)).foreach { case (_, ts, _, et) =>
-              et match {
-                case "view" =>
-                  st = st.copy(last_view_us = math.max(st.last_view_us, ts),
-                    depth = math.max(st.depth, 1))
-                case "click" =>
-                  if (st.last_view_us != None_ && st.last_view_us >= ts - windowUs) {
-                    st = st.copy(best_anchor_us = math.max(st.best_anchor_us, st.last_view_us),
-                      depth = math.max(st.depth, 2))
-                  }
-                case "purchase" =>
-                  if (st.best_anchor_us != None_ && st.best_anchor_us >= ts - windowUs)
-                    st = st.copy(depth = 3)
-                case _ =>
-              }
-            }
-            state.update(st)
-            if (idleTimeoutMs > 0L) state.setTimeoutDuration(idleTimeoutMs)
-            st
-          }
-      }
-  }
-
-  /** Closed-session emitter via flatMapGroupsWithState — the custom-state
-    * shape `session_window` can't express: sessions are emitted EXACTLY
-    * when they close (the next event of the key arrives more than `gapUs`
-    * later), each exactly once, in append mode — the contract a
-    * downstream session store or billing pipeline needs. State per key is
-    * ONE open session (constant size — not the event list), shuffled once
-    * on the key; emission volume per batch is the number of sessions the
-    * batch closes.
-    *
-    * Event times are integer microseconds (the repo's event-time
-    * discipline). Batch events sort before merging, and a cross-batch
-    * out-of-order event within the gap of the open session's SPAN merges
-    * into it (start/min, last/max) rather than spuriously closing it. An
-    * event more than the gap EARLIER than the span either bridges into it
-    * (when a chain of same-batch events connects them) or is emitted
-    * immediately as its own closed late session — it is NEVER glued onto
-    * a session it is gap-separated from. An open session's tail rides in
-    * state until a later event closes it.
-    *
-    * Delivery contract (the caller's half): events must arrive
-    * exactly-once PER (user, ts) — an at-least-once upstream that
-    * redelivers an event already merged into the open session increments
-    * `n_events` again (and can stretch the span), over-counting the
-    * eventually-emitted session. Put [[dedupByIdWithWatermark]] (keyed on
-    * user_id + ts) in front of this sink when the source redelivers;
-    * [[funnelDepthStream]]'s ratchet is redelivery-proof on its own, this
-    * counter is not.
-    *
-    * `idleTimeoutMs` (opt-in; 0 = never, the historical behavior) closes
-    * the TAIL sessions: without it, every key's last session rides in
-    * state forever — unbounded state on churn-heavy key spaces. With it, a
-    * key quiet for at least that long (processing time) has its open
-    * session EMITTED as closed and its state row freed at a subsequent
-    * trigger. Semantics caveat the caller accepts by opting in: the flush
-    * is by PROCESSING time, so an event-time-late event arriving after the
-    * flush starts a NEW session instead of merging — pick an idle timeout
-    * comfortably above the worst expected arrival lag (≫ gapUs in wall
-    * terms) to make that window negligible. [[runningUserStats]]'s engine
-    * note applies: run with a real trigger interval and await the sink,
-    * not `processAllAvailable`.
-    */
-  def closedSessionsStream(events: Dataset[(Long, Long)], gapUs: Long,
-                           idleTimeoutMs: Long = 0L): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val timeoutConf = if (idleTimeoutMs > 0L) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSession, ClosedSession](
-        OutputMode.Append(), timeoutConf) {
-        (user: Long, batch: Iterator[(Long, Long)], state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            // quiet key: the open tail closes by timeout and the row frees
-            val o = state.get
-            state.remove()
-            Iterator.single(ClosedSession(user, o.start_us, o.last_us, o.n_events))
-          } else {
-          val ts = batch.map(_._2).toArray.sorted
-          if (ts.isEmpty) Iterator.empty
-          else {
-            // interval gap-merge over the sorted union of {open session} ∪
-            // batch events, ordered by interval START. The naive fold on
-            // `t − last ≤ gap` merged ARBITRARILY-late events (negative
-            // LHS is always ≤ gap): an event more than gap before the open
-            // session's start glued onto it, corrupting start_us/n_events.
-            // Here such an event either closes immediately as its own late
-            // session, or BRIDGES into the open one when a chain of batch
-            // events connects them — the batch sessionizer's semantics on
-            // the same multiset. All but the last merged interval close;
-            // the last stays open (state remains ONE interval per key).
-            val intervals =
-              (state.getOption.map(o => (o.start_us, o.last_us, o.n_events)) ++
-                ts.iterator.map(t => (t, t, 1L))).toArray.sortBy(iv => (iv._1, iv._2))
-            val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
-            var cur = intervals.head
-            intervals.iterator.drop(1).foreach { iv =>
-              if (iv._1 - cur._2 <= gapUs)
-                cur = (cur._1, math.max(cur._2, iv._2), cur._3 + iv._3)
-              else {
-                closed += ClosedSession(user, cur._1, cur._2, cur._3)
-                cur = iv
-              }
-            }
-            state.update(OpenSession(user, cur._1, cur._2, cur._3))
-            if (idleTimeoutMs > 0L) state.setTimeoutDuration(idleTimeoutMs)
-            closed.iterator
-          }
-          }
-      }
-  }
-
-  // ------------------------------------------- event-time (watermark) idle
-
-  /** The event-time timeout plumbing the three `*EventTime` variants
-    * share: a watermark on the µs event-time column (delayed by
-    * `watermarkDelayUs`), kept IN the row so the engine's late-data
-    * filter applies (an event older than the watermark is dropped
-    * deterministically — the data-driven analog of the processing-time
-    * variant's wall-clock race), and the per-key timeout timestamp
-    * `lastEventUs + idleUs` ceil'd to ms and clamped one past the
-    * current watermark (Spark rejects a timeout at or below it; the
-    * clamp only fires for a key whose state predates a big watermark
-    * jump, where "already expired, flush at the very next trigger" is
-    * exactly the intended semantics).
-    */
-  private def watermarked(df: DataFrame, tsCol: String, watermarkDelayUs: Long): DataFrame =
-    df.withColumn("_wm", timestamp_micros(col(tsCol)))
-      .withWatermark("_wm", s"$watermarkDelayUs microseconds")
-
-  private def setEventTimeIdle(
-      state: org.apache.spark.sql.streaming.GroupState[_],
-      lastEventUs: Long, idleUs: Long): Unit =
-    state.setTimeoutTimestamp(math.max(
-      (lastEventUs + idleUs) / 1000L + 1L,
-      state.getCurrentWatermarkMs() + 1L))
-
-  /** [[runningUserStats]] with the idle flush driven by EVENT time: the
-    * input carries an event-time column (integer µs — the repo's
-    * event-time discipline) that defines a watermark delayed by
-    * `watermarkDelayUs`, and a key is flushed (final snapshot emitted
-    * once more, state row FREED) when the watermark passes its last
-    * event time + `idleUs`. Because the watermark is persisted per batch
-    * in the checkpoint's offset log, a kill-and-restart replays flushes
-    * at the SAME batch boundaries with the same contents — the
-    * processing-time variant's flush points depend on the wall clock, so
-    * a recovery replay may flush at different boundaries (allowed by the
-    * sink contract, but replay-nondeterministic). Aggregation semantics
-    * are [[runningUserStats]]'s exactly (count + max-of-latest-batch);
-    * events older than the watermark are dropped, and with no new data
-    * the watermark does not advance, so a fully idle stream holds its
-    * state (flushing needs data — by design: data-determinism is the
-    * point). `processAllAvailable` is safe here (batches are not
-    * constructed continuously; timeouts fire only when data moves the
-    * watermark).
-    */
-  def runningUserStatsEventTime(events: Dataset[(Long, Long, Double)],
-                                idleUs: Long,
-                                watermarkDelayUs: Long = 0L): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    require(idleUs > 0L, s"idleUs ($idleUs) must be positive")
-    watermarked(events.toDF("u", "ts", "v"), "ts", watermarkDelayUs)
-      .as[(Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[UserStats, UserStats](GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, batch: Iterator[(Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[UserStats]) =>
-          val prev = state.getOption.getOrElse(UserStats(user, 0L, 0.0))
-          if (state.hasTimedOut) {
-            state.remove()
-            prev
-          } else {
-            var n = prev.n_events
-            var seen = false
-            var batchMax = Double.NegativeInfinity
-            var lastTs = Long.MinValue
-            batch.foreach { case (_, ts, v, _) =>
-              n += 1
-              seen = true
-              batchMax = math.max(batchMax, v)
-              lastTs = math.max(lastTs, ts)
-            }
-            val next = UserStats(user, n, if (seen) batchMax else prev.last_value)
-            state.update(next)
-            setEventTimeIdle(state, lastTs, idleUs)
-            next
-          }
-      }
-  }
-
-  /** [[funnelDepthStream]] with the idle flush driven by EVENT time (the
-    * watermark) — see [[runningUserStatsEventTime]] for the shared
-    * contract (replay-deterministic flush boundaries, late events
-    * dropped at the watermark, flushing needs data). Pick `idleUs`
-    * comfortably ≥ `windowUs` so only chains that could no longer
-    * advance are dropped — here the comparison is apples-to-apples,
-    * both in event time.
-    */
-  def funnelDepthStreamEventTime(events: Dataset[(Long, Long, Long, String)],
-                                 windowUs: Long, idleUs: Long,
-                                 watermarkDelayUs: Long = 0L): Dataset[FunnelProgress] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    require(idleUs > 0L, s"idleUs ($idleUs) must be positive")
-    val None_ = Long.MinValue
-    watermarked(events.toDF("u", "ts", "rk", "et"), "ts", watermarkDelayUs)
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[FunnelProgress, FunnelProgress](
-        GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, batch: Iterator[(Long, Long, Long, String, java.sql.Timestamp)],
-         state: GroupState[FunnelProgress]) =>
-          var st = state.getOption.getOrElse(FunnelProgress(user, None_, None_, 0))
-          if (state.hasTimedOut) {
-            state.remove()
-            st
-          } else {
-            var lastTs = Long.MinValue
-            batch.toArray.sortBy(e => (e._2, e._3)).foreach { case (_, ts, _, et, _) =>
-              lastTs = math.max(lastTs, ts)
-              et match {
-                case "view" =>
-                  st = st.copy(last_view_us = math.max(st.last_view_us, ts),
-                    depth = math.max(st.depth, 1))
-                case "click" =>
-                  if (st.last_view_us != None_ && st.last_view_us >= ts - windowUs) {
-                    st = st.copy(best_anchor_us = math.max(st.best_anchor_us, st.last_view_us),
-                      depth = math.max(st.depth, 2))
-                  }
-                case "purchase" =>
-                  if (st.best_anchor_us != None_ && st.best_anchor_us >= ts - windowUs)
-                    st = st.copy(depth = 3)
-                case _ =>
-              }
-            }
-            state.update(st)
-            setEventTimeIdle(state, lastTs, idleUs)
-            st
-          }
-      }
-  }
-
-  /** [[closedSessionsStream]] with the tail flush driven by EVENT time:
-    * a key whose open tail has seen no event newer than
-    * `watermark − idleUs` is flushed (tail EMITTED as closed, state row
-    * freed) at the next trigger after the watermark passes
-    * `last_us + idleUs`. See [[runningUserStatsEventTime]] for the
-    * shared contract; two session-specific consequences of the
-    * watermark:
-    *  - the processing-time variant's documented caveat — a late event
-    *    arriving after a wall-clock flush spuriously opens a new
-    *    session — becomes a DETERMINISTIC rule: an event older than the
-    *    watermark is dropped, one inside it merges, and which of the
-    *    two happens is a pure function of the data, so a checkpoint
-    *    replay makes identical decisions;
-    *  - choose `idleUs > gapUs` (both are µs of event time) so a tail
-    *    is only flushed once no in-watermark event could still merge
-    *    into it.
-    */
-  def closedSessionsStreamEventTime(events: Dataset[(Long, Long)], gapUs: Long,
-                                    idleUs: Long,
-                                    watermarkDelayUs: Long = 0L): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(idleUs > 0L, s"idleUs ($idleUs) must be positive")
-    watermarked(events.toDF("u", "ts"), "ts", watermarkDelayUs)
-      .as[(Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSession, ClosedSession](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, batch: Iterator[(Long, Long, java.sql.Timestamp)],
-         state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            val o = state.get
-            state.remove()
-            Iterator.single(ClosedSession(user, o.start_us, o.last_us, o.n_events))
-          } else {
-          val ts = batch.map(_._2).toArray.sorted
-          if (ts.isEmpty) Iterator.empty
-          else {
-            // identical interval gap-merge as the processing-time form
-            // (see closedSessionsStream for the bridging rationale)
-            val intervals =
-              (state.getOption.map(o => (o.start_us, o.last_us, o.n_events)) ++
-                ts.iterator.map(t => (t, t, 1L))).toArray.sortBy(iv => (iv._1, iv._2))
-            val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
-            var cur = intervals.head
-            intervals.iterator.drop(1).foreach { iv =>
-              if (iv._1 - cur._2 <= gapUs)
-                cur = (cur._1, math.max(cur._2, iv._2), cur._3 + iv._3)
-              else {
-                closed += ClosedSession(user, cur._1, cur._2, cur._3)
-                cur = iv
-              }
-            }
-            state.update(OpenSession(user, cur._1, cur._2, cur._3))
-            setEventTimeIdle(state, cur._2, idleUs)
-            closed.iterator
-          }
-          }
-      }
-  }
 }

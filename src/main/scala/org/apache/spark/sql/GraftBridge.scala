@@ -120,8 +120,9 @@ object GraftBridge {
 
   /** Deterministically drain the async listener bus: returns only once
     * every event posted so far has been delivered to every listener.
-    * Job-count pins (PlanSpec, the JobCount tool) sample counters fed by
-    * `SparkListener.onJobStart`; a fixed `Thread.sleep` leaves a loaded
+    * Job-count pins (PlanSpec, `SPARK_GRAFT_JOBCOUNT` in graft.Bench)
+    * sample counters fed by `SparkListener.onJobStart`; a fixed
+    * `Thread.sleep` leaves a loaded
     * bus still posting after the sample, skewing before/after counts in
     * either direction. `listenerBus` is `private[spark]` — hence this
     * bridge.

@@ -158,7 +158,7 @@ class DedupSpec extends SparkSpec {
       .as[(Int, String, Long)].collect().toSeq
     assert(dropped == Seq((0, "DEGENERATE", 1000L)))
     // uncapped keeps the default behavior (spot-check a mega-bucket pair)
-    val uncapped = Dedup.lshCandidatePairs(buckets, "doc_id")
+    val uncapped = Dedup.lshCandidatePairsCapped(buckets, "doc_id", Int.MaxValue)
     assert(uncapped.where($"doc_a" === 0L && $"doc_b" === 1L).count() == 1)
     // recall is a monitored trade, not silent loss: end-to-end, a cap wide
     // enough for the corpus' real dup groups changes nothing
@@ -397,7 +397,7 @@ class DedupSpec extends SparkSpec {
     // (r6 measured: fast form 10 AQE-on vs 2 AQE-off). The r5 driver
     // regression on the md5 form was 5 broadcast-build jobs — the small-SF
     // static estimator broadcasting corpus-sized join sides
-    // (pairs/shingles/sizes); merge hints in lshCandidatePairs and
+    // (pairs/shingles/sizes); merge hints in lshCandidatePairsCapped and
     // jaccardVerify pin those to sort-merge, which is also the only join
     // shape that survives 100 TB. Bounds = measured + 1 slack.
     val corpus = Tables.load(spark, sf0001, "documents")
@@ -407,9 +407,10 @@ class DedupSpec extends SparkSpec {
       // serve the measured run's identical plans from those blocks
       spark.catalog.clearCache()
       val st = spark.sparkContext.statusTracker
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       val before = st.getJobIdsForGroup(null).length
       f
-      Thread.sleep(500) // status store updates asynchronously
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark) // the status store is fed by the listener bus
       st.getJobIdsForGroup(null).length - before
     }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
@@ -449,7 +450,7 @@ class DedupSpec extends SparkSpec {
     // implementation detail (measured 3/round here: changed-count +
     // checkpoint materializations).
     def jobs(): Int = {
-      Thread.sleep(500) // status store updates asynchronously
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark) // the status store is fed by the listener bus
       spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     }
     def runAndCountRounds(edges: org.apache.spark.sql.DataFrame): (Array[(Long, Long)], Int, Int) = {

@@ -417,6 +417,46 @@ class MultiWriterSinkContractSpec extends SparkSpec {
     assert(got.forall(_._3 == 3), s"a replayed batch landed twice: ${got.mkString(",")}")
   }
 
+  test("appendOnce: replays spend no version or PUT, land exactly once") {
+    val client = new InMemoryObjectStore
+    val root = java.nio.file.Files.createTempDirectory("graft-eo").toString
+    val mt = ManifestTable.onObjectStore(spark, root, client)
+    def kv(k: Long) = Seq((k, k.toDouble)).toDF("k", "v")
+    mt.appendOnce(kv(1L), "sink-a", 0L)
+    mt.appendOnce(kv(2L), "sink-a", 1L)
+    assert(mt.versions() == Seq(0L, 1L) && mt.txnVersion("sink-a").contains(1L))
+    // the crash-between-commit-and-checkpoint replay: the token fast path
+    // answers from the manifest without attempting a conditional PUT
+    val putsBefore = client.putAttempts
+    assert(mt.appendOnce(kv(2L), "sink-a", 1L) == 1L)
+    assert(mt.versions() == Seq(0L, 1L), "replayed batch must not spend a version")
+    assert(client.putAttempts == putsBefore,
+      "a recognized replay must not reach the conditional-PUT log")
+    // tokens survive OTHER writers' commits: a stale batch replayed after
+    // an interleaved append is still rejected
+    mt.append(kv(100L))
+    val vAfter = mt.latestVersion().get
+    assert(mt.appendOnce(kv(2L), "sink-a", 1L) == vAfter,
+      "a stale batch replay after an interleaved writer must still be rejected")
+    assert(mt.snapshot().count() == 3)
+    // duplicate-batch RACE through the CAS itself: exactly one attempt
+    // commits; the loser observes the token and deletes its orphan dir
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val racers = (1 to 2).map { _ =>
+      new Thread(() => {
+        try mt.appendOnce(kv(5L), "sink-a", 9L)
+        catch { case e: Throwable => errs.add(e) }
+      })
+    }
+    racers.foreach(_.start()); racers.foreach(_.join())
+    assert(errs.isEmpty, s"racing duplicate batch failed: ${errs.peek()}")
+    assert(mt.snapshot().where($"k" === 5L).count() == 1,
+      "the duplicate batch must land exactly once")
+    assert(mt.txnVersion("sink-a").contains(9L))
+    assert(mt.vacuum(retainLast = mt.versions().length, graceMs = 0).isEmpty,
+      "the losing duplicate attempt left an orphan data dir")
+  }
+
   test("stale mergeOnce replay after a foreign interleave must not revert the interleaved write") {
     val mt = pagedThrottledTable()
     mt.overwrite(Seq(("k1", 1L, "init"), ("k2", 2L, "init")).toDF("k", "v", "who"))

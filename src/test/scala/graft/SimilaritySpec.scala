@@ -9,6 +9,22 @@ class SimilaritySpec extends SparkSpec {
   lazy val emb = Tables.load(spark, sf0001, "embeddings")
   lazy val queries = emb.where($"vec_id" % 50 === 0)
 
+  // the corpus labeled by the fitted centroids, the way the IVF keys route it
+  private def kmeansAssign(corpus: org.apache.spark.sql.DataFrame, k: Int, iters: Int) =
+    corpus.withColumn("cluster", Similarity.nearestCentroid($"embedding",
+      Similarity.kmeansFit(corpus, "vec_id", "embedding", k, iters)))
+
+  // per-subspace codebooks for pqEncode/pqAdcTopK: one kmeansFit per slice
+  private def pqTrain(corpus: org.apache.spark.sql.DataFrame, m: Int, ksub: Int,
+                      dims: Int, iters: Int): Array[Array[Array[Double]]] = {
+    val dsub = dims / m
+    (0 until m).map { j =>
+      val sub = corpus.select($"vec_id",
+        slice($"embedding", j * dsub + 1, dsub).cast("array<float>").as("_sub"))
+      Similarity.kmeansFit(sub, "vec_id", "_sub", ksub, iters)
+    }.toArray
+  }
+
   test("cosine of a vector with itself is ~1") {
     val v = emb.select(Similarity.cosine($"embedding", $"embedding").as("c")).as[Double].take(20)
     assert(v.forall(c => math.abs(c - 1.0) < 1e-9))
@@ -30,7 +46,7 @@ class SimilaritySpec extends SparkSpec {
     val q = Similarity.quantizeInt8(emb, "vec_id", "embedding")
     val joined = emb.join(q, "vec_id")
       .select($"vec_id", $"embedding", $"scale",
-        Similarity.dequantizeInt8($"q", $"scale").as("deq"),
+        transform($"q", v => v.cast("double") * $"scale" / 127).as("deq"),
         array_max(transform($"q", v => abs(v))).as("qmax"))
     val rows = joined.select(
         array_max(zip_with($"embedding".cast("array<double>"), $"deq",
@@ -124,7 +140,7 @@ class SimilaritySpec extends SparkSpec {
       a.zip(b).forall { case (x, y) => math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x)) } },
       "same data + same params must fit the same centroids (to last-ulp tolerance)")
     // every row routes to a valid cluster id
-    val labels = Similarity.kmeansAssign(emb, "vec_id", "embedding", k = 8, iters = 2)
+    val labels = kmeansAssign(emb, k = 8, iters = 2)
       .select($"cluster").as[Int].collect()
     assert(labels.length == emb.count() && labels.forall(l => l >= 0 && l < 8))
     // k > distinct vectors: surplus clusters keep their seed centroid
@@ -135,7 +151,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("kmeans-fitted IVF: full-probe == brute force; partial probe beats random routing") {
-    val labeled = Similarity.kmeansAssign(emb, "vec_id", "embedding", k = 8, iters = 3)
+    val labeled = kmeansAssign(emb, k = 8, iters = 3)
     val qs = labeled.where($"vec_id" % 50 === 0)
     val brute = Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
@@ -416,8 +432,7 @@ class SimilaritySpec extends SparkSpec {
     }
     val corpus = rows.toDF("vec_id", "embedding")
     val qs = corpus.where($"vec_id" % 6 === 0)
-    val books = Similarity.pqTrain(corpus, "vec_id", "embedding",
-      m = 4, ksub = 8, dims = 16, iters = 3)
+    val books = pqTrain(corpus, m = 4, ksub = 8, dims = 16, iters = 3)
     assert(books.length == 4 && books.forall(b => b.length == 8 && b.forall(_.length == 4)))
     val codes = Similarity.pqEncode(corpus, "vec_id", "embedding", books)
     val adc = Similarity.pqAdcTopK(qs, codes, "vec_id", "embedding", books, 5)
@@ -447,8 +462,7 @@ class SimilaritySpec extends SparkSpec {
     }
     val corpus = rows.toDF("vec_id", "embedding")
     val qs = corpus.where($"vec_id" % 10 === 0)
-    val books = Similarity.pqTrain(corpus, "vec_id", "embedding",
-      m = 4, ksub = 8, dims = 16, iters = 3)
+    val books = pqTrain(corpus, m = 4, ksub = 8, dims = 16, iters = 3)
     val codes = Similarity.pqEncode(corpus, "vec_id", "embedding", books)
     def recallOf(res: Map[Long, Set[Long]], want: Map[Long, Set[Long]]): Double = {
       val rs = want.map { case (q, w) => res.getOrElse(q, Set.empty).intersect(w).size.toDouble / w.size }

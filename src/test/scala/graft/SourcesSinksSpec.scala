@@ -97,18 +97,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(back.count() == 2 && back.columns.toSeq == Seq("id", "v"))
   }
 
-  test("multimodal: stubbed decodeFeatures runs partition-parallel with the real schema") {
-    val docs = Tables.load(spark, sf0001, "documents").limit(20)
-    val withPayload = graft.ops.Multimodal.attachPayload(docs, "text", "text/plain")
-    val feats = graft.ops.Multimodal.decodeFeatures(withPayload, "doc_id").collect()
-    assert(feats.length == 20)
-    feats.foreach { r =>
-      val hist = r.getSeq[Double](2)
-      assert(hist.length == 4 && math.abs(hist.sum - 1.0) < 1e-9) // L1-normalized stub features
-      assert(r.getInt(1) > 0)
-    }
-  }
-
   test("imageDims parses real PNG IHDR bytes; non-PNG payloads yield null dims") {
     // a genuine byte-literal PNG header (1-pixel-wide examples from the PNG
     // spec layout), NOT built by pngHeader — so the test catches a builder
@@ -163,20 +151,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(!rows(3L).getBoolean(1), "junk bytes must flag ok=false, not throw")
   }
 
-  test("resizeImages area-averages to the target box and re-encodes decodable PNG") {
-    val img = new java.awt.image.BufferedImage(32, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 32; y <- 0 until 16) img.setRGB(x, y, 0x336699)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val df = Seq((1L, bos.toByteArray), (2L, Array[Byte](1, 2, 3))).toDF("id", "payload")
-    val out = graft.ops.Multimodal.resizeImages(df, "id", 8, 4).collect()
-    assert(out.length == 1 && out(0).getLong(0) == 1L) // junk dropped, not crashed
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(out(0).getAs[Array[Byte]]("payload_resized")))
-    assert(back.getWidth == 8 && back.getHeight == 4)
-    assert((back.getRGB(3, 2) & 0xFFFFFF) == 0x336699) // solid color survives area averaging
-  }
-
   test("mp4Meta walks ISO-BMFF boxes: v0 builder roundtrip, v1 mvhd + largesize, junk flagged") {
     // v0 via the expression builder (the mm_video_meta construct-and-check path)
     val built = spark.range(1).select(lit(7L).as("id"),
@@ -209,7 +183,7 @@ class SourcesSinksSpec extends SparkSpec {
     assert(bad.length == 3 && bad.forall(!_.getBoolean(1)))
   }
 
-  test("decodeAudioFeatures parses real WAV/PCM; downsampleAudio halves rate and frames") {
+  test("decodeAudioFeatures parses real WAV/PCM; junk flags ok=false") {
     def wav(nFrames: Int, amp: Short, rate: Float = 8000f): Array[Byte] = {
       val pcm = new Array[Byte](nFrames * 2)
       for (i <- 0 until nFrames) {
@@ -232,14 +206,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(a.getBoolean(1) && a.getInt(2) == 8000 && a.getInt(3) == 1 && a.getLong(4) == 200L)
     assert(a.getInt(5) == 1234 && a.getDouble(6) == 1234.0) // |±amp| square wave: peak == mean|amp|
     assert(!rows(2L).getBoolean(1), "junk bytes must flag ok=false")
-
-    val down = graft.ops.Multimodal.downsampleAudio(df, "id", factor = 2).collect()
-    assert(down.length == 1 && down(0).getInt(2) == 4000 && down(0).getLong(3) == 100L)
-    // the decimated stream kept every even frame: constant +amp
-    val back = graft.ops.Multimodal.decodeAudioFeatures(
-      Seq((9L, down(0).getAs[Array[Byte]]("payload_resampled"))).toDF("id", "payload"), "id")
-      .collect()(0)
-    assert(back.getBoolean(1) && back.getLong(4) == 100L && back.getInt(5) == 1234)
   }
 
   test("audioFingerprint: analytic contour bits; gain invariance; a window boost flips only boundary bits") {
@@ -569,28 +535,6 @@ class SourcesSinksSpec extends SparkSpec {
       _.where($"v" =!= 3L)) == 0)
   }
 
-  test("groupAtomicAppend: every group's rows land in exactly ONE data file; appends accumulate") {
-    // the file-per-group layout is the whole protocol: per-file renames
-    // are atomic, so a crash mid-publish can expose only WHOLE groups —
-    // a group split across two files could become half-visible
-    val dest = Files.createTempDirectory("graft-gaa").toString + "/t"
-    val b1 = Seq((1L, 0, 10L), (1L, 1, 11L), (2L, 0, 20L)).toDF("qid", "rank", "n")
-    graft.ops.Sinks.groupAtomicAppend(spark, b1, dest, "qid")
-    val b2 = Seq((3L, 0, 30L), (3L, 1, 31L)).toDF("qid", "rank", "n")
-    graft.ops.Sinks.groupAtomicAppend(spark, b2, dest, "qid")
-    val back = spark.read.parquet(dest)
-    assert(back.count() == 5)
-    val filesPerGroup = back
-      .select($"qid", org.apache.spark.sql.functions.input_file_name().as("f"))
-      .groupBy($"qid").agg(countDistinct($"f").as("nf"))
-      .as[(Long, Long)].collect().toMap
-    assert(filesPerGroup.values.forall(_ == 1L),
-      s"a group spans multiple files (not crash-atomic): $filesPerGroup")
-    // no staging directory survives a successful publish
-    val parent = new java.io.File(dest).getParentFile.listFiles().map(_.getName)
-    assert(!parent.exists(_.contains("-stage-")), s"staging leftover: ${parent.mkString(",")}")
-  }
-
   test("bucketedTable: database-qualified names drop the real table (stale-path guard)") {
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_bt_db")
     val p1 = Files.createTempDirectory("graft-bt1").toString
@@ -635,22 +579,13 @@ class SourcesSinksSpec extends SparkSpec {
   test("jdbc existence probe does not treat '_' in table names as a LIKE wildcard") {
     val db = Files.createTempDirectory("graft-derby2").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
-    Sinks.jdbcSink(Seq((1L, "a")).toDF("id", "v"), url, "my1table")
     val props = new java.util.Properties()
+    Seq((1L, "a")).toDF("id", "v").write.jdbc(url, "my1table", props)
     // before escaping, the metadata LIKE pattern 'my_table' matched 'my1table'
     assert(!org.apache.spark.sql.GraftBridge.jdbcTableExists(url, "my_table", props))
     assert(org.apache.spark.sql.GraftBridge.jdbcTableExists(url, "my1table", props))
     // and the idempotent append therefore CREATES my_table instead of failing
     assert(Sinks.idempotentJdbcAppend(spark, Seq((7L, "x")).toDF("id", "v"), url, "my_table", Seq("id")) == 1)
-  }
-
-  test("multimodal resample stub decimates payload bytes partition-parallel") {
-    val df = graft.ops.Multimodal.attachPayload(
-      Seq((1L, "abcdefghij")).toDF("doc_id", "text"), "text", "text/plain")
-    val out = graft.ops.Multimodal.resampleStub(df, "doc_id", factor = 3)
-    val row = out.select("payload_resampled").as[Array[Byte]].head()
-    assert(new String(row) == "adgj") // every 3rd byte, ceil(10/3)=4 bytes
-    assert(!out.queryExecution.executedPlan.toString.contains("RDDScan"))
   }
 
   test("parquet zstd compression roundtrips and actually produces zstd files") {

@@ -185,24 +185,6 @@ class TextPipelineSpec extends SparkSpec {
     assert(kept == Set(1L, 4L), s"null source/mass rows must drop, got $kept")
   }
 
-  test("bloom contamination: superset of exact flags (no false negatives), same shingle counts") {
-    val docs = Tables.load(spark, sf0001, "documents")
-    val bench = docs.where($"doc_id" % 37 === 0)
-    val exact = Dedup.contaminationScores(docs, bench, "doc_id", "text", shingleN = 3)
-      .select($"doc_id", $"n_shingles".as("ns_exact"), $"n_contaminated")
-    val bloom = Dedup.contaminationFlagsBloom(docs, bench, "doc_id", "text", shingleN = 3)
-      .select($"doc_id", $"n_shingles".as("ns_bloom"), $"n_flagged")
-    val j = exact.join(bloom, "doc_id")
-      .select($"doc_id", $"ns_exact" === $"ns_bloom", $"n_flagged" >= $"n_contaminated",
-        $"n_flagged" - $"n_contaminated")
-      .as[(Long, Boolean, Boolean, Long)].collect()
-    assert(j.nonEmpty)
-    assert(j.forall(_._2), "n_shingles must match the exact path")
-    assert(j.forall(_._3), "bloom must never miss a truly contaminated shingle")
-    // false positives bounded: at fpp=0.1% the aggregate inflation stays tiny
-    assert(j.map(_._4).sum <= math.max(5L, j.length / 10L), "too many bloom false positives")
-  }
-
   test("heavyHittersCertified: exact counts, certified CMS bounds, deterministic rank-k boundary") {
     // planted zipf-ish stream: token t_i appears (40-i) times, plus a tie
     // cohort at the k boundary to exercise the (cnt desc, item) tie-break
@@ -398,17 +380,6 @@ class TextPipelineSpec extends SparkSpec {
     assert(byId(3L)._3 == 2L && byId(3L)._4 == 1)      // "r r r" twice, first at 1
     assert(byId(4L)._3 == 0L && byId(4L)._4 == 0 && byId(4L)._5 == 0.0)
     assert(byId(1L)._2 == 6L && math.abs(byId(1L)._5 - 1.0 / 6.0) < 1e-12)
-  }
-
-  test("substringDupStatsFast (xxhash64 keys) matches the exact string-keyed form") {
-    val docs = Tables.load(spark, sf0001, "documents")
-    val exact = TextAnalysis.substringDupStats(docs, "doc_id", "text", windowTokens = 5)
-      .select("doc_id", "n_windows", "n_dup_windows", "first_dup_pos")
-      .as[(Long, Long, Long, Int)].collect().toSet
-    val fast = TextAnalysis.substringDupStatsFast(docs, "doc_id", "text", windowTokens = 5)
-      .select("doc_id", "n_windows", "n_dup_windows", "first_dup_pos")
-      .as[(Long, Long, Long, Int)].collect().toSet
-    assert(fast == exact)
   }
 
   test("removeDupWindowSpans cuts non-first duplicate windows, rebuilds text in order") {
