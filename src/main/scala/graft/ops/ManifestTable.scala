@@ -462,7 +462,7 @@ final class ManifestTable private (
       // single-shot commit: a conflict must re-derive the merge input, not
       // just re-CAS the same rewrite (that would silently drop the
       // conflicting winner's rows)
-      commitOnce("merge", normDdl(merged.schema), prev => survivors :+ dir, stats,
+      commitOnce("merge", normDdl(merged.schema), _ => survivors :+ dir, stats,
           parentGuard = Some(base), txn = txn) match {
         case Some(v) => return v
         case None =>

@@ -11,33 +11,36 @@ import org.apache.spark.sql.functions._
   *    once across restarts.
   *  - Redis buffer drain (global_dag.py:124,161-167) → continuous
   *    micro-batches; no intermediate store.
-  *  - `INSERT ... ON CONFLICT DO NOTHING` (global_dag.py:144) →
-  *    `dropDuplicates` over a watermark-bounded id state.
+  *  - `INSERT ... ON CONFLICT DO NOTHING` (global_dag.py:144) → the
+  *    sink's keyed merge at rest ([[acidMergeSink]]): one row per id, but
+  *    the LAST one, where the reference keeps the first.
   *
   * Plus the streaming near-dup filter behind the `op_stream_neardup` key.
   */
 object Streaming {
 
   /** Incremental fixed-width death-file stream: every file matching
-    * `death_*` under `dir` is parsed once; ids deduped within a watermark on
-    * ARRIVAL time, so dedup state is pruned as ingestion progresses.
+    * `death_*` under `dir` is parsed once, and every valid parsed record is
+    * emitted. The stream keeps no state: the file source's checkpointed
+    * seen-files log is the reference's Redis ledger, so a file is ingested
+    * exactly once across restarts.
     *
-    * Arrival time (not death date) is deliberate: a backfill of historical
-    * files must not be dropped as "late", and the duplicates this stage
-    * guards against — re-delivered/overlapping source files — arrive close
-    * together in time. Ids recurring beyond `lateness` apart are caught by
-    * the exact at-rest layer (`Sinks.idempotentParquetAppend`), mirroring
-    * the reference's split between the Redis ledger and the Postgres PK.
+    * Duplicate ids (id = sha1(name_raw): one id can carry different
+    * dates) are left to the sink, and [[acidMergeSink]] does NOT keep the
+    * reference's survivor: `ON CONFLICT DO NOTHING` keeps an id's FIRST
+    * row, as this stream's old 30-day watermark dedup did; the keyed merge
+    * keeps a later trigger's row. Within one trigger an id's rows resolve
+    * to the earliest `date_of_birth`, then `date_of_death`, then `insee`,
+    * whatever their order in the file.
     *
-    * An available-now run over one new file reports two triggers. The
-    * second is Spark's no-data micro-batch (`numInputRows` = 0): arrival
-    * time is `current_timestamp()`, so every restart advances the
-    * watermark, and Spark runs one more batch to evict expired dedup
-    * state. That batch still executes the stateful stage over every
-    * shuffle partition and commits its state: 0.7-0.9 s per restart with
-    * 8 shuffle partitions on a 4-core host, paid by every daily file.
+    * A checkpoint written while this stream still deduplicated within a
+    * watermark holds a stateful operator: a restart on it stops while
+    * planning its first batch, before any write, with
+    * `STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`. Such an
+    * ingest restarts with a fresh checkpoint: the file source re-reads the
+    * landing directory, and the keyed merge makes that re-read idempotent.
     */
-  def deathFileStream(spark: SparkSession, dir: String, lateness: String = "30 days"): DataFrame = {
+  def deathFileStream(spark: SparkSession, dir: String): DataFrame = {
     graft.Prep.ensure(spark)
     val lines = spark.readStream
       .format("text")
@@ -48,9 +51,6 @@ object Streaming {
     // copy here would mint ids/dates that stop matching the at-rest table
     graft.pipeline.StageDeaths.parsedRecords(lines)
       .where(col("date_of_birth").isNotNull && col("date_of_death").isNotNull)
-      .withColumn("arrival_ts", current_timestamp())
-      .withWatermark("arrival_ts", lateness)
-      .dropDuplicatesWithinWatermark("id")
       .select("id", "date_of_birth", "date_of_death", "insee")
   }
 
@@ -68,15 +68,11 @@ object Streaming {
     * `intraBatchOrder` resolves duplicate keys WITHIN one micro-batch: pass
     * the event-time (or sequence) column descending and the surviving row
     * is the latest — true last-write-wins even when one trigger carries
-    * several updates to a key, and deterministic under replay PROVIDED the
-    * order is TOTAL within a key: order-TIED rows (two updates with equal
-    * event time but different payloads) survive by partition-fetch order,
-    * so a crash replay can merge a different one — pad the order with a
-    * unique column (sequence id, content hash) when ties are possible,
-    * the StageDeaths/StagePlants discipline. Left empty,
-    * within-batch duplicates resolve arbitrarily (partition-fetch order) —
-    * only safe when the upstream guarantees at most one row per key per
-    * trigger (e.g. a windowed aggregate in update mode).
+    * several updates to a key. Rows the order ties (all of a key's rows,
+    * when it is left empty) fall to the remaining orderable columns
+    * ascending, nulls last: rows that differ in content never tie, so a
+    * crash replay merges the same survivor. Only rows that differ in
+    * non-orderable (map-typed) columns alone can still tie.
     *
     * `sinkId` (optional) upgrades replay handling from at-rest idempotence
     * to PROVABLE exactly-once via [[graft.ops.ManifestTable.mergeOnce]]'s
@@ -94,15 +90,17 @@ object Streaming {
     df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       // an empty micro-batch must not spend a version (and a fresh table
       // must not be created from a zero-row batch with no key coverage).
-      // Probe the RAW batch: the previous isEmpty over the dedupFirst
-      // window plan paid the full hash-partition exchange for a limit-1
-      // probe and then re-executed the same unpersisted window for the
-      // merge — dedupFirst never empties a non-empty input, so the cheap
-      // frame is an equivalent gate
+      // Probe the RAW batch: dedupFirst never empties a non-empty input,
+      // and probing its window would pay a hash exchange for a limit-1
       graft.ops.Sinks.writeIfNonEmpty(batch, b => {
+        val order = intraBatchOrder ++ b.schema.fields.collect {
+          case f if !keys.contains(f.name) &&
+              org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(f.dataType) =>
+            col(s"`${f.name}`").asc_nulls_last
+        }
         val resolved =
-          if (intraBatchOrder.isEmpty) b
-          else graft.ops.Aggregates.dedupFirst(b, keys, intraBatchOrder)
+          if (order.isEmpty) b
+          else graft.ops.Aggregates.dedupFirst(b, keys, order)
         sinkId match {
           case Some(sid) => table.mergeOnce(resolved, keys, sid, batchId)
           case None => table.merge(resolved, keys)

@@ -220,25 +220,42 @@ class ManifestTableSpec extends SparkSpec {
 
   test("commit retries THROUGH a transiently held lock and lands once it frees (no manual re-invocation)") {
     // the conditional-PUT retry path as such: a contender holds the CAS
-    // slot (on an object store: its conditional PUT of vN.lock won), the
-    // writer's attempts keep losing, and when the slot frees the SAME
-    // append call lands on its own — distinct from the orphan-lock test,
-    // which exhausts retries and requires operator intervention
+    // slot (on a filesystem log: its vN.lock exists), the writer's
+    // attempts keep losing, and when the slot frees the SAME append call
+    // lands on its own — distinct from the orphan-lock test, which
+    // exhausts retries and requires operator intervention. The table sits
+    // on LockGateFs (the local disk under its own scheme, so the log takes
+    // the create-if-absent reserve path), which lets the test observe the
+    // writer's lock attempts instead of sleeping: once two have started,
+    // the first has met the held lock, and later ones wait until the test
+    // has removed it, so `pending` cannot complete before that
     val root = freshRoot()
-    val t = ManifestTable(spark, root)
+    spark.sparkContext.hadoopConfiguration.set("fs.lockgate.impl", classOf[LockGateFs].getName)
+    val t = ManifestTable(spark, s"lockgate://$root")
     t.overwrite(kv(1L -> 1.0))
     val lock = new java.io.File(s"$root/_log/v${"%020d".format(1)}.lock")
     assert(lock.createNewFile())
+    val attempts = new java.util.concurrent.CountDownLatch(2)
+    val freed = new java.util.concurrent.CountDownLatch(1)
+    LockGateFs.beforeLockCreate = p =>
+      if (p.getName == lock.getName) {
+        if (attempts.getCount > 0) attempts.countDown()
+        else freed.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    val pending = Future(t.append(kv(2L -> 2.0), maxRetries = 50))
-    Thread.sleep(800) // the writer must now be inside its backoff loop
-    assert(!pending.isCompleted, "append must wait out the held lock, not fail")
-    assert(lock.delete())
-    assert(Await.result(pending, 60.seconds) == 1L,
-      "the blocked append must commit v1 itself once the lock frees")
-    assert(t.snapshot().count() == 2)
+    try {
+      val pending = Future(t.append(kv(2L -> 2.0), maxRetries = 50))
+      assert(attempts.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the writer never reached the held lock")
+      assert(!pending.isCompleted, "append must wait out the held lock, not fail")
+      assert(lock.delete())
+      freed.countDown()
+      assert(Await.result(pending, 60.seconds) == 1L,
+        "the blocked append must commit v1 itself once the lock frees")
+      assert(t.snapshot().count() == 2)
+    } finally LockGateFs.beforeLockCreate = _ => ()
   }
 
   test("stats-pruned merge rewrites only range-overlapping dirs") {
@@ -1006,4 +1023,23 @@ class ManifestTableSpec extends SparkSpec {
     assert(e.getMessage.contains("unresolved"), e.getMessage)
     assert(!e.getMessage.contains(".lock"), "object-store mode has no lock to name")
   }
+}
+
+/** The local filesystem under the `lockgate` scheme, with a hook that runs
+  * before every `.lock` create. Any scheme but `file` makes the log
+  * reserve a version through `create(lock, overwrite = false)`, so a test
+  * can watch a writer's lock attempts and hold one back.
+  */
+class LockGateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "lockgate"
+  override def getUri: java.net.URI = java.net.URI.create("lockgate:///")
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    if (f.getName.endsWith(".lock")) LockGateFs.beforeLockCreate(f)
+    super.create(f, overwrite)
+  }
+}
+
+object LockGateFs {
+  @volatile var beforeLockCreate: org.apache.hadoop.fs.Path => Unit = _ => ()
 }

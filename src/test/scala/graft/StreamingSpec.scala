@@ -9,31 +9,65 @@ import graft.streaming.Streaming
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  private def deathLine(name: String, insee: String, born: String = "19250404") =
+    name.padTo(80, ' ') + "1" + born + " ".padTo(65, ' ') + "20220804" + insee + "1"
+
   test("death file stream ingests incrementally: new files only, parsed and deduped") {
+    // the program's path: deathFileStream -> acidMergeSink. The stream keeps
+    // no dedup state; the keyed merge keeps one row per id at rest. The id
+    // is sha1(name_raw), so one id can carry different dates: the reference
+    // keeps the row it inserted first (ON CONFLICT DO NOTHING), the merge
+    // keeps a later file's row and resolves one file's rows by content
+    // order, not by their order in the file
     val dir = Files.createTempDirectory("graft-stream")
     val ckpt = Files.createTempDirectory("graft-ckpt")
-    val sink = Files.createTempDirectory("graft-sink")
-    def line(name: String, insee: String) =
-      name.padTo(80, ' ') + "1" + "19250404" + " ".padTo(65, ' ') + "20220804" + insee + "1"
-    Files.writeString(dir.resolve("death_a.txt"), Seq(line("A/", "01007"), line("A/", "01007")).mkString("\n"))
-    def runOnce(): Unit = {
-      val q = Streaming.deathFileStream(spark, dir.toString).writeStream
+    val table = graft.ops.ManifestTable(spark, Files.createTempDirectory("graft-sink").toString + "/tbl")
+    Files.writeString(dir.resolve("death_a.txt"), Seq(
+      deathLine("A/", "01007", born = "19300101"),
+      deathLine("A/", "01007", born = "19250404"),
+      deathLine("A/", "01007", born = "19350101")).mkString("\n"))
+    // one available-now restart; returns its number of triggers
+    // (numInputRows is no row count here: foreachBatch reads the batch
+    // twice, once for the emptiness probe and once for the merge)
+    def runOnce(): Int = {
+      val q = Streaming.acidMergeSink(Streaming.deathFileStream(spark, dir.toString), table, Seq("id"))
         .option("checkpointLocation", ckpt.toString)
-        .option("path", sink.toString)
-        .outputMode("append").format("parquet")
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "available-now run did not finish")
       q.stop()
+      q.recentProgress.length
     }
-    runOnce()
-    assert(spark.read.parquet(sink.toString).count() == 1) // in-file duplicate deduped
+    def bornOf(insee: String): Seq[String] =
+      table.snapshot().where(col("insee") === insee)
+        .select(col("date_of_birth").cast("string")).as[String].collect().toSeq
+    // the file source's log entry for one batch names the files it read
+    def filesOf(batchId: Int): Seq[String] =
+      Files.readString(ckpt.resolve(s"sources/0/$batchId")).linesIterator
+        .flatMap("death_[a-z]+\\.txt".r.findFirstIn(_)).toSeq
+    // a stateless stream runs one trigger per restart: no watermark to
+    // advance, so no no-data batch follows
+    assert(runOnce() == 1)
+    assert(table.snapshot().count() == 1) // in-file duplicate lands once
+    // neither the first nor the last line of the file survives
+    assert(bornOf("01007") == Seq("1925-04-04"))
 
-    Files.writeString(dir.resolve("death_b.txt"), line("B/", "01053"))
-    runOnce()
+    Files.writeString(dir.resolve("death_b.txt"), deathLine("B/", "01053"))
     // checkpoint = the reference's Redis file ledger: only death_b is new
-    val out = spark.read.parquet(sink.toString)
+    assert(runOnce() == 1)
+    assert(filesOf(1) == Seq("death_b.txt"))
+    val out = table.snapshot()
     assert(out.count() == 2)
     assert(out.select("insee").as[String].collect().toSet == Set("01007", "01053"))
+
+    // a later file that names A/ again replaces its row instead of adding
+    // one, even with an earlier date
+    Files.writeString(dir.resolve("death_c.txt"), deathLine("A/", "01007", born = "19200101"))
+    assert(runOnce() == 1)
+    assert(filesOf(2) == Seq("death_c.txt"))
+    val after = table.snapshot()
+    assert(after.count() == 2)
+    assert(bornOf("01007") == Seq("1920-01-01"))
+    assert(!Files.exists(ckpt.resolve("state")), "the ingest stream must keep no state store")
   }
 
   test("restart against the same checkpoint re-ingests no file (Redis-ledger contract)") {
