@@ -608,13 +608,13 @@ private[graft] object QueriesEvents {
           .collect().sortBy(_._1)
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val input = MemoryStream[(Long, String)]
-        // tokens key on the STREAM's micro-batch id (onAcceptedBatch), not
-        // a sink-side counter: a checkpoint-recovery replay re-presents
-        // the same id and the token no-ops — the identity being certified
+        // tokens key on the STREAM's micro-batch id (onAccepted's second
+        // argument), not a sink-side counter: a checkpoint-recovery replay
+        // re-presents the same id and the token no-ops — the identity
+        // being certified
         val q = graft.streaming.Streaming.nearDupFilterSink(
             input.toDF().toDF("doc_id", "text"), "doc_id", "text", sigTable,
-            shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.5,
-            onAcceptedBatch = (b, batchId) => {
+            onAccepted = (b, batchId) => {
               accTable.appendOnce(b.withColumn("batch", pmod(col("doc_id"), lit(3L))),
                 "acc", batchId = batchId)
               ()

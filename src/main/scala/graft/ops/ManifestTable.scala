@@ -387,6 +387,13 @@ final class ManifestTable private (
     * range-overlapping dirs are rewritten (see class doc); without, the
     * whole table rewrites. On a CAS conflict the rewrite is recomputed
     * against the winner's snapshot. Returns the committed version.
+    *
+    * An EMPTY batch commits nothing — no version, no data dir — and
+    * returns the current version (-1 on a table with no commits), like
+    * [[deleteByKeys]]. The row count rides the merge's own write as an
+    * observed metric (as in [[appendNonEmpty]]), so a non-empty merge
+    * runs no extra job; an empty batch on a table without usable stats
+    * still pays the rewrite it then discards.
     */
   def merge(updates: DataFrame, keys: Seq[String], maxRetries: Int = DefaultRetries): Long =
     mergeCore(updates, keys, maxRetries, txn = None)
@@ -399,7 +406,8 @@ final class ManifestTable private (
     * makes the replay a provable no-op instead — checked against the exact
     * manifest the commit lands on (parentGuard), so the decision and the
     * commit are one conditional PUT. Returns the version at which the
-    * batch is visible.
+    * batch is visible; an empty batch commits neither rows nor its token,
+    * as in [[merge]].
     */
   def mergeOnce(updates: DataFrame, keys: Seq[String], sinkId: String, batchId: Long,
                 maxRetries: Int = DefaultRetries): Long = {
@@ -424,13 +432,29 @@ final class ManifestTable private (
         if (base.exists(v => readManifest(v).txns.get(sid).exists(_ >= b)))
           return base.get
       }
+      // the batch's row count rides its first write (one Observation per
+      // attempt: each is single-use). Observed in the table's session: an
+      // Observation completes only from executions in its own session, and
+      // a foreachBatch frame's session is the stream's per-run clone, where
+      // the merge would recompile its generated code on every restart.
+      // Both upsert branches report the count; only zero versus non-zero
+      // is read
+      val obs = org.apache.spark.sql.Observation()
+      val observed = org.apache.spark.sql.GraftBridge.inSession(updates, spark)
+        .observe(obs, count(lit(1)).as("rows"))
+      // AQE replaces a stage it found empty, and the observation inside it
+      // goes missing with it: only then is emptiness probed, not assumed
+      lazy val empty: Boolean = obs.get.get("rows") match {
+        case Some(n) => n == 0L
+        case None => updates.isEmpty
+      }
       val (survivors, merged, scratch) = base match {
-        case None => (Seq.empty[String], updates.dropDuplicates(keys), None)
+        case None => (Seq.empty[String], observed.dropDuplicates(keys), None)
         case Some(v) =>
           val m = readManifest(v)
           val statKeys = keys.filter(c => m.stats.values.exists(_.contains(c)))
           if (statKeys.isEmpty)
-            (Seq.empty[String], Aggregates.upsert(readDirs(m, m.dirs), updates, keys), None)
+            (Seq.empty[String], Aggregates.upsert(readDirs(m, m.dirs), observed, keys), None)
           else {
             // The prune decision and the written rows MUST come from the
             // same execution of the updates plan: a nondeterministic source
@@ -439,7 +463,11 @@ final class ManifestTable private (
             // So the batch is materialized to a scratch dir first and both
             // the hull and the upsert read those bytes. The scratch dir is
             // never referenced by a manifest; it is deleted after commit.
-            val updDir = writeRaw(updates, ScratchPrefix)
+            val updDir = writeRaw(observed, ScratchPrefix)
+            if (empty) {
+              bestEffortDelete(updDir, "empty-batch scratch dir")
+              return v
+            }
             val updRead = spark.read.schema(updates.schema)
               .parquet(new Path(dataDir, updDir).toString)
             val hull = updatesHull(updRead, statKeys)
@@ -459,6 +487,10 @@ final class ManifestTable private (
       }
       val (dir, stats) = writeData(merged)
       scratch.foreach(bestEffortDelete(_, "merge scratch dir"))
+      if (empty) {
+        bestEffortDelete(dir, "empty-batch dir")
+        return base.getOrElse(-1L)
+      }
       // single-shot commit: a conflict must re-derive the merge input, not
       // just re-CAS the same rewrite (that would silently drop the
       // conflicting winner's rows)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming restatement of the reference's incremental batch
@@ -61,54 +61,47 @@ object Streaming {
     * late row REPLACES the key's row instead of being dropped — plus
     * snapshot-isolated readers while the stream writes, and safe
     * coexistence with other writers on the same table (the commit CAS
-    * serializes them). Replayed micro-batches after a restart re-merge the
-    * same rows; last-write-wins makes that a no-op at rest — exactly-once
-    * per key without sink-side dedup state.
+    * serializes them). An empty micro-batch commits nothing: the merge
+    * counts the batch's rows on its own write and spends no version on
+    * zero.
     *
-    * `intraBatchOrder` resolves duplicate keys WITHIN one micro-batch: pass
-    * the event-time (or sequence) column descending and the surviving row
-    * is the latest — true last-write-wins even when one trigger carries
-    * several updates to a key. Rows the order ties (all of a key's rows,
-    * when it is left empty) fall to the remaining orderable columns
-    * ascending, nulls last: rows that differ in content never tie, so a
-    * crash replay merges the same survivor. Only rows that differ in
+    * Duplicate keys WITHIN one micro-batch resolve by content: a key's
+    * rows are ordered on every orderable non-key column ascending, nulls
+    * last, and the first survives. Rows that differ in content never tie,
+    * so a crash replay merges the same survivor; only rows that differ in
     * non-orderable (map-typed) columns alone can still tie.
     *
-    * `sinkId` (optional) upgrades replay handling from at-rest idempotence
-    * to PROVABLE exactly-once via [[graft.ops.ManifestTable.mergeOnce]]'s
-    * batch token. The difference bites when writers interleave: a batch
-    * replayed after a crash re-merges STALE values, silently reverting any
-    * update another writer landed on the same keys in between —
-    * last-write-wins cannot tell a replay from fresh data, the token can.
-    * Keep the id stable across restarts of the same checkpoint; never
-    * share it between queries.
+    * Replays: a micro-batch replayed after a restart re-merges the same
+    * rows, which last-write-wins makes a no-op at rest — unless another
+    * writer updated one of the batch's keys in between, in which case the
+    * replay re-merges STALE values and reverts that writer's update
+    * (last-write-wins cannot tell a replay from fresh data). A caller that
+    * shares the table with such a writer calls
+    * [[graft.ops.ManifestTable.mergeOnce]] in its own `foreachBatch`, whose
+    * `(sinkId, batchId)` token makes the replay a provable no-op.
     */
-  def acidMergeSink(df: DataFrame, table: graft.ops.ManifestTable, keys: Seq[String],
-                    intraBatchOrder: Seq[Column] = Nil,
-                    sinkId: Option[String] = None)
+  def acidMergeSink(df: DataFrame, table: graft.ops.ManifestTable, keys: Seq[String])
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // an empty micro-batch must not spend a version (and a fresh table
-      // must not be created from a zero-row batch with no key coverage).
-      // Probe the RAW batch: dedupFirst never empties a non-empty input,
-      // and probing its window would pay a hash exchange for a limit-1
-      graft.ops.Sinks.writeIfNonEmpty(batch, b => {
-        val order = intraBatchOrder ++ b.schema.fields.collect {
-          case f if !keys.contains(f.name) &&
-              org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(f.dataType) =>
-            col(s"`${f.name}`").asc_nulls_last
-        }
-        val resolved =
-          if (order.isEmpty) b
-          else graft.ops.Aggregates.dedupFirst(b, keys, order)
-        sinkId match {
-          case Some(sid) => table.mergeOnce(resolved, keys, sid, batchId)
-          case None => table.merge(resolved, keys)
-        }
-        ()
-      })
+    df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      val order = batch.schema.fields.collect {
+        case f if !keys.contains(f.name) &&
+            org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(f.dataType) =>
+          col(s"`${f.name}`").asc_nulls_last
+      }
+      val resolved =
+        if (order.isEmpty) batch
+        else graft.ops.Aggregates.dedupFirst(batch, keys, order.toSeq)
+      table.merge(resolved, keys)
       ()
     }
+
+  /** [[nearDupFilterSink]]'s signature: MinHash slots over word shingles,
+    * banded for LSH, and the agreement fraction that marks a duplicate.
+    */
+  private val ShingleN = 3
+  private val NumHashes = 8
+  private val RowsPerBand = 2
+  private val Threshold = 0.5
 
   /** Streaming near-dedup against HISTORY — "dedupe the firehose against
     * the corpus so far", the layout a continuously-ingesting training-data
@@ -123,27 +116,23 @@ object Streaming {
     * Per micro-batch: sign + band-bucket the batch; bucket equi-join
     * against the history snapshot; a candidate is a duplicate when the
     * fraction of agreeing signature slots — the textbook MinHash Jaccard
-    * estimator — reaches `threshold`. Estimation (not exact shingle
-    * verify) is the deliberate trade: exact verify would require storing
-    * per-doc shingle SETS in the state table (corpus token mass) instead
-    * of fixed-width signatures; with 8 slots the estimator's σ ≈ 0.17, so
-    * thresholds well above the corpus' background similarity are safe —
-    * raise `numHashes` to tighten it. Cost shape: per batch, history is
-    * SCANNED once for the bucket join (linear, shared with batch writers
-    * via the snapshot) and only batch-sized rows are WRITTEN — state grows
-    * by appends, never a table rewrite. `compactEvery = N` opts into
-    * maintenance: whenever the state table's live manifest references N or
-    * more dirs, it compacts to one and vacuums pre-compaction dirs past
-    * the grace window — bounding the per-trigger history scan's dir count
-    * at N. Each firing rewrites the whole state once, so N is the
-    * amortization knob (N=16 ≈ one rewrite per 15 appends). Documents shorter than `shingleN`
-    * tokens sign their whole text as a single shingle (the batch operators
-    * exclude them, but in a firehose short boilerplate is precisely the
-    * highest-frequency duplicate class — it must not bypass the filter).
-    * `skipEmptyTriggers = true` (opt-in, for SPARSE sources) fast-exits
-    * an all-empty trigger for one isEmpty probe job instead of running
-    * the full pipeline; off by default because the probe taxes every
-    * non-empty trigger (see the body comment).
+    * estimator — reaches one half. Signatures are 8 MinHash slots over
+    * word 3-shingles, banded 2 rows per band. Estimation (not exact
+    * shingle verify) is the deliberate trade: exact verify would require
+    * storing per-doc shingle SETS in the state table (corpus token mass)
+    * instead of fixed-width signatures; with 8 slots the estimator's
+    * σ ≈ 0.17, so the threshold sits well above the corpus' background
+    * similarity. Cost shape: per batch, history is SCANNED once for the
+    * bucket join (linear, shared with batch writers via the snapshot) and
+    * only batch-sized rows are WRITTEN — state grows by appends, never a
+    * table rewrite, and by one dir per accepting trigger: the caller
+    * bounds the history scan's dir count by calling `sigTable.compact()`
+    * between triggers. Documents shorter than 3 tokens sign their whole
+    * text as a single shingle (the batch operators exclude them, but in a
+    * firehose short boilerplate is precisely the highest-frequency
+    * duplicate class — it must not bypass the filter). An empty trigger
+    * runs the pipeline on no rows: it appends no state, spends no
+    * version, and hands `onAccepted` an empty frame.
     *
     * Exactly-once: accepted state rows land via idempotent-insert + APPEND
     * — a replayed micro-batch finds its rows already present and appends
@@ -175,12 +164,12 @@ object Streaming {
     * representative, which then drops against history) — either way no
     * content class is admitted twice.
     *
-    * `onAccepted` receives each batch's surviving rows (original schema) —
-    * route them to the corpus sink of your choice inside the same
-    * foreachBatch for per-batch atomicity of "state + corpus".
-    * `onAcceptedBatch` additionally carries the STREAM's micro-batch id —
-    * the replay identity an exactly-once corpus sink must key its batch
-    * token on (`ManifestTable.appendOnce(_, sinkId, batchId)`): a
+    * `onAccepted` receives each batch's surviving rows (original schema)
+    * and the STREAM's micro-batch id — route the rows to the corpus sink
+    * of your choice inside the same foreachBatch for per-batch atomicity
+    * of "state + corpus". The id is the replay identity an exactly-once
+    * corpus sink must key its batch token on
+    * (`ManifestTable.appendOnce(_, sinkId, batchId)`): a
     * checkpoint-recovery re-execution of the same micro-batch re-presents
     * the same id, so the token no-ops, where any sink-side counter would
     * draw a fresh token and double-append.
@@ -194,38 +183,23 @@ object Streaming {
     */
   def nearDupFilterSink(docs: DataFrame, idCol: String, textCol: String,
                         sigTable: graft.ops.ManifestTable,
-                        shingleN: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 2,
-                        threshold: Double = 0.5,
-                        onAccepted: DataFrame => Unit = _ => (),
-                        compactEvery: Int = 0,
-                        onAcceptedBatch: (DataFrame, Long) => Unit = (_, _) => (),
-                        skipEmptyTriggers: Boolean = false)
+                        onAccepted: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       import graft.ops.{Aggregates, Dedup}
-      // sparse-source gating (opt-in): an all-empty trigger skips the
-      // whole sign/probe/append pipeline (and both acceptance handlers)
-      // for one isEmpty probe job. OFF by default BY CHOICE: the probe
-      // costs +1 job on every NON-empty trigger — a steady-state tax to
-      // save a rare case, and it would break the suite's per-trigger job
-      // pin — so only sources where empty triggers dominate (sparse
-      // upstreams, long trigger intervals) should opt in. Committing the
-      // skipped trigger's offsets is safe: emptiness IS the result,
-      // there is nothing to redeliver.
-      if (!(skipEmptyTriggers && batch.isEmpty)) {
-      // short docs (< shingleN tokens, incl. empty text) sign their whole
+      // short docs (< ShingleN tokens, incl. empty text) sign their whole
       // text as one shingle instead of vanishing from the filter
       val toks = batch.select(col(idCol), Dedup.tokens(col(textCol)).as("_toks"))
       val sh = toks.select(col(idCol), explode(
-          when(size(col("_toks")) >= shingleN,
-            Dedup.shinglesFromTokens(col("_toks"), shingleN))
+          when(size(col("_toks")) >= ShingleN,
+            Dedup.shinglesFromTokens(col("_toks"), ShingleN))
             .otherwise(array(concat_ws(" ", col("_toks"))))).as("shingle"))
-      val sig = Dedup.minhashSignatures(sh, idCol, numHashes)
+      val sig = Dedup.minhashSignatures(sh, idCol, NumHashes)
       val sigArr = sig.select(col(idCol),
-        array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
+        array((0 until NumHashes).map(i => col(s"mh$i")): _*).as("sig"))
       // batch-bounded and consumed by three sinks (dup probe, state
       // append, acceptance) — persist so the sign/join pipeline runs once
-      val state = Dedup.lshBuckets(sig, idCol, numHashes, rowsPerBand)
+      val state = Dedup.lshBuckets(sig, idCol, NumHashes, RowsPerBand)
         .join(sigArr, Seq(idCol))
         .select(col(idCol), col("band"), col("bucket"), col("sig"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -242,10 +216,10 @@ object Streaming {
         // history probe — two hand-maintained copies could silently
         // diverge on the threshold semantics
         def sigAgreement(a: String, b: String) =
-          (0 until numHashes).map(i =>
+          (0 until NumHashes).map(i =>
               when(element_at(col(a), i + 1) === element_at(col(b), i + 1), 1)
                 .otherwise(0))
-            .reduce(_ + _).cast("double") / numHashes
+            .reduce(_ + _).cast("double") / NumHashes
         // agreement-filter BEFORE the distinct, ids-only distinct AFTER
         // (the Dedup.simhashPairsByChunks trade): a pair surfacing from
         // several bands carries identical signatures in every copy, so
@@ -257,7 +231,7 @@ object Streaming {
               col(s"x.`$idCol`") < col(s"y.`$idCol`"))
           .select(col(s"x.`$idCol`").as("doc_a"), col("x.sig").as("_as"),
             col(s"y.`$idCol`").as("doc_b"), col("y.sig").as("_bs"))
-          .where(sigAgreement("_as", "_bs") >= threshold)
+          .where(sigAgreement("_as", "_bs") >= Threshold)
           .select("doc_a", "doc_b")
           .distinct()
         // dedupClustersBounded, not the adaptive dedupClusters: a trigger's
@@ -309,7 +283,7 @@ object Streaming {
               // and was fully redundant with this ids-only distinct
               .select(col(s"b.`$idCol`").as("_bid"), col("b.sig").as("_bs"),
                 col("h.sig").as("_hs"))
-              .where(sigAgreement("_bs", "_hs") >= threshold)
+              .where(sigAgreement("_bs", "_hs") >= Threshold)
               .select(col("_bid").as(idCol)).distinct()
         }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val dupIds = histDups.union(inBatchDrops)
@@ -333,33 +307,12 @@ object Streaming {
         }
         try {
           sigTable.appendNonEmpty(newState)
-          // acceptance handlers run BEFORE maintenance: `accepted`'s lazy
-          // plan reads the PRE-append history snapshot through the
-          // persisted-but-EVICTABLE histDups — if vacuum below deleted the
-          // pre-compaction dirs first, a cache loss mid-handler would
-          // recompute the history bucket join against deleted paths and
-          // fail the corpus sink after state already committed
-          onAccepted(accepted)
-          onAcceptedBatch(accepted, batchId)
-          // append-per-trigger accumulates one dir per micro-batch — the
-          // small-file failure mode compact exists for. Opt-in maintenance
-          // keyed on the LIVE DIR COUNT (not version parity: compact's own
-          // committed version would re-align a modulo check and fire every
-          // trigger): when the manifest references >= compactEvery dirs,
-          // compact to one and vacuum past the grace window. Each firing
-          // is an O(state) rewrite, so the threshold is the amortization
-          // knob — ~16 means one rewrite per 15 appends.
-          if (compactEvery > 0 && sigTable.latestVersion().isDefined &&
-              sigTable.dirCount() >= compactEvery) {
-            sigTable.compact()
-            sigTable.vacuum()
-          }
+          onAccepted(accepted, batchId)
         } finally {
           histDups.unpersist(blocking = false)
           shielded.unpersist(blocking = false)
         }
       } finally state.unpersist(blocking = false)
-      }
       ()
     }
 }

@@ -40,6 +40,14 @@ object GraftBridge {
       case _ => false
     }
 
+  /** `df`'s plan as a DataFrame of `session`. An execution reports only to
+    * its own session's listeners, so only that session's `Observation`s
+    * complete from it, and generated code is cached per session class
+    * loader, so a plan run in a fresh session compiles again.
+    */
+  def inSession(df: Dataset[_], session: SparkSession): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
+
   /** Table existence through Spark's own JDBC machinery — the connection
     * comes from the dialect's factory (which consults Spark's
     * DriverRegistry, so drivers shipped via `--jars` + the `driver`

@@ -333,6 +333,39 @@ class ManifestTableSpec extends SparkSpec {
     assert(t.versions() == Seq(0L, 1L))
   }
 
+  test("merge/mergeOnce: an empty batch commits nothing — no version, no token, no data dir") {
+    val empty = kv().where(lit(false))
+    // every data dir under the root, committed or not (scratch included)
+    def dataDirs(root: String): Set[String] =
+      Option(new java.io.File(root + "/data").listFiles()).toSeq.flatten
+        .filter(_.isDirectory).map(_.getName).toSet
+    Seq(Seq.empty[String], Seq("k")).foreach { stats =>
+      // fresh table: nothing to return but -1, and nothing is created
+      val freshRootPath = freshRoot()
+      val fresh = ManifestTable(spark, freshRootPath, statsCols = stats)
+      assert(fresh.merge(empty, Seq("k")) == -1L, s"stats=$stats")
+      assert(fresh.mergeOnce(empty, Seq("k"), "s", 0L) == -1L, s"stats=$stats")
+      assert(fresh.versions().isEmpty, s"stats=$stats: an empty merge created a version")
+      assert(dataDirs(freshRootPath).isEmpty, s"stats=$stats: ${dataDirs(freshRootPath)}")
+      // committed table: same version, same live dirs, no orphan left
+      val root = freshRoot()
+      val t = ManifestTable(spark, root, statsCols = stats)
+      t.overwrite(kv(1L -> 1.0))
+      t.append(kv(2L -> 2.0))
+      assert(t.merge(empty, Seq("k")) == 1L, s"stats=$stats")
+      assert(t.mergeOnce(empty, Seq("k"), "s", 0L) == 1L, s"stats=$stats")
+      assert(t.versions() == Seq(0L, 1L), s"stats=$stats: an empty merge spent a version")
+      assert(t.dirCount() == 2, s"stats=$stats")
+      assert(t.txnVersion("s").isEmpty, s"stats=$stats: an empty mergeOnce committed its token")
+      assert(t.vacuum(retainLast = t.versions().length, graceMs = 0).isEmpty, s"stats=$stats")
+      assert(dataDirs(root).size == 2, s"stats=$stats: ${dataDirs(root)}")
+      // the batch id was not spent: the same id with rows still lands
+      assert(t.mergeOnce(kv(2L -> 20.0), Seq("k"), "s", 0L) == 2L, s"stats=$stats")
+      assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList ==
+        List(1L -> 1.0, 2L -> 20.0), s"stats=$stats")
+    }
+  }
+
   test("append rejects a schema-drifting batch instead of corrupting reads") {
     val t = ManifestTable(spark, freshRoot())
     t.overwrite(kv(1L -> 1.0))

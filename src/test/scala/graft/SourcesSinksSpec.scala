@@ -429,112 +429,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(errs.length == 1 && errs.head.contains("overruns"), errs.mkString)
   }
 
-  test("processNewPartitions honors the ledger for a RELATIVE dest path (qualified-path regression)") {
-    // fs.listFiles returns qualified paths; an unqualified relative root
-    // used to never match them, emptying the ledger and re-appending every
-    // partition on every run
-    val rel = s"target/graft-incr-rel-${System.nanoTime()}/t"
-    try {
-      val src = Seq((2020, 1L), (2020, 2L)).toDF("year", "v")
-      assert(graft.ops.Sinks.processNewPartitions(spark, src, rel, "year")(identity) == 1)
-      assert(graft.ops.Sinks.processNewPartitions(spark, src, rel, "year")(identity) == 0)
-      assert(spark.read.parquet(rel).count() == 2) // no duplicate append
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(rel).getParent
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  test("processNewPartitions transforms only unseen partition values; re-run is a no-op") {
-    val dest = Files.createTempDirectory("graft-incr").toString + "/t"
-    def double(df: org.apache.spark.sql.DataFrame) = df.withColumn("x", $"v" * 2)
-    val src1 = Seq((2020, 1L), (2020, 2L)).toDF("year", "v")
-    assert(graft.ops.Sinks.processNewPartitions(spark, src1, dest, "year")(double) == 1)
-    val src2 = src1.unionByName(Seq((2021, 3L)).toDF("year", "v"))
-    assert(graft.ops.Sinks.processNewPartitions(spark, src2, dest, "year")(double) == 1) // 2021 only
-    assert(graft.ops.Sinks.processNewPartitions(spark, src2, dest, "year")(double) == 0) // ledger holds
-    val back = spark.read.parquet(dest)
-    assert(back.count() == 3)
-    assert(back.select("x").as[Long].collect().toSet == Set(2L, 4L, 6L))
-  }
-
-  test("processNewPartitions: NULL partition values and inference-colliding strings round-trip") {
-    val dest = Files.createTempDirectory("graft-incr2").toString + "/t"
-    val id = (df: org.apache.spark.sql.DataFrame) => df
-    // string partition values "1" and "01" would coerce to the same int
-    // under read-back type inference; nulls land in the Hive default dir
-    val src1 = Seq((Some("1"), 10L), (None, 11L)).toDF("k", "v")
-    assert(graft.ops.Sinks.processNewPartitions(spark, src1, dest, "k")(id) == 2)
-    assert(graft.ops.Sinks.processNewPartitions(spark, src1, dest, "k")(id) == 0) // null converges
-    val src2 = src1.unionByName(Seq((Some("01"), 12L)).toDF("k", "v"))
-    assert(graft.ops.Sinks.processNewPartitions(spark, src2, dest, "k")(id) == 1) // "01" is NEW
-    assert(graft.ops.Sinks.processNewPartitions(spark, src2, dest, "k")(id) == 0)
-    assert(spark.read.parquet(dest).select("v").as[Long].collect().toSet == Set(10L, 11L, 12L))
-  }
-
-  test("processNewPartitions: a partition dir with no visible data file is NOT done (crash recovery)") {
-    val dest = Files.createTempDirectory("graft-incr3").toString + "/t"
-    val id = (df: org.apache.spark.sql.DataFrame) => df
-    val src = Seq((2020, 1L), (2021, 2L)).toDF("year", "v")
-    assert(graft.ops.Sinks.processNewPartitions(spark, src, dest, "year")(id) == 2)
-    // simulate a crashed writer: partition dir exists but holds only marker files
-    val crashed = new java.io.File(s"$dest/year=2022")
-    assert(crashed.mkdirs())
-    assert(new java.io.File(crashed, "_temporary").createNewFile())
-    val src2 = src.unionByName(Seq((2022, 3L)).toDF("year", "v"))
-    assert(graft.ops.Sinks.processNewPartitions(spark, src2, dest, "year")(id) == 1) // 2022 re-runs
-    assert(spark.read.parquet(dest).select("v").as[Long].collect().toSet == Set(1L, 2L, 3L))
-  }
-
-  test("processNewPartitions: a PARTIALLY written partition (visible files, no marker) re-lands without duplicates") {
-    // both committer algorithms can leave visible data files from a
-    // crashed job (v2 moves task output at task commit; v1's job commit
-    // is non-atomic across tasks) — a data file is NOT proof of
-    // completion. The marker ledger must re-select the partition and the
-    // dynamic overwrite must REPLACE the partial rows, not append to them.
-    val dest = Files.createTempDirectory("graft-incr5").toString + "/t"
-    val id = (df: org.apache.spark.sql.DataFrame) => df
-    val src = Seq((2020, 1L), (2021, 2L)).toDF("year", "v")
-    assert(graft.ops.Sinks.processNewPartitions(spark, src, dest, "year")(id) == 2)
-    // simulate the crash: a visible data file lands in year=2022 with no
-    // post-commit marker (a plain append writes exactly that shape)
-    Seq((2022, 99L)).toDF("year", "v")
-      .write.mode("append").partitionBy("year").parquet(dest)
-    val src2 = src.unionByName(Seq((2022, 3L)).toDF("year", "v"))
-    assert(graft.ops.Sinks.processNewPartitions(spark, src2, dest, "year")(id) == 1,
-      "the unmarked partition must re-run")
-    val back = spark.read.parquet(dest)
-    assert(back.select("v").as[Long].collect().toSet == Set(1L, 2L, 3L),
-      "the partial row must be replaced, not duplicated alongside")
-    assert(graft.ops.Sinks.processNewPartitions(spark, src2, dest, "year")(id) == 0)
-  }
-
-  test("processNewPartitions: a selected partition whose transform yields ZERO rows clears stale partials before its marker lands") {
-    // dynamic overwrite only replaces partitions PRESENT in the written
-    // frame — a zero-row partition is absent from it, so a crashed prior
-    // run's partial files used to survive under a fresh done marker,
-    // permanently exposing the stale rows
-    val dest = Files.createTempDirectory("graft-incr6").toString + "/t"
-    val id = (df: org.apache.spark.sql.DataFrame) => df
-    assert(graft.ops.Sinks.processNewPartitions(
-      spark, Seq((2020, 1L)).toDF("year", "v"), dest, "year")(id) == 1)
-    // crashed prior run: visible partial data in year=2022, no marker
-    Seq((2022, 99L)).toDF("year", "v")
-      .write.mode("append").partitionBy("year").parquet(dest)
-    val src = Seq((2020, 1L), (2022, 3L)).toDF("year", "v")
-    // the transform drops every 2022 row — the partition is selected
-    // (unmarked) but lands nothing in the overwrite frame
-    assert(graft.ops.Sinks.processNewPartitions(spark, src, dest, "year")(
-      _.where($"v" =!= 3L)) == 1)
-    val back = spark.read.parquet(dest)
-    assert(back.select("v").as[Long].collect().toSet == Set(1L),
-      "the stale partial row must be cleared, not exposed under the marker")
-    // the marker DID land (processed-and-empty, not pending): a re-run
-    // selects nothing
-    assert(graft.ops.Sinks.processNewPartitions(spark, src, dest, "year")(
-      _.where($"v" =!= 3L)) == 0)
-  }
-
   test("bucketedTable: database-qualified names drop the real table (stale-path guard)") {
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_bt_db")
     val p1 = Files.createTempDirectory("graft-bt1").toString
@@ -548,32 +442,6 @@ class SourcesSinksSpec extends SparkSpec {
       val got = spark.table("graft_bt_db.t").as[(Long, String)].collect().toSeq
       assert(got == Seq((2L, "b")), s"stale location read back: $got")
     } finally spark.sql("DROP DATABASE IF EXISTS graft_bt_db CASCADE")
-  }
-
-  test("processNewPartitions fails loudly on a key-cardinality partition column") {
-    val dest = Files.createTempDirectory("graft-incr4").toString + "/t"
-    val id = (df: org.apache.spark.sql.DataFrame) => df
-    val src = spark.range(50).selectExpr("id AS k", "id * 2 AS v")
-    val e = intercept[IllegalArgumentException] {
-      graft.ops.Sinks.processNewPartitions(spark, src, dest, "k", maxPartitionValues = 10)(id)
-    }
-    assert(e.getMessage.contains("not a partition column"))
-    // nothing was written — the guard fires before any append
-    assert(!new java.io.File(dest).exists())
-  }
-
-  test("processNewPartitions: empty-string partition values converge (no re-append duplication)") {
-    // Spark writes null AND "" to the same __HIVE_DEFAULT_PARTITION__
-    // directory; a Some("") source value that never matched the ledger's
-    // None would re-append — duplicate — on every run
-    val dest = Files.createTempDirectory("graft-incr5").toString + "/t"
-    val id = (df: org.apache.spark.sql.DataFrame) => df
-    val src = Seq((Some("a"), 1L), (Some(""), 2L), (None: Option[String], 3L)).toDF("k", "v")
-    val first = graft.ops.Sinks.processNewPartitions(spark, src, dest, "k")(id)
-    assert(first == 2, s"expected {a} + {default: '' and null conflated}, got $first")
-    assert(graft.ops.Sinks.processNewPartitions(spark, src, dest, "k")(id) == 0,
-      "re-run must be a no-op — '' re-appending was the duplication bug")
-    assert(spark.read.parquet(dest).select("v").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
   test("jdbc existence probe does not treat '_' in table names as a LIKE wildcard") {

@@ -26,16 +26,16 @@ class StreamingSpec extends SparkSpec {
       deathLine("A/", "01007", born = "19300101"),
       deathLine("A/", "01007", born = "19250404"),
       deathLine("A/", "01007", born = "19350101")).mkString("\n"))
-    // one available-now restart; returns its number of triggers
-    // (numInputRows is no row count here: foreachBatch reads the batch
-    // twice, once for the emptiness probe and once for the merge)
-    def runOnce(): Int = {
+    // one available-now restart; returns each trigger's numInputRows.
+    // The sink executes each micro-batch once, so that is the new file's
+    // valid record count
+    def runOnce(): Seq[Long] = {
       val q = Streaming.acidMergeSink(Streaming.deathFileStream(spark, dir.toString), table, Seq("id"))
         .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(60000), "available-now run did not finish")
       q.stop()
-      q.recentProgress.length
+      q.recentProgress.map(_.numInputRows).toSeq
     }
     def bornOf(insee: String): Seq[String] =
       table.snapshot().where(col("insee") === insee)
@@ -46,14 +46,14 @@ class StreamingSpec extends SparkSpec {
         .flatMap("death_[a-z]+\\.txt".r.findFirstIn(_)).toSeq
     // a stateless stream runs one trigger per restart: no watermark to
     // advance, so no no-data batch follows
-    assert(runOnce() == 1)
+    assert(runOnce() == Seq(3L))
     assert(table.snapshot().count() == 1) // in-file duplicate lands once
     // neither the first nor the last line of the file survives
     assert(bornOf("01007") == Seq("1925-04-04"))
 
     Files.writeString(dir.resolve("death_b.txt"), deathLine("B/", "01053"))
     // checkpoint = the reference's Redis file ledger: only death_b is new
-    assert(runOnce() == 1)
+    assert(runOnce() == Seq(1L))
     assert(filesOf(1) == Seq("death_b.txt"))
     val out = table.snapshot()
     assert(out.count() == 2)
@@ -62,7 +62,7 @@ class StreamingSpec extends SparkSpec {
     // a later file that names A/ again replaces its row instead of adding
     // one, even with an earlier date
     Files.writeString(dir.resolve("death_c.txt"), deathLine("A/", "01007", born = "19200101"))
-    assert(runOnce() == 1)
+    assert(runOnce() == Seq(1L))
     assert(filesOf(2) == Seq("death_c.txt"))
     val after = table.snapshot()
     assert(after.count() == 2)
@@ -99,7 +99,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("exactly-once merge: a replayed batch cannot revert an interleaved writer's update") {
-    implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft-eo-merge")
     val client = new graft.ops.InMemoryObjectStore
     val table = graft.ops.ManifestTable.onObjectStore(
@@ -118,24 +117,6 @@ class StreamingSpec extends SparkSpec {
     assert(client.putAttempts == putsBefore, "a recognized replay must not reach the log")
     assert(table.snapshot().where(col("k") === 5L).as[(Long, Double)].collect().toList ==
       List(5L -> 9.0), "the interleaved writer's value must survive the replay")
-    // and through the sink end-to-end: kill/restart with the commit marker
-    // erased — the replayed micro-batch must not revert the side write
-    val ckpt = Files.createTempDirectory("graft-eo-merge-ckpt")
-    val input = MemoryStream[(Long, Double)]
-    def startQuery() = Streaming.acidMergeSink(
-        input.toDF().toDF("k", "v"), table, keys = Seq("k"), sinkId = Some("sink-m2"))
-      .option("checkpointLocation", ckpt.toString).start()
-    val q = startQuery()
-    input.addData((7L, 1.0)); q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val hfs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    assert(hfs.delete(new org.apache.hadoop.fs.Path(ckpt.toString, "commits/0"), false))
-    table.merge(Seq((7L, 42.0)).toDF("k", "v"), Seq("k")) // interleaved update
-    val q2 = startQuery()
-    q2.processAllAvailable() // replays batch 0
-    q2.stop()
-    assert(table.snapshot().where(col("k") === 7L).as[(Long, Double)].collect().toList ==
-      List(7L -> 42.0), "the replayed micro-batch reverted an interleaved update")
   }
 
   test("stream -> ACID merge sink: late rows UPDATE their key; versions commit per batch") {
@@ -144,11 +125,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-acid-ckpt")
     val table = graft.ops.ManifestTable(spark, dir.toString + "/tbl")
     val input = MemoryStream[(Long, String)]
-    val q = Streaming.acidMergeSink(
-        input.toDF().toDF("id", "v"), table, keys = Seq("id"),
-        // intra-batch duplicates resolve by the ordering column, not
-        // partition-fetch order: latest (max v) wins deterministically
-        intraBatchOrder = Seq(org.apache.spark.sql.functions.col("v").desc))
+    val q = Streaming.acidMergeSink(input.toDF().toDF("id", "v"), table, keys = Seq("id"))
       .option("checkpointLocation", ckpt.toString).start()
     input.addData((1L, "a"), (2L, "b"))
     q.processAllAvailable()
@@ -158,8 +135,9 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     val out = table.snapshot().as[(Long, String)].collect().toMap
     // versus the insert-only sink, the late row REPLACED its key's value,
-    // and the within-batch pair kept its ordered winner
-    assert(out == Map(1L -> "a", 2L -> "B2", 3L -> "c2"))
+    // and the within-batch pair resolved by content, not partition-fetch
+    // order: the smallest v wins deterministically
+    assert(out == Map(1L -> "a", 2L -> "B2", 3L -> "c1"))
     assert(table.versions() == Seq(0L, 1L)) // one atomic commit per micro-batch
     // a reader pinned before the second batch would have seen the first only
     assert(table.snapshotAt(0).count() == 2)
@@ -175,10 +153,10 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = Streaming.nearDupFilterSink(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
-        threshold = 0.5,
-        onAccepted = b => accepted.synchronized {
-          accepted += b.select("doc_id").as[Long].collect().toSet },
-        onAcceptedBatch = (_, id) => batchIds.synchronized { batchIds += id })
+        onAccepted = (b, id) => accepted.synchronized {
+          accepted += b.select("doc_id").as[Long].collect().toSet
+          batchIds += id
+        })
       .option("checkpointLocation", ckpt.toString).start()
     val textA = "the quick brown fox jumps over the lazy dog near the river bank today"
     val textB = "completely different words about spark query engines and parquet columnar formats"
@@ -193,7 +171,7 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     assert(accepted.toList == List(Set(1L, 2L), Set(12L)),
       s"history dedup must drop 10 (exact) and 11 (near), got $accepted")
-    // onAcceptedBatch carries the STREAM's micro-batch ids (the replay
+    // onAccepted carries the STREAM's micro-batch ids (the replay
     // identity an exactly-once corpus sink keys its tokens on)
     assert(batchIds.toList == List(0L, 1L), s"expected stream batch ids 0,1 got $batchIds")
     // the signature table holds exactly the accepted docs' band rows
@@ -207,8 +185,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt2 = Files.createTempDirectory("graft-neardup-ckpt2")
     val q2 = Streaming.nearDupFilterSink(
         input2.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
-        threshold = 0.5,
-        onAccepted = b => accepted2.synchronized {
+        onAccepted = (b, _) => accepted2.synchronized {
           accepted2 += b.select("doc_id").as[Long].collect().toSet })
       .option("checkpointLocation", ckpt2.toString).start()
     // crashed-replay shape: batch 1's docs 1 AND 2 replay TOGETHER after
@@ -234,8 +211,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = Streaming.nearDupFilterSink(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
-        threshold = 0.5,
-        onAccepted = b => accepted.synchronized {
+        onAccepted = (b, _) => accepted.synchronized {
           accepted += b.select("doc_id").as[Long].collect().toSet })
       .option("checkpointLocation", ckpt.toString).start()
     val textA = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -275,8 +251,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = Streaming.nearDupFilterSink(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
-        threshold = 0.5,
-        onAccepted = b => accepted.synchronized {
+        onAccepted = (b, _) => accepted.synchronized {
           accepted += b.select("doc_id").as[Long].collect().toSet })
       .option("checkpointLocation", ckpt.toString).start()
     val textA = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -311,8 +286,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     def startQuery() = Streaming.nearDupFilterSink(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
-        threshold = 0.5,
-        onAccepted = b => accepted.synchronized {
+        onAccepted = (b, _) => accepted.synchronized {
           accepted += b.select("doc_id").as[Long].collect().toSet })
       .option("checkpointLocation", ckpt.toString).start()
     val textA = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -342,7 +316,7 @@ class StreamingSpec extends SparkSpec {
     assert(dupRows == 0L, "restart duplicated state signature rows")
   }
 
-  test("streaming near-dedup: compactEvery keeps the state table's dir count flat; dedup unchanged") {
+  test("streaming near-dedup: compacting the state table between triggers keeps its dir count flat; dedup unchanged") {
     implicit val sqlCtx = spark.sqlContext
     val dirRoot = Files.createTempDirectory("graft-neardup-compact")
     val ckpt = Files.createTempDirectory("graft-neardup-compact-ckpt")
@@ -352,15 +326,15 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = Streaming.nearDupFilterSink(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
-        threshold = 0.5,
-        onAccepted = b => accepted.synchronized {
-          accepted += b.select("doc_id").as[Long].collect().toSet },
-        compactEvery = 2)
+        onAccepted = (b, _) => accepted.synchronized {
+          accepted += b.select("doc_id").as[Long].collect().toSet })
       .option("checkpointLocation", ckpt.toString).start()
     // fully disjoint vocabularies — zero shared shingles between docs, so
     // only the planted exact dup can match
     val mk = (i: Long) => (i, s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i")
-    (1L to 4L).foreach { i => input.addData(mk(i)); q.processAllAvailable() }
+    // the caller's maintenance: compact between triggers (a no-op while
+    // the state table holds one dir)
+    (1L to 4L).foreach { i => input.addData(mk(i)); q.processAllAvailable(); table.compact() }
     // a dup of trigger-1 content must still drop AFTER compactions
     input.addData((99L, mk(1L)._2))
     q.processAllAvailable()
@@ -386,8 +360,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = Streaming.nearDupFilterSink(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
-        threshold = 0.5,
-        onAccepted = b => accepted.synchronized {
+        onAccepted = (b, _) => accepted.synchronized {
           accepted += b.select("doc_id").as[Long].collect().toSet })
       .option("checkpointLocation", ckpt.toString).start()
     input.addData((1L, "click here")) // 2 tokens < shingleN=3: whole-text shingle
@@ -399,7 +372,7 @@ class StreamingSpec extends SparkSpec {
       s"short boilerplate must dedup against history, got $accepted")
   }
 
-  test("nearDupFilterSink: skipEmptyTriggers fast-exits empty triggers; dedup and handlers unchanged otherwise") {
+  test("nearDupFilterSink: an empty trigger spends no version; dedup and handlers unchanged otherwise") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft-neardup-sparse")
     val ckpt = Files.createTempDirectory("graft-neardup-sparse-ckpt")
@@ -408,26 +381,25 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = Streaming.nearDupFilterSink(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
-        threshold = 0.5,
-        onAccepted = b => accepted.synchronized {
-          accepted += b.select("doc_id").as[Long].collect().toSet },
-        skipEmptyTriggers = true)
+        onAccepted = (b, _) => accepted.synchronized {
+          accepted += b.select("doc_id").as[Long].collect().toSet })
       .option("checkpointLocation", ckpt.toString).start()
     input.addData((1L, "the quick brown fox jumps over a lazy dog"))
     q.processAllAvailable()
     val versionsAfterFirst = table.versions().length
-    input.addData() // an all-EMPTY trigger: the sparse-source fast exit
+    input.addData() // an all-EMPTY trigger
     q.processAllAvailable()
     assert(table.versions().length == versionsAfterFirst,
       "an empty trigger must spend no table version")
     // a redelivered near-dup (new id, same text) + a genuinely new doc:
-    // the gated sink must still dedup and fire handlers exactly as before
+    // the sink must still dedup against the first trigger's state
     input.addData((2L, "the quick brown fox jumps over a lazy dog"),
       (3L, "completely different text about ships and harbors tonight"))
     q.processAllAvailable()
     q.stop()
-    assert(accepted.toList == List(Set(1L), Set(3L)),
-      s"handlers must skip the empty trigger only, got $accepted")
+    // the empty trigger hands the handler an empty frame
+    assert(accepted.toList == List(Set(1L), Set.empty[Long], Set(3L)),
+      s"the empty trigger must accept nothing, got $accepted")
   }
 
   test("streaming rollup maintenance: a CDC stream maintains the aggregate == full recompute") {
