@@ -1541,10 +1541,9 @@ private[graft] object QueriesRelational {
 
     QueryDef("op_acid_delete",
       // GDPR-style keyed DELETE through the ACID commit protocol:
-      // tombstones anti-join affected dirs copy-on-write (disjoint dirs
-      // survive via the stats prune), committed as a new version — the
-      // oracle is the relational complement, so the protocol must be
-      // invisible in the data
+      // tombstones anti-join every live dir copy-on-write, committed as a
+      // new version — the oracle is the relational complement, so the
+      // protocol must be invisible in the data
       (s, d) => {
         val root = freshScratchRoot(s, "del", d)
         val base = t(s, d, "orders").select(col("o_orderkey"), col("o_totalprice"))

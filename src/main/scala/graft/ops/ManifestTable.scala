@@ -5,8 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** A minimal versioned-manifest table format: the commit-protocol answer to
   * the documented concurrency limit of plain parquet paths (see
@@ -40,26 +40,14 @@ import org.apache.spark.sql.types._
   *  - `append`: new dirs = old dirs + one; conflicts retry cheaply (the
   *    data dir is already written; only the manifest CAS re-runs).
   *  - `overwrite`: new dirs = exactly one.
-  *  - `merge`: copy-on-write MERGE (last-write-wins upsert on a key): see
-  *    below. A conflict means the base snapshot changed, so the rewrite
-  *    itself recomputes against the new snapshot before retrying — the
-  *    result is always a serializable history.
+  *  - `merge`: copy-on-write MERGE (last-write-wins upsert on a key). A
+  *    conflict means the base snapshot changed, so the rewrite itself
+  *    recomputes against the new snapshot before retrying — the result is
+  *    always a serializable history.
   *
-  * **Stats-pruned merge** (the 100-TB form — same plan Delta/Iceberg use):
-  * when the table is built with `statsCols`, each commit records per-dir
-  * min/max + has-null for those columns (one tiny aggregation over the
-  * just-written files), and `merge` rewrites ONLY the dirs whose key range
-  * can overlap the update batch's hull — every provably-disjoint dir
-  * survives into the new manifest untouched. Pruning is conservative by
-  * construction:
-  *  - a dir is skipped only if SOME key column's ranges are disjoint AND
-  *    the null populations cannot meet (`<=>` matches null to null, and
-  *    min/max ignore nulls — so has-null is tracked separately);
-  *  - stats are kept for integral/floating/decimal columns only (string
-  *    ordering differs between JVM compare and Spark's binary collation,
-  *    and a wrong prune is a lost update, so strings never prune);
-  *  - unparseable bounds (NaN/Infinity), missing stats, or a type-changing
-  *    upsert (schema coercion) all fall back to rewriting.
+  * `merge` and `deleteByKeys` rewrite every live dir: the callers' batches
+  * span their key range (sha1 ids, key-modulus batches), so per-dir key
+  * ranges would spare none.
   *
   * Failure notes (documented trade-offs, mirrored in ManifestTableSpec):
   *  - A writer whose PROCESS dies between reserving `vN.lock` and
@@ -95,8 +83,7 @@ import org.apache.spark.sql.types._
   *    log-structured format.
   */
 final class ManifestTable private (
-    spark: SparkSession, rootStr: String, statsCols: Seq[String],
-    log: ManifestLogStore, checkpointInterval: Int) {
+    spark: SparkSession, rootStr: String, log: ManifestLogStore) {
   import ManifestTable._
 
   private val root = new Path(rootStr)
@@ -268,8 +255,8 @@ final class ManifestTable private (
 
   /** Replace the table contents atomically. Returns the committed version. */
   def overwrite(df: DataFrame, maxRetries: Int = DefaultRetries): Long = {
-    val (dir, stats) = writeData(df)
-    commitWithRetry(maxRetries, "overwrite", normDdl(df.schema), _ => Seq(dir), stats)
+    val dir = writeData(df)
+    commitWithRetry(maxRetries, "overwrite", normDdl(df.schema), _ => Seq(dir))
   }
 
   /** Append a batch atomically. The data is written once; only the manifest
@@ -287,12 +274,12 @@ final class ManifestTable private (
     // The in-callback require below stays authoritative under races (an
     // interleaved overwrite can change the schema after this check).
     latestVersion().map(readManifest).foreach(requireSameSchema(_, ddl))
-    val (dir, stats) = writeData(df)
+    val dir = writeData(df)
     commitWithRetry(maxRetries, "append", ddl,
       prev => {
         prev.foreach(requireSameSchema(_, ddl))
         prev.map(_.dirs).getOrElse(Seq.empty) :+ dir
-      }, stats)
+      })
   }
 
   /** [[append]], except an EMPTY batch commits nothing (no version, no
@@ -309,7 +296,7 @@ final class ManifestTable private (
     val ddl = normDdl(df.schema)
     latestVersion().map(readManifest).foreach(requireSameSchema(_, ddl))
     val obs = org.apache.spark.sql.Observation()
-    val (dir, stats) = writeData(df.observe(obs, count(lit(1)).as("rows")))
+    val dir = writeData(df.observe(obs, count(lit(1)).as("rows")))
     if (obs.get("rows").asInstanceOf[Long] == 0L) {
       bestEffortDelete(dir, "empty-batch dir")
       None
@@ -317,7 +304,7 @@ final class ManifestTable private (
       prev => {
         prev.foreach(requireSameSchema(_, ddl))
         prev.map(_.dirs).getOrElse(Seq.empty) :+ dir
-      }, stats))
+      }))
   }
 
   /** Exactly-once APPEND for a streaming sink: commit the batch atomically
@@ -348,7 +335,7 @@ final class ManifestTable private (
     val ddl = normDdl(df.schema)
     // same fail-fast-before-write rationale as append's pre-check
     first.map(readManifest).foreach(requireSameSchema(_, ddl))
-    val (dir, stats) = writeData(df)
+    val dir = writeData(df)
     var attempt = 0
     while (true) {
       val base = latestVersion()
@@ -364,7 +351,7 @@ final class ManifestTable private (
           prev => {
             prev.foreach(requireSameSchema(_, ddl))
             prev.map(_.dirs).getOrElse(Seq.empty) :+ dir
-          }, stats, parentGuard = Some(base), txn = Some(sinkId -> batchId)) match {
+          }, parentGuard = Some(base), txn = Some(sinkId -> batchId)) match {
         case Some(v) => return v
         case None =>
           attempt += 1
@@ -383,17 +370,16 @@ final class ManifestTable private (
 
   /** Copy-on-write MERGE: last-write-wins upsert of `updates` by `keys`
     * (exactly [[Aggregates.upsert]]'s semantics, including null-safe key
-    * matching), committed atomically. With `statsCols` covering a key, only
-    * range-overlapping dirs are rewritten (see class doc); without, the
-    * whole table rewrites. On a CAS conflict the rewrite is recomputed
-    * against the winner's snapshot. Returns the committed version.
+    * matching), committed atomically. Every live dir is rewritten (see
+    * class doc). On a CAS conflict the rewrite is recomputed against the
+    * winner's snapshot. Returns the committed version.
     *
     * An EMPTY batch commits nothing — no version, no data dir — and
     * returns the current version (-1 on a table with no commits), like
     * [[deleteByKeys]]. The row count rides the merge's own write as an
     * observed metric (as in [[appendNonEmpty]]), so a non-empty merge
-    * runs no extra job; an empty batch on a table without usable stats
-    * still pays the rewrite it then discards.
+    * runs no extra job; an empty batch still pays the rewrite it then
+    * discards.
     */
   def merge(updates: DataFrame, keys: Seq[String], maxRetries: Int = DefaultRetries): Long =
     mergeCore(updates, keys, maxRetries, txn = None)
@@ -442,51 +428,19 @@ final class ManifestTable private (
       val obs = org.apache.spark.sql.Observation()
       val observed = org.apache.spark.sql.GraftBridge.inSession(updates, spark)
         .observe(obs, count(lit(1)).as("rows"))
+      val merged = base match {
+        case None => observed.dropDuplicates(keys)
+        case Some(v) =>
+          val m = readManifest(v)
+          Aggregates.upsert(readDirs(m, m.dirs), observed, keys)
+      }
+      val dir = writeData(merged)
       // AQE replaces a stage it found empty, and the observation inside it
       // goes missing with it: only then is emptiness probed, not assumed
-      lazy val empty: Boolean = obs.get.get("rows") match {
+      val empty = obs.get.get("rows") match {
         case Some(n) => n == 0L
         case None => updates.isEmpty
       }
-      val (survivors, merged, scratch) = base match {
-        case None => (Seq.empty[String], observed.dropDuplicates(keys), None)
-        case Some(v) =>
-          val m = readManifest(v)
-          val statKeys = keys.filter(c => m.stats.values.exists(_.contains(c)))
-          if (statKeys.isEmpty)
-            (Seq.empty[String], Aggregates.upsert(readDirs(m, m.dirs), observed, keys), None)
-          else {
-            // The prune decision and the written rows MUST come from the
-            // same execution of the updates plan: a nondeterministic source
-            // (sampling, files changing between jobs) could otherwise write
-            // keys the hull never saw, landing duplicates in a pruned dir.
-            // So the batch is materialized to a scratch dir first and both
-            // the hull and the upsert read those bytes. The scratch dir is
-            // never referenced by a manifest; it is deleted after commit.
-            val updDir = writeRaw(observed, ScratchPrefix)
-            if (empty) {
-              bestEffortDelete(updDir, "empty-batch scratch dir")
-              return v
-            }
-            val updRead = spark.read.schema(updates.schema)
-              .parquet(new Path(dataDir, updDir).toString)
-            val hull = updatesHull(updRead, statKeys)
-            val (keep, rewrite) =
-              m.dirs.partition(d => provablyDisjoint(m.stats.getOrElse(d, Map.empty), hull))
-            val mergedAll =
-              if (rewrite.isEmpty) updRead.dropDuplicates(keys)
-              else Aggregates.upsert(readDirs(m, rewrite), updRead, keys)
-            // a type-coercing upsert (e.g. decimal base × double updates)
-            // would give surviving dirs a schema their parquet can't serve —
-            // fall back to a full rewrite in that case (nullability is
-            // excluded from the comparison: file reads are always nullable)
-            if (keep.nonEmpty && normDdl(mergedAll.schema) != m.schemaDdl)
-              (Seq.empty[String], Aggregates.upsert(readDirs(m, m.dirs), updRead, keys), Some(updDir))
-            else (keep, mergedAll, Some(updDir))
-          }
-      }
-      val (dir, stats) = writeData(merged)
-      scratch.foreach(bestEffortDelete(_, "merge scratch dir"))
       if (empty) {
         bestEffortDelete(dir, "empty-batch dir")
         return base.getOrElse(-1L)
@@ -494,7 +448,7 @@ final class ManifestTable private (
       // single-shot commit: a conflict must re-derive the merge input, not
       // just re-CAS the same rewrite (that would silently drop the
       // conflicting winner's rows)
-      commitOnce("merge", normDdl(merged.schema), _ => survivors :+ dir, stats,
+      commitOnce("merge", normDdl(merged.schema), _ => Seq(dir),
           parentGuard = Some(base), txn = txn) match {
         case Some(v) => return v
         case None =>
@@ -511,13 +465,13 @@ final class ManifestTable private (
   }
 
   /** GDPR-style keyed DELETE through the same COW commit protocol:
-    * tombstone keys anti-join the affected dirs, dirs provably disjoint
-    * from the tombstone hull survive untouched (the merge prune), and
-    * the result commits as a new version — prior versions still serve
-    * the deleted rows (time travel) until [[vacuum]] reclaims them,
-    * which is exactly the audit-then-reclaim shape a right-to-be-
-    * forgotten pipeline needs. A delete that can touch nothing returns
-    * the current version without writing (no empty-dir churn).
+    * tombstone keys anti-join every live dir, and the result commits as a
+    * new version — prior versions still serve the deleted rows (time
+    * travel) until [[vacuum]] reclaims them, which is exactly the
+    * audit-then-reclaim shape a right-to-be-forgotten pipeline needs.
+    * EMPTY tombstones return the current version without writing (no
+    * empty-dir churn); non-empty ones commit a version even when they
+    * match no row.
     */
   def deleteByKeys(tombstones: DataFrame, keys: Seq[String],
                    maxRetries: Int = DefaultRetries): Long = {
@@ -529,38 +483,25 @@ final class ManifestTable private (
         case None => return -1L
         case Some(v) =>
           val m = readManifest(v)
-          val statKeys = keys.filter(c => m.stats.values.exists(_.contains(c)))
-          // same single-execution discipline as merge: the prune hull and
-          // the anti join must read the SAME materialized tombstone bytes
+          // the emptiness probe and the anti join must read the SAME
+          // tombstones, so they are materialized once to a scratch dir.
           // col with backticks, not selectExpr: a dotted/expression-like
           // key name that merge accepts (Aggregates.upsert quotes exactly
           // this way) must not be re-parsed as a nested-field path here
           val tombSel = tombstones.select(keys.map(k => col(s"`$k`")): _*)
             .dropDuplicates(keys)
-          val tombDir = writeRaw(tombSel, ScratchPrefix)
-          // schema pinned like merge's scratch read: an EMPTY tombstone
-          // batch can land zero data files, and a bare read would die on
-          // footer inference before the no-op early return below — plus
-          // the pin keeps the key types the anti-join condition was
-          // planned against (and skips a footer-inference round trip)
+          val tombDir = writeData(tombSel, ScratchPrefix)
+          // schema pinned: an EMPTY tombstone batch can land zero data
+          // files, and a bare read would die on footer inference before the
+          // no-op early return below — plus the pin keeps the key types the
+          // anti-join condition was planned against (and skips a
+          // footer-inference round trip)
           val tRead = spark.read.schema(tombSel.schema)
             .parquet(new Path(dataDir, tombDir).toString)
           // a delete with nothing to delete must be the advertised no-op —
-          // without this, empty tombstones rewrite the WHOLE table (no
-          // stats ⇒ every dir is "affected"; with stats, an empty hull has
-          // no provable bounds so nothing prunes either). One limit-1
-          // probe over the just-written scratch bytes.
+          // without this, empty tombstones rewrite the WHOLE table. One
+          // limit-1 probe over the just-written scratch bytes.
           if (tRead.isEmpty) {
-            bestEffortDelete(tombDir, "tombstone scratch dir")
-            return v
-          }
-          val (keep, rewrite) =
-            if (statKeys.isEmpty) (Seq.empty[String], m.dirs)
-            else {
-              val hull = updatesHull(tRead, statKeys)
-              m.dirs.partition(d => provablyDisjoint(m.stats.getOrElse(d, Map.empty), hull))
-            }
-          if (rewrite.isEmpty) {
             bestEffortDelete(tombDir, "tombstone scratch dir")
             return v
           }
@@ -569,15 +510,14 @@ final class ManifestTable private (
           // row, so a delete that reported success would silently leave
           // the null-key row behind — the exact right-to-be-forgotten
           // violation merge's <=> matching exists to prevent
-          val src = readDirs(m, rewrite).alias("_del_b")
+          val src = readDirs(m, m.dirs).alias("_del_b")
           val tomb = tRead.alias("_del_t")
           val cond = keys.map(k => col(s"_del_b.`$k`") <=> col(s"_del_t.`$k`"))
             .reduce(_ && _)
           val remaining = src.join(tomb, cond, "left_anti")
-          val (dir, stats) = writeData(remaining)
+          val dir = writeData(remaining)
           bestEffortDelete(tombDir, "tombstone scratch dir")
-          commitOnce("delete", m.schemaDdl, _ => keep :+ dir, stats,
-              parentGuard = Some(base)) match {
+          commitOnce("delete", m.schemaDdl, _ => Seq(dir), parentGuard = Some(base)) match {
             case Some(nv) => return nv
             case None =>
               bestEffortDelete(dir, "conflict-losing delete dir")
@@ -611,10 +551,9 @@ final class ManifestTable private (
     * reclaims their dirs. Committed with a parent guard like [[merge]]: a
     * concurrent append/merge wins the CAS and the compaction RECOMPUTES
     * from the winner's snapshot — never discards the winner's rows. Size
-    * `numFiles` at ~128-256 MB/file for the real table; per-column stats
-    * are recomputed over the combined data so merge pruning keeps working.
-    * Returns the committed version, or -1 when there is nothing to compact
-    * (empty table or a single dir already).
+    * `numFiles` at ~128-256 MB/file for the real table. Returns the
+    * committed version, or -1 when there is nothing to compact (empty
+    * table or a single dir already).
     */
   def compact(numFiles: Int = 1, maxRetries: Int = DefaultRetries): Long = {
     require(numFiles >= 1)
@@ -626,9 +565,8 @@ final class ManifestTable private (
         case Some(v) =>
           val m = readManifest(v)
           if (m.dirs.length < 2) return -1L
-          val (dir, stats) = writeData(readDirs(m, m.dirs).coalesce(numFiles))
-          commitOnce("compact", m.schemaDdl, _ => Seq(dir), stats,
-              parentGuard = Some(base)) match {
+          val dir = writeData(readDirs(m, m.dirs).coalesce(numFiles))
+          commitOnce("compact", m.schemaDdl, _ => Seq(dir), parentGuard = Some(base)) match {
             case Some(nv) => return nv
             case None =>
               bestEffortDelete(dir, "conflict-losing compaction dir")
@@ -678,9 +616,9 @@ final class ManifestTable private (
       (st.getModificationTime +: walk(st.getPath)).max
     }
     // scratch staging dirs get a longer grace: their mtime marks WRITE
-    // completion, but a merge/delete READS them until its commit — the
-    // regular grace would let a vacuum racing a long merge delete the
-    // staging mid-read (crashed operations' scratch still collects, after
+    // completion, but a delete READS them until its commit — the regular
+    // grace would let a vacuum racing a long delete remove the staging
+    // mid-read (crashed operations' scratch still collects, after
     // ScratchVacuumGraceMs)
     def cutoffFor(name: String): Long =
       now - (if (name.startsWith(ScratchPrefix)) math.max(graceMs, ScratchVacuumGraceMs)
@@ -693,77 +631,13 @@ final class ManifestTable private (
     dead
   }
 
-  // ------------------------------------------------- stats-pruned merge
-
-  /** Min/max/has-null of the update batch per prunable key column — ONE tiny
-    * aggregation job, only run when the manifest actually has stats to
-    * prune against. Bounds use the batch's HULL, so a batch spanning the
-    * whole key space prunes nothing (coarse but never wrong).
-    */
-  private def updatesHull(updates: DataFrame, cols: Seq[String]): Map[String, ColStat] = {
-    val prunable = cols.filter(c =>
-      updates.schema.fields.exists(f => f.name == c && isPrunableType(f.dataType)))
-    if (prunable.isEmpty) return Map.empty
-    // backtick-quoted like every other key reference in this file: an
-    // unquoted dotted stats column ("a.b") would re-parse as a nested
-    // field path and fail (or silently aggregate a struct field) AFTER
-    // the parquet data already landed. The alias strings are matched
-    // verbatim by Row.getAs, never re-parsed, so they stay unquoted.
-    val aggs = prunable.flatMap(c => Seq(
-      min(col(s"`$c`")).cast("string").as(s"min_$c"),
-      max(col(s"`$c`")).cast("string").as(s"max_$c"),
-      count(when(col(s"`$c`").isNull, lit(1))).as(s"nulls_$c")))
-    val r = updates.agg(aggs.head, aggs.tail: _*).collect()(0)
-    prunable.map { c =>
-      c -> ColStat(
-        Option(r.getAs[String](s"min_$c")),
-        Option(r.getAs[String](s"max_$c")),
-        r.getAs[Long](s"nulls_$c") > 0)
-    }.toMap
-  }
-
-  /** True only when NO row of the dir can key-match ANY update row: some key
-    * column's value ranges are disjoint and its null populations cannot
-    * meet. Any missing or unparseable bound ⇒ not provable ⇒ rewrite.
-    */
-  private def provablyDisjoint(dirStats: Map[String, ColStat],
-                               hull: Map[String, ColStat]): Boolean =
-    hull.exists { case (c, u) =>
-      dirStats.get(c).exists { d =>
-        val nullsCantMeet = !(d.hasNull && u.hasNull)
-        val rangesDisjoint = (for {
-          dMin <- d.min.flatMap(num); dMax <- d.max.flatMap(num)
-          uMin <- u.min.flatMap(num); uMax <- u.max.flatMap(num)
-        } yield dMax.compareTo(uMin) < 0 || uMax.compareTo(dMin) < 0)
-          .getOrElse(
-            // a side with NO non-null values (bounds absent) has an empty
-            // value range — disjoint from anything; parse failures land
-            // here too via num=None on a PRESENT bound, so distinguish:
-            (d.min.isEmpty && d.max.isEmpty) || (u.min.isEmpty && u.max.isEmpty))
-        nullsCantMeet && rangesDisjoint
-      }
-    }
-
   /** Manifest schemas are stored top-level-nullable: the DDL's only job is
     * READING the dirs, and file sources force nullable anyway — keeping the
     * writer's NOT NULL markers would make every schema-equality check
-    * (merge's coercion guard) spuriously fail against read-back schemas.
+    * (the append guard, diff) spuriously fail against read-back schemas.
     */
   private def normDdl(schema: StructType): String =
     StructType(schema.fields.map(_.copy(nullable = true))).toDDL
-
-  private def num(s: String): Option[java.math.BigDecimal] =
-    try Some(new java.math.BigDecimal(s)) catch { case _: NumberFormatException => None }
-
-  /** Only types whose string round-trip orders identically to Spark's own
-    * comparison. Strings/dates/timestamps are excluded on purpose — a
-    * collation mismatch would prune a dir that overlaps, losing updates.
-    */
-  private def isPrunableType(t: DataType): Boolean = t match {
-    case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
-         _: FloatType | _: DoubleType | _: DecimalType => true
-    case _ => false
-  }
 
   // ------------------------------------------------------------ internals
 
@@ -785,43 +659,24 @@ final class ManifestTable private (
       s"ManifestTable $rootStr: append schema [$ddl] does not match table " +
         s"schema [${prev.schemaDdl}] — schema evolution is not supported; use overwrite")
 
-  /** Writes a batch to a fresh dir with NO stats pass (used for merge's
-    * scratch materialization of the update batch). `prefix` distinguishes
-    * SCRATCH dirs (merge/delete single-execution staging — consumed by the
-    * same operation, never referenced by a manifest) from committed data
-    * dirs: [[vacuum]] grants scratch dirs a longer grace so a long-running
-    * merge cannot have its staging deleted mid-read (see
+  /** Writes a batch to a fresh dir and returns its name. `prefix`
+    * distinguishes SCRATCH dirs (delete's single-execution staging —
+    * consumed by the same operation, never referenced by a manifest) from
+    * committed data dirs: [[vacuum]] grants scratch dirs a longer grace so
+    * a long-running delete cannot have its staging deleted mid-read (see
     * [[ScratchVacuumGraceMs]]).
     */
-  private def writeRaw(df: DataFrame, prefix: String = ""): String = {
+  private def writeData(df: DataFrame, prefix: String = ""): String = {
     val dir = prefix + java.util.UUID.randomUUID().toString
     df.write.mode(SaveMode.ErrorIfExists).parquet(new Path(dataDir, dir).toString)
     dir
   }
 
-  /** Writes the batch to a fresh dir; when stats are enabled, reads the
-    * WRITTEN files back for min/max/has-null (immune to a nondeterministic
-    * input plan re-executing differently — the stats describe the bytes on
-    * disk, nothing else).
-    */
-  private def writeData(df: DataFrame): (String, Map[String, ColStat]) = {
-    val dir = writeRaw(df)
-    val prunable = statsCols.filter(c =>
-      df.schema.fields.exists(f => f.name == c && isPrunableType(f.dataType)))
-    if (prunable.isEmpty) (dir, Map.empty)
-    else {
-      val written = spark.read.schema(df.schema)
-        .parquet(new Path(dataDir, dir).toString)
-      (dir, updatesHull(written, prunable))
-    }
-  }
-
   private def commitWithRetry(maxRetries: Int, action: String, schemaDdl: String,
-                              dirs: Option[Manifest] => Seq[String],
-                              newStats: Map[String, ColStat]): Long = {
+                              dirs: Option[Manifest] => Seq[String]): Long = {
     var attempt = 0
     while (true) {
-      commitOnce(action, schemaDdl, dirs, newStats, parentGuard = None) match {
+      commitOnce(action, schemaDdl, dirs, parentGuard = None) match {
         case Some(v) => return v
         case None =>
           attempt += 1
@@ -836,13 +691,10 @@ final class ManifestTable private (
     * `parentGuard`, the latest version is no longer the guarded one —
     * including a fresh table that gained its first commit): re-derive and
     * retry. `parentGuard = Some(p)` means "commit only on top of exactly
-    * p"; plain None means "on top of whatever is latest". `newStats` are
-    * the stats of the LAST dir the callback returns (the freshly written
-    * one); surviving dirs inherit their stats from the parent manifest.
+    * p"; plain None means "on top of whatever is latest".
     */
   private def commitOnce(action: String, schemaDdl: String,
                          dirs: Option[Manifest] => Seq[String],
-                         newStats: Map[String, ColStat],
                          parentGuard: Option[Option[Long]],
                          txn: Option[(String, Long)] = None): Option[Long] = {
     // a guarded commit trusts the caller's just-read latest instead of
@@ -857,12 +709,6 @@ final class ManifestTable private (
     // the callback, manifest assembly) happens BEFORE the lock is taken —
     // a throw while holding the lock would wedge the whole table
     val allDirs = dirs(prev)
-    val inherited = prev.map(_.stats).getOrElse(Map.empty)
-    val statsByDir: Map[String, Map[String, ColStat]] =
-      allDirs.map { d =>
-        d -> (if (d == allDirs.last && newStats.nonEmpty) newStats
-              else inherited.getOrElse(d, Map.empty))
-      }.filter(_._2.nonEmpty).toMap
     val body = new StringBuilder()
       .append(Magic).append('\n')
       .append(s"version=$next\n")
@@ -879,11 +725,6 @@ final class ManifestTable private (
     txns.toSeq.sortBy(_._1).foreach { case (sid, b) =>
       body.append(s"txn=${enc(sid)}|$b\n")
     }
-    for ((d, cols) <- statsByDir; (c, st) <- cols) {
-      val mn = st.min.map(enc).getOrElse(NullMark)
-      val mx = st.max.map(enc).getOrElse(NullMark)
-      body.append(s"dirstat=$d|${enc(c)}|$mn|$mx|${st.hasNull}\n")
-    }
     val bodyBytes = body.toString.getBytes(UTF_8)
     if (!log.publishIfAbsent(next, bodyBytes)) {
       // lost the race (or, on the Hadoop store, a reserved-but-never-
@@ -899,7 +740,7 @@ final class ManifestTable private (
     advanceSeen(next) // the committer KNOWS the new latest — no probe needed
     // periodic checkpoint hint (best-effort, never fails the commit): cold
     // handles start their probe here instead of LISTing the whole _log
-    if (checkpointInterval > 0 && next > 0 && next % checkpointInterval == 0)
+    if (next > 0 && next % CheckpointInterval == 0)
       writeCheckpointHint(next, bodyBytes)
     Some(next)
   }
@@ -988,18 +829,8 @@ final class ManifestTable private (
     def field(k: String): String = lines.collectFirst {
       case l if l.startsWith(s"$k=") => l.substring(k.length + 1)
     }.getOrElse(sys.error(s"ManifestTable $rootStr: v$v missing field '$k'"))
-    val stats = lines.toSeq.collect {
-      case l if l.startsWith("dirstat=") => l.substring(8).split('|') match {
-        case Array(d, c, mn, mx, hn) =>
-          (d, dec(c), ColStat(
-            if (mn == NullMark) None else Some(dec(mn)),
-            if (mx == NullMark) None else Some(dec(mx)),
-            hn.toBoolean))
-        case _ => sys.error(s"ManifestTable $rootStr: v$v bad dirstat line '$l'")
-      }
-    }.groupBy(_._1).map { case (d, rows) =>
-      d -> rows.map(r => r._2 -> r._3).toMap
-    }
+    // only known prefixes are collected: lines of any other kind (the
+    // per-dir `dirstat=` lines older writers added) are ignored
     val txns = lines.toSeq.collect {
       case l if l.startsWith("txn=") => l.substring(4).split('|') match {
         case Array(sid, b) => dec(sid) -> b.toLong
@@ -1008,59 +839,44 @@ final class ManifestTable private (
     }.toMap
     Manifest(field("version").toLong, field("action"), dec(field("schema")),
       lines.toSeq.collect { case l if l.startsWith("dir=") => l.substring(4) },
-      stats, txns)
+      txns)
   }
 }
 
 object ManifestTable {
   private val Magic = "graft-manifest-v1"
   private val CkptMagic = "graft-ckpt-v1"
-  private val DefaultCheckpointInterval = 10
-  private val NullMark = " null"
+  // every Nth commit writes the advisory `_ckpt` hint, so a cold handle's
+  // first resolve is one read + <N probes on a long-lived table
+  private val CheckpointInterval = 10
   private val DefaultRetries = 10
   private val RetrySleepMs = 50L
   private val DefaultVacuumGraceMs = 10 * 60 * 1000L
-  // scratch staging dirs (merge/delete single-execution discipline) are
-  // written at the START of an operation and READ until its commit — their
-  // newest mtime is the write-completion time, so the regular grace only
-  // covers the write window, not the consumption window. A 100-TB merge's
-  // hull + upsert + rewrite phase can easily outlive 10 minutes; give
-  // scratch a day (a crashed operation's leaked scratch still collects,
-  // just later).
+  // scratch staging dirs (delete's tombstones) are written at the START of
+  // a delete and READ until its commit — their newest mtime is the
+  // write-completion time, so the regular grace only covers the write
+  // window, not the consumption window. A 100-TB delete's anti-join
+  // rewrite can easily outlive 10 minutes; give scratch a day (a crashed
+  // operation's leaked scratch still collects, just later).
   private val ScratchPrefix = "scratch-"
   private val ScratchVacuumGraceMs = 24 * 60 * 60 * 1000L
 
-  /** Per-column bounds of one data dir (or of an update batch): string-cast
-    * min/max of the NON-NULL values (absent ⇒ no non-null rows) plus
-    * whether any null exists — `<=>` key matching makes nulls joinable, so
-    * they prune separately from the value range.
-    */
-  private final case class ColStat(min: Option[String], max: Option[String], hasNull: Boolean)
-
   private final case class Manifest(
       version: Long, action: String, schemaDdl: String, dirs: Seq[String],
-      stats: Map[String, Map[String, ColStat]],
       txns: Map[String, Long] = Map.empty)
 
   private def enc(s: String): String = URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String = URLDecoder.decode(s, "UTF-8")
 
-  /** `statsCols`: columns to record per-dir min/max for at write time —
-    * list the MERGE key(s) of the table to enable stats-pruned merges.
-    * Stats cost one small aggregation per commit and only numeric-family
-    * columns participate (see [[ManifestTable.isPrunableType]]).
-    *
-    * `checkpointInterval`: every Nth commit writes the advisory `_ckpt`
-    * hint (0 disables). The default keeps cold starts at one read + <N
-    * probes on long-lived tables.
+  /** The table with its commit log under `root/_log` on `root`'s Hadoop
+    * filesystem ([[HadoopLogStore]]).
     */
-  def apply(spark: SparkSession, root: String, statsCols: Seq[String] = Nil,
-            checkpointInterval: Int = DefaultCheckpointInterval): ManifestTable = {
+  def apply(spark: SparkSession, root: String): ManifestTable = {
     val rootPath = new Path(root)
-    new ManifestTable(spark, root, statsCols,
+    new ManifestTable(spark, root,
       new HadoopLogStore(
         rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new Path(rootPath, "_log")), checkpointInterval)
+        new Path(rootPath, "_log")))
   }
 
   /** The table with its commit log on an S3-class object store via the
@@ -1076,9 +892,6 @@ object ManifestTable {
     * only the log's atomicity needs the native precondition this client
     * provides.
     */
-  def onObjectStore(spark: SparkSession, root: String, client: ObjectStoreClient,
-                    statsCols: Seq[String] = Nil,
-                    checkpointInterval: Int = DefaultCheckpointInterval): ManifestTable =
-    new ManifestTable(spark, root, statsCols, new ObjectStoreLogStore(client, root),
-      checkpointInterval)
+  def onObjectStore(spark: SparkSession, root: String, client: ObjectStoreClient): ManifestTable =
+    new ManifestTable(spark, root, new ObjectStoreLogStore(client, root))
 }

@@ -35,7 +35,7 @@ class LineageSpec extends SparkSpec {
   }
 
   private def withCheckpointDir[A](f: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-ckpt").toString
+    val dir = tempDir("graft-lineage-ckpt").toString
     spark.conf.set(Lineage.CheckpointDirKey, dir)
     try f(dir)
     finally {
@@ -74,7 +74,7 @@ class LineageSpec extends SparkSpec {
       assert(new org.apache.hadoop.fs.Path(applied).getParent.toUri.getPath ==
         new org.apache.hadoop.fs.Path(dir).toUri.getPath, s"knob not applied: $applied")
       // a foreign component redirects the context for its own checkpoints
-      val foreign = java.nio.file.Files.createTempDirectory("graft-foreign-ckpt").toString
+      val foreign = tempDir("graft-foreign-ckpt").toString
       sc.setCheckpointDir(foreign)
       try {
         val durable = Seq(3, 4).toDF("x").graftCheckpoint()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.ops.{Aggregates, InMemoryObjectStore, ManifestTable}
 
@@ -13,7 +11,7 @@ class ManifestTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-mt").resolve("tbl").toString
+    tempDir("graft-mt").resolve("tbl").toString
 
   private def kv(rows: (Long, Double)*) =
     rows.toSeq.toDF("k", "v")
@@ -133,7 +131,7 @@ class ManifestTableSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val t = ManifestTable(spark, freshRoot())
     t.overwrite(kv(0L -> 0.0))
-    val ckpt = Files.createTempDirectory("graft-mt-ckpt")
+    val ckpt = tempDir("graft-mt-ckpt")
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double)]
     val q = graft.streaming.Streaming.acidMergeSink(
         input.toDF().toDF("k", "v"), t, keys = Seq("k"))
@@ -258,59 +256,16 @@ class ManifestTableSpec extends SparkSpec {
     } finally LockGateFs.beforeLockCreate = _ => ()
   }
 
-  test("stats-pruned merge rewrites only range-overlapping dirs") {
-    val root = freshRoot()
-    val t = ManifestTable(spark, root, statsCols = Seq("k"))
-    t.overwrite(kv(1L -> 1.0, 2L -> 2.0))          // dir A: k ∈ [1,2]
-    t.append(kv(100L -> 100.0, 101L -> 101.0))     // dir B: k ∈ [100,101]
-    t.append(kv(200L -> 200.0))                    // dir C: k ∈ [200,200]
-    def dirsOf(v: Long): Set[String] = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$root/_log/v${"%020d".format(v)}.txt")), "UTF-8")
-      txt.split('\n').toSeq.collect { case l if l.startsWith("dir=") => l.substring(4) }.toSet
-    }
-    val before = dirsOf(2)
-    assert(before.size == 3)
-    // updates hull [100,101]: dirs A and C are provably disjoint and must
-    // survive by NAME (no rewrite); only B is replaced
-    t.merge(kv(100L -> -1.0), Seq("k"))
-    val after = dirsOf(3)
-    assert(after.size == 3)
-    assert((before & after).size == 2, s"expected 2 surviving dirs, got ${before & after}")
-    val got = t.snapshot().orderBy("k").as[(Long, Double)].collect().toList
-    assert(got == List(1L -> 1.0, 2L -> 2.0, 100L -> -1.0, 101L -> 101.0, 200L -> 200.0))
-    // insert-only merge (keys beyond every range): ALL dirs survive
-    t.merge(kv(999L -> 9.0), Seq("k"))
-    assert((after & dirsOf(4)).size == 3)
-    assert(t.snapshot().count() == 6)
-  }
-
-  test("stats pruning is null-safe: a null-key update reaches null-key dirs") {
-    val root = freshRoot()
-    val t = ManifestTable(spark, root, statsCols = Seq("k"))
+  test("merge is null-safe: a null-key update replaces the null-key row") {
+    val t = ManifestTable(spark, freshRoot())
     val nullRow = Seq((Option.empty[Long], 0.0)).toDF("k", "v")
-    t.overwrite(Seq((Some(1L), 1.0)).toDF("k", "v"))   // dir A: k ∈ [1,1], no nulls
-    t.append(nullRow)                                   // dir B: null key only
-    // null-key update must match dir B's null row (<=> semantics), so B
-    // cannot be pruned even though its value range is empty
+    t.overwrite(Seq((Some(1L), 1.0)).toDF("k", "v"))
+    t.append(nullRow)
+    // the null-key update must match the null row (<=> semantics)
     t.merge(Seq((Option.empty[Long], -1.0)).toDF("k", "v"), Seq("k"))
     val got = t.snapshot().orderBy(asc_nulls_first("k")).as[(Option[Long], Double)]
       .collect().toList
     assert(got == List((None, -1.0), (Some(1L), 1.0)))
-    // and a non-null update disjoint from A's range skips BOTH (B has an
-    // empty value range and no null can meet a non-null update) — pinned by
-    // dir NAME so a regression to full rewrite fails here, not just on rows
-    def dirsAt(v: Long): Set[String] = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$root/_log/v${"%020d".format(v)}.txt")), "UTF-8")
-      txt.split('\n').toSeq.collect { case l if l.startsWith("dir=") => l.substring(4) }.toSet
-    }
-    val vBefore = t.latestVersion().get
-    t.merge(Seq((Some(50L), 5.0)).toDF("k", "v"), Seq("k"))
-    val vAfter = t.latestVersion().get
-    assert((dirsAt(vBefore) & dirsAt(vAfter)).size == dirsAt(vBefore).size,
-      "expected every pre-merge dir to survive a disjoint-range merge")
-    assert(t.snapshot().count() == 3)
   }
 
   test("appendNonEmpty: empty batch commits nothing and leaves no dir; non-empty commits like append") {
@@ -339,31 +294,29 @@ class ManifestTableSpec extends SparkSpec {
     def dataDirs(root: String): Set[String] =
       Option(new java.io.File(root + "/data").listFiles()).toSeq.flatten
         .filter(_.isDirectory).map(_.getName).toSet
-    Seq(Seq.empty[String], Seq("k")).foreach { stats =>
-      // fresh table: nothing to return but -1, and nothing is created
-      val freshRootPath = freshRoot()
-      val fresh = ManifestTable(spark, freshRootPath, statsCols = stats)
-      assert(fresh.merge(empty, Seq("k")) == -1L, s"stats=$stats")
-      assert(fresh.mergeOnce(empty, Seq("k"), "s", 0L) == -1L, s"stats=$stats")
-      assert(fresh.versions().isEmpty, s"stats=$stats: an empty merge created a version")
-      assert(dataDirs(freshRootPath).isEmpty, s"stats=$stats: ${dataDirs(freshRootPath)}")
-      // committed table: same version, same live dirs, no orphan left
-      val root = freshRoot()
-      val t = ManifestTable(spark, root, statsCols = stats)
-      t.overwrite(kv(1L -> 1.0))
-      t.append(kv(2L -> 2.0))
-      assert(t.merge(empty, Seq("k")) == 1L, s"stats=$stats")
-      assert(t.mergeOnce(empty, Seq("k"), "s", 0L) == 1L, s"stats=$stats")
-      assert(t.versions() == Seq(0L, 1L), s"stats=$stats: an empty merge spent a version")
-      assert(t.dirCount() == 2, s"stats=$stats")
-      assert(t.txnVersion("s").isEmpty, s"stats=$stats: an empty mergeOnce committed its token")
-      assert(t.vacuum(retainLast = t.versions().length, graceMs = 0).isEmpty, s"stats=$stats")
-      assert(dataDirs(root).size == 2, s"stats=$stats: ${dataDirs(root)}")
-      // the batch id was not spent: the same id with rows still lands
-      assert(t.mergeOnce(kv(2L -> 20.0), Seq("k"), "s", 0L) == 2L, s"stats=$stats")
-      assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList ==
-        List(1L -> 1.0, 2L -> 20.0), s"stats=$stats")
-    }
+    // fresh table: nothing to return but -1, and nothing is created
+    val freshRootPath = freshRoot()
+    val fresh = ManifestTable(spark, freshRootPath)
+    assert(fresh.merge(empty, Seq("k")) == -1L)
+    assert(fresh.mergeOnce(empty, Seq("k"), "s", 0L) == -1L)
+    assert(fresh.versions().isEmpty, "an empty merge created a version")
+    assert(dataDirs(freshRootPath).isEmpty, s"${dataDirs(freshRootPath)}")
+    // committed table: same version, same live dirs, no orphan left
+    val root = freshRoot()
+    val t = ManifestTable(spark, root)
+    t.overwrite(kv(1L -> 1.0))
+    t.append(kv(2L -> 2.0))
+    assert(t.merge(empty, Seq("k")) == 1L)
+    assert(t.mergeOnce(empty, Seq("k"), "s", 0L) == 1L)
+    assert(t.versions() == Seq(0L, 1L), "an empty merge spent a version")
+    assert(t.dirCount() == 2)
+    assert(t.txnVersion("s").isEmpty, "an empty mergeOnce committed its token")
+    assert(t.vacuum(retainLast = t.versions().length, graceMs = 0).isEmpty)
+    assert(dataDirs(root).size == 2, s"${dataDirs(root)}")
+    // the batch id was not spent: the same id with rows still lands
+    assert(t.mergeOnce(kv(2L -> 20.0), Seq("k"), "s", 0L) == 2L)
+    assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList ==
+      List(1L -> 1.0, 2L -> 20.0))
   }
 
   test("append rejects a schema-drifting batch instead of corrupting reads") {
@@ -476,29 +429,21 @@ class ManifestTableSpec extends SparkSpec {
       List(1L -> 1.0, 2L -> 20.0))
     intercept[Exception] { t.snapshotAt(0).collect() }
   }
-  test("deleteByKeys: COW delete, stats-pruned dir survival, time travel serves pre-delete, no-op returns same version") {
-    val root = freshRoot()
-    val t = ManifestTable(spark, root, statsCols = Seq("k"))
-    t.overwrite(kv(1L -> 1.0, 2L -> 2.0))          // dir A: k ∈ [1,2]
-    t.append(kv(100L -> 100.0, 101L -> 101.0))     // dir B
-    t.append(kv(200L -> 200.0))                    // dir C
-    def dirsOf(v: Long): Set[String] = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$root/_log/v${"%020d".format(v)}.txt")), "UTF-8")
-      txt.split('\n').toSeq.collect { case l if l.startsWith("dir=") => l.substring(4) }.toSet
-    }
-    val before = dirsOf(2)
+  test("deleteByKeys: COW delete, time travel serves pre-delete, a non-matching tombstone keeps the rows") {
+    val t = ManifestTable(spark, freshRoot())
+    t.overwrite(kv(1L -> 1.0, 2L -> 2.0))
+    t.append(kv(100L -> 100.0, 101L -> 101.0))
+    t.append(kv(200L -> 200.0))
     val v = t.deleteByKeys(Seq(100L).toDF("k"), Seq("k"))
     assert(v === 3L)
-    // A and C are provably disjoint from the tombstone hull → survive by name
-    assert((before & dirsOf(3)).size === 2)
-    assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList ===
-      List(1L -> 1.0, 2L -> 2.0, 101L -> 101.0, 200L -> 200.0))
+    val remaining = List(1L -> 1.0, 2L -> 2.0, 101L -> 101.0, 200L -> 200.0)
+    assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList === remaining)
     // time travel still serves the deleted row (audit-then-vacuum)
     assert(t.snapshotAt(2).where(col("k") === 100L).count() === 1L)
-    // a tombstone outside every range is a NO-OP: same version, no write
-    assert(t.deleteByKeys(Seq(999L).toDF("k"), Seq("k")) === 3L)
-    assert(t.latestVersion().get === 3L)
+    // a tombstone matching no row rewrites the live dirs as one new
+    // version: the rows are unchanged
+    assert(t.deleteByKeys(Seq(999L).toDF("k"), Seq("k")) === 4L)
+    assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList === remaining)
     // deleting every remaining key leaves an empty, still-readable table
     t.deleteByKeys(Seq(1L, 2L, 101L, 200L).toDF("k"), Seq("k"))
     assert(t.snapshot().count() === 0L)
@@ -514,6 +459,45 @@ class ManifestTableSpec extends SparkSpec {
     assert(t.snapshot().orderBy("k").as[(Option[Long], Double)].collect().toList ==
       List(Some(1L) -> 1.0, Some(2L) -> 2.0),
       "the null-key row must be gone and no other row touched")
+  }
+
+  test("a table whose manifests carry older writers' per-dir stat lines stays usable") {
+    // older writers appended one `dirstat=<dir>|<col>|<min>|<max>|<hasNull>`
+    // line per dir and stats column to every manifest; readers now ignore
+    // those lines and writers no longer emit them
+    val root = freshRoot()
+    val w = ManifestTable(spark, root)
+    w.overwrite(kv(1L -> 1.0, 2L -> 2.0))        // v0: dir A, k ∈ [1,2]
+    w.append(kv(100L -> 100.0, 101L -> 101.0))   // v1: dirs A, B; B has k ∈ [100,101]
+    val ranges = Seq("1" -> "2", "100" -> "101")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def manifest(v: Long) = new org.apache.hadoop.fs.Path(s"$root/_log/v${"%020d".format(v)}.txt")
+    def body(v: Long): String = {
+      val in = fs.open(manifest(v))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    for (v <- 0L to 1L) {
+      val old = body(v)
+      val dirs = old.split('\n').toSeq.collect { case l if l.startsWith("dir=") => l.substring(4) }
+      val stats = dirs.zip(ranges).map { case (d, (mn, mx)) => s"dirstat=$d|k|$mn|$mx|false\n" }
+      // rewritten through the filesystem so its checksum file follows
+      val out = fs.create(manifest(v), /* overwrite = */ true)
+      try out.write((old + stats.mkString).getBytes("UTF-8")) finally out.close()
+    }
+    assert(body(1).split('\n').count(_.startsWith("dirstat=")) == 2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("k").as[(Long, Double)].collect().toList
+    val t = ManifestTable(spark, root) // a fresh handle reads the files, not a cache
+    assert(rows(t.snapshot()) == List(1L -> 1.0, 2L -> 2.0, 100L -> 100.0, 101L -> 101.0))
+    assert(rows(t.snapshotAt(0)) == List(1L -> 1.0, 2L -> 2.0))
+    assert(t.merge(kv(2L -> 20.0, 5L -> 5.0), Seq("k")) == 2L)
+    assert(rows(t.snapshot()) ==
+      List(1L -> 1.0, 2L -> 20.0, 5L -> 5.0, 100L -> 100.0, 101L -> 101.0))
+    assert(t.deleteByKeys(Seq(100L).toDF("k"), Seq("k")) == 3L)
+    assert(rows(t.snapshot()) == List(1L -> 1.0, 2L -> 20.0, 5L -> 5.0, 101L -> 101.0))
+    assert(rows(t.snapshotAt(1)) == List(1L -> 1.0, 2L -> 2.0, 100L -> 100.0, 101L -> 101.0))
+    assert(!body(3).contains("dirstat="), "new manifests carry no per-dir stat lines")
   }
 
   // ------------------------------------------- conditional-PUT log store
@@ -668,7 +652,7 @@ class ManifestTableSpec extends SparkSpec {
     // permissions/quota failure must propagate, not spin as phantom
     // contention ending in a misleading orphan-lock hint.
     import org.apache.hadoop.fs.{FSDataOutputStream, Path => HPath}
-    val dir = Files.createTempDirectory("graft-fakedfs").toString
+    val dir = tempDir("graft-fakedfs").toString
     class FakeDfs(lockFault: HPath => Option[java.io.IOException])
         extends org.apache.hadoop.fs.RawLocalFileSystem {
       initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
@@ -709,7 +693,7 @@ class ManifestTableSpec extends SparkSpec {
     // manifest (POSIX rename silently overwrites): two bodies for one
     // committed version.
     import org.apache.hadoop.fs.{Path => HPath}
-    val dir = Files.createTempDirectory("graft-ambirename").toString
+    val dir = tempDir("graft-ambirename").toString
     class AmbiguousRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
       override def getScheme: String = "file" // RawLocalFileSystem leaves it unimplemented
@@ -747,7 +731,7 @@ class ManifestTableSpec extends SparkSpec {
     // rename over the COMMITTED manifest. Unverifiable must wedge: keep
     // the lock (recoverable orphan), rethrow.
     import org.apache.hadoop.fs.{Path => HPath}
-    val dir = Files.createTempDirectory("graft-doublefault").toString
+    val dir = tempDir("graft-doublefault").toString
     class DoubleFaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
       override def getScheme: String = "file"
@@ -930,15 +914,15 @@ class ManifestTableSpec extends SparkSpec {
         lists.incrementAndGet(); inner.list(prefix)
       }
     }
-    val t1 = ManifestTable.onObjectStore(spark, root, counting, checkpointInterval = 3)
+    val t1 = ManifestTable.onObjectStore(spark, root, counting)
     t1.overwrite(kv(0L -> 0.0))
-    (1L to 7L).foreach(k => t1.append(kv(k -> k.toDouble))) // v0..v7; _ckpt at v3, v6
+    (1L to 12L).foreach(k => t1.append(kv(k -> k.toDouble))) // v0..v12; _ckpt at v10
     val before = lists.get()
-    val t2 = ManifestTable.onObjectStore(spark, root, counting, checkpointInterval = 3)
-    assert(t2.latestVersion().contains(7L))
-    assert(t2.versions() == (0L to 7L),
+    val t2 = ManifestTable.onObjectStore(spark, root, counting)
+    assert(t2.latestVersion().contains(12L))
+    assert(t2.versions() == (0L to 12L),
       "versions() must derive from density + the hint, not a LIST")
-    assert(t2.snapshot().count() === 8L)
+    assert(t2.snapshot().count() === 13L)
     assert(t2.snapshotAt(2L).count() === 3L, "time travel reads stay pinned")
     assert(lists.get() == before,
       s"cold start through the checkpoint must not LIST (saw ${lists.get() - before})")
@@ -946,27 +930,27 @@ class ManifestTableSpec extends SparkSpec {
 
   test("checkpoint hint (filesystem store): written at the interval; corrupt or stale hints fall back") {
     val root = freshRoot()
-    val t = ManifestTable(spark, root, checkpointInterval = 4)
+    val t = ManifestTable(spark, root)
     t.overwrite(kv(0L -> 0.0))
-    (1L to 5L).foreach(k => t.append(kv(k -> k.toDouble))) // v0..v5, _ckpt at v4
+    (1L to 11L).foreach(k => t.append(kv(k -> k.toDouble))) // v0..v11, _ckpt at v10
     val ckpt = new java.io.File(s"$root/_log/_ckpt")
     assert(ckpt.exists(), "the _ckpt hint must land at the interval")
     // a fresh handle resolves through the hint (and the hint is invisible
     // to the version log itself)
     val t2 = ManifestTable(spark, root)
-    assert(t2.latestVersion().contains(5L) && t2.snapshot().count() === 6L)
-    assert(t2.versions() == (0L to 5L))
+    assert(t2.latestVersion().contains(11L) && t2.snapshot().count() === 12L)
+    assert(t2.versions() == (0L to 11L))
     // CORRUPT hint: validation rejects it, the full-LIST fallback resolves
     java.nio.file.Files.write(ckpt.toPath, "not a checkpoint".getBytes("UTF-8"))
     val t3 = ManifestTable(spark, root)
-    assert(t3.latestVersion().contains(5L) && t3.snapshot().count() === 6L)
+    assert(t3.latestVersion().contains(11L) && t3.snapshot().count() === 12L)
     // STALE hint naming a version the log does not have (the recreated-
     // root shape): the exists() validation rejects it — never a phantom
     java.nio.file.Files.write(ckpt.toPath,
       "graft-ckpt-v1\nversion=99\nmanifest=bogus".getBytes("UTF-8"))
     val t4 = ManifestTable(spark, root)
-    assert(t4.latestVersion().contains(5L), "a stale hint must not produce a phantom version")
-    assert(t4.snapshot().count() === 6L)
+    assert(t4.latestVersion().contains(11L), "a stale hint must not produce a phantom version")
+    assert(t4.snapshot().count() === 12L)
   }
 
   test("breakOrphanLock: orphan blocks -> break -> next commit succeeds; refuses on a published version") {

@@ -15,7 +15,7 @@ class PipelineSpec extends SparkSpec {
     name.padTo(80, ' ') + "1" + birth + "X".padTo(65, ' ') + death + insee + "123"
 
   lazy val dir: Path = {
-    val d = Files.createTempDirectory("graft-fixtures")
+    val d = tempDir("graft-fixtures")
     Files.writeString(d.resolve("death_2022_m07.txt"), Seq(
       deathLine("THERON*JEANNINE/", "19250404", "20220804", "01007"),
       deathLine("MARTIN*PAUL/", "19400101", "20220700", "01007"),   // day 00 -> null -> dropped
@@ -76,7 +76,7 @@ class PipelineSpec extends SparkSpec {
 
   test("end-to-end: staged deaths land in a year-partitioned idempotent parquet store") {
     import org.apache.spark.sql.functions._
-    val store = java.nio.file.Files.createTempDirectory("graft-store").toString + "/deaths"
+    val store = tempDir("graft-store").toString + "/deaths"
     def staged = StageDeaths(spark, s"$dir/death_*", s"$dir/city_geo.csv")
       .withColumn("death_year", year(col("date_of_death")).cast("string"))
     val n1 = graft.ops.Sinks.idempotentParquetAppend(spark, staged, store,

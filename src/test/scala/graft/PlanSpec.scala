@@ -249,7 +249,7 @@ class PlanSpec extends SparkSpec {
 
   test("bucketed co-located join: no exchange and no extra sort below the join") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bucket_test").toString
+    val tmp = tempDir("graft_bucket_test").toString
     val orders = Tables.load(spark, sf0001, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val cust = Tables.load(spark, sf0001, "customer").select("c_custkey", "c_mktsegment")
@@ -797,7 +797,7 @@ class PlanSpec extends SparkSpec {
     }
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val dir = java.nio.file.Files.createTempDirectory("graft-durable-pin")
+    val dir = tempDir("graft-durable-pin")
     spark.sparkContext.addSparkListener(listener)
     try {
       for (name <- Seq("op_bfs", "op_pagerank", "op_hierarchy_flatten")) {

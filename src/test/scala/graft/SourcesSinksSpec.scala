@@ -18,7 +18,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("op2: JSON catalog -> resource selection (explode, format filter, limit)") {
-    val dir = Files.createTempDirectory("graft-json")
+    val dir = tempDir("graft-json")
     Files.writeString(dir.resolve("catalog.json"),
       """{"title": "deces", "resources": [
         |{"format": "csv", "latest": "http://x/a.csv", "title": "a"},
@@ -49,7 +49,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("op4: permissive ;-CSV scan drops malformed lines (pandas error_bad_lines=False)") {
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = tempDir("graft-csv")
     Files.writeString(dir.resolve("x.csv"),
       "a;b;c\n1;2;3\nbroken;line;with;extra;fields\n4;5;6\n")
     import org.apache.spark.sql.types._
@@ -61,7 +61,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("op6: glob discovery with provenance keeps only matching files") {
-    val dir = Files.createTempDirectory("graft-glob")
+    val dir = tempDir("graft-glob")
     Files.writeString(dir.resolve("death_1.txt"), "row1\nrow2")
     Files.writeString(dir.resolve("other.txt"), "nope")
     val df = Sources.globText(spark, s"$dir/death_*")
@@ -70,7 +70,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("op21+24+25: idempotent parquet append with partitioning; re-run is a no-op") {
-    val path = Files.createTempDirectory("graft-sink").toString + "/table"
+    val path = tempDir("graft-sink").toString + "/table"
     val batch1 = Seq((1, "2022", "a"), (2, "2022", "b"), (2, "2022", "b")).toDF("id", "yr", "v")
     assert(Sinks.idempotentParquetAppend(spark, batch1, path, Seq("id"), Seq("yr")) == 2)
     // overlapping re-run: only the genuinely new row lands
@@ -91,7 +91,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("op23: csv sink roundtrip") {
-    val path = Files.createTempDirectory("graft-csvsink").toString + "/out"
+    val path = tempDir("graft-csvsink").toString + "/out"
     Sinks.csvSink(Seq((1, "x"), (2, "y")).toDF("id", "v"), path)
     val back = spark.read.option("header", "true").csv(path)
     assert(back.count() == 2 && back.columns.toSeq == Seq("id", "v"))
@@ -431,8 +431,8 @@ class SourcesSinksSpec extends SparkSpec {
 
   test("bucketedTable: database-qualified names drop the real table (stale-path guard)") {
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_bt_db")
-    val p1 = Files.createTempDirectory("graft-bt1").toString
-    val p2 = Files.createTempDirectory("graft-bt2").toString
+    val p1 = tempDir("graft-bt1").toString
+    val p2 = tempDir("graft-bt2").toString
     try {
       Sinks.bucketedTable(Seq((1L, "a")).toDF("k", "s"), "graft_bt_db.t", 2, Seq("k"), Some(p1))
       // re-run against a DIFFERENT path: the whole-name-backticked DROP
@@ -445,7 +445,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("jdbc existence probe does not treat '_' in table names as a LIKE wildcard") {
-    val db = Files.createTempDirectory("graft-derby2").toString + "/db"
+    val db = tempDir("graft-derby2").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
     val props = new java.util.Properties()
     Seq((1L, "a")).toDF("id", "v").write.jdbc(url, "my1table", props)
@@ -460,7 +460,7 @@ class SourcesSinksSpec extends SparkSpec {
     // codec choice is a real 100-TB knob (zstd ≈ snappy speed at gzip-class
     // ratios); assert the option takes effect rather than silently falling
     // back to the default codec
-    val path = Files.createTempDirectory("graft-zstd").toString + "/t"
+    val path = tempDir("graft-zstd").toString + "/t"
     val src = Tables.load(spark, sf0001, "orders")
     src.write.option("compression", "zstd").parquet(path)
     val files = new java.io.File(path).listFiles.map(_.getName).filter(_.endsWith(".parquet"))
@@ -470,7 +470,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("orc source/sink roundtrip with predicate pushdown") {
-    val path = Files.createTempDirectory("graft-orc").toString + "/t"
+    val path = tempDir("graft-orc").toString + "/t"
     Tables.load(spark, sf0001, "nation").write.orc(path)
     val back = spark.read.orc(path).where($"n_nationkey" > 20)
     assert(back.count() == 4)
@@ -478,7 +478,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("op24: idempotent JDBC append against embedded Derby — re-run is a no-op") {
-    val db = Files.createTempDirectory("graft-derby").toString + "/db"
+    val db = tempDir("graft-derby").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
     val batch = Seq((1L, "a"), (2L, "b"), (2L, "b")).toDF("id", "v")
     assert(Sinks.idempotentJdbcAppend(spark, batch, url, "t1", Seq("id")) == 2) // in-batch dup dropped

@@ -19,9 +19,9 @@ class StreamingSpec extends SparkSpec {
     // keeps the row it inserted first (ON CONFLICT DO NOTHING), the merge
     // keeps a later file's row and resolves one file's rows by content
     // order, not by their order in the file
-    val dir = Files.createTempDirectory("graft-stream")
-    val ckpt = Files.createTempDirectory("graft-ckpt")
-    val table = graft.ops.ManifestTable(spark, Files.createTempDirectory("graft-sink").toString + "/tbl")
+    val dir = tempDir("graft-stream")
+    val ckpt = tempDir("graft-ckpt")
+    val table = graft.ops.ManifestTable(spark, tempDir("graft-sink").toString + "/tbl")
     Files.writeString(dir.resolve("death_a.txt"), Seq(
       deathLine("A/", "01007", born = "19300101"),
       deathLine("A/", "01007", born = "19250404"),
@@ -71,9 +71,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("restart against the same checkpoint re-ingests no file (Redis-ledger contract)") {
-    val dir = Files.createTempDirectory("graft-stream-rs")
-    val ckpt = Files.createTempDirectory("graft-ckpt-rs")
-    val sink = Files.createTempDirectory("graft-sink-rs")
+    val dir = tempDir("graft-stream-rs")
+    val ckpt = tempDir("graft-ckpt-rs")
+    val sink = tempDir("graft-sink-rs")
     def line(name: String, insee: String) =
       name.padTo(80, ' ') + "1" + "19250404" + " ".padTo(65, ' ') + "20220804" + insee + "1"
     Files.writeString(dir.resolve("death_a.txt"), Seq(line("A/", "01007"), line("C/", "01009")).mkString("\n"))
@@ -99,7 +99,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("exactly-once merge: a replayed batch cannot revert an interleaved writer's update") {
-    val dir = Files.createTempDirectory("graft-eo-merge")
+    val dir = tempDir("graft-eo-merge")
     val client = new graft.ops.InMemoryObjectStore
     val table = graft.ops.ManifestTable.onObjectStore(
       spark, dir.toString + "/tbl", client)
@@ -121,8 +121,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stream -> ACID merge sink: late rows UPDATE their key; versions commit per batch") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-acid-sink")
-    val ckpt = Files.createTempDirectory("graft-acid-ckpt")
+    val dir = tempDir("graft-acid-sink")
+    val ckpt = tempDir("graft-acid-ckpt")
     val table = graft.ops.ManifestTable(spark, dir.toString + "/tbl")
     val input = MemoryStream[(Long, String)]
     val q = Streaming.acidMergeSink(input.toDF().toDF("id", "v"), table, keys = Seq("id"))
@@ -145,8 +145,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dedup against history: dups of earlier batches drop; state survives replay semantics") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardup-sink")
-    val ckpt = Files.createTempDirectory("graft-neardup-ckpt")
+    val dir = tempDir("graft-neardup-sink")
+    val ckpt = tempDir("graft-neardup-ckpt")
     val table = graft.ops.ManifestTable(spark, dir.toString + "/sigs")
     val accepted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
     val batchIds = scala.collection.mutable.ArrayBuffer[Long]()
@@ -182,7 +182,7 @@ class StreamingSpec extends SparkSpec {
     // re-running batch 1's docs through a fresh stream on the SAME table
     val input2 = MemoryStream[(Long, String)]
     val accepted2 = scala.collection.mutable.ArrayBuffer[Set[Long]]()
-    val ckpt2 = Files.createTempDirectory("graft-neardup-ckpt2")
+    val ckpt2 = tempDir("graft-neardup-ckpt2")
     val q2 = Streaming.nearDupFilterSink(
         input2.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
         onAccepted = (b, _) => accepted2.synchronized {
@@ -204,8 +204,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dedup: batch-mates shield each other — one representative per in-batch cluster") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardup-mates")
-    val ckpt = Files.createTempDirectory("graft-neardup-mates-ckpt")
+    val dir = tempDir("graft-neardup-mates")
+    val ckpt = tempDir("graft-neardup-mates-ckpt")
     val table = graft.ops.ManifestTable(spark, dir.toString + "/sigs")
     val accepted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
     val input = MemoryStream[(Long, String)]
@@ -244,8 +244,8 @@ class StreamingSpec extends SparkSpec {
     // visible (2 ≠ 5) and 2 drops. Nothing of the cluster is re-emitted
     // or re-appended.
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardup-redeliver")
-    val ckpt = Files.createTempDirectory("graft-neardup-redeliver-ckpt")
+    val dir = tempDir("graft-neardup-redeliver")
+    val ckpt = tempDir("graft-neardup-redeliver-ckpt")
     val table = graft.ops.ManifestTable(spark, dir.toString + "/sigs")
     val accepted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
     val input = MemoryStream[(Long, String)]
@@ -279,8 +279,8 @@ class StreamingSpec extends SparkSpec {
     // near-dups of pre-kill history still drop, and the state table
     // never gains a duplicate signature row
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardup-restart")
-    val ckpt = Files.createTempDirectory("graft-neardup-restart-ckpt")
+    val dir = tempDir("graft-neardup-restart")
+    val ckpt = tempDir("graft-neardup-restart-ckpt")
     val table = graft.ops.ManifestTable(spark, dir.toString + "/sigs")
     val accepted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
     val input = MemoryStream[(Long, String)]
@@ -318,8 +318,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dedup: compacting the state table between triggers keeps its dir count flat; dedup unchanged") {
     implicit val sqlCtx = spark.sqlContext
-    val dirRoot = Files.createTempDirectory("graft-neardup-compact")
-    val ckpt = Files.createTempDirectory("graft-neardup-compact-ckpt")
+    val dirRoot = tempDir("graft-neardup-compact")
+    val ckpt = tempDir("graft-neardup-compact-ckpt")
     val tblPath = dirRoot.toString + "/sigs"
     val table = graft.ops.ManifestTable(spark, tblPath)
     val accepted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
@@ -353,8 +353,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dedup: short docs sign whole-text shingles instead of bypassing the filter") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardup-short")
-    val ckpt = Files.createTempDirectory("graft-neardup-short-ckpt")
+    val dir = tempDir("graft-neardup-short")
+    val ckpt = tempDir("graft-neardup-short-ckpt")
     val table = graft.ops.ManifestTable(spark, dir.toString + "/sigs")
     val accepted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
     val input = MemoryStream[(Long, String)]
@@ -374,8 +374,8 @@ class StreamingSpec extends SparkSpec {
 
   test("nearDupFilterSink: an empty trigger spends no version; dedup and handlers unchanged otherwise") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardup-sparse")
-    val ckpt = Files.createTempDirectory("graft-neardup-sparse-ckpt")
+    val dir = tempDir("graft-neardup-sparse")
+    val ckpt = tempDir("graft-neardup-sparse-ckpt")
     val table = graft.ops.ManifestTable(spark, dir.toString + "/sigs")
     val accepted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
     val input = MemoryStream[(Long, String)]

@@ -122,7 +122,7 @@ class TransformsSpec extends SparkSpec {
     for (a <- pts if a._1 < 8 && a._2 < 8; b <- Seq((8L, 8L), (15L, 15L)))
       assert(zs(a) < zs(b))
     // z-ordered write partitions by z-range and round-trips
-    val dir = java.nio.file.Files.createTempDirectory("graft-z").toString + "/t"
+    val dir = tempDir("graft-z").toString + "/t"
     graft.ops.Layout.writeZOrdered(pts.toDF("x", "y"), dir, $"x", $"y", bits = 4, numFiles = 4)
     val back = spark.read.parquet(dir)
     assert(back.count() == pts.length)
