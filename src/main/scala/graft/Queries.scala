@@ -409,8 +409,9 @@ object Queries {
     * for JDBC, one embedded Derby database booted once per JVM). The
     * PID suffix keeps two concurrent driver/bench processes on the same
     * host from clobbering each other's scratch mid-query (the
-    * op_merge_acid lesson); sibling PIDs' dirs whose pid is dead are
-    * swept so finished JVMs don't leak scratch forever.
+    * op_merge_acid lesson). The dir is deleted when this JVM shuts down;
+    * sibling PIDs' dirs whose pid is dead (a JVM killed before its hooks
+    * ran) are swept so finished JVMs don't leak scratch forever.
     *
     * The sweep is MEMOIZED per (kind, hash) with a 1-hour TTL: leaked
     * dirs only appear when a sibling JVM exits, so re-listing /tmp on
@@ -434,18 +435,19 @@ object Queries {
     sweepStaleSiblings(tmp, prefix, name)
     val p = java.nio.file.Paths.get(tmp, name)
     java.nio.file.Files.createDirectories(p)
+    org.apache.spark.sql.GraftBridge.deleteAtShutdown(p.toString)
     p.toString
   }
 
   /** Fresh-per-invocation scratch ROOT for the ACID/object-store-log
     * queries (op_merge_acid*, op_exactly_once, op_time_travel, …): same
-    * per-(kind, sfDir, PID) naming as [[scratchDir]], but the root is
-    * DELETED (not created) on every call — ManifestTable lays out its own
-    * log — so repeated invocations replay the full commit history from an
-    * empty log. The stale-sibling sweep is the shared memoized one: the
-    * previous inline per-invocation `/tmp` listing was harness
-    * housekeeping billed to the query's wall time on every bench
-    * iteration (VERDICT r14).
+    * per-(kind, sfDir, PID) naming and shutdown deletion as
+    * [[scratchDir]], but the root is DELETED (not created) on every call —
+    * ManifestTable lays out its own log — so repeated invocations replay
+    * the full commit history from an empty log. The stale-sibling sweep
+    * is the shared memoized one: the previous inline per-invocation `/tmp`
+    * listing was harness housekeeping billed to the query's wall time on
+    * every bench iteration (VERDICT r14).
     */
   private[graft] def freshScratchRoot(spark: SparkSession, kind: String, d: String): String = {
     val tmp = sys.props("java.io.tmpdir")
@@ -454,6 +456,7 @@ object Queries {
     sweepStaleSiblings(tmp, prefix, name)
     val rp = new org.apache.hadoop.fs.Path(tmp + "/" + name)
     rp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rp, true)
+    org.apache.spark.sql.GraftBridge.deleteAtShutdown(tmp + "/" + name)
     tmp + "/" + name
   }
 

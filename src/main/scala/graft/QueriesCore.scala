@@ -151,28 +151,22 @@ private[graft] object QueriesCore {
         ORDER BY o_orderkey""")),
 
     QueryDef("op_merge_acid_os",
-      // op_merge_acid executed through the CONDITIONAL-PUT commit log
-      // (round-13 storage seam): same base/updates construct, same
-      // relational-MERGE oracle — the commit protocol, whichever log store
-      // carries it, must be invisible in the data. Data files land on the
-      // local scratch filesystem exactly as on a cloud deployment via the
-      // store's Hadoop connector; only the log's atomicity rides the
-      // conditional PUT. Since round 17 the client is the REAL
-      // filesystem-backed adapter ([[graft.ops.HadoopFsObjectStore]] —
-      // link-published conditional PUTs on actual disk), so this key
-      // certifies the deployable path; SPARK_GRAFT_OS_CLIENT=memory
-      // reverts to the in-memory S3-semantics client (which op_exactly_once
-      // still exercises, keeping both clients under the oracle gate).
-      // freshScratchRoot wipes the root per invocation, so either log
-      // starts at v0 with no extra sweep.
+      // op_merge_acid with its commit log on the in-memory S3-semantics
+      // client ([[graft.ops.InMemoryObjectStore]]): same base/updates
+      // construct, same relational-MERGE oracle — the commit protocol,
+      // whichever client carries it, must be invisible in the data. Data
+      // files land on the local scratch filesystem exactly as on a cloud
+      // deployment via the store's Hadoop connector; only the log's
+      // atomicity rides the client's conditional PUT. op_merge_acid covers
+      // the filesystem client ([[graft.ops.HadoopFsObjectStore]]), so each
+      // client is under the oracle gate through its own key.
+      // freshScratchRoot wipes the root per invocation, and the client is
+      // fresh, so the log starts at v0 with no extra sweep.
       (s, d) => {
         val root = freshScratchRoot(s, "acidos", d)
         val base = mergeFixtureBase(s, d)
         val updates = mergeFixtureUpdates(base)
-        val client =
-          if (sys.env.get("SPARK_GRAFT_OS_CLIENT").contains("memory")) new InMemoryObjectStore
-          else new graft.ops.HadoopFsObjectStore(root, s.sparkContext.hadoopConfiguration)
-        val mt = ManifestTable.onObjectStore(s, root, client)
+        val mt = ManifestTable.onObjectStore(s, root, new InMemoryObjectStore)
         mt.overwrite(base)
         mt.merge(updates, Seq("o_orderkey"))
         mt.snapshot().orderBy(col("o_orderkey"))

@@ -24,16 +24,18 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, 
   *    reintroduce the orphan-lock mode this client exists to avoid.
   *  - **other schemes (HDFS-class)**: `FileContext.rename(src, dst,
   *    Rename.NONE)` — a single atomic namenode op that fails
-  *    `FileAlreadyExistsException` when the destination exists. Like
-  *    [[HadoopLogStore]]'s rename step, the rename can APPLY and still
-  *    throw (RPC retry landing server-side after a client error), so an
-  *    ambiguous failure is resolved by probing the destination: our body
-  *    committed = win; a foreign body = loss; otherwise rethrow.
+  *    `FileAlreadyExistsException` when the destination exists. The
+  *    rename can APPLY and still throw (RPC retry landing server-side
+  *    after a client error), so an ambiguous failure is resolved by
+  *    probing the destination: our body committed = win; a foreign body =
+  *    loss; still absent = transient (the log store re-issues the PUT); a
+  *    probe that itself fails propagates, never reading as a loss.
   *
-  * Keys resolve against `root` (`new Path(root, key)`), so ABSOLUTE keys
-  * (as [[ObjectStoreLogStore]] builds when its prefix is an absolute
-  * table root) address the filesystem directly and are listed back in the
-  * same absolute form — the caller's namespace round-trips either way.
+  * Keys resolve against `root` (`new Path(root, key)`): the relative keys
+  * [[ObjectStoreLogStore]] builds (`_log/vN.txt`) land under the table
+  * root whatever its scheme, and list back relative. ABSOLUTE keys
+  * address the filesystem directly and are listed back in the same
+  * absolute form.
   * Staging lives under `root/.graft-put-stage`; dot-prefixed basenames
   * are reserved (hidden from [[list]]), matching the `_`/`.` marker
   * convention of every Hadoop table layout. On the local scheme the raw
@@ -42,8 +44,7 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, 
   *
   * At 100 TB the log this client carries is METADATA (one manifest per
   * commit): requests here are O(commits), never O(data); the data files
-  * themselves read/write through the table root's own filesystem exactly
-  * as with every other log store.
+  * themselves read/write through the table root's own filesystem.
   */
 class HadoopFsObjectStore(root: String, conf: Configuration) extends ObjectStoreClient {
 
@@ -100,15 +101,15 @@ class HadoopFsObjectStore(root: String, conf: Configuration) extends ObjectStore
         catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
           case e: java.io.IOException =>
-            // the rename can APPLY and still throw (HadoopLogStore's
-            // probe discipline): a committed body settles the outcome —
-            // ours = win, foreign = loss. Still-absent is AMBIGUOUS (an
-            // RPC retry of the rename may land server-side after this
-            // probe), so it surfaces as the contract's transient type:
-            // ObjectStoreLogStore's resolution loop re-issues the same
-            // idempotent conditional PUT until the version settles — a
-            // raw IOException would abort the whole commit on the first
-            // hiccup, bypassing that loop.
+            // the rename can APPLY and still throw (see the class doc):
+            // a committed body settles the outcome — ours = win, foreign =
+            // loss. Still-absent is AMBIGUOUS (an RPC retry of the rename
+            // may land server-side after this probe), so it surfaces as
+            // the contract's transient type: ObjectStoreLogStore's
+            // resolution loop re-issues the same idempotent conditional
+            // PUT until the version settles — a raw IOException would
+            // abort the whole commit on the first hiccup, bypassing that
+            // loop.
             get(key) match {
               case Some(committed) => java.util.Arrays.equals(committed, bytes)
               case None =>

@@ -1,308 +1,11 @@
 package graft.ops
 
-
-import org.apache.hadoop.fs.{FileSystem, Path}
-
-/** The storage primitive [[ManifestTable]]'s commit protocol actually
-  * needs: publish version N's manifest atomically, exactly once across all
-  * racing writers. Everything else in the protocol (immutable data dirs,
-  * snapshot reads from one pinned manifest, the re-derive-and-retry loop,
-  * the parent guard) is store-agnostic and lives in [[ManifestTable]];
-  * only THIS seam differs between a real filesystem and an S3-class
-  * object store (contract spec'd in SCALE.md "ManifestTable on an object
-  * store: the conditional-PUT contract").
-  */
-trait ManifestLogStore {
-  /** Committed versions, ascending. */
-  def listVersions(): Seq[Long]
-
-  /** The published manifest body for `v`, or None if `v` was never
-    * committed. Readers must never observe a torn body — atomic
-    * visibility is part of the publish contract.
-    */
-  def read(v: Long): Option[Array[Byte]]
-
-  /** True iff version `v` has a published manifest — the body-free probe
-    * behind [[ManifestTable]]'s forward-walking `latestVersion()`. Stores
-    * override with their cheap form (filesystem exists / object HEAD).
-    */
-  def exists(v: Long): Boolean = read(v).isDefined
-
-  /** Atomically publish version `v`. True = THIS call committed it; false
-    * = retryable contention (another writer holds/won `v`) — the caller
-    * re-derives from the new latest and retries. Non-contention store
-    * failures throw.
-    */
-  def publishIfAbsent(v: Long, body: Array[Byte]): Boolean
-
-  /** Operator guidance for the exhausted-retries error at version `v` —
-    * the failure modes differ by store (orphan lock vs pure contention).
-    */
-  def contentionHint(v: Long): String
-
-  /** Best-effort mutable CHECKPOINT HINT (Delta's `_last_checkpoint`
-    * analog): one small overwritable object naming a known-committed
-    * version so a cold handle starts its forward probe there instead of
-    * LISTing the O(commits) log. Semantics are last-writer-wins and
-    * PURELY advisory — a stale, torn, or absent checkpoint only costs
-    * extra reads (the caller validates the content and falls back to the
-    * full LIST), never a wrong answer. Defaults: no checkpoint support
-    * (reads absent; writes throw `UnsupportedOperationException`, which
-    * the caller treats as "checkpointing disabled for this store").
-    */
-  def readCheckpoint(): Option[Array[Byte]] = None
-
-  /** See [[readCheckpoint]]. Must overwrite any previous checkpoint. */
-  def writeCheckpoint(bytes: Array[Byte]): Unit =
-    throw new UnsupportedOperationException(
-      "this log store does not support checkpoint hints")
-
-  /** ADMIN-ONLY: remove version `v`'s orphaned lock object so writers can
-    * proceed after a writer PROCESS died between reserving the lock and
-    * publishing the manifest. Fenced: refuses (throws
-    * `IllegalStateException`) when `v` has a PUBLISHED manifest — the
-    * "orphan" diagnosis is then wrong (the writer committed), and
-    * removing a committed version's reservation would let a racing writer
-    * re-reserve it and rename over the committed body. The CALLER asserts
-    * no writer is live: breaking a live writer's reservation mid-publish
-    * can lose its commit. Stores without lock objects throw
-    * `UnsupportedOperationException` (there is nothing to break).
-    */
-  def breakLock(v: Long): Unit =
-    throw new UnsupportedOperationException(
-      "this log store has no lock objects to break")
-}
-
-/** Real-filesystem log store — the STRICTER protocol, synthesizing the
-  * conditional PUT from two primitives because POSIX `rename(2)` silently
-  * overwrites an existing destination:
-  *
-  *  - **CAS via exclusive file creation**: committing version N reserves
-  *    `_log/vN.lock` with an atomic create-if-absent (`O_CREAT|O_EXCL` on
-  *    local POSIX, atomic namenode create on HDFS). Exactly one writer
-  *    per version wins; losers retry.
-  *  - **Atomic visibility via tmp + rename**: the lock holder writes the
-  *    body to `_log/.tmp-<uuid>` and renames it to `vN.txt`. Readers list
-  *    only `v*.txt`, so they see either nothing or the whole manifest.
-  *
-  * The split primitive is also why the orphan-lock failure mode exists
-  * here and ONLY here: a writer that dies between reserving `vN.lock` and
-  * publishing `vN.txt` wedges the log until an operator removes the lock
-  * ([[contentionHint]] names it). The conditional-PUT store has no such
-  * window — reserve and publish are one atomic request.
-  */
-final class HadoopLogStore(fsThunk: => FileSystem, logDir: Path) extends ManifestLogStore {
-  import ManifestLogStore._
-
-  // capture ONCE: the previous by-name parameter re-evaluated the caller's
-  // thunk on every reference (~6 FileSystem.get lookups per publish — and a
-  // fresh FileSystem instantiation per call for callers whose expression
-  // constructs one); lazy keeps the deferred-initialization intent
-  private lazy val fs: FileSystem = fsThunk
-
-  override def listVersions(): Seq[Long] = {
-    if (!fs.exists(logDir)) return Seq.empty
-    fs.listStatus(logDir).iterator
-      .map(_.getPath.getName)
-      .collect { case ManifestName(v) => v.toLong }
-      .toSeq.sorted
-  }
-
-  override def exists(v: Long): Boolean = fs.exists(manifestPath(v))
-
-  override def read(v: Long): Option[Array[Byte]] = readFully(manifestPath(v))
-
-  private def readFully(p: Path): Option[Array[Byte]] = {
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      Some(buf.toByteArray)
-    } finally in.close()
-  }
-
-  // ------------------------------------------------------ checkpoint hint
-
-  // `_ckpt` is invisible to listVersions (the ManifestName regex matches
-  // only v*.txt), so the hint never masquerades as a version
-  private def ckptPath = new Path(logDir, "_ckpt")
-
-  /** Advisory read: any failure (missing, torn mid-swap, IO blip) reads as
-    * "no checkpoint" — the caller falls back to the full LIST.
-    */
-  override def readCheckpoint(): Option[Array[Byte]] =
-    try readFully(ckptPath)
-    catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Last-writer-wins overwrite via stage + delete + rename. Hadoop's
-    * `rename` refuses an existing destination on HDFS, so the previous
-    * checkpoint is deleted first — the tiny absence window is fine for a
-    * HINT (a reader landing in it LISTs once). A concurrent checkpointer
-    * winning the rename is equally fine: its hint is at least as fresh.
-    */
-  override def writeCheckpoint(bytes: Array[Byte]): Unit = {
-    fs.mkdirs(logDir)
-    val tmp = new Path(logDir, s".tmp-ckpt-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, /* overwrite = */ false)
-    try out.write(bytes)
-    catch {
-      case e: Throwable =>
-        try out.close() catch { case c: Throwable => e.addSuppressed(c) }
-        try fs.delete(tmp, false) catch { case c: Throwable => e.addSuppressed(c) }
-        throw e
-    }
-    out.close()
-    fs.delete(ckptPath, false)
-    if (!fs.rename(tmp, ckptPath)) {
-      // lost a checkpoint race — collect the staged file, keep the winner
-      fs.delete(tmp, false); ()
-    }
-  }
-
-  /** The orphan-lock breaker (see the trait doc for the fencing contract):
-    * refuses when `v` is PUBLISHED, removes the lock otherwise (absent
-    * lock = idempotent no-op).
-    */
-  override def breakLock(v: Long): Unit = {
-    if (fs.exists(manifestPath(v)))
-      throw new IllegalStateException(
-        s"refusing to break ${lockPath(v)}: version $v has a published manifest — " +
-          "the writer committed, this lock is not an orphan")
-    fs.delete(lockPath(v), false); ()
-  }
-
-  override def publishIfAbsent(v: Long, body: Array[Byte]): Boolean = {
-    fs.mkdirs(logDir)
-    if (!tryReserve(v)) {
-      // a reserved-but-never-published version means a writer died
-      // mid-commit (or is slow); the retry loop re-lands here until
-      // retries exhaust
-      return false
-    }
-    // holding the lock now: any failure before the manifest publishes MUST
-    // release it, or this live writer's transient IO error (disk full,
-    // rename refusal) turns into a permanent outage for every writer
-    val tmp = new Path(logDir, s".tmp-${java.util.UUID.randomUUID()}")
-    try {
-      val out = fs.create(tmp, /* overwrite = */ false)
-      // suppressed-exception pattern, not try/finally: a close() failure
-      // in a finally would REPLACE the informative write exception (disk
-      // full) with the secondary flush error
-      try out.write(body)
-      catch {
-        case e: Throwable =>
-          try out.close() catch { case c: Throwable => e.addSuppressed(c) }
-          throw e
-      }
-      out.close()
-      // no contention on the final name — the lock made us the sole writer
-      // of this version; the rename is only for atomic reader visibility
-      if (!fs.rename(tmp, manifestPath(v))) {
-        throw new java.io.IOException(
-          s"ManifestTable log: rename to ${manifestPath(v)} failed while holding its lock")
-      }
-      true
-    } catch {
-      case e: Throwable =>
-        // AMBIGUOUS failure first: the rename can APPLY and still throw —
-        // ChecksumFileSystem renames the data file then fails on the .crc
-        // step; an HDFS RPC retry can land server-side after a client-side
-        // error. If the manifest EXISTS, this commit SUCCEEDED: releasing
-        // the lock here would let a racing writer re-reserve the version
-        // and rename over the committed body (POSIX rename silently
-        // overwrites) — two different bodies for one committed version.
-        // three-way, not boolean: a probe that ITSELF fails proves nothing
-        // — defaulting it to "not published" released the lock inside the
-        // double-failure window (rename applied server-side, probe hit the
-        // same transient blip), letting a racing writer re-reserve the
-        // version and rename over the COMMITTED body. Unverifiable ⇒ keep
-        // the lock: a wedged version is recoverable (contentionHint names
-        // the lock to remove; a retry probes again), an overwritten
-        // committed manifest is not.
-        val published: Option[Boolean] =
-          try Some(fs.exists(manifestPath(v)))
-          catch { case probe: Throwable => e.addSuppressed(probe); None }
-        if (published.contains(true)) {
-          try fs.delete(tmp, false)
-          catch { case cleanup: Throwable => e.addSuppressed(cleanup) }
-          true
-        } else if (published.isEmpty) {
-          // tmp is safe to collect either way: if the rename applied it is
-          // already gone; if not, nothing references the staged file
-          try fs.delete(tmp, false)
-          catch { case cleanup: Throwable => e.addSuppressed(cleanup) }
-          throw e
-        } else {
-          // release the lock AND collect the staged tmp file: nothing else
-          // ever cleans _log (vacuum sweeps data/ only, listVersions
-          // ignores dot-files), so a writer retrying through transient IO
-          // errors would otherwise leak one .tmp per failure into the
-          // directory every latestVersion() call lists
-          try fs.delete(lockPath(v), false)
-          catch { case cleanup: Throwable => e.addSuppressed(cleanup) }
-          try fs.delete(tmp, false)
-          catch { case cleanup: Throwable => e.addSuppressed(cleanup) }
-          throw e
-        }
-    }
-  }
-
-  override def contentionHint(v: Long): String =
-    s"if no writer is live, a crashed commit left an orphan lock — remove ${lockPath(v)} " +
-      s"(ManifestTable.breakOrphanLock($v) is the fenced admin op)"
-
-  /** The CAS primitive: create-if-absent of the version's lock file.
-    * `java.io.File.createNewFile` is atomic `O_CREAT|O_EXCL` for the local
-    * scheme (Hadoop's RawLocalFileSystem check-then-create is NOT atomic);
-    * HDFS `create(overwrite = false)` is an atomic namenode op.
-    */
-  private def tryReserve(version: Long): Boolean = {
-    val lock = lockPath(version)
-    if (fs.getScheme == "file")
-      new java.io.File(lock.toUri.getPath).createNewFile()
-    else {
-      val out =
-        try fs.create(lock, /* overwrite = */ false)
-        catch {
-          // only LOSING THE RACE is contention; a permissions/quota/IO
-          // failure must surface as itself, not as endlessly-retried
-          // "contention" ending in a misleading orphan-lock hint. HDFS
-          // signals the mid-create window of the race as a lease conflict
-          // (AlreadyBeingCreatedException — the other writer's create is
-          // registered at the namenode but not yet closed), which is as
-          // much "lost the race" as the typed already-exists cases.
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
-          case _: java.nio.file.FileAlreadyExistsException => return false
-          case _: org.apache.hadoop.hdfs.protocol.AlreadyBeingCreatedException => return false
-        }
-      // past this point the lock EXISTS at the namenode: a close() failure
-      // (datanode pipeline loss) is a failure of a LIVE writer and must
-      // release the reservation on the way out — leaving it would wedge
-      // every writer behind a phantom "orphan lock" while this one merely
-      // reports an IO error ("a live writer releases its own lock" is the
-      // documented invariant)
-      try { out.close(); true }
-      catch {
-        case e: Throwable =>
-          try fs.delete(lock, false)
-          catch { case cleanup: Throwable => e.addSuppressed(cleanup) }
-          throw e
-      }
-    }
-  }
-
-  private def manifestPath(v: Long) = new Path(logDir, f"v$v%020d.txt")
-  private def lockPath(v: Long) = new Path(logDir, f"v$v%020d.lock")
-}
-
-/** The object-store primitive the conditional-PUT log store builds on —
-  * the three requests every S3-class store serves. Implementations wrap
-  * the store's SDK; transient service errors (throttling, 5xx) may be
-  * thrown as [[ObjectStoreClient.TransientStoreException]] and the log
-  * store absorbs them into the existing retry loop.
+/** The object-store primitive [[ManifestTable]]'s commit log builds on —
+  * the requests every S3-class store serves. Implementations wrap the
+  * store's SDK (or a filesystem: [[HadoopFsObjectStore]]); transient
+  * service errors (throttling, 5xx) may be thrown as
+  * [[ObjectStoreClient.TransientStoreException]] and the log store absorbs
+  * them into the existing retry loop.
   */
 trait ObjectStoreClient {
   /** Create `key` with `bytes` IF AND ONLY IF the key does not exist —
@@ -319,11 +22,9 @@ trait ObjectStoreClient {
   /** Existence probe WITHOUT the body — S3 `HeadObject`, GCS/Azure
     * metadata GET: the primitive behind [[ManifestTable]]'s forward-
     * probing `latestVersion()` (a dense-version walk wants "is v+1
-    * there?", not v+1's bytes). Default = a full GET for clients that
-    * predate it; real SDK adapters should override with the metadata
-    * request.
+    * there?", not v+1's bytes).
     */
-  def head(key: String): Boolean = get(key).isDefined
+  def head(key: String): Boolean
 
   /** Keys under `prefix` (object stores list lexicographically; order here
     * is unspecified and the caller sorts).
@@ -332,12 +33,9 @@ trait ObjectStoreClient {
 
   /** UNCONDITIONAL last-writer-wins PUT — plain S3 `PutObject` with no
     * precondition. Used ONLY for the advisory checkpoint hint, never for
-    * commits (those stay conditional). Default: unsupported — clients
-    * that predate it simply run with checkpointing disabled.
+    * commits (those stay conditional).
     */
-  def put(key: String, bytes: Array[Byte]): Unit =
-    throw new UnsupportedOperationException(
-      "unconditional PUT not implemented by this client")
+  def put(key: String, bytes: Array[Byte]): Unit
 }
 
 object ObjectStoreClient {
@@ -348,23 +46,27 @@ object ObjectStoreClient {
   final class TransientStoreException(msg: String) extends java.io.IOException(msg)
 }
 
-/** Conditional-PUT log store: version N's commit is ONE atomic request —
-  * `putIfNoneMatch` of `vN.txt` itself. The winner's manifest IS the
-  * commit; a loser's 412 maps onto the protocol's existing
+/** [[ManifestTable]]'s commit log: version N's commit is ONE atomic
+  * request — `putIfNoneMatch` of `_log/vN.txt` itself. The winner's
+  * manifest IS the commit; a loser's 412 maps onto the protocol's
   * lost-the-race/None path, so `ManifestTable`'s re-derive-and-retry loop,
-  * backoff, and parent guard carry over unchanged. Compared to
-  * [[HadoopLogStore]], two failure modes DISAPPEAR (spec'd in SCALE.md):
-  * the separate lock object (reserve and publish are one request, so a
-  * crashed writer either published completely or left nothing — no orphan
-  * lock to remove) and tmp+rename (per-key atomic visibility is the
-  * store's own guarantee).
+  * backoff, and parent guard need nothing store-specific. Reserve and
+  * publish are one request, so a crashed writer either published
+  * completely or left nothing (no lock to orphan), and per-key atomic
+  * visibility is the store's own guarantee (readers never see a torn
+  * body). Everything else in the protocol (immutable data dirs, snapshot
+  * reads from one pinned manifest) lives in [[ManifestTable]]; the
+  * contract is spec'd in SCALE.md "ManifestTable on an object store".
   *
-  * One failure mode is NEW and handled here: an AMBIGUOUS transient error
+  * Keys are relative to the client (`_log/vN.txt`, `_log/_ckpt`): one
+  * client addresses one table.
+  *
+  * One failure mode is handled here: an AMBIGUOUS transient error
   * — the store may have committed the PUT before the response was lost,
   * or the request may STILL BE IN FLIGHT server-side (a connection reset
   * surfaces client-side while the store keeps processing). The resolution
-  * discipline: `false` from this method means PROVEN lost, because the
-  * caller reacts by deleting its rewrite dir and re-deriving — a false
+  * discipline: `false` from [[publishIfAbsent]] means PROVEN lost, because
+  * the caller reacts by deleting its rewrite dir and re-deriving — a false
   * while our own request later lands would commit a manifest referencing
   * a deleted dir (permanent corruption) or re-append the same dir (row
   * duplication). Proof is only ever a committed body at this version:
@@ -378,28 +80,33 @@ object ObjectStoreClient {
   * unreachable the publish throws (fail loudly — the caller leaves its
   * dir for vacuum, never deletes it on an unproven loss).
   */
-final class ObjectStoreLogStore(client: ObjectStoreClient, prefix: String)
-    extends ManifestLogStore {
-  import ManifestLogStore._
+final class ObjectStoreLogStore(client: ObjectStoreClient) {
+  import ObjectStoreLogStore._
 
-  private val logPrefix = prefix.stripSuffix("/") + "/_log/"
-  private def key(v: Long) = f"${logPrefix}v$v%020d.txt"
+  private def key(v: Long) = f"${LogPrefix}v$v%020d.txt"
 
-  override def listVersions(): Seq[Long] =
+  /** Committed versions, ascending. */
+  def listVersions(): Seq[Long] =
     withTransientRetry("list") {
-      client.list(logPrefix).iterator
-        .map(_.stripPrefix(logPrefix))
+      client.list(LogPrefix).iterator
+        .map(_.stripPrefix(LogPrefix))
         .collect { case ManifestName(v) => v.toLong }
         .toSeq.sorted
     }
 
-  override def read(v: Long): Option[Array[Byte]] =
+  /** The published manifest body for `v`, or None if `v` was never committed. */
+  def read(v: Long): Option[Array[Byte]] =
     withTransientRetry("get")(client.get(key(v)))
 
-  override def exists(v: Long): Boolean =
+  /** True iff version `v` has a published manifest (a HEAD, no body). */
+  def exists(v: Long): Boolean =
     withTransientRetry("head")(client.head(key(v)))
 
-  override def publishIfAbsent(v: Long, body: Array[Byte]): Boolean = {
+  /** Atomically publish version `v`. True = THIS call committed it; false
+    * = another writer's body is committed at `v` — the caller re-derives
+    * from the new latest and retries. Other store failures throw.
+    */
+  def publishIfAbsent(v: Long, body: Array[Byte]): Boolean = {
     // Resolution loop (see class doc): only a COMMITTED body at `v`
     // settles the outcome. An absent key after an ambiguous PUT must NOT
     // read as "lost" — the request may still be in flight server-side and
@@ -432,9 +139,6 @@ final class ObjectStoreLogStore(client: ObjectStoreClient, prefix: String)
         "an in-flight request may still land (data dir is left for vacuum)")
   }
 
-  /** Attempts resolving one publish before the commit aborts loudly. */
-  private val PublishRetries = 6
-
   /** Reads are idempotent — absorb throttling/5xx with bounded backoff so
     * one throttled GET/LIST cannot abort a whole commit that had retries
     * left (the absorbed-into-the-retry-loop contract of
@@ -454,25 +158,29 @@ final class ObjectStoreLogStore(client: ObjectStoreClient, prefix: String)
     throw new IllegalStateException(s"unreachable: $what retry loop")
   }
 
-  override def contentionHint(v: Long): String =
-    "conditional-PUT log has no orphan-lock mode — persistent contention means " +
-      "live writers keep winning this version; raise maxRetries or shard writers"
-
-  // checkpoint hint: one small object beside the versions; its key never
-  // matches ManifestName, so listVersions cannot mistake it for a commit
-  private val ckptKey = logPrefix + "_ckpt"
-
-  /** Advisory: a persistently throttled read degrades to "no checkpoint"
-    * (the caller LISTs) rather than failing the whole cold start.
+  /** The advisory CHECKPOINT HINT (Delta's `_last_checkpoint` analog): one
+    * small overwritable object naming a known-committed version, so a cold
+    * handle starts its forward probe there instead of LISTing the
+    * O(commits) log. Last-writer-wins and PURELY advisory — a stale, torn,
+    * or absent hint only costs extra reads (the caller validates the
+    * content and falls back to the full LIST), never a wrong answer; a
+    * persistently throttled read degrades to "no checkpoint".
     */
-  override def readCheckpoint(): Option[Array[Byte]] =
-    try withTransientRetry("ckpt get")(client.get(ckptKey))
+  def readCheckpoint(): Option[Array[Byte]] =
+    try withTransientRetry("ckpt get")(client.get(CkptKey))
     catch { case _: ObjectStoreClient.TransientStoreException => None }
 
-  override def writeCheckpoint(bytes: Array[Byte]): Unit =
-    withTransientRetry("ckpt put")(client.put(ckptKey, bytes))
+  /** See [[readCheckpoint]]. Overwrites any previous checkpoint. */
+  def writeCheckpoint(bytes: Array[Byte]): Unit =
+    withTransientRetry("ckpt put")(client.put(CkptKey, bytes))
 }
 
-object ManifestLogStore {
-  private[ops] val ManifestName = """v(\d{20})\.txt""".r
+object ObjectStoreLogStore {
+  private val LogPrefix = "_log/"
+  private val ManifestName = """v(\d{20})\.txt""".r
+  // the hint's key never matches ManifestName, so listVersions cannot
+  // mistake it for a commit
+  private val CkptKey = LogPrefix + "_ckpt"
+  /** Attempts resolving one publish before the commit aborts loudly. */
+  private val PublishRetries = 6
 }

@@ -14,19 +14,20 @@ import org.apache.spark.sql.types.StructType
   * directory have nothing to serialize against). The reference's store is a
   * single-writer Postgres table (create_death_table.sql:1-8,
   * global_dag.py:381-397); this is the multi-writer, snapshot-isolated form
-  * a 100-TB lakehouse needs, built from two filesystem primitives only:
-  *
-  *  - **CAS via exclusive file creation**: committing version N reserves
-  *    `_log/vN.lock` with an atomic create-if-absent (`O_CREAT|O_EXCL` on
-  *    local POSIX, atomic namenode create on HDFS). Exactly one writer per
-  *    version wins; losers re-read the new latest snapshot and retry at
-  *    N+1. Plain rename is NOT the primitive because POSIX `rename(2)`
-  *    silently overwrites an existing destination — two "successful"
-  *    renames to the same manifest would lose a commit.
-  *  - **Atomic visibility via tmp + rename**: the lock holder writes the
-  *    manifest body to `_log/.tmp-<uuid>` and renames it to `vN.txt`.
-  *    Readers list only `v*.txt`, so they see either nothing or the whole
-  *    manifest, never a partial file.
+  * a 100-TB lakehouse needs, built on one storage primitive: the
+  * CONDITIONAL PUT ([[ObjectStoreClient.putIfNoneMatch]]). Committing
+  * version N is one conditional PUT of its manifest `_log/vN.txt`
+  * ([[ObjectStoreLogStore]]): exactly one writer per version wins; losers
+  * re-read the new latest snapshot and retry at N+1. The PUT is atomic, so
+  * readers see either nothing or the whole manifest, and a writer that
+  * dies mid-commit leaves nothing behind that could block the next one.
+  * On a Hadoop filesystem ([[ManifestTable.apply]]) the client
+  * ([[HadoopFsObjectStore]]) stages the body, then publishes it with a
+  * hard link (`file://`) or a no-overwrite rename (HDFS-class schemes),
+  * both of which fail when the version exists. Plain rename is NOT the
+  * primitive because POSIX `rename(2)` silently overwrites an existing
+  * destination — two "successful" renames to the same manifest would lose
+  * a commit.
   *
   * Data files are immutable: every commit writes its parquet under a fresh
   * `data/<uuid>/` directory and the manifest names the set of directories
@@ -50,40 +51,37 @@ import org.apache.spark.sql.types.StructType
   * ranges would spare none.
   *
   * Failure notes (documented trade-offs, mirrored in ManifestTableSpec):
-  *  - A writer whose PROCESS dies between reserving `vN.lock` and
-  *    publishing `vN.txt` leaves an orphan lock; later writers exhaust
-  *    retries and fail loudly naming the lock to remove. (A live writer
-  *    hitting an IO failure releases its own lock on the way out.)
-  *    [[breakOrphanLock]] is the fenced admin unblock: it refuses when the
-  *    version is actually published, and the caller asserts no writer is
-  *    live (a TTL-based AUTOMATIC breaker would need a clock authority
-  *    this build doesn't assume — Delta has the same stance on orphaned
-  *    staging state).
+  *  - Upgrading from the lock-file log (older code reserved `_log/vN.lock`,
+  *    then renamed a tmp file onto `vN.txt`): the on-disk format is the
+  *    same, and reads work across code versions in both directions (a new
+  *    reader ignores the old `.lock`/`.crc` files; an old reader whose
+  *    stale `._ckpt.crc` no longer matches the rewritten `_ckpt` LISTs
+  *    instead). Writers do not mix: an old writer's rename overwrites a
+  *    manifest a new writer linked, so stop every old writer before a new
+  *    one commits.
   *  - `vacuum(retainLast)` deletes data dirs unreferenced by the newest K
   *    manifests; time travel older than that stops working, like Delta's
   *    `VACUUM` past the retention window.
   *  - The `_log` itself is append-only and never pruned: every commit adds
-  *    one manifest (plus one lock file on the Hadoop store). NO read path
-  *    pays for that growth anymore: `latestVersion()` keeps a per-handle
-  *    lower bound and probes FORWARD (versions are dense), so a steady-
-  *    state commit costs one miss-probe, and every Kth commit writes the
-  *    advisory `_ckpt` hint (Delta's `_last_checkpoint` analog — version +
-  *    manifest body, last-writer-wins, validated on read) so a COLD
-  *    handle's first resolve is one read + <K probes, and `versions()`
-  *    (time travel, vacuum) derives `0..latest` from version density
-  *    instead of LISTing. The full LIST remains only as the fallback for
-  *    absent/invalid hints. Storage still accumulates one small object per
-  *    commit — pruning published manifests would break time travel, which
-  *    is vacuum's documented contract to bound, not the log's.
-  *  - On an object store, build with [[ManifestTable.onObjectStore]]: the
-  *    CAS primitive becomes ONE conditional PUT of the manifest itself
-  *    ([[ObjectStoreLogStore]]), the orphan-lock mode disappears, and the
-  *    rest of the protocol is unchanged. Stores without any conditional
-  *    write (S3 pre-2024) need a coordinator; same caveat as every
-  *    log-structured format.
+  *    one manifest. NO read path pays for that growth: `latestVersion()`
+  *    keeps a per-handle lower bound and probes FORWARD (versions are
+  *    dense), so a steady-state commit costs one miss-probe, and every Kth
+  *    commit writes the advisory `_ckpt` hint (Delta's `_last_checkpoint`
+  *    analog — version + manifest body, last-writer-wins, validated on
+  *    read) so a COLD handle's first resolve is one read + <K probes, and
+  *    `versions()` (time travel, vacuum) derives `0..latest` from version
+  *    density instead of LISTing. The full LIST remains only as the
+  *    fallback for absent/invalid hints. Storage still accumulates one
+  *    small object per commit — pruning published manifests would break
+  *    time travel, which is vacuum's documented contract to bound, not the
+  *    log's.
+  *  - On an object store, build with [[ManifestTable.onObjectStore]] and
+  *    the store's own client. Stores without any conditional write (S3
+  *    pre-2024) need a coordinator; same caveat as every log-structured
+  *    format.
   */
 final class ManifestTable private (
-    spark: SparkSession, rootStr: String, log: ManifestLogStore) {
+    spark: SparkSession, rootStr: String, log: ObjectStoreLogStore) {
   import ManifestTable._
 
   private val root = new Path(rootStr)
@@ -125,10 +123,9 @@ final class ManifestTable private (
   def latestVersion(): Option[Long] = {
     val base = latestSeen
     if (base < 0L) {
-      // COLD handle: the checkpoint hint (when the store has one) names a
-      // known-committed version to probe forward from — one read + ≤K
-      // probes instead of the full O(commits) LIST; absent/invalid hints
-      // fall back to the LIST exactly as before
+      // COLD handle: the checkpoint hint names a known-committed version
+      // to probe forward from — one read + ≤K probes instead of the full
+      // O(commits) LIST; absent/invalid hints fall back to the LIST
       checkpointBase() match {
         case Some(cv) =>
           var v = cv
@@ -470,8 +467,9 @@ final class ManifestTable private (
     * travel) until [[vacuum]] reclaims them, which is exactly the
     * audit-then-reclaim shape a right-to-be-forgotten pipeline needs.
     * EMPTY tombstones return the current version without writing (no
-    * empty-dir churn); non-empty ones commit a version even when they
-    * match no row.
+    * empty-dir churn). Tombstones that match no row return it too: the
+    * rows read and the rows kept ride the rewrite's own write as observed
+    * metrics (as in [[merge]]), and equal counts discard the rewrite.
     */
   def deleteByKeys(tombstones: DataFrame, keys: Seq[String],
                    maxRetries: Int = DefaultRetries): Long = {
@@ -505,18 +503,29 @@ final class ManifestTable private (
             bestEffortDelete(tombDir, "tombstone scratch dir")
             return v
           }
+          val read = org.apache.spark.sql.Observation()
+          val kept = org.apache.spark.sql.Observation()
+          val src = readDirs(m, m.dirs).observe(read, count(lit(1)).as("rows")).alias("_del_b")
           // NULL-SAFE anti join (the Aggregates.upsert convention): with
           // plain equality a null-key tombstone never matches a null-key
           // row, so a delete that reported success would silently leave
           // the null-key row behind — the exact right-to-be-forgotten
           // violation merge's <=> matching exists to prevent
-          val src = readDirs(m, m.dirs).alias("_del_b")
           val tomb = tRead.alias("_del_t")
           val cond = keys.map(k => col(s"_del_b.`$k`") <=> col(s"_del_t.`$k`"))
             .reduce(_ && _)
           val remaining = src.join(tomb, cond, "left_anti")
-          val dir = writeData(remaining)
+          val dir = writeData(remaining.observe(kept, count(lit(1)).as("rows")))
           bestEffortDelete(tombDir, "tombstone scratch dir")
+          // AQE replaces a stage it found empty, and the observation inside
+          // it goes missing with it: only then are the rows counted, not
+          // observed
+          def rows(obs: org.apache.spark.sql.Observation, dirs: Seq[String]): Long =
+            obs.get.get("rows").fold(readDirs(m, dirs).count())(_.asInstanceOf[Long])
+          if (rows(read, m.dirs) == rows(kept, Seq(dir))) {
+            bestEffortDelete(dir, "unchanged delete dir")
+            return v
+          }
           commitOnce("delete", m.schemaDdl, _ => Seq(dir), parentGuard = Some(base)) match {
             case Some(nv) => return nv
             case None =>
@@ -706,8 +715,7 @@ final class ManifestTable private (
     val prev = prevV.map(readManifest)
     val next = prevV.getOrElse(-1L) + 1
     // everything that can fail for non-race reasons (schema validation in
-    // the callback, manifest assembly) happens BEFORE the lock is taken —
-    // a throw while holding the lock would wedge the whole table
+    // the callback, manifest assembly) happens BEFORE the publish
     val allDirs = dirs(prev)
     val body = new StringBuilder()
       .append(Magic).append('\n')
@@ -726,12 +734,8 @@ final class ManifestTable private (
       body.append(s"txn=${enc(sid)}|$b\n")
     }
     val bodyBytes = body.toString.getBytes(UTF_8)
-    if (!log.publishIfAbsent(next, bodyBytes)) {
-      // lost the race (or, on the Hadoop store, a reserved-but-never-
-      // published lock is in the way); the retry loop re-lands here
-      // until retries exhaust
-      return None
-    }
+    // lost the race: the retry loop re-lands here until retries exhaust
+    if (!log.publishIfAbsent(next, bodyBytes)) return None
     // warm the cache with the EXACT published bytes: the committer's own
     // follow-up reads (a streaming sink's replay token check, the next
     // merge's input) then cost zero GETs
@@ -745,10 +749,9 @@ final class ManifestTable private (
     Some(next)
   }
 
-  /** Writes the advisory checkpoint (version + its manifest body). A store
-    * without an overwrite primitive disables checkpointing silently; any
-    * other failure only costs future cold starts their LIST, so it logs
-    * and moves on — the commit it rides on has already succeeded.
+  /** Writes the advisory checkpoint (version + its manifest body). A
+    * failure only costs future cold starts their LIST, so it logs and
+    * moves on — the commit it rides on has already succeeded.
     */
   private def writeCheckpointHint(v: Long, manifestBody: Array[Byte]): Unit =
     try {
@@ -759,26 +762,23 @@ final class ManifestTable private (
         .toString.getBytes(UTF_8)
       log.writeCheckpoint(body)
     } catch {
-      case _: UnsupportedOperationException => () // store has no checkpoint support
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"ManifestTable $rootStr: best-effort checkpoint at v$v " +
           s"failed (cold starts keep LISTing until the next one lands): ${e.getMessage}")
     }
 
-  private def failRetries(maxRetries: Int): Nothing = {
-    val orphan = latestVersion().getOrElse(-1L) + 1
+  private def failRetries(maxRetries: Int): Nothing =
     throw new java.io.IOException(
-      s"ManifestTable $rootStr: commit failed after $maxRetries retries; " +
-      log.contentionHint(orphan))
-  }
+      s"ManifestTable $rootStr: commit failed after $maxRetries retries; live writers " +
+        "kept winning each version — raise maxRetries or shard writers")
 
   /** Published manifests are IMMUTABLE (the whole commit protocol rests on
-    * it: a version is one conditional PUT / exclusive create, never
-    * rewritten), so parsed manifests cache safely per table handle. This
-    * matters on the object-store path, where one mergeOnce attempt would
-    * otherwise GET the same latest manifest three times (token check,
-    * merge-input read, commitOnce's own read) per CAS attempt — each a
-    * real-latency, billed request. Bounded: a long-lived handle over many
+    * it: a version is one conditional PUT, never rewritten), so parsed
+    * manifests cache safely per table handle. This matters on an object
+    * store, where one mergeOnce attempt would otherwise GET the same
+    * latest manifest three times (token check, merge-input read,
+    * commitOnce's own read) per CAS attempt — each a real-latency, billed
+    * request. Bounded: a long-lived handle over many
     * versions clears rather than grows.
     */
   private val manifestCache =
@@ -807,19 +807,6 @@ final class ManifestTable private (
     }
     parseManifest(v, bytes)
   }
-
-  /** ADMIN-ONLY unblock for the Hadoop store's documented orphan-lock
-    * failure mode: a writer PROCESS that died between reserving `vN.lock`
-    * and publishing `vN.txt` wedges all later writers (they exhaust
-    * retries naming the lock). This removes the orphan with a fencing
-    * check — it REFUSES when version `version`'s manifest is published
-    * (the writer actually committed; the diagnosis is wrong). The caller
-    * asserts no writer is live: breaking a LIVE writer's reservation
-    * mid-publish can lose its commit (POSIX rename overwrites). The
-    * conditional-PUT store has no locks and throws
-    * `UnsupportedOperationException`.
-    */
-  def breakOrphanLock(version: Long): Unit = log.breakLock(version)
 
   private def parseManifest(v: Long, bytes: Array[Byte]): Manifest = {
     val text = new String(bytes, UTF_8)
@@ -869,29 +856,23 @@ object ManifestTable {
   private def dec(s: String): String = URLDecoder.decode(s, "UTF-8")
 
   /** The table with its commit log under `root/_log` on `root`'s Hadoop
-    * filesystem ([[HadoopLogStore]]).
+    * filesystem ([[HadoopFsObjectStore]]).
     */
-  def apply(spark: SparkSession, root: String): ManifestTable = {
-    val rootPath = new Path(root)
-    new ManifestTable(spark, root,
-      new HadoopLogStore(
-        rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new Path(rootPath, "_log")))
-  }
+  def apply(spark: SparkSession, root: String): ManifestTable =
+    onObjectStore(spark, root,
+      new HadoopFsObjectStore(root, spark.sparkContext.hadoopConfiguration))
 
   /** The table with its commit log on an S3-class object store via the
-    * conditional-PUT primitive ([[ObjectStoreClient.putIfNoneMatch]]):
-    * version N's commit is ONE atomic request, the orphan-lock failure
-    * mode does not exist, and the retry/backoff/parent-guard protocol is
-    * byte-identical to the filesystem table's (see
-    * [[ObjectStoreLogStore]] and SCALE.md's conditional-PUT contract).
-    * DATA files still read/write through `root`'s Hadoop filesystem —
-    * on a real deployment that is the same store via its Hadoop
-    * connector (s3a/gs/abfs), whose data-path semantics (immutable dirs
-    * written before the commit attempt) the protocol already assumes;
+    * conditional-PUT primitive ([[ObjectStoreClient.putIfNoneMatch]]; see
+    * [[ObjectStoreLogStore]] and SCALE.md's conditional-PUT contract). The
+    * client's keys are the table's (`_log/vN.txt`), so each table needs
+    * its own client. DATA files still read/write through `root`'s Hadoop
+    * filesystem — on a real deployment that is the same store via its
+    * Hadoop connector (s3a/gs/abfs), whose data-path semantics (immutable
+    * dirs written before the commit attempt) the protocol already assumes;
     * only the log's atomicity needs the native precondition this client
     * provides.
     */
   def onObjectStore(spark: SparkSession, root: String, client: ObjectStoreClient): ManifestTable =
-    new ManifestTable(spark, root, new ObjectStoreLogStore(client, root))
+    new ManifestTable(spark, root, new ObjectStoreLogStore(client))
 }

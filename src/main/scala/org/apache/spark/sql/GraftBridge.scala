@@ -40,6 +40,13 @@ object GraftBridge {
       case _ => false
     }
 
+  /** Delete `dir` recursively when the JVM shuts down, after the
+    * SparkContext has stopped (Spark's own temp-dir hook; registering a
+    * dir twice is a no-op).
+    */
+  def deleteAtShutdown(dir: String): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(new java.io.File(dir))
+
   /** `df`'s plan as a DataFrame of `session`. An execution reports only to
     * its own session's listeners, so only that session's `Observation`s
     * complete from it, and generated code is cached per session class

@@ -5,7 +5,7 @@ import graft.ops.{Aggregates, InMemoryObjectStore, ManifestTable}
 
 /** Commit-protocol contract of [[graft.ops.ManifestTable]]: atomic CAS
   * commits, snapshot isolation, time travel, serializable concurrent
-  * appends/merges, orphan-lock failure mode, vacuum retention.
+  * appends/merges, commit-log failure modes, vacuum retention.
   */
 class ManifestTableSpec extends SparkSpec {
   import spark.implicits._
@@ -90,7 +90,8 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("concurrent appends all survive — the CAS serializes writers") {
-    val t = ManifestTable(spark, freshRoot())
+    val root = freshRoot()
+    val t = ManifestTable(spark, root)
     t.overwrite(kv(0L -> 0.0))
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (1 to 4).map { w =>
@@ -104,6 +105,10 @@ class ManifestTableSpec extends SparkSpec {
     // 1 base + 12 appends, no lost update, contiguous log
     assert(t.versions() == (0L to 12L))
     assert(t.snapshot().count() == 13)
+    // each version is one conditional PUT: no writer leaves a lock behind
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try assert(!files.anyMatch(_.getFileName.toString.endsWith(".lock")))
+    finally files.close()
   }
 
   test("concurrent merges serialize: both updates present in the final state") {
@@ -199,61 +204,6 @@ class ManifestTableSpec extends SparkSpec {
     t4.append(Seq((2L, "y")).toDF("k", "_change"))
     val e2 = intercept[IllegalArgumentException] { t4.diff(0, 1) }
     assert(e2.getMessage.contains("_change"))
-  }
-
-  test("orphan lock (crashed writer) fails loudly naming the lock to remove") {
-    val root = freshRoot()
-    val t = ManifestTable(spark, root)
-    t.overwrite(kv(1L -> 1.0))
-    // simulate a writer that reserved v1 and died before publishing
-    val lock = new java.io.File(s"$root/_log/v${"%020d".format(1)}.lock")
-    assert(lock.createNewFile())
-    val e = intercept[java.io.IOException] { t.append(kv(2L -> 2.0), maxRetries = 1) }
-    assert(e.getMessage.contains("v00000000000000000001.lock"))
-    // removing the orphan unblocks the log exactly where it stopped
-    assert(lock.delete())
-    assert(t.append(kv(2L -> 2.0)) == 1L)
-    assert(t.snapshot().count() == 2)
-  }
-
-  test("commit retries THROUGH a transiently held lock and lands once it frees (no manual re-invocation)") {
-    // the conditional-PUT retry path as such: a contender holds the CAS
-    // slot (on a filesystem log: its vN.lock exists), the writer's
-    // attempts keep losing, and when the slot frees the SAME append call
-    // lands on its own — distinct from the orphan-lock test, which
-    // exhausts retries and requires operator intervention. The table sits
-    // on LockGateFs (the local disk under its own scheme, so the log takes
-    // the create-if-absent reserve path), which lets the test observe the
-    // writer's lock attempts instead of sleeping: once two have started,
-    // the first has met the held lock, and later ones wait until the test
-    // has removed it, so `pending` cannot complete before that
-    val root = freshRoot()
-    spark.sparkContext.hadoopConfiguration.set("fs.lockgate.impl", classOf[LockGateFs].getName)
-    val t = ManifestTable(spark, s"lockgate://$root")
-    t.overwrite(kv(1L -> 1.0))
-    val lock = new java.io.File(s"$root/_log/v${"%020d".format(1)}.lock")
-    assert(lock.createNewFile())
-    val attempts = new java.util.concurrent.CountDownLatch(2)
-    val freed = new java.util.concurrent.CountDownLatch(1)
-    LockGateFs.beforeLockCreate = p =>
-      if (p.getName == lock.getName) {
-        if (attempts.getCount > 0) attempts.countDown()
-        else freed.await(60, java.util.concurrent.TimeUnit.SECONDS)
-      }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    try {
-      val pending = Future(t.append(kv(2L -> 2.0), maxRetries = 50))
-      assert(attempts.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the writer never reached the held lock")
-      assert(!pending.isCompleted, "append must wait out the held lock, not fail")
-      assert(lock.delete())
-      freed.countDown()
-      assert(Await.result(pending, 60.seconds) == 1L,
-        "the blocked append must commit v1 itself once the lock frees")
-      assert(t.snapshot().count() == 2)
-    } finally LockGateFs.beforeLockCreate = _ => ()
   }
 
   test("merge is null-safe: a null-key update replaces the null-key row") {
@@ -440,9 +390,11 @@ class ManifestTableSpec extends SparkSpec {
     assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList === remaining)
     // time travel still serves the deleted row (audit-then-vacuum)
     assert(t.snapshotAt(2).where(col("k") === 100L).count() === 1L)
-    // a tombstone matching no row rewrites the live dirs as one new
-    // version: the rows are unchanged
-    assert(t.deleteByKeys(Seq(999L).toDF("k"), Seq("k")) === 4L)
+    // a tombstone matching no row spends no version and keeps the live
+    // dirs: the rewrite read as many rows as it kept, so it is discarded
+    val dirsBefore = t.dirCount()
+    assert(t.deleteByKeys(Seq(999L).toDF("k"), Seq("k")) === 3L)
+    assert(t.versions() === (0L to 3L) && t.dirCount() === dirsBefore)
     assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList === remaining)
     // deleting every remaining key leaves an empty, still-readable table
     t.deleteByKeys(Seq(1L, 2L, 101L, 200L).toDF("k"), Seq("k"))
@@ -500,6 +452,65 @@ class ManifestTableSpec extends SparkSpec {
     assert(!body(3).contains("dirstat="), "new manifests carry no per-dir stat lines")
   }
 
+  test("a table in the lock-file log's layout (checksummed manifests, lock files) stays usable") {
+    // older code reserved `_log/vN.lock` per version, then renamed a tmp
+    // file onto `vN.txt` through Hadoop's checksummed local filesystem, so
+    // every manifest and the `_ckpt` hint have `.crc` sidecars, and every
+    // lock stays behind. A writer that died after reserving left an orphan
+    // lock at the next version.
+    import org.apache.hadoop.fs.{Path => HPath}
+    val root = freshRoot()
+    val w = ManifestTable(spark, root)
+    w.overwrite(kv(0L -> 0.0))
+    (1L to 9L).foreach(k => w.append(kv(k -> k.toDouble))) // v0..v9
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def logFile(name: String) = new java.io.File(s"$root/_log/$name")
+    def name(v: Long) = "v%020d".format(v)
+    def writeChecksummed(file: String, bytes: Array[Byte]): Unit = {
+      logFile(file).delete()
+      val out = local.create(new HPath(s"$root/_log/$file"), /* overwrite = */ false)
+      try out.write(bytes) finally out.close()
+    }
+    for (v <- 0L to 9L) {
+      writeChecksummed(s"${name(v)}.txt", java.nio.file.Files.readAllBytes(logFile(s"${name(v)}.txt").toPath))
+      assert(logFile(s".${name(v)}.txt.crc").exists())
+      assert(logFile(s"${name(v)}.lock").createNewFile())
+    }
+    assert(logFile(s"${name(10)}.lock").createNewFile(), "the orphan lock of a crashed writer")
+    // older code let a table choose its checkpoint interval: this hint names v5
+    val v5 = new String(java.nio.file.Files.readAllBytes(logFile(s"${name(5)}.txt").toPath), "UTF-8")
+    writeChecksummed("_ckpt",
+      s"graft-ckpt-v1\nversion=5\nmanifest=${java.net.URLEncoder.encode(v5, "UTF-8")}\n".getBytes("UTF-8"))
+    assert(logFile("._ckpt.crc").exists())
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("k").as[(Long, Double)].collect().toList
+    val t = ManifestTable(spark, root) // a fresh handle reads the files, not a cache
+    assert(t.latestVersion().contains(9L))
+    assert(rows(t.snapshot()) == (0L to 9L).map(k => k -> k.toDouble).toList)
+    assert(rows(t.snapshotAt(3L)) == (0L to 3L).map(k => k -> k.toDouble).toList)
+    // the orphan lock is only a file now: v10 commits, and its checkpoint
+    // interval rewrites the hint
+    assert(t.append(kv(10L -> 10.0)) == 10L)
+    val hint = new String(java.nio.file.Files.readAllBytes(logFile("_ckpt").toPath), "UTF-8")
+    assert(hint.startsWith("graft-ckpt-v1\nversion=10\n"), hint)
+    val cold = ManifestTable(spark, root)
+    assert(cold.latestVersion().contains(10L) && cold.versions() == (0L to 10L))
+    assert(rows(cold.snapshot()) == (0L to 10L).map(k => k -> k.toDouble).toList)
+    assert(rows(cold.snapshotAt(9L)) == (0L to 9L).map(k => k -> k.toDouble).toList)
+  }
+
+  test("a scheme-qualified root: a cold handle sees every version") {
+    val dir = freshRoot()
+    val t = ManifestTable(spark, "file:" + dir)
+    t.overwrite(kv(1L -> 1.0))
+    t.append(kv(2L -> 2.0))
+    t.append(kv(3L -> 3.0))
+    for (cold <- Seq(ManifestTable(spark, "file:" + dir), ManifestTable(spark, dir))) {
+      assert(cold.latestVersion().contains(2L))
+      assert(cold.versions() == Seq(0L, 1L, 2L))
+      assert(cold.snapshotAt(1L).count() == 2L && cold.snapshot().count() == 3L)
+    }
+  }
+
   // ------------------------------------------- conditional-PUT log store
 
   private def objectStoreTable(): (ManifestTable, InMemoryObjectStore, String) = {
@@ -519,6 +530,8 @@ class ManifestTableSpec extends SparkSpec {
       override def putIfNoneMatch(key: String, bytes: Array[Byte]): Boolean =
         inner.putIfNoneMatch(key, bytes)
       override def get(key: String): Option[Array[Byte]] = inner.get(key)
+      override def head(key: String): Boolean = inner.head(key)
+      override def put(key: String, bytes: Array[Byte]): Unit = inner.put(key, bytes)
       override def list(prefix: String): Seq[String] = {
         lists.incrementAndGet(); inner.list(prefix)
       }
@@ -559,7 +572,7 @@ class ManifestTableSpec extends SparkSpec {
     // the log lives ONLY in the object store: one object per version and
     // no .lock / .tmp artifacts anywhere (reserve+publish is one PUT)
     val keys = client.list("")
-    assert(keys.size == 3 && keys.forall(_.matches(""".*/_log/v\d{20}\.txt""")), keys)
+    assert(keys.size == 3 && keys.forall(_.matches("""_log/v\d{20}\.txt""")), keys)
     assert(!new java.io.File(s"$root/_log").exists(),
       "no filesystem log directory may exist for an object-store table")
   }
@@ -646,126 +659,40 @@ class ManifestTableSpec extends SparkSpec {
     // are certified client-agnostically in ObjectStoreContractSuite
   }
 
-  test("hadoop log: losing the lock race is contention; an IO failure creating the lock surfaces as itself") {
-    // non-"file" schemes reserve via fs.create(lock, overwrite=false).
-    // ONLY FileAlreadyExists means "lost the race" (retry); a
-    // permissions/quota failure must propagate, not spin as phantom
-    // contention ending in a misleading orphan-lock hint.
-    import org.apache.hadoop.fs.{FSDataOutputStream, Path => HPath}
-    val dir = tempDir("graft-fakedfs").toString
-    class FakeDfs(lockFault: HPath => Option[java.io.IOException])
-        extends org.apache.hadoop.fs.RawLocalFileSystem {
-      initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
-      override def getScheme: String = "fakedfs" // force the fs.create reserve path
-      override def create(f: HPath, overwrite: Boolean): FSDataOutputStream = {
-        if (f.getName.endsWith(".lock")) lockFault(f).foreach(e => throw e)
-        super.create(f, overwrite)
-      }
+  test("filesystem log: a failed link publish that is not EEXIST surfaces as itself and spends no version") {
+    // only an existing manifest means "lost the race" (retry); any other
+    // failure of the publish must propagate, not spin as phantom
+    // contention. Here the link fails EXDEV: the client's staging dir is
+    // a symlink onto another filesystem, so the staged body cannot be
+    // hard-linked into _log
+    import java.nio.file.{Files, Paths}
+    val shm = Paths.get("/dev/shm")
+    val root = freshRoot()
+    val t = ManifestTable(spark, root)
+    t.overwrite(kv(1L -> 1.0))
+    assume(Files.isDirectory(shm) &&
+      Files.getAttribute(shm, "unix:dev") != Files.getAttribute(Paths.get(root), "unix:dev"),
+      "needs a second filesystem at /dev/shm")
+    val stage = Paths.get(root, ".graft-put-stage")
+    TempDirs.deleteRecursively(stage)
+    val elsewhere = Files.createTempDirectory(shm, "graft-stage")
+    try {
+      Files.createSymbolicLink(stage, elsewhere)
+      val e = intercept[java.io.IOException] { t.append(kv(2L -> 2.0)) }
+      assert(e.isInstanceOf[java.nio.file.FileSystemException] &&
+        !e.isInstanceOf[java.nio.file.FileAlreadyExistsException], e.toString)
+      assert(e.getMessage.contains("v00000000000000000001.txt") &&
+        !e.getMessage.contains("retries"), e.getMessage)
+      assert(!Files.list(elsewhere).findAny().isPresent, "the staged body must be collected")
+    } finally {
+      Files.deleteIfExists(stage)
+      TempDirs.deleteRecursively(elsewhere)
     }
-    // 1) permissions failure: propagates with ITS message
-    val denied = new FakeDfs(_ => Some(new java.io.IOException("Permission denied: fake quota")))
-    val deniedStore = new graft.ops.HadoopLogStore(denied, new HPath(dir, "denied/_log"))
-    val e = intercept[java.io.IOException] {
-      deniedStore.publishIfAbsent(0L, "b".getBytes("UTF-8"))
-    }
-    assert(e.getMessage.contains("Permission denied"), e.getMessage)
-    // 2) lock already exists: FileAlreadyExistsException reads as contention
-    val contended = new FakeDfs(
-      _ => Some(new org.apache.hadoop.fs.FileAlreadyExistsException("lock exists")))
-    val contendedStore = new graft.ops.HadoopLogStore(contended, new HPath(dir, "cont/_log"))
-    assert(!contendedStore.publishIfAbsent(0L, "b".getBytes("UTF-8")),
-      "a lost lock race must report contention, not throw")
-    // 3) healthy non-file scheme: the create-reserve path commits end to end
-    val ok = new FakeDfs(_ => None)
-    val okStore = new graft.ops.HadoopLogStore(ok, new HPath(dir, "ok/_log"))
-    val body = "winner".getBytes("UTF-8")
-    assert(okStore.publishIfAbsent(0L, body))
-    assert(!okStore.publishIfAbsent(0L, "loser".getBytes("UTF-8")),
-      "second reserve of a committed version must lose")
-    assert(okStore.read(0L).exists(java.util.Arrays.equals(_, body)))
-  }
-
-  test("HadoopLogStore: rename that APPLIES then throws must keep the lock and report the commit (overwrite-window regression)") {
-    // ChecksumFileSystem can rename the data file then fail on the .crc
-    // step; an HDFS RPC retry can land server-side after a client error.
-    // The old catch released the lock unconditionally — a racing writer
-    // could then re-reserve the version and rename OVER the committed
-    // manifest (POSIX rename silently overwrites): two bodies for one
-    // committed version.
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dir = tempDir("graft-ambirename").toString
-    class AmbiguousRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-      initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
-      override def getScheme: String = "file" // RawLocalFileSystem leaves it unimplemented
-      @volatile var armRenameFault = false
-      override def rename(src: HPath, dst: HPath): Boolean = {
-        val applied = super.rename(src, dst)
-        if (armRenameFault && dst.getName.endsWith(".txt")) {
-          armRenameFault = false
-          throw new java.io.IOException("injected: crc step failed AFTER the rename applied")
-        }
-        applied
-      }
-    }
-    val fs = new AmbiguousRenameFs
-    val store = new graft.ops.HadoopLogStore(fs, new HPath(dir, "_log"))
-    val body = "winner".getBytes("UTF-8")
-    fs.armRenameFault = true
-    assert(store.publishIfAbsent(0L, body),
-      "an applied-then-thrown rename IS a successful commit")
-    assert(store.read(0L).exists(java.util.Arrays.equals(_, body)))
-    assert(store.listVersions() == Seq(0L))
-    // the lock must still be held: a racing writer can neither re-reserve
-    // nor overwrite the committed body
-    assert(!store.publishIfAbsent(0L, "usurper".getBytes("UTF-8")),
-      "version 0 must stay contended — its lock was never released")
-    assert(store.read(0L).exists(java.util.Arrays.equals(_, body)),
-      "the committed body must be untouched")
-  }
-
-  test("HadoopLogStore: rename applied AND probe failed keeps the lock (ambiguity wedges, never fails open)") {
-    // the double-failure window: the rename lands server-side but throws
-    // client-side, and the exists() probe hits the same transient blip.
-    // The old boolean probe defaulted that to "not published" and RELEASED
-    // the lock — a racing writer could then re-reserve the version and
-    // rename over the COMMITTED manifest. Unverifiable must wedge: keep
-    // the lock (recoverable orphan), rethrow.
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dir = tempDir("graft-doublefault").toString
-    class DoubleFaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-      initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
-      override def getScheme: String = "file"
-      @volatile var armed = false
-      override def rename(src: HPath, dst: HPath): Boolean = {
-        val applied = super.rename(src, dst)
-        if (armed && dst.getName.endsWith(".txt"))
-          throw new java.io.IOException("injected: rename response lost")
-        applied
-      }
-      override def exists(p: HPath): Boolean = {
-        if (armed && p.getName.endsWith(".txt")) {
-          armed = false
-          throw new java.io.IOException("injected: probe hit the same blip")
-        }
-        super.exists(p)
-      }
-    }
-    val fs = new DoubleFaultFs
-    val store = new graft.ops.HadoopLogStore(fs, new HPath(dir, "_log"))
-    val body = "winner".getBytes("UTF-8")
-    fs.armed = true
-    val e = intercept[java.io.IOException] { store.publishIfAbsent(0L, body) }
-    assert(e.getMessage.contains("rename response lost"), e.getMessage)
-    assert(e.getSuppressed.exists(_.getMessage.contains("probe hit the same blip")),
-      "the probe failure must ride as a suppressed exception")
-    // the commit actually landed; the lock must still be held so nobody
-    // can overwrite it
-    assert(store.read(0L).exists(java.util.Arrays.equals(_, body)),
-      "the rename had applied — the body is committed")
-    assert(!store.publishIfAbsent(0L, "usurper".getBytes("UTF-8")),
-      "version 0 must stay contended — the lock was never released")
-    assert(store.read(0L).exists(java.util.Arrays.equals(_, body)),
-      "the committed body must be untouched")
+    // no version was spent: the same table commits v1 once the fault clears
+    val fresh = ManifestTable(spark, root)
+    assert(fresh.latestVersion().contains(0L))
+    assert(fresh.append(kv(2L -> 2.0)) == 1L)
+    assert(fresh.snapshot().count() == 2L)
   }
 
   test("deleteByKeys: EMPTY tombstones are the advertised no-op — no rewrite, no version spent") {
@@ -953,31 +880,6 @@ class ManifestTableSpec extends SparkSpec {
     assert(t4.snapshot().count() === 12L)
   }
 
-  test("breakOrphanLock: orphan blocks -> break -> next commit succeeds; refuses on a published version") {
-    // VERDICT r18 item 3: the fenced admin unblock for the Hadoop store's
-    // documented orphan-lock mode
-    val root = freshRoot()
-    val t = ManifestTable(spark, root)
-    t.overwrite(kv(1L -> 1.0))
-    val lock = new java.io.File(s"$root/_log/v${"%020d".format(1)}.lock")
-    assert(lock.createNewFile())
-    intercept[java.io.IOException] { t.append(kv(2L -> 2.0), maxRetries = 1) }
-    // fencing: v0 is PUBLISHED — its (retained) reservation is not an
-    // orphan, and breaking it could let a racer overwrite a committed body
-    val e = intercept[IllegalStateException] { t.breakOrphanLock(0L) }
-    assert(e.getMessage.contains("published"), e.getMessage)
-    // the real orphan breaks; the SAME log position then commits cleanly
-    t.breakOrphanLock(1L)
-    assert(!lock.exists(), "the orphan lock must be gone")
-    assert(t.append(kv(2L -> 2.0)) == 1L)
-    assert(t.snapshot().count() === 2L)
-    t.breakOrphanLock(5L) // absent lock: idempotent no-op
-    // the conditional-PUT store has no lock objects to break
-    val (os, _, _) = objectStoreTable()
-    os.overwrite(kv(1L -> 1.0))
-    intercept[UnsupportedOperationException] { os.breakOrphanLock(1L) }
-  }
-
   test("latestVersion probe economy pinned: catch-up <= foreign-commits + 1 HEADs (plain and bursty store)") {
     // VERDICT r18 item 7: the forward-probe claim under instrumentation —
     // guards refactors from silently restoring the O(commits) LIST. HEADs
@@ -1040,23 +942,4 @@ class ManifestTableSpec extends SparkSpec {
     assert(e.getMessage.contains("unresolved"), e.getMessage)
     assert(!e.getMessage.contains(".lock"), "object-store mode has no lock to name")
   }
-}
-
-/** The local filesystem under the `lockgate` scheme, with a hook that runs
-  * before every `.lock` create. Any scheme but `file` makes the log
-  * reserve a version through `create(lock, overwrite = false)`, so a test
-  * can watch a writer's lock attempts and hold one back.
-  */
-class LockGateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getScheme: String = "lockgate"
-  override def getUri: java.net.URI = java.net.URI.create("lockgate:///")
-  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean)
-      : org.apache.hadoop.fs.FSDataOutputStream = {
-    if (f.getName.endsWith(".lock")) LockGateFs.beforeLockCreate(f)
-    super.create(f, overwrite)
-  }
-}
-
-object LockGateFs {
-  @volatile var beforeLockCreate: org.apache.hadoop.fs.Path => Unit = _ => ()
 }

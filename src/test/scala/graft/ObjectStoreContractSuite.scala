@@ -47,7 +47,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
 
   test(s"[$clientName] conditional PUT: exactly one winner, loser's 412 is false, winner's body served") {
     val c = newClient()
-    val store = new ObjectStoreLogStore(c, "contract-race")
+    val store = new ObjectStoreLogStore(c)
     assert(store.publishIfAbsent(0L, bytes("writer-a")))
     assert(!store.publishIfAbsent(0L, bytes("writer-b")),
       "second conditional PUT of a committed version must 412")
@@ -74,7 +74,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
 
   test(s"[$clientName] listVersions: complete and sorted whatever order/pagination the store lists in") {
     val c = newClient()
-    val store = new ObjectStoreLogStore(c, "contract-list")
+    val store = new ObjectStoreLogStore(c)
     // publish out of order so a lexicographic-listing assumption would
     // *accidentally* pass only on a store that also sorts
     for (v <- Seq(3L, 0L, 7L, 1L, 2L, 5L, 4L, 6L))
@@ -85,7 +85,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
   }
 
   test(s"[$clientName] N threads racing every version: one winner each, contiguous log, bodies untorn") {
-    val store = new ObjectStoreLogStore(newClient(), "contract-stress")
+    val store = new ObjectStoreLogStore(newClient())
     val wins = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (1 to 8).map { w =>
@@ -111,7 +111,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
 
   test(s"[$clientName] transient 503 before commit: the publish retries in-call and lands") {
     val fc = new FaultInjectingClient(newClient())
-    val store = new ObjectStoreLogStore(fc, "contract-503")
+    val store = new ObjectStoreLogStore(fc)
     fc.putFault = (_, n) =>
       if (n <= 2) InMemoryObjectStore.FailBeforeCommit else InMemoryObjectStore.Ok
     assert(store.publishIfAbsent(0L, bytes("writer-a")))
@@ -120,7 +120,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
 
   test(s"[$clientName] ambiguous lost-response: self-win detected, foreign body reads as lost-forever") {
     val fc = new FaultInjectingClient(newClient())
-    val store = new ObjectStoreLogStore(fc, "contract-selfwin")
+    val store = new ObjectStoreLogStore(fc)
     fc.putFault = (_, n) =>
       if (n == 1) InMemoryObjectStore.FailAfterCommit else InMemoryObjectStore.Ok
     assert(store.publishIfAbsent(0L, bytes("writer-a")),
@@ -129,7 +129,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
     // lost-FOREVER is provable through ambiguity: once a FOREIGN body is
     // committed, the precondition rejects every later request
     val fc2 = new FaultInjectingClient(newClient())
-    val store2 = new ObjectStoreLogStore(fc2, "contract-lost")
+    val store2 = new ObjectStoreLogStore(fc2)
     assert(store2.publishIfAbsent(0L, bytes("winner")))
     fc2.putFault = (_, _) => InMemoryObjectStore.FailBeforeCommit
     assert(!store2.publishIfAbsent(0L, bytes("loser")),
@@ -138,7 +138,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
 
   test(s"[$clientName] throttled self-win GET resolves in-call; a dead GET path fails loudly, never 'lost'") {
     val fc = new FaultInjectingClient(newClient())
-    val store = new ObjectStoreLogStore(fc, "contract-throttle")
+    val store = new ObjectStoreLogStore(fc)
     fc.putFault = (_, n) =>
       if (n == 1) InMemoryObjectStore.FailAfterCommit else InMemoryObjectStore.Ok
     fc.getFault = (_, n) =>
@@ -150,7 +150,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
     // reporting 'lost' would let the caller delete a dir its own commit
     // references
     val fc3 = new FaultInjectingClient(newClient())
-    val store3 = new ObjectStoreLogStore(fc3, "contract-deadget")
+    val store3 = new ObjectStoreLogStore(fc3)
     fc3.putFault = (_, _) => InMemoryObjectStore.FailAfterCommit
     fc3.getFault = (_, _) => InMemoryObjectStore.FailBeforeCommit
     intercept[ObjectStoreClient.TransientStoreException] {
@@ -164,7 +164,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
     // request may still land risks committing a manifest that references
     // a deleted dir)
     val fc = new FaultInjectingClient(newClient())
-    val store = new ObjectStoreLogStore(fc, "contract-inflight")
+    val store = new ObjectStoreLogStore(fc)
     fc.putFault = (_, n) => n match {
       case 1 => InMemoryObjectStore.FailBeforeCommit
       case 2 => InMemoryObjectStore.FailAfterCommit
@@ -176,7 +176,7 @@ abstract class ObjectStoreContractSuite(clientName: String,
     // every PUT ambiguous with nothing ever landing: abort as a store
     // failure (TransientStoreException naming the unresolved PUT)
     val fc2 = new FaultInjectingClient(newClient())
-    val store2 = new ObjectStoreLogStore(fc2, "contract-unsettled")
+    val store2 = new ObjectStoreLogStore(fc2)
     fc2.putFault = (_, _) => InMemoryObjectStore.FailBeforeCommit
     val e = intercept[ObjectStoreClient.TransientStoreException] {
       store2.publishIfAbsent(0L, bytes("writer-a"))
@@ -246,13 +246,20 @@ class HadoopFsRenamePublishFaultSpec extends org.scalatest.funsuite.AnyFunSuite 
   import org.apache.hadoop.fs.Path
 
   /** A store whose rename branch behaves per `mode` (mutable so one test
-    * can follow an injected failure with a real retry).
+    * can follow an injected failure with a real retry); `failGets` makes
+    * that many next GETs (the ambiguity probe included) throw.
     */
   private final class Harness {
     var mode: String = "real"
+    var failGets: Int = 0
     val root: String = tempDir("graft-fsos-fault").toString
     val store: graft.ops.HadoopFsObjectStore = new graft.ops.HadoopFsObjectStore(
         root, new org.apache.hadoop.conf.Configuration()) {
+      override def get(key: String): Option[Array[Byte]] =
+        if (failGets > 0) {
+          failGets -= 1
+          throw new java.io.IOException("injected: probe hit the same blip")
+        } else super.get(key)
       override protected def publishViaHardLink: Boolean = false
       override protected def renameNoOverwrite(tmp: Path, dest: Path): Unit = mode match {
         case "real" => super.renameNoOverwrite(tmp, dest)
@@ -282,6 +289,23 @@ class HadoopFsRenamePublishFaultSpec extends org.scalatest.funsuite.AnyFunSuite 
     assert(!java.nio.file.Files.exists(staging) ||
       !java.nio.file.Files.list(staging).findAny().isPresent,
       "the staged uuid file must not leak on the win path")
+  }
+
+  test("rename applied but threw, and the probe failed too: the publish throws, never reports 'lost'") {
+    // the double-failure window: reporting "lost" here would make the
+    // caller delete the dir its own committed manifest references
+    val h = new Harness
+    h.mode = "apply-then-throw"
+    h.failGets = 1
+    val body = "v0 manifest".getBytes("UTF-8")
+    val e = intercept[java.io.IOException] { h.store.putIfNoneMatch("t/_log/v0.json", body) }
+    assert(e.getMessage.contains("probe hit the same blip"), e.getMessage)
+    // the rename had applied: the body is committed and stays unique
+    assert(h.store.get("t/_log/v0.json").exists(java.util.Arrays.equals(_, body)))
+    h.mode = "real"
+    assert(!h.store.putIfNoneMatch("t/_log/v0.json", "usurper".getBytes("UTF-8")),
+      "a committed version must reject every later PUT")
+    assert(h.store.get("t/_log/v0.json").exists(java.util.Arrays.equals(_, body)))
   }
 
   test("rename threw with a foreign body landed: the probe adjudicates a loss (412)") {
