@@ -287,10 +287,9 @@ object Queries {
           CASE WHEN qs = '' THEN '' ELSE '?' || qs END AS canonical_url
         FROM cq)"""
 
-  // ---- planted-pair corpus for the xxhash64 dedup family ----------------
-  // DuckDB cannot evaluate xxhash64, so the fast MinHash/SimHash forms are
-  // oracled the emb_near_dup way: make the EXPECTED output analytic instead
-  // of mirroring the hash. Every token is suffixed with its doc's id, so
+  // ---- planted-pair corpus for the *_fast dedup keys --------------------
+  // dedup_minhash_fast / dedup_simhash_fast are oracled the emb_near_dup
+  // way: make the EXPECTED output analytic instead of mirroring the hash. Every token is suffixed with its doc's id, so
   // distinct docs share ZERO tokens (and zero shingles — cross-doc Jaccard
   // is exactly 0 and simhashes are independent), then a verbatim copy of
   // every doc is planted at id −doc_id−1 (collision-free with the

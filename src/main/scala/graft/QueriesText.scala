@@ -130,24 +130,22 @@ private[graft] object QueriesText {
       FROM e GROUP BY 1 ORDER BY 1""")),
 
     QueryDef("txt_winnow_fast",
-      // the xxhash64 production form of winnowing (same kernel the
-      // fingerprint-dedup pipelines use). Hash-checked via a planted
-      // construct: doc i's text is a run of one repeated character
-      // (class = doc_id%26, length 11+doc_id%13 >= k+w-1), so every 8-char
-      // gram inside a doc is IDENTICAL — whatever its xxhash64 value, each
+      // winnowing's cross-doc hash-equality STRUCTURE (the property winnow
+      // dedup consumes), on the md5 operator txt_winnow_fingerprints
+      // oracles per doc. Planted construct: doc i's text is a run of one
+      // repeated character (class = doc_id%26, length 11+doc_id%13 >=
+      // k+w-1), so every 8-char gram inside a doc is IDENTICAL — each
       // window's min is that single hash and the distinct fingerprint set
       // has exactly ONE element. Docs of the same class share that gram
       // (hence that fingerprint) regardless of length; the 26 gram strings
-      // are FIXED (independent of the corpus), and their 26 hashes are
-      // verified pairwise-distinct once, so the fp-join partner count per
-      // doc is exactly its class size − 1 — analytic without evaluating
-      // xxhash64. This checks the hash equality STRUCTURE across docs (the
-      // property winnow dedup consumes), not just per-doc counts; md5-form
-      // equivalence on natural text stays a DedupSpec property.
+      // are FIXED (independent of the corpus), and their 26 md5 8-hex
+      // prefixes are pairwise distinct, so the fp-join partner count per
+      // doc is exactly its class size − 1 — analytic, with no hash in the
+      // oracle.
       (s, d) => {
         val docs2 = t(s, d, "documents").select(col("doc_id"),
           expr("repeat(char(97 + doc_id % 26), CAST(11 + doc_id % 13 AS INT))").as("text"))
-        val fps = TextAnalysis.winnowFingerprintsFast(docs2, "doc_id", "text")
+        val fps = TextAnalysis.winnowFingerprints(docs2, "doc_id", "text")
         val perDoc = fps.groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_fps"), max(col("fp")).as("_fp"))
         val classSize = fps.groupBy(col("fp").as("_fp"))
@@ -397,15 +395,14 @@ private[graft] object QueriesText {
         FROM r WHERE rank <= 3 ORDER BY doc_id, rank""")),
 
     QueryDef("dedup_minhash_fast",
-      // xxhash64 MinHash-LSH (production form; the md5 form above oracles
-      // the natural corpus). Hash-checked via plantedTokenDocs: cross-doc
-      // Jaccard is exactly 0 (disjoint shingle sets), planted copies are
-      // exactly 1, so at any threshold in (0,1] the output is precisely
-      // the planted pair per doc with >= shingleN tokens — no probabilistic
-      // element at all (false candidates from 64-bit bucket collisions are
-      // killed by the exact verify at jac=0). md5-pipeline equivalence on
-      // natural near-dups remains a DedupSpec property.
-      (s, d) => Dedup.minhashNearDupPairsFast(plantedTokenDocs(s, d), "doc_id", "text",
+      // MinHash-LSH recall and precision on planted pairs, on the md5
+      // operator dedup_minhash_jaccard oracles on the natural corpus.
+      // Hash-checked via plantedTokenDocs: cross-doc Jaccard is exactly 0
+      // (disjoint shingle sets), planted copies are exactly 1, so at any
+      // threshold in (0,1] the output is precisely the planted pair per doc
+      // with >= shingleN tokens whatever the hash — false candidates from
+      // bucket collisions are killed by the exact verify at jac=0.
+      (s, d) => Dedup.minhashNearDupPairs(plantedTokenDocs(s, d), "doc_id", "text",
           shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.5)
         .orderBy(col("doc_a"), col("doc_b")),
       Some("""SELECT CAST(-doc_id - 1 AS BIGINT) AS doc_a, doc_id AS doc_b,
@@ -415,16 +412,17 @@ private[graft] object QueriesText {
         ORDER BY 1, 2""")),
 
     QueryDef("dedup_simhash_fast",
-      // 64-bit xxhash64 simhash with 4x16-bit pigeonhole chunks — the
-      // production form without the md5/60-bit oracle ceiling. Hash-checked
-      // via plantedTokenDocs: planted copies hash identically (hamming 0);
-      // distinct docs share no tokens, so their 64-bit simhashes are
-      // independent and the nearest non-planted pair sits ~32 bits apart —
-      // P(any pair <= 3) ~ 1e-7 at sf0.1, and on the driver's FIXED corpus
-      // recall/precision is a determinism frozen by this very hash compare
-      // (the emb_near_dup argument). banded==brute remains a DedupSpec
-      // property on natural text.
-      (s, d) => Dedup.simhashNearDupPairsFast(plantedTokenDocs(s, d), "doc_id", "text",
+      // SimHash recall and precision on planted pairs, on the md5/60-bit
+      // operator dedup_simhash oracles on the natural corpus (4x15-bit
+      // pigeonhole chunks). Hash-checked via plantedTokenDocs: planted
+      // copies hash identically (hamming 0); distinct docs share no tokens,
+      // so their simhashes are independent (~30 bits apart). Replaying
+      // simhashOracleSql's 60-bit definition on the planted corpus puts the
+      // closest non-planted pair at hamming 14 (sf0.001), 13 (sf0.01) and
+      // 11 (sf0.1), so the output is exactly the planted pairs; on a fixed
+      // corpus this is a determinism the hash compare freezes (the
+      // emb_near_dup argument).
+      (s, d) => Dedup.simhashNearDupPairs(plantedTokenDocs(s, d), "doc_id", "text",
           maxHamming = 3)
         .select(col("doc_a"), col("doc_b"), col("hamming").cast("int").as("hamming"))
         .orderBy(col("doc_a"), col("doc_b")),

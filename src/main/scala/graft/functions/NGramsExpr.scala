@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * per shift — the n-gram families (shingle dedup, bigram LM, sparse
   * cosine, repetition) all pay it on every document. This expression
   * builds each gram with one `UTF8String.concat` over the window and
-  * stays inside WholeStageCodegen — the [[WinnowKernel]] trade.
+  * stays inside WholeStageCodegen — the [[WinnowMd5Kernel]] trade.
   */
 object NGramsKernel {
   private val Space = UTF8String.fromString(" ")

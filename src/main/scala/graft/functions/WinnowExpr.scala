@@ -5,98 +5,8 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** One-pass winnowing kernel over a document's UTF-8 BYTES: xxhash64 every
-  * k-byte gram in place (no substring materialization), take the minimum of
-  * each w-wide window with a monotone deque (O(n) total, not O(n·w)), and
-  * emit the distinct minima in first-occurrence order (matching
-  * `array_distinct` semantics).
-  *
-  * This is the production path for
-  * [[graft.ops.TextAnalysis.winnowFingerprintsFast]]: the expression-level
-  * formulation (`transform(sequence(...), i => hash(substr(...)))` + window
-  * lambda) evaluates interpreted higher-order lambdas and allocates a
-  * substring + hex string per gram — measured ~an order of magnitude slower
-  * than this kernel, which reads the string's bytes directly and stays
-  * inside WholeStageCodegen.
-  */
-object WinnowKernel {
-  private val Seed = 42L
-
-  def winnow(s: UTF8String, k: Int, w: Int): ArrayData = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val n = s.numBytes()
-    val numGrams = n - k + 1
-    val numWins = numGrams - w + 1
-    if (numWins <= 0) return new GenericArrayData(Array.emptyLongArray)
-
-    val hashes = new Array[Long](numGrams)
-    var i = 0
-    while (i < numGrams) {
-      hashes(i) = XXH64.hashUnsafeBytes(base, off + i, k, Seed)
-      i += 1
-    }
-    // monotone deque of candidate-minimum indices for the sliding window.
-    // MIRROR CONTRACT: this control flow is intentionally duplicated in
-    // WinnowMd5Kernel below (primitive-long vs String element types keep
-    // both hot loops monomorphic; a shared comparator-indirected routine
-    // would box or megamorph) — any fix to the eviction/window logic MUST
-    // be applied to both copies.
-    val deque = new Array[Int](numGrams)
-    var head = 0
-    var tail = 0 // deque is [head, tail)
-    val seen = new java.util.HashSet[java.lang.Long]()
-    val out = new Array[Long](numWins)
-    var outN = 0
-    i = 0
-    while (i < numGrams) {
-      while (tail > head && hashes(deque(tail - 1)) >= hashes(i)) tail -= 1
-      deque(tail) = i; tail += 1
-      if (deque(head) <= i - w) head += 1
-      if (i >= w - 1) {
-        val m = hashes(deque(head))
-        if (seen.add(m)) { out(outN) = m; outN += 1 }
-      }
-      i += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(out, outN))
-  }
-}
-
-/** `winnow(text, k, w)` → `array<long>` of distinct window-minimum gram
-  * hashes (first-occurrence order). Full codegen; null-safe.
-  */
-case class WinnowExpr(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  require(k > 0 && w > 0)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"winnow expects a string column, got $other")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowKernel.winnow(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WinnowKernel.winnow($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-object WinnowOps {
-  def winnow(text: Column, k: Int, w: Int): Column =
-    GraftBridge.column(WinnowExpr(GraftBridge.expr(text), k, w))
-  def winnowMd5(text: Column, k: Int, w: Int): Column =
-    GraftBridge.column(WinnowMd5Expr(GraftBridge.expr(text), k, w))
-}
 
 /** The md5/hex winnowing DEFINITION (exactly
   * `array_distinct(transform(windows, j -> array_min(transform(grams,
@@ -106,6 +16,8 @@ object WinnowOps {
   * bit-identical to the expression form (property-tested), so the DuckDB
   * oracle for the md5 winnowing query keeps matching; the kernel removes
   * the per-gram Column-tree interpretation that dominated the query's cost.
+  * The distinct window minima are emitted in first-occurrence order
+  * (`array_distinct` semantics).
   */
 object WinnowMd5Kernel {
   def winnow(s: UTF8String, k: Int, w: Int): ArrayData = {
@@ -148,11 +60,9 @@ object WinnowMd5Kernel {
       hashes(i) = new String(cs)
       i += 1
     }
-    // monotone deque sliding minimum; lexicographic String order == the
-    // UTF8String binary order array_min/min use on lowercase hex.
-    // MIRROR CONTRACT: same control flow as WinnowKernel above — fixes to
-    // the eviction/window logic must land in both copies (see the note
-    // there for why they are not unified).
+    // monotone deque sliding minimum (O(n) total, not O(n·w));
+    // lexicographic String order == the UTF8String binary order
+    // array_min/min use on lowercase hex.
     val deque = new Array[Int](numGrams)
     var head = 0
     var tail = 0
@@ -196,4 +106,9 @@ case class WinnowMd5Expr(child: Expression, k: Int, w: Int) extends UnaryExpress
     defineCodeGen(ctx, ev, c => s"graft.functions.WinnowMd5Kernel.winnow($c, $k, $w)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+
+object WinnowOps {
+  def winnowMd5(text: Column, k: Int, w: Int): Column =
+    GraftBridge.column(WinnowMd5Expr(GraftBridge.expr(text), k, w))
 }

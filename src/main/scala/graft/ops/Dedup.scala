@@ -50,7 +50,7 @@ object Dedup {
     require(n >= 1)
     // evaluated by the one-pass codegen kernel; the zip_with fold below
     // ([[gramsFromTokensSpec]]) remains the executable DEFINITION and is
-    // property-tested equal — the WinnowKernel convention. NULL toks →
+    // property-tested equal — the WinnowMd5Kernel convention. NULL toks →
     // empty (the old form's size(null) = -1 branch), so size()-reading
     // consumers never see the legacy -1 on a null doc
     when(toks.isNotNull, graft.functions.NGramsOps.ngrams(toks, n))
@@ -458,82 +458,17 @@ object Dedup {
     (sh, withBound)
   }
 
-  /** Production-hash MinHash signatures via Kirsch-Mitzenmacher double
-    * hashing: TWO codegen'd xxhash64 passes over each shingle (h₁, h₂), then
-    * hash function s is the cheap combination h₁ + s·h₂ (wrapping long
-    * arithmetic). Hashing cost is constant in `numHashes` — the md5 form
-    * pays a digest + hex slicing per shingle, and a naive per-seed xxhash64
-    * would pay `numHashes` full passes. Not oracle-evaluable (DuckDB has no
-    * xxhash64); the END-RESULT equivalence with the md5 pipeline is a
-    * ScalaTest property — both feed the same exact-Jaccard verify, so
-    * wherever LSH recall holds the final pair sets coincide.
-    */
-  def minhashSignaturesFast(shingleTbl: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val hashed = shingleTbl
-      .withColumn("_h1", xxhash64(col("shingle")))
-      .withColumn("_h2", xxhash64(col("shingle"), lit(1)))
-    hashed.groupBy(col(idCol)).agg(
-      min(col("_h1")).as("mh0"),
-      (1 until numHashes).map(s => min(col("_h1") + lit(s.toLong) * col("_h2")).as(s"mh$s")): _*)
-  }
-
-  /** Band buckets over integer signatures: bucket = xxhash64 of the band's
-    * signature slice (typed, no string concat). Same band layout as
-    * [[lshBuckets]].
-    */
-  def lshBucketsFast(sig: DataFrame, idCol: String, numHashes: Int, rowsPerBand: Int): DataFrame = {
-    require(numHashes % rowsPerBand == 0,
-      s"numHashes $numHashes must be a multiple of rowsPerBand $rowsPerBand")
-    val bands = (0 until numHashes / rowsPerBand).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}")): _*).as("bucket"))
-    }
-    sig.select(col(idCol), explode(array(bands: _*)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
-  }
-
-  /** [[minhashNearDupPairs]] with the xxhash64 signature/bucket path — the
-    * production form for 100-TB runs where oracle portability is not needed.
-    *
-    * Persistence lifetime (both the shingle table and the signature table,
-    * here and in the md5 form): cached for the returned plan's consumers
-    * and released by the session's next `catalog.clearCache()` (the bench
-    * clears per query) or `unpersist` — long-lived sessions issuing many
-    * dedup passes should clear between passes, same convention as
-    * [[graft.ops.Analytics.skewProfile]] / `vocabCoverage`.
-    */
-  def minhashNearDupPairsFast(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 2,
-      threshold: Double = 0.5, maxBucketSize: Int = Int.MaxValue): DataFrame =
-    lshSignBucketVerify(
-      shingleTable(docs, idCol, textCol, shingleN)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      idCol, minhashSignaturesFast(_, idCol, numHashes),
-      lshBucketsFast(_, idCol, numHashes, rowsPerBand), threshold, maxBucketSize)
-
-  /** The shared sign → band-bucket → exact-verify chain of both MinHash
-    * forms, parameterized by the signature and bucket builders so the md5
-    * (oracle-portable) and xxhash64 (production) variants cannot drift.
-    * The signature table has a single consumer now (buckets — sizes ride
-    * inside the verify's per-doc sets), so it is not persisted.
-    */
-  private def lshSignBucketVerify(sh: DataFrame, idCol: String,
-                                  signatures: DataFrame => DataFrame,
-                                  buckets: DataFrame => DataFrame,
-                                  threshold: Double,
-                                  maxBucketSize: Int): DataFrame = {
-    val cand = lshCandidatePairsCapped(buckets(signatures(sh)), idCol, maxBucketSize)
-    jaccardVerify(cand, sh, idCol, threshold)
-  }
-
   /** End-to-end MinHash-LSH near-dedup: (doc_a, doc_b, jac) pairs.
     *
     * The shingle table feeds four downstream consumers (signatures, sizes,
     * and both sides of the intersection join); without persisting it, Spark
     * re-tokenizes and re-explodes the corpus once per consumer. At 100 TB
     * this intermediate would be checkpointed to distributed storage; locally
-    * MEMORY_AND_DISK.
+    * MEMORY_AND_DISK. It stays cached for the returned plan's consumers and
+    * is released by the session's next `catalog.clearCache()` (the bench
+    * clears per query) or `unpersist` — long-lived sessions issuing many
+    * dedup passes should clear between passes, same convention as
+    * [[graft.ops.Analytics.skewProfile]] / `vocabCoverage`.
     */
   def minhashNearDupPairs(
       docs: DataFrame, idCol: String, textCol: String,
@@ -547,13 +482,16 @@ object Dedup {
   /** The LSH sign→bucket→verify chain over a prebuilt shingle table. The
     * caller owns the table's persistence — it is read by four consumers
     * (signatures, sizes, and both sides of the intersection join), so pass
-    * it persisted unless it is itself a cheap cached projection.
+    * it persisted unless it is itself a cheap cached projection. The
+    * signature table has a single consumer (buckets — sizes ride inside
+    * the verify's per-doc sets), so it is not persisted.
     */
   def minhashNearDupPairsFromShingles(
       sh: DataFrame, idCol: String, numHashes: Int = 8, rowsPerBand: Int = 2,
-      threshold: Double = 0.5, maxBucketSize: Int = Int.MaxValue): DataFrame =
-    lshSignBucketVerify(sh, idCol, minhashSignatures(_, idCol, numHashes),
-      lshBuckets(_, idCol, numHashes, rowsPerBand), threshold, maxBucketSize)
+      threshold: Double = 0.5, maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    val buckets = lshBuckets(minhashSignatures(sh, idCol, numHashes), idCol, numHashes, rowsPerBand)
+    jaccardVerify(lshCandidatePairsCapped(buckets, idCol, maxBucketSize), sh, idCol, threshold)
+  }
 
   // ---------------------------------------------------------------- SimHash
 
@@ -624,9 +562,10 @@ object Dedup {
       .select(col(idCol), col("simhash"), col("c.k"), col("c.chunk"))
   }
 
-  /** The shared chunk-bucket → hamming-verify half of both simhash forms,
-    * over a (idCol, simhash) frame — parameterized by the chunk layout so
-    * the md5/60-bit and xxhash64/64-bit variants cannot drift.
+  /** The shared chunk-bucket → hamming-verify half of the text simhash and
+    * arbitrary-signature forms, over a (idCol, simhash) frame —
+    * parameterized by the chunk layout, since [[simhashNearDupPairs]]
+    * (4×15-bit) and [[hammingNearDupPairs]] (4×16-bit) differ.
     *
     * `maxBucketWidth` is the 100-TB guard this family shares with
     * [[lshCandidatePairsCapped]] and
@@ -664,40 +603,10 @@ object Dedup {
       .distinct()
   }
 
-  /** Production SimHash: all 64 bits of `xxhash64(token)` directly — no
-    * digest-to-hex parsing and no 60-bit portable-oracle ceiling — with
-    * 4×16-bit pigeonhole chunks (4·65,536 buckets; exact for hamming ≤ 3).
-    * This is the SCALE.md path for corpora where the md5 form's bucket
-    * space binds; not oracle-evaluable (DuckDB lacks xxhash64), so
-    * banded==brute equivalence is a ScalaTest property like the md5 form's.
-    */
-  def simhash64Fast(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val contribs = (0 until 64).map { i =>
-      sum(shiftright(col("h"), i).bitwiseAND(lit(1L)) * 2 - 1).as(s"s$i")
-    }
-    val sums = tok.groupBy(col(idCol)).agg(contribs.head, contribs.tail: _*)
-    // bitwise OR, not +: bit 63 is Long.MinValue as an addend
-    val hash = (0 until 64).map { i =>
-      when(col(s"s$i") >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-    sums.select(col(idCol), hash.as("simhash"))
-  }
-
-  /** [[simhashNearDupPairs]] over the 64-bit xxhash64 hash. */
-  def simhashNearDupPairsFast(docs: DataFrame, idCol: String, textCol: String,
-                              maxHamming: Int = 3,
-                              maxBucketWidth: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming <= 3, "4x16-bit chunking only guarantees hamming <= 3")
-    simhashPairsByChunks(simhash64Fast(docs, idCol, textCol), idCol,
-      numChunks = 4, chunkBits = 16, maxHamming, maxBucketWidth)
-  }
-
   /** Near-dup pairs over an ARBITRARY 64-bit signature column (perceptual
     * image hashes, audio fingerprints — anything already reduced to a
-    * 64-bit key): the same exact 4×16-bit pigeonhole band join as the
-    * simhash forms (any pair at hamming ≤ 3 agrees on ≥1 chunk), exposed
+    * 64-bit key): the exact pigeonhole band join of [[simhashNearDupPairs]]
+    * with 4×16-bit chunks (any pair at hamming ≤ 3 agrees on ≥1 chunk), exposed
     * so multimodal pipelines reuse the text-dedup machinery instead of
     * growing a second pair generator. Returns (doc_a, doc_b, hamming).
     */
@@ -714,9 +623,8 @@ object Dedup {
     * trade (alert on its count; a sudden rise means the corpus grew a
     * degenerate signature regime — near-constant perceptual hashes,
     * boilerplate — and the cap is now biting). This is the 4×16-bit
-    * arbitrary-signature layout shared by [[hammingNearDupPairs]] and
-    * [[simhashNearDupPairsFast]]; the md5 text form's audit is
-    * [[simhashOversizedBuckets]].
+    * arbitrary-signature layout of [[hammingNearDupPairs]]; the md5 text
+    * form's audit is [[simhashOversizedBuckets]].
     */
   def hammingOversizedBuckets(sig: DataFrame, idCol: String, hashCol: String,
                               maxBucketWidth: Int): DataFrame =

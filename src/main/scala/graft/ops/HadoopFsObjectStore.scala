@@ -109,8 +109,12 @@ class HadoopFsObjectStore(root: String, conf: Configuration) extends ObjectStore
             // resolution loop re-issues the same idempotent conditional
             // PUT until the version settles — a raw IOException would
             // abort the whole commit on the first hiccup, bypassing that
-            // loop.
-            get(key) match {
+            // loop. A probe that throws too carries the rename's failure
+            // as suppressed, so the error that started it is not lost.
+            val probed =
+              try get(key)
+              catch { case p: Throwable => p.addSuppressed(e); throw p }
+            probed match {
               case Some(committed) => java.util.Arrays.equals(committed, bytes)
               case None =>
                 val t = new ObjectStoreClient.TransientStoreException(

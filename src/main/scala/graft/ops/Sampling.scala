@@ -21,10 +21,9 @@ import org.apache.spark.sql.functions._
 object Sampling {
 
   /** Uniform bucket in [0, mod) from the row key — the first 8 md5 hex
-    * chars parsed as an integer (engine-portable; `xxhash64` variant
-    * below for production). The ONE definition of the md5/conv recipe —
-    * percent sampling (mod 100) and feature hashing (mod dim) both
-    * delegate here so the engine-portability-critical arithmetic can
+    * chars parsed as an integer (engine-portable). The ONE definition of
+    * the md5/conv recipe — percent sampling (mod 100) and feature hashing
+    * (mod dim) both delegate here so the engine-portability-critical arithmetic can
     * never diverge between them.
     */
   def hashBucketMod(key: Column, mod: Long): Column =

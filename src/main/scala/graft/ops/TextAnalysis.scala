@@ -221,7 +221,7 @@ object TextAnalysis {
 
   /** [[c4Filters]] as ONE fused character-scan kernel
     * ([[graft.functions.C4StatsKernel]]) instead of six interpreted
-    * regex/HOF passes per document — the WinnowExpr treatment applied to
+    * regex/HOF passes per document — the WinnowMd5Expr treatment applied to
     * the suite's heaviest linear scan (~8 s → target <4 s at sf0.1).
     * Output is BIT-IDENTICAL to [[c4Filters]] (schema included: counts
     * int, mean double, flags boolean, NULL text → NULL row) — the
@@ -264,9 +264,10 @@ object TextAnalysis {
   /** Winnowing (rolling k-gram) fingerprints: hash every k-char gram, then
     * keep the minimum hash of each w-wide window — the standard local
     * document fingerprint (Schleimer et al.'s winnowing) that is robust to
-    * insertions/reordering, unlike a whole-document digest. Two chained
-    * projections so the gram-hash array materializes once before the window
-    * lambda reads it. Emits (idCol, fp) rows for docs of length >= k+w-1.
+    * insertions/reordering, unlike a whole-document digest. Each gram hash
+    * is `substring(md5(gram), 1, 8)`, evaluated by the one-pass kernel
+    * [[graft.functions.WinnowMd5Kernel]]. Emits (idCol, fp: string) rows
+    * for docs of length >= k+w-1.
     */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 8, w: Int = 4): DataFrame =
@@ -276,33 +277,17 @@ object TextAnalysis {
   /** The same md5 winnowing as a pure built-in-expression pipeline — kept as
     * the executable SPECIFICATION for [[winnowFingerprints]]'s kernel (the
     * equivalence is property-tested; the kernel exists because interpreted
-    * HOF lambdas made this form ~4× slower at identical output).
+    * HOF lambdas made this form ~4× slower at identical output). Two
+    * chained projections so the gram-hash array materializes once before
+    * the window lambda reads it.
     */
   def winnowFingerprintsExpr(docs: DataFrame, idCol: String, textCol: String,
-                             k: Int = 8, w: Int = 4): DataFrame =
-    winnow(docs, idCol, textCol, k, w, g => substring(md5(g), 1, 8))
-
-  /** Production winnowing: the one-pass codegen kernel
-    * [[graft.functions.WinnowKernel]] (xxhash64 over byte grams in place,
-    * monotone-deque window minima) replaces the interpreted
-    * `transform`/`slice` lambda pipeline of the md5 form — same winnowing
-    * algorithm, measured ~10× cheaper. DuckDB cannot evaluate xxhash64, so
-    * this variant is verified by ScalaTest equivalence properties (exact
-    * dups share ALL fingerprints; locality under edits) rather than the SQL
-    * oracle — keep [[winnowFingerprints]] for oracle-checked parity.
-    */
-  def winnowFingerprintsFast(docs: DataFrame, idCol: String, textCol: String,
-                             k: Int = 8, w: Int = 4): DataFrame =
-    docs.select(col(idCol),
-      explode(graft.functions.WinnowOps.winnow(col(textCol), k, w)).as("fp"))
-
-  private def winnow(docs: DataFrame, idCol: String, textCol: String,
-                     k: Int, w: Int, gramHash: Column => Column): DataFrame = {
+                             k: Int = 8, w: Int = 4): DataFrame = {
     val text = col(textCol)
     docs.where(length(text) >= k + w - 1)
       .select(col(idCol),
         transform(sequence(lit(1), length(text) - (k - 1)),
-          i => gramHash(text.substr(i, lit(k)))).as("_hashes"))
+          i => substring(md5(text.substr(i, lit(k))), 1, 8)).as("_hashes"))
       .select(col(idCol),
         explode(array_distinct(transform(sequence(lit(1), size(col("_hashes")) - (w - 1)),
           j => array_min(slice(col("_hashes"), j, lit(w)))))).as("fp"))

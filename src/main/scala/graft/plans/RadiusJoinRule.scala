@@ -296,8 +296,8 @@ object Graft {
       (es: Seq[Expression]) => graft.functions.DotProductExpr(es(0), es(1))),
     ("graft_haversine_km", "graft.plans.GeoExprs",
       (es: Seq[Expression]) => GeoExprs.haversineKm(es(0), es(1), es(2), es(3))),
-    ("graft_winnow", "graft.functions.WinnowExpr",
-      (es: Seq[Expression]) => graft.functions.WinnowExpr(es(0),
+    ("graft_winnow", "graft.functions.WinnowMd5Expr",
+      (es: Seq[Expression]) => graft.functions.WinnowMd5Expr(es(0),
         es(1).eval().asInstanceOf[Int], es(2).eval().asInstanceOf[Int])),
     ("graft_ngrams", "graft.functions.NGramsExpr",
       (es: Seq[Expression]) => graft.functions.NGramsExpr(es(0),

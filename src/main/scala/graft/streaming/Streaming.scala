@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 /** Structured Streaming restatement of the reference's incremental batch
   * machinery (SURVEY.md §2.6, ops 20-22):
@@ -177,9 +178,9 @@ object Streaming {
     * Store format: `sigTable` rows are (id, band, bucket, sig), and `sig`
     * is `array<int>`, the int MinHash images of
     * [[graft.ops.Dedup.minhashSignatures]]. Stores written while `sig` was
-    * `array<string>` (4-hex-char slices) cannot be resumed: the first
-    * non-empty append fails the table's schema check, so rebuild such a
-    * store from its corpus.
+    * `array<string>` (4-hex-char slices) cannot be resumed: each trigger
+    * checks the snapshot's `sig` type before it writes anything and fails,
+    * naming the rebuild, so rebuild such a store from its corpus.
     */
   def nearDupFilterSink(docs: DataFrame, idCol: String, textCol: String,
                         sigTable: graft.ops.ManifestTable,
@@ -251,7 +252,20 @@ object Streaming {
           .select(col("doc_id").as(idCol))
         val shielded = state.join(inBatchDrops, Seq(idCol), "left_anti")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val histOpt = sigTable.latestVersion().map(_ => sigTable.snapshot())
+        // the store's format is checked on the snapshot's resolved schema
+        // (no job), so an old store fails here, before the trigger writes
+        // anything, rather than at its first non-empty append
+        val histOpt = sigTable.latestVersion().map { _ =>
+          val hist = sigTable.snapshot()
+          hist.schema.find(_.name == "sig").map(_.dataType) match {
+            case Some(ArrayType(IntegerType, _)) => hist
+            case other => throw new IllegalStateException(
+              "nearDupFilterSink: the sigTable store's sig column is " +
+                other.fold("missing")(_.simpleString) + ", not array<int> (a store " +
+                "written before MinHash signatures became ints); rebuild the " +
+                "store from its corpus into a fresh table")
+          }
+        }
         // persisted like `state`: histDups is batch-bounded but its lineage
         // is the corpus-sized history bucket join, which would otherwise
         // re-execute for each of the three consumers below

@@ -198,18 +198,6 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.simhashOversizedBuckets(docs, "doc_id", "text", maxBucketWidth = 1).count() >= 4)
   }
 
-  test("xxhash64 minhash pipeline finds the same verified pair set as the md5 pipeline") {
-    val d = Tables.load(spark, sf0001, "documents")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val md5Pairs = pairs(Dedup.minhashNearDupPairs(d, "doc_id", "text", threshold = 0.1))
-    val fastPairs = pairs(Dedup.minhashNearDupPairsFast(d, "doc_id", "text", threshold = 0.1))
-    // both candidate generators feed the same exact-Jaccard verify; on this
-    // corpus (exact + heavy near-dups) recall holds for both hash families
-    assert(md5Pairs == fastPairs)
-    assert(md5Pairs.nonEmpty)
-  }
-
   test("int-slice minhash signatures and buckets == hex-substring definition") {
     // the r20 signature fast path: mh values are the INT images of the
     // oracle's 4-hex-char md5 slices — min-agg equality and the band
@@ -265,29 +253,16 @@ class DedupSpec extends SparkSpec {
       rows(TextAnalysis.winnowFingerprintsExpr(d, "doc_id", "text")))
   }
 
-  test("xxhash64 winnowing: exact dups share all fingerprints; edits preserve most") {
+  test("winnowing: exact dups share all fingerprints; edits preserve most") {
     import graft.ops.TextAnalysis
     val base = "the quick brown fox jumps over the lazy dog near the river bank today and tomorrow"
     val edited = "PREFIX " + base // winnowing is local: one edit perturbs only nearby windows
     val docs3 = Seq((0L, base), (1L, base), (2L, edited)).toDF("doc_id", "text")
-    val fps = TextAnalysis.winnowFingerprintsFast(docs3, "doc_id", "text")
-      .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val fps = TextAnalysis.winnowFingerprints(docs3, "doc_id", "text")
+      .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(fps(0L) == fps(1L)) // identical docs -> identical fingerprint sets
     val overlap = (fps(0L) intersect fps(2L)).size.toDouble / fps(0L).size
     assert(overlap >= 0.5, s"locality lost: overlap=$overlap")
-  }
-
-  test("64-bit xxhash64 simhash: banded candidates == brute hamming scan") {
-    val d = Tables.load(spark, sf0001, "documents").limit(200)
-    val banded = Dedup.simhashNearDupPairsFast(d, "doc_id", "text", maxHamming = 3)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val h = Dedup.simhash64Fast(d, "doc_id", "text")
-    val a = h.select($"doc_id".as("doc_a"), $"simhash".as("ha"))
-    val b = h.select($"doc_id".as("doc_b"), $"simhash".as("hb"))
-    val brute = a.crossJoin(b).where($"doc_a" < $"doc_b")
-      .where(call_function("bit_count", $"ha".bitwiseXOR($"hb")) <= 3)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(banded == brute)
   }
 
   test("identical texts get identical simhash; disjoint-vocab texts differ") {
@@ -419,13 +394,10 @@ class DedupSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // warm codegen/parquet paths so first-use jobs don't pollute the counts
-      noop(Dedup.minhashNearDupPairsFast(corpus, "doc_id", "text", 3, 8, 2, 0.1))
-      val nMinhash = jobsOf(noop(
-        Dedup.minhashNearDupPairsFast(corpus, "doc_id", "text", 3, 8, 2, 0.1)))
-      assert(nMinhash <= 3, s"minhashNearDupPairsFast ran $nMinhash jobs (bound 3)")
+      noop(Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 3, 8, 2, 0.1))
       val nSimhash = jobsOf(noop(
-        Dedup.simhashNearDupPairsFast(corpus, "doc_id", "text", 3)))
-      assert(nSimhash <= 4, s"simhashNearDupPairsFast ran $nSimhash jobs (bound 4)")
+        Dedup.simhashNearDupPairs(corpus, "doc_id", "text", 3)))
+      assert(nSimhash <= 4, s"simhashNearDupPairs ran $nSimhash jobs (bound 4)")
       val nClusters = jobsOf(noop(
         Dedup.dedupClusters(
           Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 3, 8, 2, 0.1),

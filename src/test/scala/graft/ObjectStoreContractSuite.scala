@@ -300,6 +300,8 @@ class HadoopFsRenamePublishFaultSpec extends org.scalatest.funsuite.AnyFunSuite 
     val body = "v0 manifest".getBytes("UTF-8")
     val e = intercept[java.io.IOException] { h.store.putIfNoneMatch("t/_log/v0.json", body) }
     assert(e.getMessage.contains("probe hit the same blip"), e.getMessage)
+    assert(e.getSuppressed.exists(_.getMessage.contains("response lost after apply")),
+      s"the rename's own failure must ride along as suppressed: ${e.getSuppressed.toSeq}")
     // the rename had applied: the body is committed and stays unique
     assert(h.store.get("t/_log/v0.json").exists(java.util.Arrays.equals(_, body)))
     h.mode = "real"

@@ -402,6 +402,37 @@ class StreamingSpec extends SparkSpec {
       s"the empty trigger must accept nothing, got $accepted")
   }
 
+  test("nearDupFilterSink: a store with array<string> sig fails the trigger before it writes, naming the rebuild") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = tempDir("graft-neardup-oldsig")
+    val ckpt = tempDir("graft-neardup-oldsig-ckpt")
+    val table = graft.ops.ManifestTable(spark, dir.toString + "/sigs")
+    // the old format: sig as the 4-hex-char slices, not their int images
+    table.append(Seq((1L, 0, "b0", Seq("00ff", "0a0a", "1234", "ffff", "0000", "abcd", "4321", "9999")))
+      .toDF("doc_id", "band", "bucket", "sig"))
+    val versionsBefore = table.versions()
+    val accepted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
+    val input = MemoryStream[(Long, String)]
+    val q = Streaming.nearDupFilterSink(
+        input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
+        onAccepted = (b, _) => accepted.synchronized {
+          accepted += b.select("doc_id").as[Long].collect().toSet })
+      .option("checkpointLocation", ckpt.toString).start()
+    try {
+      input.addData((2L, "the quick brown fox jumps over a lazy dog"))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(m => m.contains("array<string>") && m.contains("rebuild")),
+        s"the failure must name the old format and the rebuild, got: $msgs")
+    } finally q.stop()
+    assert(table.versions() == versionsBefore, "the failed trigger must spend no version")
+    assert(accepted.isEmpty, s"onAccepted must never run, got $accepted")
+  }
+
   test("streaming rollup maintenance: a CDC stream maintains the aggregate == full recompute") {
     // foreachBatch + maintainSumCount: each micro-batch of change rows
     // refreshes the rollup in O(changes) — the streaming materialized-view
