@@ -655,9 +655,10 @@ object Queries {
     * so the replay is bit-identical with no float anywhere. Sums are cast
     * back to BIGINT (DuckDB widens BIGINT sums to HUGEINT).
     */
-  def pageRankOracleSql(iters: Int, mod: Int, dampNum: Long = 17L, dampDen: Long = 20L,
-                        scale: Long = 1000000000000000L): String = {
+  def pageRankOracleSql(iters: Int, mod: Int): String = {
     require(iters >= 1)
+    import graft.ops.Dedup.{PageRankDampDen => dampDen, PageRankDampNum => dampNum,
+      PageRankScale => scale}
     val body = (1 to iters).map { k =>
       s"""c$k AS (SELECT e.dst AS v, CAST(sum(p.pr // od.outdeg) AS BIGINT) AS s
         FROM edges e JOIN pr${k - 1} p ON p.v = e.src JOIN outdeg od ON od.src = e.src
@@ -681,8 +682,9 @@ object Queries {
     * `x · scale // Σx` integer normalization per half-round — bit-exact
     * on non-negative longs in both engines.
     */
-  def hitsOracleSql(iters: Int, mod: Int, scale: Long = 1000000L): String = {
+  def hitsOracleSql(iters: Int, mod: Int): String = {
     require(iters >= 1)
+    import graft.ops.Analytics.{HitsScale => scale}
     val body = (1 to iters).map { k =>
       s"""ar$k AS (SELECT e.dst AS v, CAST(sum(h.h) AS BIGINT) AS x
         FROM edges e JOIN h${k - 1} h ON h.v = e.src GROUP BY 1),

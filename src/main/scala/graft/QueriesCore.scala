@@ -684,7 +684,7 @@ private[graft] object QueriesCore {
       // emitting per-row doubles
       // sqScale 0dp: same 2⁵³-window hardening as op_regression/op_corr_matrix
       (s, d) => Analytics.standardizeStats(t(s, d, "lineitem"),
-          col("l_returnflag"), col("l_extendedprice"), zCut = 2.0, scale = 2, sqScale = 0)
+          col("l_returnflag"), col("l_extendedprice"), zCut = 2.0, sqScale = 0)
         .withColumnRenamed("grp", "l_returnflag")
         .orderBySmall(col("l_returnflag")),
       Some("""WITH m AS (SELECT l_returnflag AS g, CAST(count(l_extendedprice) AS DOUBLE) AS n,
@@ -758,7 +758,7 @@ private[graft] object QueriesCore {
 
     QueryDef("op_window_rank",
       (s, d) => Analytics.rankTopN(t(s, d, "orders"),
-          Seq(col("o_custkey")), Seq(col("o_totalprice").desc, col("o_orderkey").asc), 2, "rnk")
+          Seq(col("o_custkey")), Seq(col("o_totalprice").desc, col("o_orderkey").asc), 2)
         .select(col("o_custkey"), col("o_orderkey"), col("rnk"))
         .orderBy(col("o_custkey"), col("rnk")),
       Some("""SELECT o_custkey, o_orderkey, CAST(rnk AS INTEGER) AS rnk FROM (

@@ -501,7 +501,7 @@ private[graft] object QueriesEvents {
       // construction and survives a testdata regeneration.
       (s, d) => Analytics.regressionByGroup(t(s, d, "lineitem"),
           col("l_returnflag"), col("l_quantity"), col("l_extendedprice"),
-          xScale = 0, yScale = 2, yyScale = 0)
+          yScale = 2, yyScale = 0)
         .withColumnRenamed("grp", "l_returnflag")
         .orderBySmall(col("l_returnflag")),
       Some("""WITH m AS (SELECT l_returnflag,

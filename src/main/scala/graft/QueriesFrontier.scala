@@ -202,7 +202,7 @@ private[graft] object QueriesFrontier {
         }.toDF("vec_id", "payload")
         val fp = Multimodal.audioFingerprint(wav, "vec_id", windows = 64)
           .where(col("ok")).select(col("id"), col("fp"))
-        Dedup.hammingNearDupPairs(fp, "id", "fp", maxHamming = 3)
+        Dedup.hammingNearDupPairs(fp, "id", "fp")
           .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("hamming"))
           .orderBy(col("id_a"), col("id_b"))
       },
@@ -268,7 +268,7 @@ private[graft] object QueriesFrontier {
       // decimal weights over the bounded quantity domain, lower-median
       // pick by exact comparison
       (s, d) => Analytics.weightedMedianQuantized(t(s, d, "lineitem"),
-          col("l_returnflag"), col("l_quantity"), col("l_extendedprice"), scale = 2)
+          col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
         .select(col("grp").as("l_returnflag"), col("median"), col("total_weight"))
         .orderBySmall(col("l_returnflag")),
       Some("""WITH wq AS (SELECT l_returnflag AS g, l_quantity AS v,
@@ -906,8 +906,7 @@ private[graft] object QueriesFrontier {
           .select("doc_a", "doc_b").distinct()
         val exact = Dedup.jaccardVerify(candAll, sh, "doc_id", 0.1)
           .select("doc_a", "doc_b")
-        val found = Dedup.minhashNearDupPairsFromShingles(sh, "doc_id",
-            numHashes = 8, rowsPerBand = 2, threshold = 0.1)
+        val found = Dedup.minhashNearDupPairsFromShingles(sh, "doc_id", threshold = 0.1)
           .select("doc_a", "doc_b")
         val missed = exact.join(found, Seq("doc_a", "doc_b"), "left_anti")
         exact.agg(count(lit(1)).as("n_exact"))

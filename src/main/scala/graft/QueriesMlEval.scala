@@ -78,7 +78,7 @@ private[graft] object QueriesMlEval {
           ((col("doc_id") * 13) % 100).as("p"),
           when((col("doc_id") * 13) % 100 + (col("doc_id") % 7) * 5 >= 65, 1L)
             .otherwise(0L).as("y"))
-        MlEval.calibrationBins(f, col("p"), col("y"), nBins = 10)
+        MlEval.calibrationBins(f, col("p"), col("y"))
           .orderBySmall(col("bin"))
       },
       Some("""WITH f AS (SELECT (doc_id*13) % 100 AS p,

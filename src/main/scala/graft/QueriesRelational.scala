@@ -434,7 +434,7 @@ private[graft] object QueriesRelational {
         val ev = eventsUs(s, d).select(
           expr("(ts_us div 3600000000) % 24").as("hour"),
           floor(col("value") * 1000000).cast("long").as("v_micro"))
-        Analytics.seasonalAnomaly(ev, col("hour"), col("v_micro"), k = 2)
+        Analytics.seasonalAnomaly(ev, col("hour"), col("v_micro"))
           .orderBySmall(col("season"))
       },
       Some("""WITH e AS (SELECT (epoch_us(ts) // 3600000000) % 24 AS hour,
@@ -993,7 +993,7 @@ private[graft] object QueriesRelational {
         val sig = Multimodal.imageAHash(png, "vec_id")
           .where(col("ok"))
           .select(col("id"), conv(col("ahash_hex"), 16, 10).cast("long").as("h"))
-        Dedup.hammingNearDupPairs(sig, "id", "h", maxHamming = 3)
+        Dedup.hammingNearDupPairs(sig, "id", "h")
           .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("hamming"))
           .orderBy(col("id_a"), col("id_b"))
       },

@@ -218,7 +218,7 @@ private[graft] object QueriesText {
     QueryDef("txt_repetition",
       // Gopher-style repetition quality signals over 2-gram occurrences
       // (duplicates kept, unlike dedup shingles)
-      (s, d) => TextAnalysis.repetitionSignals(t(s, d, "documents"), "doc_id", "text", n = 2)
+      (s, d) => TextAnalysis.repetitionSignals(t(s, d, "documents"), "doc_id", "text")
         .orderBy(col("doc_id")),
       Some("""WITH tk AS (
           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
@@ -238,7 +238,7 @@ private[graft] object QueriesText {
       (s, d) => {
         val docs = t(s, d, "documents")
         Dedup.contaminationScores(docs, docs.where(col("doc_id") % 37 === 0),
-            "doc_id", "text", shingleN = 3)
+            "doc_id", "text")
           .orderBy(col("doc_id"))
       },
       Some("""WITH tk AS (
@@ -264,7 +264,7 @@ private[graft] object QueriesText {
       (s, d) => {
         val docs = t(s, d, "documents")
         Dedup.contaminationScoresBloomVerified(docs, docs.where(col("doc_id") % 37 === 0),
-            "doc_id", "text", shingleN = 3)
+            "doc_id", "text")
           .orderBy(col("doc_id"))
       },
       Some("""WITH tk AS (
@@ -297,7 +297,7 @@ private[graft] object QueriesText {
         val toksDF = docs
           .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_toks"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val rep = TextAnalysis.repetitionSignalsFromTokens(toksDF, "doc_id", "_toks", n = 2)
+        val rep = TextAnalysis.repetitionSignalsFromTokens(toksDF, "doc_id", "_toks")
           .where(col("dup_frac") < 0.4).select("doc_id")
         val corpusSh = Dedup.shingleTableFromTokens(toksDF, "doc_id", "_toks", 3)
         val benchSh = Dedup.shingleTableFromTokens(
@@ -316,7 +316,7 @@ private[graft] object QueriesText {
         val survSh = Dedup.shingleTableFromTokens(surviving, "doc_id", "_toks", 3)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val pairs = Dedup.minhashNearDupPairsFromShingles(survSh, "doc_id",
-          numHashes = 8, rowsPerBand = 2, threshold = 0.1)
+          threshold = 0.1)
         val dropped = Dedup.dedupClusters(pairs, "doc_a", "doc_b")
           .where(col("doc_id") =!= col("cluster_rep"))
           .select(col("doc_id"), lit(1).as("_drop"))
@@ -403,7 +403,7 @@ private[graft] object QueriesText {
       // with >= shingleN tokens whatever the hash — false candidates from
       // bucket collisions are killed by the exact verify at jac=0.
       (s, d) => Dedup.minhashNearDupPairs(plantedTokenDocs(s, d), "doc_id", "text",
-          shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.5)
+          threshold = 0.5)
         .orderBy(col("doc_a"), col("doc_b")),
       Some("""SELECT CAST(-doc_id - 1 AS BIGINT) AS doc_a, doc_id AS doc_b,
           CAST(1.0 AS DOUBLE) AS jac
@@ -422,8 +422,7 @@ private[graft] object QueriesText {
       // 11 (sf0.1), so the output is exactly the planted pairs; on a fixed
       // corpus this is a determinism the hash compare freezes (the
       // emb_near_dup argument).
-      (s, d) => Dedup.simhashNearDupPairs(plantedTokenDocs(s, d), "doc_id", "text",
-          maxHamming = 3)
+      (s, d) => Dedup.simhashNearDupPairs(plantedTokenDocs(s, d), "doc_id", "text")
         .select(col("doc_a"), col("doc_b"), col("hamming").cast("int").as("hamming"))
         .orderBy(col("doc_a"), col("doc_b")),
       Some("""SELECT CAST(-doc_id - 1 AS BIGINT) AS doc_a, doc_id AS doc_b,
@@ -439,7 +438,7 @@ private[graft] object QueriesText {
       // compute "min id reachable", which is iteration-order independent
       (s, d) => Dedup.dedupClusters(
           Dedup.minhashNearDupPairs(t(s, d, "documents"), "doc_id", "text",
-            shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1),
+            threshold = 0.1),
           "doc_a", "doc_b")
         .orderBy(col("doc_id")),
       Some(s"""WITH RECURSIVE mp AS (${minhashOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1)}),

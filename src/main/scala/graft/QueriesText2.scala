@@ -348,12 +348,12 @@ private[graft] object QueriesText2 {
 
     QueryDef("dedup_minhash_jaccard",
       (s, d) => Dedup.minhashNearDupPairs(t(s, d, "documents"), "doc_id", "text",
-          shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1)
+          threshold = 0.1)
         .orderBy(col("doc_a"), col("doc_b")),
       Some(minhashOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1))),
 
     QueryDef("dedup_simhash",
-      (s, d) => Dedup.simhashNearDupPairs(t(s, d, "documents"), "doc_id", "text", maxHamming = 3)
+      (s, d) => Dedup.simhashNearDupPairs(t(s, d, "documents"), "doc_id", "text")
         .select(col("doc_a"), col("doc_b"), col("hamming").cast("int").as("hamming"))
         .orderBy(col("doc_a"), col("doc_b")),
       Some(simhashOracleSql(maxHamming = 3))),
@@ -391,9 +391,8 @@ private[graft] object QueriesText2 {
           .unionByName(planted(9, 2000, 0x0555666677778888L))  // cap + 1: dropped
           .unionByName(planted(8, 3000, 0x0999aaaabbbbccccL))  // == cap: kept
           .unionByName(planted(6, 4000, 0x0dddeeee01234567L))  // < cap: kept
-        val capped = Dedup.hammingNearDupPairs(all, "id", "h",
-          maxHamming = 3, maxBucketWidth = 8)
-        val uncapped = Dedup.hammingNearDupPairs(all, "id", "h", maxHamming = 3)
+        val capped = Dedup.hammingNearDupPairs(all, "id", "h", maxBucketWidth = 8)
+        val uncapped = Dedup.hammingNearDupPairs(all, "id", "h")
         val dropped = Dedup.hammingOversizedBuckets(all, "id", "h", maxBucketWidth = 8)
         capped.agg(count(lit(1)).as("n_pairs_capped"))
           .crossJoin(uncapped.agg(count(lit(1)).as("n_pairs_uncapped")))
@@ -475,7 +474,7 @@ private[graft] object QueriesText2 {
             floor(col("c_acctbal") / 2000).cast("long").as("bal_band"),
             (col("c_custkey") % 7).as("sensitive")),
           Seq(col("c_nationkey"), col("c_mktsegment"), col("bal_band")),
-          col("sensitive"), lMin = 2)
+          col("sensitive"))
         .orderBySmall(col("band")),
       Some("""WITH qi AS (SELECT c_nationkey, c_mktsegment,
             CAST(floor(c_acctbal / 2000) AS BIGINT) AS bal_band,
@@ -663,8 +662,7 @@ private[graft] object QueriesText2 {
       // id-deciles so the DECAY CURVE itself is the hashed result (and the
       // row count stays bounded at any SF).
       (s, d) => {
-        val nov = TextAnalysis.ngramNovelty(t(s, d, "documents"), "doc_id", "text",
-          shingleN = 3)
+        val nov = TextAnalysis.ngramNovelty(t(s, d, "documents"), "doc_id", "text")
         // max(doc_id) stays INSIDE the plan as a cross-joined 1-row scalar
         // aggregate (the oracle's mx CTE shape): an eager .head() here
         // would run a real scan job at DataFrame-CONSTRUCTION time (every
@@ -765,7 +763,7 @@ private[graft] object QueriesText2 {
         val docs = t(s, d, "documents")
         Dedup.incrementalNearDupPairs(
             docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1),
-            "doc_id", "text", shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1)
+            "doc_id", "text", threshold = 0.1)
           .orderBy(col("doc_new"), col("doc_old"))
       },
       Some(minhashIncrementalOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2,
@@ -783,7 +781,7 @@ private[graft] object QueriesText2 {
         val hist = docs.where(col("doc_id") % 2 === 0)
         val inc = docs.where(col("doc_id") % 2 === 1)
         val pairs = Dedup.incrementalNearDupPairs(hist, inc, "doc_id", "text",
-          shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1)
+          threshold = 0.1)
         Dedup.applyIncrementalDedup(inc, "doc_id", pairs)
           .withColumn("split", Sampling.assignSplit(col("doc_id"),
             Seq("train" -> 80, "val" -> 10, "test" -> 10)))

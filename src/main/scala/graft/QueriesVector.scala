@@ -244,8 +244,7 @@ private[graft] object QueriesVector {
       (s, d) => {
         val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val planted = e.select((-col("vec_id") - lit(1L)).as("vec_id"), col("embedding"))
-        Similarity.semanticDedup(e.unionByName(planted), "vec_id", "embedding",
-            threshold = 0.9)
+        Similarity.semanticDedup(e.unionByName(planted), "vec_id", "embedding")
           .select(col("vec_id")).orderBy(col("vec_id"))
       },
       Some("SELECT -vec_id - 1 AS vec_id FROM embeddings ORDER BY vec_id")),
@@ -927,7 +926,7 @@ private[graft] object QueriesVector {
         val ev = eventsUs(s, d).select(col("user_id"), col("event_id"), col("ts_us"),
           floor(col("value") * 1000).cast("long").as("v_milli"))
         Analytics.dyadicEwma(ev, col("user_id"), Seq(col("ts_us"), col("event_id")),
-            col("v_milli"), terms = 16, scaleDiv = 1000.0)
+            col("v_milli"), scaleDiv = 1000.0)
           .select(col("user_id"), col("event_id"), col("ts_us"), col("v_milli"),
             col("ewma_num"), col("ewma"))
           .orderBy(col("user_id"), col("ts_us"), col("event_id"))
@@ -985,7 +984,7 @@ private[graft] object QueriesVector {
       // every interp (halves/quarters) and the 3·MAD compare are exact in
       // both engines
       (s, d) => Analytics.madStats(
-          t(s, d, "lineitem"), col("l_returnflag"), col("l_quantity"), 3.0)
+          t(s, d, "lineitem"), col("l_returnflag"), col("l_quantity"))
         .orderBySmall(col("grp")),
       Some("""WITH v AS (SELECT l_returnflag AS grp, CAST(l_quantity AS DOUBLE) AS x
           FROM lineitem WHERE l_quantity IS NOT NULL),

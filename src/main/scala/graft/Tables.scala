@@ -31,15 +31,4 @@ object Tables {
     */
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
-  def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
-  def customer(s: SparkSession, d: String): DataFrame   = load(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame   = load(s, d, "supplier")
-  def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
-  def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
-  def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
-  def events(s: SparkSession, d: String): DataFrame     = load(s, d, "events")
-  def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

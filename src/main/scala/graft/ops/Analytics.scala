@@ -29,17 +29,24 @@ object Analytics extends AnalyticsStatsOps with AnalyticsSeqOps
       .groupBy((year(eventDate).as("yr") +: groupCols): _*)
       .agg(count(lit(1)).as("cnt"))
 
-  /** Rank-within-partition top-n (deterministic: callers must pass a total
-    * order). Plans as a single window over one shuffle of the input.
+  /** Rank-within-partition top-n as column `rnk` (deterministic: callers
+    * must pass a total order). Plans as a single window over one shuffle
+    * of the input.
     */
-  def rankTopN(df: DataFrame, partition: Seq[Column], order: Seq[Column], n: Int, rankCol: String = "rnk"): DataFrame = {
+  def rankTopN(df: DataFrame, partition: Seq[Column], order: Seq[Column], n: Int): DataFrame = {
     val w = Window.partitionBy(partition: _*).orderBy(order: _*)
-    df.withColumn(rankCol, row_number().over(w)).where(col(rankCol) <= n)
+    df.withColumn("rnk", row_number().over(w)).where(col("rnk") <= n)
   }
 }
 
 /** Helpers shared across the Analytics*Ops split traits. */
 trait AnalyticsBase {
+  /** The cell budget of the categorical×categorical operators
+    * (`chiSquare`, `naiveBayes2Fit`): their driver-side collects are
+    * bounded by it, and a larger table fails as non-categorical input.
+    */
+  private[ops] val MaxCategoricalCells = 4096
+
   /** Helper-column names that cannot collide with the input schema: prefix
     * underscores until the name is unused (also reserving against the other
     * fresh names minted in the same call). Collision checks are

@@ -210,7 +210,7 @@ trait AnalyticsGraphOps extends AnalyticsBase {
     *
     * Scale: each round is one degree aggregation + two sort-merge semi
     * joins (the survivor set grows toward node count — never broadcast);
-    * rounds are bounded by the peeling depth (≤ maxRounds guard; a path
+    * rounds are bounded by the peeling depth (≤ 64-round guard; a path
     * graph peels from both ends, so depth can reach n/2 — that is the
     * exact algorithm's frontier, not an implementation artifact).
     * Per-round edge tables localCheckpoint so the plan stays flat (the
@@ -227,13 +227,13 @@ trait AnalyticsGraphOps extends AnalyticsBase {
     * per productive round the work is identical, and the terminal round's
     * census + two sort-merge joins disappear. (Two-peel UNROLLING stays
     * rejected — measured r17: at the common 1-2-round depth it doubles
-    * the probe waste this fold removes for free.) A converged depth-R
-    * graph now needs maxRounds ≥ R, not R+1: stability is observed in
+    * the probe waste this fold removes for free.) A depth-R graph fits
+    * the 64-round guard when R ≤ 64, not R + 1: stability is observed in
     * round R's own job.
     */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxRounds: Int = 64): DataFrame = {
-    require(k >= 1 && maxRounds >= 1)
+  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int): DataFrame = {
+    require(k >= 1)
+    val maxRounds = 64
     val canon = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -267,11 +267,10 @@ trait AnalyticsGraphOps extends AnalyticsBase {
     // present), not a looser approximation — fail loudly like
     // dedupClusters does, never degrade silently. Practically unreachable:
     // each round removes ≥ 1 node or stabilizes, so 64 rounds cover every
-    // graph whose peeling depth is ≤ 64 — raise maxRounds for deeper ones.
+    // graph whose peeling depth is ≤ 64.
     if (subK > 0L)
       throw new IllegalStateException(
-        s"kCore: not converged after $maxRounds rounds ($subK sub-$k nodes still " +
-          "peeling) — raise maxRounds")
+        s"kCore: not converged after $maxRounds rounds ($subK sub-$k nodes still peeling)")
     // the final census IS the answer — its checkpoint blocks back the
     // frame; the terminal EDGE table's blocks back nothing anymore (the
     // pre-fold code returned a census recomputed from them) and would pin
@@ -396,12 +395,14 @@ trait AnalyticsGraphOps extends AnalyticsBase {
     *
     * Scale: per round one edge-keyed label join + one (node, label)
     * count aggregation + the per-node argmax — all sort-merge/partial-
-    * aggregable; per-round localCheckpoint keeps the plan flat (the
+    * aggregable; an eager localCheckpoint every
+    * [[graft.ops.Dedup.CheckpointEvery]] rounds keeps the plan flat (the
     * pageRank convention). Output: (v, community).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int = 3, checkpointEvery: Int = 8): DataFrame = {
-    require(rounds >= 1 && checkpointEvery >= 1)
+                       rounds: Int = 3): DataFrame = {
+    require(rounds >= 1)
+    val checkpointEvery = Dedup.CheckpointEvery
     val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .graftCheckpoint()
@@ -441,6 +442,11 @@ trait AnalyticsGraphOps extends AnalyticsBase {
     out
   }
 
+  /** HITS's fixed-point scale 10⁶, shared by [[hitsFixedPoint]] and its
+    * DuckDB mirror [[graft.Queries.hitsOracleSql]].
+    */
+  private[graft] val HitsScale = 1000000L
+
   /** HITS (Kleinberg hubs & authorities) as a FIXED-POINT iteration —
     * the [[graft.ops.Dedup.pageRankFixedPoint]] discipline applied to the
     * two-score recurrence: every value is a scaled long, per-round
@@ -451,8 +457,8 @@ trait AnalyticsGraphOps extends AnalyticsBase {
     *
     * Overflow contract: a raw authority sum is ≤ E·scale and the
     * normalization multiplies by scale again, so E·scale² must stay
-    * < 2⁶³ — the default scale 10⁶ is safe to ~9·10⁶ edges; drop scale
-    * as E grows (precision 1/scale is a RANKING tolerance, not a sum).
+    * < 2⁶³ — [[HitsScale]] = 10⁶ is safe to ~9·10⁶ edges (precision
+    * 1/scale is a RANKING tolerance, not a sum).
     * Lower bound: `scale` must also EXCEED the node count on
     * near-uniform graphs, or per-node floors collapse the next round's
     * sum to 0 — guarded in-plan (raise_error), never a silent NULL.
@@ -467,9 +473,10 @@ trait AnalyticsGraphOps extends AnalyticsBase {
     * to the driver.
     */
   def hitsFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
-                     iters: Int = 3, scale: Long = 1000000L,
-                     checkpointEvery: Int = 8): DataFrame = {
-    require(iters >= 1 && scale > 0 && checkpointEvery >= 1)
+                     iters: Int = 3,
+                     checkpointEvery: Int = Dedup.CheckpointEvery): DataFrame = {
+    require(iters >= 1 && checkpointEvery >= 1)
+    val scale = HitsScale
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).graftCheckpoint()
     val nodes = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
       .distinct().graftCheckpoint(eager = false)

@@ -80,9 +80,9 @@ trait AnalyticsModelOps extends AnalyticsBase {
     * predict is a pure codegen projection (the perceptronPredict
     * convention). Ties predict class 0 (pinned).
     */
-  def naiveBayes2Fit(df: DataFrame, f1: Column, f2: Column, label: Column,
-                     maxCells: Int = 4096): Column = {
+  def naiveBayes2Fit(df: DataFrame, f1: Column, f2: Column, label: Column): Column = {
     import java.math.BigInteger
+    val maxCells = MaxCategoricalCells
     val proj = df.select(f1.cast("long").as("_f1"), f2.cast("long").as("_f2"),
       label.cast("int").as("_y"))
       // the NULL-drop stance (aucExact): a NULL feature/label would form
@@ -326,16 +326,16 @@ trait AnalyticsModelOps extends AnalyticsBase {
     * the quasi-identifier tuple, then census the group-size bands
     * (singletons are re-identifiable; k<5 is the classic release
     * threshold) and count the groups that fail l-diversity (≥2 members
-    * but fewer than `lMin` distinct sensitive values — attribute
+    * but fewer than 2 distinct sensitive values — attribute
     * disclosure even when k holds). ONE corpus shuffle to the QI group
     * table; the census is a bounded second fold. All counts exact
     * integers. countDistinct per group is the honest cost — the group
     * table is corpus-sized in the worst case but each group's distinct
     * set is tiny.
     */
-  def kAnonymityAudit(df: DataFrame, qiCols: Seq[Column], sensitive: Column,
-                      lMin: Int = 2): DataFrame = {
-    require(qiCols.nonEmpty && lMin >= 2)
+  def kAnonymityAudit(df: DataFrame, qiCols: Seq[Column], sensitive: Column): DataFrame = {
+    require(qiCols.nonEmpty)
+    val lMin = 2
     val g = df.groupBy(qiCols: _*)
       .agg(count(lit(1)).as("_sz"), countDistinct(sensitive).as("_ldiv"))
     val band = when(col("_sz") === 1, "1")

@@ -83,22 +83,23 @@ trait AnalyticsSeqOps extends AnalyticsBase {
     * (Spark), i.e. in DIFFERENT addition orders — decimal is the only
     * representation where that difference is invisible. One shuffle (the
     * window partition); `order` must be a total order within the key for
-    * the result to be well-defined. Adds `roll_sum`, `roll_n`, `roll_avg`
-    * (= exact sum / exact count, one correctly-rounded division).
+    * the result to be well-defined; values sum at 6 decimal places. Adds
+    * `roll_sum`, `roll_n`, `roll_avg` (= exact sum / exact count, one
+    * correctly-rounded division).
     */
   def rollingStats(df: DataFrame, key: Column, order: Seq[Column], value: Column,
-                   nPreceding: Int, scale: Int = 6): DataFrame = {
+                   nPreceding: Int): DataFrame = {
     require(nPreceding >= 0)
     val w = Window.partitionBy(key).orderBy(order: _*)
       .rowsBetween(-nPreceding.toLong, Window.currentRow)
-    val d = value.cast(s"decimal(24,$scale)")
+    val d = value.cast("decimal(24,6)")
     df.withColumn("roll_sum", sum(d).over(w).cast("double"))
       .withColumn("roll_n", count(d).over(w))
       .withColumn("roll_avg", col("roll_sum") / col("roll_n").cast("double"))
   }
 
-  /** Dyadic EWMA — exponential smoothing with α = 1/2 and a `terms`-term
-    * truncated tail, the anomaly-smoothing primitive with EXACT
+  /** Dyadic EWMA — exponential smoothing with α = 1/2 and a `terms` = 16
+    * term truncated tail, the anomaly-smoothing primitive with EXACT
     * arithmetic: because the decay is a power of two and the input is
     * integral, the weighted numerator Σₖ v₍ᵢ₋ₖ₎·2^(terms−1−k) is a pure
     * BIGINT expression — no decimal-precision cliffs, no float summation
@@ -113,8 +114,8 @@ trait AnalyticsSeqOps extends AnalyticsBase {
     * and pass scaleDiv = 1000). Overflow bound: |v|·2^terms·terms < 2⁶³.
     */
   def dyadicEwma(df: DataFrame, key: Column, order: Seq[Column],
-                 valueInt: Column, terms: Int = 16, scaleDiv: Double = 1.0): DataFrame = {
-    require(terms >= 1 && terms <= 32)
+                 valueInt: Column, scaleDiv: Double = 1.0): DataFrame = {
+    val terms = 16
     val w = Window.partitionBy(key).orderBy(order: _*)
     val num = (0 until terms).map { k =>
       coalesce(lag(valueInt, k).over(w), lit(0L)) * lit(1L << (terms - 1 - k))
@@ -150,7 +151,7 @@ trait AnalyticsSeqOps extends AnalyticsBase {
     * float anywhere in the decision: measures pre-scale to integers
     * (caller passes an integral column, e.g. floor(v·10⁶) — the op_ewma
     * convention), each season's mean/variance stay rational, and the
-    * z-style flag |v − μ| > k·σ cross-multiplies to pure integers:
+    * z-style flag |v − μ| > k·σ (k = 2) cross-multiplies to pure integers:
     *   (n·v − s)² > k² · (n·ss − s²)
     * (both sides exact in DECIMAL(38,0); μ = s/n, σ² = ss/n − (s/n)²
     * multiplied through by n²). Two passes over the fact table (moments,
@@ -158,8 +159,8 @@ trait AnalyticsSeqOps extends AnalyticsBase {
     * them; here the season count is bounded so a broadcast join back is
     * one cheap exchange), output bounded by |seasons|.
     */
-  def seasonalAnomaly(df: DataFrame, season: Column, valueInt: Column,
-                      k: Int = 2): DataFrame = {
+  def seasonalAnomaly(df: DataFrame, season: Column, valueInt: Column): DataFrame = {
+    val k = 2
     val proj = df.select(season.as("season"), valueInt.cast("long").as("_v"))
     val moments = proj.groupBy(col("season"))
       .agg(count(col("_v")).as("_n"),

@@ -109,8 +109,8 @@ trait AnalyticsStatsOps extends AnalyticsBase {
     * across engines. Population std (`/n`). Returns one row per group:
     * (grp, n_rows, mean, std, n_outliers) where an outlier is
     * |x − mean| > zCut·std — an integer count, so the output stays
-    * hash-comparable without emitting per-row doubles. `scale` must cover
-    * the measure's true decimal width.
+    * hash-comparable without emitting per-row doubles. The measure's true
+    * decimal width must be at most 2 places (the Σx cast scale).
     *
     * Execution: two passes are semantically unavoidable (the outlier test
     * needs the group's mean/std), but when the group cardinality is at most
@@ -127,8 +127,9 @@ trait AnalyticsStatsOps extends AnalyticsBase {
     * group column to be a `lit()`-able atomic type.
     */
   def standardizeStats(df: DataFrame, group: Column, value: Column,
-                       zCut: Double = 2.0, scale: Int = 2,
+                       zCut: Double = 2.0,
                        maxLiteralGroups: Int = 128, sqScale: Int = -1): DataFrame = {
+    val scale = 2
     // sqScale caps the value² cast below 2·scale when the exact squared
     // sum would exceed ~15 significant digits — outside that window the
     // decimal→double conversion itself is engine-divergent (see
@@ -373,15 +374,17 @@ trait AnalyticsStatsOps extends AnalyticsBase {
     * accumulate in floating point and give run-to-run different last bits
     * at scale; this form is bit-reproducible.
     *
-    * Cast scales: `xScale`/`yScale` must cover the inputs' true decimal
-    * widths, and the product scales (x·y, x², y²) are their sums. CAUTION:
+    * Cast scales: x is cast at scale 0 (integer-valued x) and `yScale`
+    * must cover y's true decimal width; the product scales (x·y, x², y²)
+    * are their sums. CAUTION:
     * a product's double ulp must sit well below its cast scale's half-step
     * (ulp(y²)≈2e-6 at 1e10), or the decimal rounding lands on engine-
     * dependent HALF_UP/HALF_EVEN boundaries. Precisions are sized for
     * ~1e9-row groups.
     */
   def regressionByGroup(df: DataFrame, group: Column, x: Column, y: Column,
-                        xScale: Int = 0, yScale: Int = 2, yyScale: Int = -1): DataFrame = {
+                        yScale: Int = 2, yyScale: Int = -1): DataFrame = {
+    val xScale = 0
     // syy is the widest moment (Σy² reaches ~19 significant digits on fact
     // tables) and the decimal→double conversion is only engine-portable
     // while the SCALED sum stays under 2⁵³ — see correlationMatrix's
@@ -499,7 +502,7 @@ trait AnalyticsStatsOps extends AnalyticsBase {
   }
 
   /** Robust per-group outlier stats: median, MAD (median absolute
-    * deviation), and the count of |x − median| > zCut·MAD — the
+    * deviation), and the count of |x − median| > 3·MAD — the
     * heavy-tail-safe alternative to [[standardizeStats]]'s mean/std (one
     * corrupt value moves a mean arbitrarily; it moves a median not at
     * all). Both medians are EXACT rank-interpolation quantiles computed by
@@ -512,8 +515,8 @@ trait AnalyticsStatsOps extends AnalyticsBase {
     * exactness of the outlier comparison is the CALLER's contract (integer
     * or low-scale-decimal measures make every interp/compare exact).
     */
-  def madStats(df: DataFrame, group: Column, value: Column,
-               zCut: Double = 3.0): DataFrame = {
+  def madStats(df: DataFrame, group: Column, value: Column): DataFrame = {
+    val zCut = 3.0
     val meds = rankMedian(
       df.where(value.isNotNull).select(group.as("_g"), value.cast("double").as("_v")))
     val dev = df.where(value.isNotNull)
@@ -615,8 +618,8 @@ trait AnalyticsStatsOps extends AnalyticsBase {
     * float addition is not associative, so an unordered SQL SUM would be
     * engine-varying), mirrored externally by an ordered list_sum.
     */
-  def chiSquare(df: DataFrame, a: Column, b: Column,
-                maxCells: Int = 4096): DataFrame = {
+  def chiSquare(df: DataFrame, a: Column, b: Column): DataFrame = {
+    val maxCells = MaxCategoricalCells
     val cells = contingency(df, a, b)
       .select(col("a"), col("b"), col("n_obs"),
         col("row_total").cast("long").as("r"),
@@ -871,10 +874,12 @@ trait AnalyticsStatsOps extends AnalyticsBase {
     * each group's bounded value list and the smallest value whose
     * doubled cumulative weight reaches the group total (the lower
     * weighted median — deterministic, no interpolation, exact decimal
-    * comparisons). Output: (group, median, total_weight).
+    * comparisons; weights sum at 2 decimal places). Output: (group,
+    * median, total_weight).
     */
   def weightedMedianQuantized(df: DataFrame, group: Column, value: Column,
-                              weight: Column, scale: Int = 2): DataFrame = {
+                              weight: Column): DataFrame = {
+    val scale = 2
     // a NULL value cell would sort first and pollute every cumulative
     // weight; a NULL weight contributes no mass — both drop
     val wq = df.where(value.isNotNull && weight.isNotNull)

@@ -104,9 +104,9 @@ object Dedup {
   def minhashAgg(seed: Int): Column =
     min(col("_mh").getItem(seed)).as(s"mh$seed")
 
-  /** MinHash signatures: one row per doc, columns mh0..mh{k-1} (k <= 8),
-    * each the INT image of the oracle's 4-hex-char slice (equal order, equal
-    * equality — see [[minhashAgg]]). No size column rides along: the Jaccard
+  /** MinHash signatures: one row per doc, columns mh0..mh7 (the
+    * [[MinhashNumHashes]] slots), each the INT image of the oracle's
+    * 4-hex-char slice (equal order, equal equality — see [[minhashAgg]]). No size column rides along: the Jaccard
     * verify derives doc sizes from its own per-doc sets (`size(_set)` in
     * [[jaccardVerifySets]]), so a signature-side count would be dead weight
     * shuffled with every row.
@@ -116,24 +116,20 @@ object Dedup {
     * store persists is `array<int>` (it was `array<string>`); stores
     * written in the old format must be rebuilt.
     */
-  def minhashSignatures(shingleTbl: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    require(numHashes <= 8, "md5 yields 8 disjoint 16-bit slices")
+  def minhashSignatures(shingleTbl: DataFrame, idCol: String): DataFrame =
     shingleTbl.withColumn("_mh", graft.functions.Md5SlicesOps.md5Slices16(col("shingle")))
-      .groupBy(col(idCol)).agg(minhashAgg(0), (1 until numHashes).map(minhashAgg): _*)
-  }
+      .groupBy(col(idCol)).agg(minhashAgg(0), (1 until MinhashNumHashes).map(minhashAgg): _*)
 
-  /** LSH band buckets: band b hashes `rowsPerBand` consecutive signature
-    * entries into one bucket id. Docs sharing any (band, bucket) are
-    * candidates. Output: (id, band, bucket). The bucket md5 runs over the
+  /** LSH band buckets: band b hashes [[MinhashRowsPerBand]] consecutive
+    * signature entries into one bucket id. Docs sharing any (band, bucket)
+    * are candidates. Output: (id, band, bucket). The bucket md5 runs over the
     * 4-hex-char images of the int signature slices — byte-identical input
     * to the oracle's `md5(concat(substring-slices))`, reconstructed ONCE per
     * aggregated signature row (signature-table-sized, not shingle-sized).
     */
-  def lshBuckets(sig: DataFrame, idCol: String, numHashes: Int, rowsPerBand: Int): DataFrame = {
-    require(numHashes % rowsPerBand == 0,
-      s"numHashes $numHashes must be a multiple of rowsPerBand $rowsPerBand — " +
-        "truncated bands would silently lower recall vs the configured signature size")
-    val numBands = numHashes / rowsPerBand
+  def lshBuckets(sig: DataFrame, idCol: String): DataFrame = {
+    val rowsPerBand = MinhashRowsPerBand
+    val numBands = MinhashNumHashes / rowsPerBand
     val bands = (0 until numBands).map { b =>
       struct(lit(b).as("band"),
         md5(concat((0 until rowsPerBand).map(r =>
@@ -472,12 +468,20 @@ object Dedup {
     */
   def minhashNearDupPairs(
       docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 2,
       threshold: Double = 0.5, maxBucketSize: Int = Int.MaxValue): DataFrame =
     minhashNearDupPairsFromShingles(
-      shingleTable(docs, idCol, textCol, shingleN)
+      shingleTable(docs, idCol, textCol, MinhashShingleN)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      idCol, numHashes, rowsPerBand, threshold, maxBucketSize)
+      idCol, threshold, maxBucketSize)
+
+  /** The MinHash-LSH layout every near-dup caller runs: 3-token shingles,
+    * 8 hashes in 4 bands of 2 rows (the S-curve's midpoint sits near
+    * Jaccard 0.5). [[graft.streaming.Streaming.nearDupFilterSink]]'s
+    * signature store is built with the same layout.
+    */
+  private[graft] val MinhashShingleN = 3
+  private[graft] val MinhashNumHashes = 8
+  private val MinhashRowsPerBand = 2
 
   /** The LSH sign→bucket→verify chain over a prebuilt shingle table. The
     * caller owns the table's persistence — it is read by four consumers
@@ -487,9 +491,9 @@ object Dedup {
     * the verify's per-doc sets), so it is not persisted.
     */
   def minhashNearDupPairsFromShingles(
-      sh: DataFrame, idCol: String, numHashes: Int = 8, rowsPerBand: Int = 2,
+      sh: DataFrame, idCol: String,
       threshold: Double = 0.5, maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val buckets = lshBuckets(minhashSignatures(sh, idCol, numHashes), idCol, numHashes, rowsPerBand)
+    val buckets = lshBuckets(minhashSignatures(sh, idCol), idCol)
     jaccardVerify(lshCandidatePairsCapped(buckets, idCol, maxBucketSize), sh, idCol, threshold)
   }
 
@@ -533,7 +537,7 @@ object Dedup {
     sums.select(col(idCol), hash.as("simhash"))
   }
 
-  /** Near-dup pairs by SimHash hamming distance <= maxHamming (default 3).
+  /** Near-dup pairs by SimHash hamming distance <= 3.
     *
     * Candidates come from 4 × 15-bit chunk buckets: any pair with hamming <= 3
     * must agree on at least one of the 4 chunks (pigeonhole), so the bucketed
@@ -541,12 +545,14 @@ object Dedup {
     * runs, at O(N·bucket) cost.
     */
   def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                          maxHamming: Int = 3,
-                          maxBucketWidth: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming < SimhashChunks, s"$SimhashChunks-chunk pigeonhole only guarantees hamming <= ${SimhashChunks - 1}")
+                          maxBucketWidth: Int = Int.MaxValue): DataFrame =
     simhashPairsByChunks(simhash60(docs, idCol, textCol), idCol,
-      SimhashChunks, SimhashChunkBits, maxHamming, maxBucketWidth)
-  }
+      SimhashChunks, SimhashChunkBits, maxBucketWidth)
+
+  /** The hamming radius of both banded pair generators: with 4 chunks,
+    * pigeonhole guarantees a pair at hamming <= 3 shares a chunk.
+    */
+  private val MaxHamming = 3
 
   /** The per-signature (k, chunk) bucket rows both the pair generator and
     * the oversized-bucket audit derive from — one definition so the two
@@ -585,7 +591,6 @@ object Dedup {
     */
   private def simhashPairsByChunks(sh: DataFrame, idCol: String,
                                    numChunks: Int, chunkBits: Int,
-                                   maxHamming: Int,
                                    maxBucketWidth: Int): DataFrame = {
     val kept = capBuckets(chunkBuckets(sh, idCol, numChunks, chunkBits),
       Seq("k", "chunk"), maxBucketWidth)
@@ -599,7 +604,7 @@ object Dedup {
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         call_function("bit_count", col("h_a").bitwiseXOR(col("h_b"))).as("hamming"))
-      .where(col("hamming") <= lit(maxHamming))
+      .where(col("hamming") <= lit(MaxHamming))
       .distinct()
   }
 
@@ -611,12 +616,9 @@ object Dedup {
     * growing a second pair generator. Returns (doc_a, doc_b, hamming).
     */
   def hammingNearDupPairs(sig: DataFrame, idCol: String, hashCol: String,
-                          maxHamming: Int = 3,
-                          maxBucketWidth: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming <= 3, "4x16-bit chunking only guarantees hamming <= 3")
+                          maxBucketWidth: Int = Int.MaxValue): DataFrame =
     simhashPairsByChunks(sig.select(col(idCol), col(hashCol).cast("long").as("simhash")),
-      idCol, numChunks = 4, chunkBits = 16, maxHamming, maxBucketWidth)
-  }
+      idCol, numChunks = 4, chunkBits = 16, maxBucketWidth)
 
   /** The (k, chunk, width) buckets the capped hamming/simhash band family
     * drops at the given cap — the monitoring side-output for the recall
@@ -882,7 +884,7 @@ object Dedup {
     labels.select(col("v").as("doc_id"), col("label").as("cluster_rep"))
   }
 
-  /** PageRank over an edge list (fixed iteration count, damping d):
+  /** PageRank over an edge list (fixed iteration count, damping d = 0.85):
     * pr ← (1−d)/N + d·Σ_in pr/outdeg. The per-node contribution sum runs
     * in DECIMAL(38,18) so it is order-independent under partial
     * aggregation — the same double result whatever Spark's merge order —
@@ -890,17 +892,17 @@ object Dedup {
     * (the simplified variant; ranks still order correctly), documented.
     * Rounds chain LAZILY — each round's frame is referenced exactly once
     * by the next, so the whole loop materializes in the consumer's single
-    * job; an eager `localCheckpoint` every `checkpointEvery` rounds (and
+    * job; an eager `localCheckpoint` every [[CheckpointEvery]] rounds (and
     * on the last) bounds unrolled plan depth and lineage for large
-    * iteration counts at ⌈iters/checkpointEvery⌉ driver jobs instead of
+    * iteration counts at ⌈iters/8⌉ driver jobs instead of
     * one per round. Complements [[dedupClusters]]: components give the
     * keep/drop partition, PageRank gives a centrality WITHIN a component
     * (e.g. pick the most-linked representative instead of min-id).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 10, damping: Double = 0.85,
-               checkpointEvery: Int = 8): DataFrame = {
-    require(iters >= 1 && checkpointEvery >= 1)
+               iters: Int = 10): DataFrame = {
+    require(iters >= 1)
+    val damping = PageRankDampNum.toDouble / PageRankDampDen
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).graftCheckpoint()
     // widen the flat edge table with outdeg ONCE: the per-iteration plan
     // then joins pr exactly once — no per-iteration outdeg join, no third
@@ -923,11 +925,11 @@ object Dedup {
           (lit((1.0 - damping) / n) + lit(damping) * coalesce(col("_sum"), lit(0.0))).as("pr"))
       // iterations chain LAZILY (each round's frame is referenced exactly
       // once by the next, so nothing recomputes); an EAGER checkpoint every
-      // `checkpointEvery` rounds — and always on the last — bounds the
+      // CheckpointEvery rounds — and always on the last — bounds the
       // unrolled plan depth and lineage for large iteration counts while
-      // paying ⌈iters/checkpointEvery⌉ jobs instead of one per round. Only
+      // paying ⌈iters/CheckpointEvery⌉ jobs instead of one per round. Only
       // one eager round is ever pinned: each frees its predecessor.
-      if (i % checkpointEvery == 0 || i == iters) {
+      if (i % CheckpointEvery == 0 || i == iters) {
         pr = pr.graftCheckpoint()
         if (lastEager != null) org.apache.spark.sql.GraftBridge.freeCheckpoint(lastEager)
         lastEager = pr
@@ -938,10 +940,24 @@ object Dedup {
     pr
   }
 
+  /** The rounds between eager checkpoints of the iterative graph loops
+    * ([[pageRank]], [[pageRankFixedPoint]], label propagation; HITS's
+    * default).
+    */
+  private[ops] val CheckpointEvery = 8
+
+  /** PageRank's damping 17/20 and fixed-point scale 10¹⁵, shared by
+    * [[pageRankFixedPoint]] and its DuckDB mirror
+    * [[graft.Queries.pageRankOracleSql]].
+    */
+  private[graft] val PageRankDampNum = 17L
+  private[graft] val PageRankDampDen = 20L
+  private[graft] val PageRankScale = 1000000000000000L
+
   /** FIXED-POINT PageRank: the [[pageRank]] recurrence with every value a
     * scaled long (units of 1/`scale`) and every operation integer-exact —
-    * per-edge contribution is `pr div outdeg`, damping is `· dampNum div
-    * dampDen` — so the result is BIT-IDENTICAL across engines, partition
+    * per-edge contribution is `pr div outdeg`, damping is `· 17 div 20`
+    * — so the result is BIT-IDENTICAL across engines, partition
     * orders, and replays. Floating PageRank accumulates order-dependent
     * rounding that makes "same rank, different run" impossible to assert;
     * for a dedup pipeline that uses centrality to pick cluster
@@ -951,14 +967,11 @@ object Dedup {
     * edge (floor division), i.e. ≤ outdeg·10⁻¹⁵ absolute — far below any
     * ranking decision. Overflow-safe by construction: total mass stays ≤
     * `scale` = 10¹⁵, so a node's contribution sum ≤ 10¹⁵ and the damping
-    * product ≤ dampNum·10¹⁵ ≪ 2⁶³.
+    * product ≤ 17·10¹⁵ ≪ 2⁶³.
     */
   def pageRankFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
-                         iters: Int = 10, dampNum: Long = 17L, dampDen: Long = 20L,
-                         scale: Long = 1000000000000000L,
-                         checkpointEvery: Int = 8): DataFrame = {
-    require(iters >= 1 && dampNum > 0 && dampDen > dampNum && scale > 0 &&
-      checkpointEvery >= 1)
+                         iters: Int = 10): DataFrame = {
+    require(iters >= 1)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).graftCheckpoint()
     // outdeg rides on the flat edge table (see [[pageRank]]): one setup
     // join instead of one join per iteration
@@ -970,8 +983,8 @@ object Dedup {
     val n = nodes.count() // materializes the lazy checkpoint too
     require(n > 0, "pageRankFixedPoint: empty edge set — no nodes to rank " +
       "(an upstream pair generator produced no pairs?)")
-    val base = (scale - scale * dampNum / dampDen) / n
-    var pr = nodes.select(col("v"), lit(scale / n).as("pr"))
+    val base = (PageRankScale - PageRankScale * PageRankDampNum / PageRankDampDen) / n
+    var pr = nodes.select(col("v"), lit(PageRankScale / n).as("pr"))
     var lastEager: DataFrame = null
     for (i <- 1 to iters) {
       val contribs = e.join(pr.select(col("v").as("src"), col("pr")), "src")
@@ -980,10 +993,10 @@ object Dedup {
         .agg(sum(col("_c")).as("_sum"))
       pr = nodes.join(contribs, Seq("v"), "left")
         .select(col("v"),
-          (lit(base) + expr(s"coalesce(_sum, 0L) * ${dampNum}L div ${dampDen}L")).as("pr"))
+          (lit(base) + expr(s"coalesce(_sum, 0L) * ${PageRankDampNum}L div ${PageRankDampDen}L")).as("pr"))
       // lazy chain + periodic eager checkpoint — the [[pageRank]] job
-      // discipline (⌈iters/checkpointEvery⌉ jobs, not one per round)
-      if (i % checkpointEvery == 0 || i == iters) {
+      // discipline (⌈iters/CheckpointEvery⌉ jobs, not one per round)
+      if (i % CheckpointEvery == 0 || i == iters) {
         pr = pr.graftCheckpoint()
         if (lastEager != null) org.apache.spark.sql.GraftBridge.freeCheckpoint(lastEager)
         lastEager = pr
@@ -999,13 +1012,16 @@ object Dedup {
     * set — the standard eval-contamination check run before training. The
     * benchmark's distinct shingle set is typically tiny next to the corpus,
     * so the semi-join broadcasts; per-doc aggregation is map-side partial.
-    * Docs with no shingles (shorter than n tokens) are excluded.
+    * Docs with no shingles (shorter than 3 tokens) are excluded.
     */
   def contaminationScores(corpus: DataFrame, benchmark: DataFrame,
-                          idCol: String, textCol: String, shingleN: Int = 3): DataFrame =
+                          idCol: String, textCol: String): DataFrame =
     contaminationScoresFromShingles(
-      shingleTable(corpus, idCol, textCol, shingleN),
-      shingleTable(benchmark, idCol, textCol, shingleN), idCol)
+      shingleTable(corpus, idCol, textCol, ContaminationShingleN),
+      shingleTable(benchmark, idCol, textCol, ContaminationShingleN), idCol)
+
+  /** The shingle width of both decontamination checks: 3-token n-grams. */
+  private val ContaminationShingleN = 3
 
   /** [[contaminationScores]] over prebuilt (id, shingle) tables — for
     * pipelines that build the shingle table once for several consumers.
@@ -1042,26 +1058,25 @@ object Dedup {
     */
   def incrementalNearDupPairs(history: DataFrame, incoming: DataFrame,
                               idCol: String, textCol: String,
-                              shingleN: Int = 3, numHashes: Int = 8,
-                              rowsPerBand: Int = 2, threshold: Double = 0.5,
+                              threshold: Double = 0.5,
                               maxBucketSize: Int = Int.MaxValue): DataFrame = {
     // each side's shingle table feeds its signature pass AND the verify
     // union — persist both (the production form reads the history side's
     // signatures from the persisted fingerprint store instead)
-    val shOld = shingleTable(history, idCol, textCol, shingleN)
+    val shOld = shingleTable(history, idCol, textCol, MinhashShingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shNew = shingleTable(incoming, idCol, textCol, shingleN)
+    val shNew = shingleTable(incoming, idCol, textCol, MinhashShingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigOld = minhashSignatures(shOld, idCol, numHashes)
-    val sigNew = minhashSignatures(shNew, idCol, numHashes)
+    val sigOld = minhashSignatures(shOld, idCol)
+    val sigNew = minhashSignatures(shNew, idCol)
     // the width cap applies PER SIDE before the cross-side join (a
     // boilerplate bucket of width B_new × B_old explodes multiplicatively
     // — the same quadratic corner as the self-join families, and this
     // parameter used to be accepted but silently never applied)
-    val bOld = capBuckets(lshBuckets(sigOld, idCol, numHashes, rowsPerBand),
+    val bOld = capBuckets(lshBuckets(sigOld, idCol),
         Seq("band", "bucket"), maxBucketSize)
       .select(col("band"), col("bucket"), col(idCol).as("doc_old"))
-    val bNew = capBuckets(lshBuckets(sigNew, idCol, numHashes, rowsPerBand),
+    val bNew = capBuckets(lshBuckets(sigNew, idCol),
         Seq("band", "bucket"), maxBucketSize)
       .select(col("band"), col("bucket"), col(idCol).as("doc_new"))
     // both bucket tables are corpus-sized derivations — merge-hinted for
@@ -1091,7 +1106,7 @@ object Dedup {
 
   /** EXACT contamination scores at beyond-broadcast benchmark scale: the
     * benchmark shingle set collapses to a driver-built Bloom filter (~14
-    * bits per distinct shingle at the 0.1% default fpp, a 10-50× smaller
+    * bits per distinct shingle at a 0.1% fpp, a 10-50× smaller
     * broadcast than the strings), probed map-side, followed by an exact
     * verify join that kills its false positives — the production
     * decontamination shape. One pass over the corpus shingle stream
@@ -1112,24 +1127,17 @@ object Dedup {
     * shingle set once), i.e. by document length — not by corpus size.
     */
   def contaminationScoresBloomVerified(corpus: DataFrame, benchmark: DataFrame,
-                                       idCol: String, textCol: String, shingleN: Int = 3,
-                                       expectedShingles: Long = -1L,
-                                       fpp: Double = 0.001): DataFrame = {
+                                       idCol: String, textCol: String): DataFrame = {
     val spark = corpus.sparkSession
-    // persisted in BOTH sizing modes: the bloomFilter build scans it AND
-    // the returned plan's verify join re-reads it per action — with an
-    // explicit size the previous code never persisted at all, so the
-    // benchmark shingle table recomputed on every downstream action
-    val benchSh = shingleTable(benchmark, idCol, textCol, shingleN)
+    // persisted: the bloomFilter's sizing count and build scan it AND the
+    // returned plan's verify join re-reads it per action
+    val benchSh = shingleTable(benchmark, idCol, textCol, ContaminationShingleN)
       .select(col("shingle")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sized =
-      if (expectedShingles > 0) expectedShingles
-      else math.max(1L, benchSh.count())
-    val bf = benchSh.stat.bloomFilter("shingle", sized, fpp)
+    val bf = benchSh.stat.bloomFilter("shingle", math.max(1L, benchSh.count()), 0.001)
     val bfB = spark.sparkContext.broadcast(bf)
     val mightContain = udf((s: String) => s != null && bfB.value.mightContainString(s))
-    val perDoc = shingleTable(corpus, idCol, textCol, shingleN)
+    val perDoc = shingleTable(corpus, idCol, textCol, ContaminationShingleN)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shingles"),
         // collect_list drops nulls: only Bloom-flagged shingles survive

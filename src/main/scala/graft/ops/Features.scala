@@ -82,12 +82,13 @@ object Features {
     * and covariance with no error; an all-invalid column would NPE on
     * the driver). The magnitude bound is what the accumulators actually
     * hold, not folklore: the cross-moment sum widens to decimal(38,2·s),
-    * so with the default scale 6 the sum capacity is 10²⁶ — i.e.
+    * so at the fixed scale 6 the sum capacity is 10²⁶ — i.e.
     * Σx² ≤ 10²⁶, |x| ≲ 3·10⁶ at 10¹² rows (|x| ≲ 10⁹ only up to ~10⁸
     * rows). Overflow raises with the rescale hint instead of NPEing.
     */
-  def pcaFit(df: DataFrame, features: Seq[Column], scale: Int = 6): PcaModel = {
+  def pcaFit(df: DataFrame, features: Seq[Column]): PcaModel = {
     require(features.nonEmpty)
+    val scale = 6
     val d = features.length
     val valid = features.map { c =>
       val x = c.cast("double")
@@ -106,7 +107,7 @@ object Features {
       when(abs(x) < lit(lim), x)
         .otherwise(raise_error(lit(
           s"pcaFit: |feature| >= 1e${16 - scale} overflows its per-value " +
-            "decimal(32," + (2 * scale) + ") product — rescale the features or raise `scale`")))
+            "decimal(32," + (2 * scale) + ") product — rescale the features")))
         .as(s"_x$i") }: _*)
     val aggs =
       Seq(count(lit(1)).as("_n")) ++
@@ -122,8 +123,7 @@ object Features {
       val v = row.getDecimal(idx)
       require(v != null,
         s"pcaFit: $what sum overflowed its decimal window (or the column " +
-          "is empty after the validity filter) — rescale the features or " +
-          "raise `scale`")
+          "is empty after the validity filter) — rescale the features")
       v
     }
     val s: Array[JBigDecimal] = Array.tabulate(d)(i => moment(1 + i, s"feature ${i}"))

@@ -26,8 +26,8 @@ object Joins {
     * the scalable equivalent is an explicit broadcast of the small side so no
     * shuffle of the big side is ever needed.
     */
-  def broadcastLookup(big: DataFrame, small: DataFrame, joinExpr: Column, joinType: String = "inner"): DataFrame =
-    big.join(broadcast(small), joinExpr, joinType)
+  def broadcastLookup(big: DataFrame, small: DataFrame, joinExpr: Column): DataFrame =
+    big.join(broadcast(small), joinExpr, "inner")
 
   /** Op 20 — incremental ledger anti-join: `discovered − imported`
     * (global_dag.py:83-91). Generic left-anti on a key set.

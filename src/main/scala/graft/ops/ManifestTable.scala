@@ -539,15 +539,14 @@ final class ManifestTable private (
     -1L // unreachable
   }
 
-  /** Number of data dirs a version's manifest references (default: the
-    * latest) — the small-file observable [[compact]] exists to bound; a
+  /** Number of data dirs the latest version's manifest references — the
+    * small-file observable [[compact]] exists to bound; a
     * monitoring loop alerts on its growth the same way it watches
     * [[graft.ops.Dedup.lshOversizedBuckets]].
     */
-  def dirCount(version: Long = -1L): Int = {
-    val v = if (version >= 0L) version
-      else latestVersion().getOrElse(
-        throw new IllegalStateException(s"ManifestTable $rootStr: no commits yet"))
+  def dirCount(): Int = {
+    val v = latestVersion().getOrElse(
+      throw new IllegalStateException(s"ManifestTable $rootStr: no commits yet"))
     readManifest(v).dirs.length
   }
 

@@ -107,15 +107,14 @@ object MlEval {
   }
 
   /** Reliability (calibration) table: integer centi-probabilities 0..99
-    * bucket into `nBins` equal-width bins; per bin the support, the mean
+    * bucket into 10 equal-width bins; per bin the support, the mean
     * predicted probability (exact decimal sum → one division), and the
     * empirical positive rate. A perfectly calibrated scorer has
     * mean_pred ≈ pos_rate per bin; the table is the standard reliability-
-    * diagram input. Output bounded by nBins.
+    * diagram input. Output bounded by 10 rows.
     */
-  def calibrationBins(df: DataFrame, pCenti: Column, label: Column,
-                      nBins: Int = 10): DataFrame = {
-    require(nBins > 0 && 100 % nBins == 0, "nBins must divide 100")
+  def calibrationBins(df: DataFrame, pCenti: Column, label: Column): DataFrame = {
+    val nBins = 10
     val width = 100 / nBins
     // enforce the 0..100 domain instead of assuming it: 100 (exact
     // certainty) folds into the TOP bin rather than minting an

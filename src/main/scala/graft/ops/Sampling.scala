@@ -39,12 +39,12 @@ object Sampling {
   def hashBucket(key: Column): Column = hashBucketMod(key, 100L)
 
   /** Stratified deterministic sampling: per-stratum keep rates (percent),
-    * rows in unlisted strata kept at `defaultPct`. One pass, pure filter.
+    * rows in unlisted strata dropped. One pass, pure filter.
     */
   def stratifiedSampleByHash(df: DataFrame, stratum: Column, key: Column,
-                             pctByStratum: Map[String, Int], defaultPct: Int = 0): DataFrame = {
-    require((defaultPct +: pctByStratum.values.toSeq).forall(p => p >= 0 && p <= 100))
-    val pct = pctByStratum.foldLeft(lit(defaultPct)) { case (acc, (s, p)) =>
+                             pctByStratum: Map[String, Int]): DataFrame = {
+    require(pctByStratum.values.forall(p => p >= 0 && p <= 100))
+    val pct = pctByStratum.foldLeft(lit(0)) { case (acc, (s, p)) =>
       when(stratum === lit(s), lit(p)).otherwise(acc)
     }
     df.where(hashBucket(key) < pct)
@@ -208,13 +208,14 @@ object Sampling {
     * finer than 1/100 of an epoch is meaningless for a corpus mix).
     * Each emitted copy carries its `epoch` index so downstream shuffling
     * can interleave copies rather than replay the corpus back to back.
-    * A pure explode+filter projection: no shuffle, no join; the
-    * per-source cost is exactly the emitted volume.
+    * Unlisted sources pass through once (100 centiepochs). A pure
+    * explode+filter projection: no shuffle, no join; the per-source cost
+    * is exactly the emitted volume.
     */
   def mixByEpochs(docs: DataFrame, key: Column, source: Column,
-                  centiEpochs: Map[String, Int], defaultCenti: Int = 100): DataFrame = {
-    require(centiEpochs.values.forall(_ >= 0) && defaultCenti >= 0)
-    val centi = centiEpochs.foldLeft(lit(defaultCenti)) { case (acc, (s, c)) =>
+                  centiEpochs: Map[String, Int]): DataFrame = {
+    require(centiEpochs.values.forall(_ >= 0))
+    val centi = centiEpochs.foldLeft(lit(100)) { case (acc, (s, c)) =>
       when(source === lit(s), lit(c)).otherwise(acc)
     }
     val fullCopies = (centi / 100).cast("int")

@@ -313,21 +313,9 @@ object Similarity {
     // The probe broadcast carries |Q|·nprobe rows WITH query vectors through
     // the driver — correct only under the batch-bounded-Q serving contract
     // (see [[ivfTopKFitted]]'s broadcast contract). `batchMode` makes that
-    // contract enforceable instead of assumed: an unbounded-Q caller gets
-    // shuffle-hash joins (result-identical, spec'd in SimilaritySpec)
-    // rather than a driver OOM.
-    val broadcastProbes = batchMode match {
-      case QueryBatchMode.AssertBounded => true
-      case QueryBatchMode.Unbounded => false
-      case QueryBatchMode.Measured(max) =>
-        // early-terminating probe of |Q|: the scan stops at max+1 rows, so
-        // the cost is bounded by the threshold, not the query-set size.
-        // NOTE this is an EAGER job at plan-construction time — use
-        // AssertBounded/Unbounded when the caller already knows the regime
-        // (e.g. plan-only consumers).
-        val cap = math.min(max, Int.MaxValue - 1L).toInt
-        queries.select(col(idCol)).limit(cap + 1).count() <= max
-    }
+    // contract explicit: an unbounded-Q caller gets shuffle-hash joins
+    // (result-identical, spec'd in SimilaritySpec) rather than a driver OOM.
+    val broadcastProbes = batchMode == QueryBatchMode.AssertBounded
     val probeCells = topKPerQuery(routed, nprobe)
       .select(col("query_id"), col("neighbor_id").cast("int").as(clusterCol))
     // the join-back to the query VECTORS is also Q-scale on both sides —
@@ -357,25 +345,6 @@ object Similarity {
       * byte-identical.
       */
     case object AssertBounded extends QueryBatchMode
-
-    /** Size-aware: count |Q| with an early-terminating limit+count job at
-      * plan-construction time and pick broadcast (≤ max) or shuffle (> max)
-      * automatically. Default threshold 2¹⁷ ≈ 131k queries ≈ low hundreds
-      * of MB of probe rows at embedding widths — inside a default 1 GiB
-      * driver result cap with headroom.
-      *
-      * The measurement is an EAGER Spark job at plan-construction time and
-      * is NOT memoized: every call re-counts, so a caller constructing the
-      * same plan in a loop pays one bounded job per call. Plan-only
-      * consumers and repeated invocations should pass AssertBounded or
-      * Unbounded (the regime is almost always known statically); Measured
-      * is for one-shot entry points serving query sets of unknown origin.
-      */
-    final case class Measured(maxBroadcastQueries: Long = 1L << 17) extends QueryBatchMode {
-      // a non-positive threshold would reach limit() as a negative row
-      // count (AnalysisException at plan time, far from the mistake)
-      require(maxBroadcastQueries > 0, s"maxBroadcastQueries must be positive, got $maxBroadcastQueries")
-    }
 
     /** Unbounded / corpus-scale Q: never broadcast; the probe list joins
       * the corpus with a shuffle-hash join on the cluster key (both sides
@@ -557,19 +526,13 @@ object Similarity {
     * the pair search to semantically-close groups; SRP needs no iterative
     * fit and its per-table collision math is the documented candidate
     * bound. LSH is only sound in the near-dup regime (threshold ≳ 0.8) —
-    * see [[embeddingNearDupPairs]] for why low thresholds go ~N^1.66.
+    * see [[embeddingNearDupPairs]] for why low thresholds go ~N^1.66. The
+    * pairs come from [[embeddingNearDupPairs]]'s default layout: 8 tables
+    * of 20 planes, cosine ≥ 0.9, no bucket cap.
     */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double = 0.9, numTables: Int = 8,
-                    planesPerTable: Int = 20, dims: Int = 64,
-                    maxBucketWidth: Int = Int.MaxValue): DataFrame = {
-    // maxBucketWidth threads through to the SRP bucket cap — the
-    // dense-sub-threshold-cluster guard (a mean-cos ≈ 0.8 semantic
-    // cluster co-buckets quadratically while failing the 0.9 verify) was
-    // otherwise unreachable from this flagship entry point
-    val pairs = embeddingNearDupPairs(
-      corpus, idCol, vecCol, numTables, planesPerTable, threshold,
-      probeRadius = 1, dims, maxBucketWidth)
+                    dims: Int = 64): DataFrame = {
+    val pairs = embeddingNearDupPairs(corpus, idCol, vecCol, dims = dims)
     Dedup.applyClusterDedup(corpus, idCol, Dedup.dedupClusters(pairs, "id_a", "id_b"))
   }
 

@@ -262,17 +262,19 @@ object TextAnalysis {
     trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9\\s]", ""), "\\s+", " "))
 
   /** Winnowing (rolling k-gram) fingerprints: hash every k-char gram, then
-    * keep the minimum hash of each w-wide window — the standard local
-    * document fingerprint (Schleimer et al.'s winnowing) that is robust to
-    * insertions/reordering, unlike a whole-document digest. Each gram hash
-    * is `substring(md5(gram), 1, 8)`, evaluated by the one-pass kernel
-    * [[graft.functions.WinnowMd5Kernel]]. Emits (idCol, fp: string) rows
-    * for docs of length >= k+w-1.
+    * keep the minimum hash of each w-wide window (k = 8, w = 4) — the
+    * standard local document fingerprint (Schleimer et al.'s winnowing)
+    * that is robust to insertions/reordering, unlike a whole-document
+    * digest. Each gram hash is `substring(md5(gram), 1, 8)`, evaluated
+    * by the one-pass kernel [[graft.functions.WinnowMd5Kernel]]. Emits
+    * (idCol, fp: string) rows for docs of length >= k+w-1.
     */
-  def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int = 8, w: Int = 4): DataFrame =
+  def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol),
-      explode(graft.functions.WinnowOps.winnowMd5(col(textCol), k, w)).as("fp"))
+      explode(graft.functions.WinnowOps.winnowMd5(col(textCol), WinnowK, WinnowW)).as("fp"))
+
+  private val WinnowK = 8
+  private val WinnowW = 4
 
   /** The same md5 winnowing as a pure built-in-expression pipeline — kept as
     * the executable SPECIFICATION for [[winnowFingerprints]]'s kernel (the
@@ -281,8 +283,8 @@ object TextAnalysis {
     * chained projections so the gram-hash array materializes once before
     * the window lambda reads it.
     */
-  def winnowFingerprintsExpr(docs: DataFrame, idCol: String, textCol: String,
-                             k: Int = 8, w: Int = 4): DataFrame = {
+  def winnowFingerprintsExpr(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (k, w) = (WinnowK, WinnowW)
     val text = col(textCol)
     docs.where(length(text) >= k + w - 1)
       .select(col(idCol),
@@ -521,19 +523,20 @@ object TextAnalysis {
       .select(col(idCol), col("rank"), col("token"), col("tf"), col("df"))
   }
 
-  /** Repetition signals (Gopher-style quality rules) over token n-grams,
+  /** Repetition signals (Gopher-style quality rules) over token bigrams,
     * keeping DUPLICATE occurrences (unlike the dedup shingle table):
     * `dup_frac` = fraction of n-gram occurrences that repeat an earlier one,
     * `top_frac` = occurrence share of the single most frequent n-gram.
-    * Degenerate docs (fewer than n tokens) are excluded. One explode + two
+    * Degenerate docs (fewer than 2 tokens) are excluded. One explode + two
     * aggregations, both with map-side partials — linear.
     */
-  def repetitionSignals(docs: DataFrame, idCol: String, textCol: String, n: Int = 2): DataFrame =
+  def repetitionSignals(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     repetitionSignalsFromTokens(
-      docs.select(col(idCol), tokens(col(textCol)).as("_toks")), idCol, "_toks", n)
+      docs.select(col(idCol), tokens(col(textCol)).as("_toks")), idCol, "_toks")
 
   /** [[repetitionSignals]] over an already-materialized token-array column. */
-  def repetitionSignalsFromTokens(df: DataFrame, idCol: String, toksCol: String, n: Int = 2): DataFrame = {
+  def repetitionSignalsFromTokens(df: DataFrame, idCol: String, toksCol: String): DataFrame = {
+    val n = 2
     val grams = df
       .where(size(col(toksCol)) >= n)
       .select(col(idCol), explode(Dedup.gramsFromTokens(col(toksCol), n)).as("gram"))
@@ -603,11 +606,10 @@ object TextAnalysis {
     * shingle (partial-aggregated — per-shingle state is one long) →
     * join-back on the shingle key → per-doc census. Novelty is an integer
     * millionths ratio (exact in any partition order). Docs shorter than
-    * the shingle width emit n_shingles = 0 with NULL novelty.
+    * the shingle width (3 tokens) emit n_shingles = 0 with NULL novelty.
     */
-  def ngramNovelty(docs: DataFrame, idCol: String, textCol: String,
-                   shingleN: Int = 3): DataFrame = {
-    val sh = Dedup.shingleTable(docs, idCol, textCol, shingleN)
+  def ngramNovelty(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val sh = Dedup.shingleTable(docs, idCol, textCol, 3)
     val first = sh.groupBy(col("shingle")).agg(min(col(idCol)).as("_first"))
     val census = sh.join(first.hint("shuffle_hash"), Seq("shingle"))
       .groupBy(col(idCol))
@@ -630,7 +632,7 @@ object TextAnalysis {
     * each document's text from the surviving tokens. "First" is the minimum
     * (doc id, position) occurrence, encoded as the integer
     * `id·maxDocTokens + pos` so both engines order occurrences identically
-    * (requires a numeric id and docs shorter than `maxDocTokens`). The
+    * (requires a numeric id and docs shorter than `maxDocTokens` = 10⁵). The
     * policy is greedy: a removed occurrence blanks ALL k of its token
     * positions, even where they overlap a kept occurrence — deterministic
     * and engine-mirrorable, which is what a reproducible corpus cut needs.
@@ -641,9 +643,9 @@ object TextAnalysis {
     * group-bounded (a doc's own tokens), never corpus-bounded.
     */
   def removeDupWindowSpans(docs: DataFrame, idCol: String, textCol: String,
-                           windowTokens: Int = 8,
-                           maxDocTokens: Long = 100000L): DataFrame = {
+                           windowTokens: Int = 8): DataFrame = {
     require(windowTokens >= 1)
+    val maxDocTokens = 100000L
     // the occ-key encoding is only injective under the documented bounds;
     // violating them would silently cut the WRONG spans (and both engines
     // would agree, so the oracle could not catch it) - fail loudly in-plan
@@ -823,7 +825,7 @@ object TextAnalysis {
     * then applies the argmax — each stage is a projection, so nothing is
     * recomputed.
     */
-  def languageGuessed(df: DataFrame, textCol: String, outCol: String = "guess",
+  def languageGuessed(df: DataFrame, textCol: String,
                       toksCol: Option[String] = None): DataFrame = {
     val tCol = toksCol.getOrElse("_toks")
     val withToks = if (toksCol.isDefined) df else df.withColumn(tCol, tokens(col(textCol)))
@@ -832,7 +834,7 @@ object TextAnalysis {
         size(filter(col(tCol), t => t.isin(stopwords(lang).map(lit(_): Any): _*))))
     }
     val dropCols = (if (toksCol.isDefined) Nil else Seq(tCol)) ++ stopwords.keys.map(l => s"_hits_$l")
-    withHits.withColumn(outCol, guessFromHits(lang => col(s"_hits_$lang")))
+    withHits.withColumn("guess", guessFromHits(lang => col(s"_hits_$lang")))
       .drop(dropCols: _*)
   }
 
@@ -848,7 +850,8 @@ object TextAnalysis {
   /** Certified heavy hitters: the exact top-k item counts (bounded
     * two-stage top-k via TakeOrdered, ties broken by item for a
     * deterministic rank-k boundary) plus per-item flags certifying the
-    * count-min sketch contract `exact ≤ estimate ≤ exact + ⌈eps·N⌉` — the
+    * count-min sketch contract `exact ≤ estimate ≤ exact + ⌈eps·N⌉`
+    * (eps = 0.001 at confidence 0.99, seed 42) — the
     * same certified-accuracy pattern as the HLL and GK keys: the sketch's
     * raw cells are implementation-defined, its CONTRACT is deterministic
     * for a fixed input and seed, so a broken sketch flips a flag. The
@@ -857,10 +860,9 @@ object TextAnalysis {
     * form of frequency counting that exact groupBy cannot give a stream);
     * N comes from the sketch's own totalCount, costing no extra pass.
     */
-  def heavyHittersCertified(df: DataFrame, itemCol: String, k: Int,
-                            eps: Double = 0.001, confidence: Double = 0.99,
-                            seed: Int = 42): DataFrame = {
-    require(k > 0 && eps > 0 && confidence > 0 && confidence < 1)
+  def heavyHittersCertified(df: DataFrame, itemCol: String, k: Int): DataFrame = {
+    require(k > 0)
+    val eps = 0.001
     val spark = df.sparkSession
     // item values go through the sketch AS STRINGS on both sides:
     // CountMinSketch.estimateCount dispatches on the runtime type, so a
@@ -870,7 +872,7 @@ object TextAnalysis {
     // identically for any input type
     val items = df.select(col(itemCol).cast("string").as("item"))
       .where(col("item").isNotNull)
-    val cms = items.stat.countMinSketch("item", eps, confidence, seed)
+    val cms = items.stat.countMinSketch("item", eps, 0.99, 42)
     val bound = math.ceil(eps * cms.totalCount()).toLong
     val cmsB = spark.sparkContext.broadcast(cms)
     val est = udf((s: String) => cmsB.value.estimateCount(s))

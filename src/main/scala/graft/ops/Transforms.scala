@@ -134,14 +134,14 @@ object Transforms {
     * SURVEY.md §7.4.1). `md5` variant provided because the DuckDB oracle has no
     * sha1.
     */
-  def hashId(cols: Seq[Column], algo: String = "sha1", sep: String = "|"): Column = {
+  def hashId(cols: Seq[Column], algo: String = "sha1"): Column = {
     // concat_ws SKIPS null columns, so (a, null, b) and (a, b, null) would
     // hash identically — distinct rows silently merging under one id. Each
     // column is sentinel-coalesced (NUL byte: absent from real field data);
     // non-null payloads stay byte-identical to plain concat_ws, so SQL
-    // mirrors keep matching. CAVEAT: a field VALUE containing `sep` can
-    // still alias adjacent fields — pick a separator absent from the data.
-    val payload = concat_ws(sep, cols.map(c => coalesce(c.cast("string"), lit("\u0000"))): _*)
+    // mirrors keep matching. CAVEAT: a field VALUE containing `|` can
+    // still alias adjacent fields.
+    val payload = concat_ws("|", cols.map(c => coalesce(c.cast("string"), lit("\u0000"))): _*)
     algo match {
       case "sha1" => sha1(payload)
       case "md5"  => md5(payload)
@@ -181,11 +181,10 @@ object Transforms {
     * `sum_nonnull + n_missing·mean` — two deterministic double ops on
     * exact inputs — NOT by summing per-row imputed doubles, whose
     * partition-order-dependent float addition would make the result
-    * engine- and run-varying. One aggregation, map-side partials, output
-    * bounded by |groups|.
+    * engine- and run-varying. The exact sum rounds at 6 decimal places.
+    * One aggregation, map-side partials, output bounded by |groups|.
     */
-  def meanImputeReport(df: DataFrame, group: Column, value: Column,
-                       scale: Int = 6): DataFrame = {
+  def meanImputeReport(df: DataFrame, group: Column, value: Column): DataFrame = {
     // numerator and denominator must agree on what counts as a value
     // (probed on 4.1.2): the decimal cast NULLs NaN/±Inf/out-of-window
     // doubles out of the SUM while count(value) still counted them — a
@@ -202,7 +201,7 @@ object Transforms {
         count(valid).as("_nv"),
         // momentSum fast path: `valid` is double with NaN/Inf already
         // nulled, so the long rounding sees only finite magnitudes
-        Analytics.momentSumFloating(valid, scale).as("_s"))
+        Analytics.momentSumFloating(valid, 6).as("_s"))
       .select(col("grp"), col("n_rows"), col("n_missing"),
         (col("_s").cast("double") / col("_nv").cast("double")).as("mean_used"),
         (col("_s").cast("double") +

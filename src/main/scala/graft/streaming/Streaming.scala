@@ -96,12 +96,12 @@ object Streaming {
       ()
     }
 
-  /** [[nearDupFilterSink]]'s signature: MinHash slots over word shingles,
-    * banded for LSH, and the agreement fraction that marks a duplicate.
+  import graft.ops.Dedup.{MinhashNumHashes => NumHashes, MinhashShingleN => ShingleN}
+
+  /** [[nearDupFilterSink]]'s signature: Dedup's MinHash layout (word
+    * shingles and slots, imported above; its LSH bands) and this
+    * agreement fraction, which marks a duplicate.
     */
-  private val ShingleN = 3
-  private val NumHashes = 8
-  private val RowsPerBand = 2
   private val Threshold = 0.5
 
   /** Streaming near-dedup against HISTORY — "dedupe the firehose against
@@ -195,12 +195,12 @@ object Streaming {
           when(size(col("_toks")) >= ShingleN,
             Dedup.shinglesFromTokens(col("_toks"), ShingleN))
             .otherwise(array(concat_ws(" ", col("_toks"))))).as("shingle"))
-      val sig = Dedup.minhashSignatures(sh, idCol, NumHashes)
+      val sig = Dedup.minhashSignatures(sh, idCol)
       val sigArr = sig.select(col(idCol),
         array((0 until NumHashes).map(i => col(s"mh$i")): _*).as("sig"))
       // batch-bounded and consumed by three sinks (dup probe, state
       // append, acceptance) — persist so the sign/join pipeline runs once
-      val state = Dedup.lshBuckets(sig, idCol, NumHashes, RowsPerBand)
+      val state = Dedup.lshBuckets(sig, idCol)
         .join(sigArr, Seq(idCol))
         .select(col(idCol), col("band"), col("bucket"), col("sig"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -321,12 +321,7 @@ class AggregatesSpec extends SparkSpec {
     try {
       noop(graft.ops.Analytics.standardizeStats(df, col("g"), col("v"))) // warm codegen
       spark.catalog.clearCache()
-      val st = spark.sparkContext.statusTracker
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      val before = st.getJobIdsForGroup(null).length
-      noop(graft.ops.Analytics.standardizeStats(df, col("g"), col("v")))
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark) // the status store is fed by the listener bus
-      val jobs = st.getJobIdsForGroup(null).length - before
+      val jobs = jobsRunBy(noop(graft.ops.Analytics.standardizeStats(df, col("g"), col("v"))))
       assert(jobs <= 2, s"standardizeStats ran $jobs jobs (bound 2: probe + final agg)")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }

@@ -67,7 +67,7 @@ class AnalyticsSpec extends SparkSpec {
     // MAD stays small, and exactly the corrupt row is flagged
     val df = (Seq.tabulate(5)(i => ("g", (i + 1).toDouble)) :+ (("g", 1e6)))
       .toDF("grp", "v")
-    val (g, n, med, mad, out) = Analytics.madStats(df, col("grp"), col("v"), 3.0)
+    val (g, n, med, mad, out) = Analytics.madStats(df, col("grp"), col("v"))
       .as[(String, Long, Double, Double, Long)].head()
     assert(g == "g" && n == 6L)
     assert(med == 3.5 && mad == 1.5) // interp at p=.5 over 6 and the deviations
@@ -142,7 +142,7 @@ class AnalyticsSpec extends SparkSpec {
   test("dyadicEwma: geometric halving, warm-up zeros, exact integer numerator") {
     val df = Seq((1L, 1L, 65536L), (1L, 2L, 0L), (1L, 3L, 0L), (1L, 4L, 65536L))
       .toDF("k", "t", "v")
-    val got = graft.ops.Analytics.dyadicEwma(df, col("k"), Seq(col("t")), col("v"), terms = 16)
+    val got = graft.ops.Analytics.dyadicEwma(df, col("k"), Seq(col("t")), col("v"))
       .select(col("t"), col("ewma")).as[(Long, Double)].collect().toMap
     // impulse response: weight of lag k is 2^-(k+1)
     assert(got(1L) == 65536.0 / 2)      // the impulse itself
@@ -894,7 +894,7 @@ class AnalyticsSpec extends SparkSpec {
     val df = (0 until 50).map(i => ("g", base + i * 1000L, 2L * (base + i * 1000L)))
       .toDF("g", "x", "y")
     val r = Analytics.regressionByGroup(df, col("g"), col("x"), col("y"),
-        xScale = 0, yScale = 0)
+        yScale = 0)
       .select("slope", "corr").as[(Double, Double)].head()
     assert(math.abs(r._1 - 2.0) < 1e-6, s"slope wrapped: ${r._1}")
     assert(math.abs(r._2 - 1.0) < 1e-9, s"corr wrapped: ${r._2}")
@@ -907,7 +907,7 @@ class AnalyticsSpec extends SparkSpec {
   test("seasonalAnomaly: |v| past 3.04e9 does not wrap the squared moment — constant season flags nothing") {
     val v = 4000000000L // v*v = 1.6e19 wraps long; decimal path is exact
     val df = Seq(("s", v), ("s", v), ("s", v)).toDF("season", "v")
-    val got = Analytics.seasonalAnomaly(df, col("season"), col("v"), k = 2)
+    val got = Analytics.seasonalAnomaly(df, col("season"), col("v"))
       .select("n_anomalies").as[Long].head()
     // pre-fix the wrapped variance went NEGATIVE and every row flagged
     assert(got == 0L, s"constant season must flag nothing, got $got anomalies")

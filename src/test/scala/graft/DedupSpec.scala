@@ -130,7 +130,7 @@ class DedupSpec extends SparkSpec {
 
   test("simhash banded candidates == brute-force hamming scan (pigeonhole exactness)") {
     val d = Tables.load(spark, sf0001, "documents").limit(200)
-    val banded = Dedup.simhashNearDupPairs(d, "doc_id", "text", maxHamming = 3)
+    val banded = Dedup.simhashNearDupPairs(d, "doc_id", "text")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val h = Dedup.simhash60(d, "doc_id", "text")
     val a = h.select($"doc_id".as("doc_a"), $"simhash".as("ha"))
@@ -178,13 +178,13 @@ class DedupSpec extends SparkSpec {
     val sig = ((0L until 12L).map(i => (i, 0x0111222233334444L)) ++
                (100L until 108L).map(i => (i, 0x0555666677778888L)) ++
                (200L until 203L).map(i => (i, 0x0999aaaabbbbccccL))).toDF("id", "h")
-    val capped = Dedup.hammingNearDupPairs(sig, "id", "h", maxHamming = 3, maxBucketWidth = 8)
+    val capped = Dedup.hammingNearDupPairs(sig, "id", "h", maxBucketWidth = 8)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val expectKept =
       (for (a <- 100L until 108L; b <- a + 1 until 108L) yield (a, b)).toSet ++
       (for (a <- 200L until 203L; b <- a + 1 until 203L) yield (a, b)).toSet
     assert(capped == expectKept)
-    assert(Dedup.hammingNearDupPairs(sig, "id", "h", maxHamming = 3).count() == 66 + 28 + 3)
+    assert(Dedup.hammingNearDupPairs(sig, "id", "h").count() == 66 + 28 + 3)
     // audit = exactly the wide cluster's 4 chunk buckets, width 12 each
     val audit = Dedup.hammingOversizedBuckets(sig, "id", "h", maxBucketWidth = 8)
       .as[(Int, Long, Long)].collect()
@@ -192,7 +192,7 @@ class DedupSpec extends SparkSpec {
     // md5 text form: the exact-dup pair (0, 3) co-buckets on all 4 chunks,
     // so cap 1 drops it while the audit surfaces the overflow
     def txtPairs(cap: Int) =
-      Dedup.simhashNearDupPairs(docs, "doc_id", "text", maxHamming = 3, maxBucketWidth = cap)
+      Dedup.simhashNearDupPairs(docs, "doc_id", "text", maxBucketWidth = cap)
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(txtPairs(Int.MaxValue).contains((0L, 3L)) && !txtPairs(1).contains((0L, 3L)))
     assert(Dedup.simhashOversizedBuckets(docs, "doc_id", "text", maxBucketWidth = 1).count() >= 4)
@@ -206,7 +206,7 @@ class DedupSpec extends SparkSpec {
     val d = Tables.load(spark, sf0001, "documents").limit(200)
       .select(col("doc_id"), concat(col("text"), lit(" žluťoučký 日本語")).as("text"))
     val sh = Dedup.shingleTable(d, "doc_id", "text", 3)
-    val got = Dedup.minhashSignatures(sh, "doc_id", numHashes = 8)
+    val got = Dedup.minhashSignatures(sh, "doc_id")
     // definitional string form (the pre-r20 implementation, verbatim)
     val want = sh.withColumn("_md5", md5(col("shingle")))
       .groupBy(col("doc_id"))
@@ -217,7 +217,7 @@ class DedupSpec extends SparkSpec {
     assert(gotHex.exceptAll(want).isEmpty && want.exceptAll(gotHex).isEmpty)
     // band buckets: md5 over the reconstructed hex equals md5 over the
     // original substrings
-    val gotB = Dedup.lshBuckets(got, "doc_id", numHashes = 8, rowsPerBand = 2)
+    val gotB = Dedup.lshBuckets(got, "doc_id")
     val wantB = {
       val bands = (0 until 4).map { b =>
         struct(lit(b).as("band"),
@@ -381,12 +381,7 @@ class DedupSpec extends SparkSpec {
       // leaves shingle/signature tables cached, and CacheManager would
       // serve the measured run's identical plans from those blocks
       spark.catalog.clearCache()
-      val st = spark.sparkContext.statusTracker
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      val before = st.getJobIdsForGroup(null).length
-      f
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark) // the status store is fed by the listener bus
-      st.getJobIdsForGroup(null).length - before
+      jobsRunBy(f)
     }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -394,17 +389,17 @@ class DedupSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // warm codegen/parquet paths so first-use jobs don't pollute the counts
-      noop(Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 3, 8, 2, 0.1))
+      noop(Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 0.1))
       val nSimhash = jobsOf(noop(
-        Dedup.simhashNearDupPairs(corpus, "doc_id", "text", 3)))
+        Dedup.simhashNearDupPairs(corpus, "doc_id", "text")))
       assert(nSimhash <= 4, s"simhashNearDupPairs ran $nSimhash jobs (bound 4)")
       val nClusters = jobsOf(noop(
         Dedup.dedupClusters(
-          Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 3, 8, 2, 0.1),
+          Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 0.1),
           "doc_a", "doc_b")))
       assert(nClusters <= 5, s"pairs→dedupClusters ran $nClusters jobs (bound 5)")
       val nMd5 = jobsOf(noop(
-        Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 3, 8, 2, 0.1)))
+        Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 0.1)))
       assert(nMd5 <= 3, s"minhashNearDupPairs (md5) ran $nMd5 jobs (bound 3)")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }
@@ -421,18 +416,16 @@ class DedupSpec extends SparkSpec {
     // the loop) still fails even though exact jobs-per-round is a Spark
     // implementation detail (measured 3/round here: changed-count +
     // checkpoint materializations).
-    def jobs(): Int = {
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark) // the status store is fed by the listener bus
-      spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    }
     def runAndCountRounds(edges: org.apache.spark.sql.DataFrame): (Array[(Long, Long)], Int, Int) = {
       val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
-        val j0 = jobs()
-        val out = Dedup.dedupClusters(edges, "a", "b", maxRounds = 30, smallGraphEdges = 0)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        (out, Dedup.lastPropagationRounds, jobs() - j0)
+        var out = Array.empty[(Long, Long)]
+        val nJobs = jobsRunBy {
+          out = Dedup.dedupClusters(edges, "a", "b", maxRounds = 30, smallGraphEdges = 0)
+            .collect().map(r => (r.getLong(0), r.getLong(1)))
+        }
+        (out, Dedup.lastPropagationRounds, nJobs)
       } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
     // worst diameter per edge: a 64-node path (diameter 63). A plain

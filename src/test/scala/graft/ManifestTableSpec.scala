@@ -306,13 +306,8 @@ class ManifestTableSpec extends SparkSpec {
     byName("op_merge_acid")(spark, sf0001)
       .write.format("noop").mode("overwrite").save() // warm codec/codegen paths
     spark.catalog.clearCache()
-    val st = spark.sparkContext.statusTracker
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    val before = st.getJobIdsForGroup(null).length
-    byName("op_merge_acid")(spark, sf0001)
-      .write.format("noop").mode("overwrite").save()
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark) // the status store is fed by the listener bus
-    val n = st.getJobIdsForGroup(null).length - before
+    val n = jobsRunBy(byName("op_merge_acid")(spark, sf0001)
+      .write.format("noop").mode("overwrite").save())
     assert(n <= 9, s"op_merge_acid ran $n jobs (bound 9): overwrite write + merge " +
       "(broadcast + rewrite write) + snapshot read with sort-sample + noop")
     // the conditional-PUT variant must cost the SAME cycle: the log store
@@ -320,12 +315,8 @@ class ManifestTableSpec extends SparkSpec {
     byName("op_merge_acid_os")(spark, sf0001)
       .write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    val before2 = st.getJobIdsForGroup(null).length
-    byName("op_merge_acid_os")(spark, sf0001)
-      .write.format("noop").mode("overwrite").save()
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    val n2 = st.getJobIdsForGroup(null).length - before2
+    val n2 = jobsRunBy(byName("op_merge_acid_os")(spark, sf0001)
+      .write.format("noop").mode("overwrite").save())
     assert(n2 <= 9, s"op_merge_acid_os ran $n2 jobs (bound 9, same cycle as op_merge_acid)")
   }
 
@@ -338,13 +329,8 @@ class ManifestTableSpec extends SparkSpec {
     byName("op_exactly_once")(spark, sf0001)
       .write.format("noop").mode("overwrite").save() // warm codec/codegen
     spark.catalog.clearCache()
-    val st = spark.sparkContext.statusTracker
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    val before = st.getJobIdsForGroup(null).length
-    byName("op_exactly_once")(spark, sf0001)
-      .write.format("noop").mode("overwrite").save()
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    val n = st.getJobIdsForGroup(null).length - before
+    val n = jobsRunBy(byName("op_exactly_once")(spark, sf0001)
+      .write.format("noop").mode("overwrite").save())
     assert(n <= 14, s"op_exactly_once ran $n jobs (bound 14): 2 append writes + " +
       "2 merge cycles + snapshot sort-sample + noop — replays must add zero")
     // and the replay claim directly: appendOnce/mergeOnce of an applied
@@ -353,13 +339,11 @@ class ManifestTableSpec extends SparkSpec {
     val t = ManifestTable(spark, root)
     t.appendOnce(kv(1L -> 1.0), "s", 0L)
     t.mergeOnce(kv(1L -> 2.0), Seq("k"), "m", 0L)
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    val before2 = st.getJobIdsForGroup(null).length
-    t.appendOnce(kv(1L -> 1.0), "s", 0L)
-    t.mergeOnce(kv(1L -> 2.0), Seq("k"), "m", 0L)
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    assert(st.getJobIdsForGroup(null).length == before2,
-      "a recognized replay must submit ZERO Spark jobs")
+    val replayJobs = jobsRunBy {
+      t.appendOnce(kv(1L -> 1.0), "s", 0L)
+      t.mergeOnce(kv(1L -> 2.0), Seq("k"), "m", 0L)
+    }
+    assert(replayJobs == 0, "a recognized replay must submit ZERO Spark jobs")
   }
 
   test("vacuum drops data outside the retained window; latest stays readable") {

@@ -66,7 +66,7 @@ class MlEvalSpec extends SparkSpec {
   test("calibrationBins: boundary assignment and exact decimal mean_pred") {
     val df = Seq[(Long, Long)]((0, 0), (9, 1), (10, 1), (19, 0), (99, 1))
       .toDF("p", "y")
-    val m = MlEval.calibrationBins(df, col("p"), col("y"), nBins = 10)
+    val m = MlEval.calibrationBins(df, col("p"), col("y"))
       .collect().map(r => r.getAs[Long]("bin") ->
         (r.getAs[Long]("n"), r.getAs[Double]("mean_pred"), r.getAs[Double]("pos_rate"))).toMap
     assert(m(0L) === ((2L, 4.5 / 100.0, 0.5)))   // p=0,9 → bin 0

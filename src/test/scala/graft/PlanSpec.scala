@@ -473,17 +473,7 @@ class PlanSpec extends SparkSpec {
         fn(spark, sf0001).write.format("noop").mode("overwrite").save()
       noop() // warm codegen/parquet-footer paths
       spark.catalog.clearCache()
-      val st = spark.sparkContext.statusTracker
-      // drain BEFORE the before-sample too: the warm run's in-flight
-      // job-start events would otherwise land inside the measured window
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      val before = st.getJobIdsForGroup(null).length
-      noop()
-      // the status store is fed by the listener bus — drain it instead of
-      // sleeping a fixed interval (under load events can post after the
-      // sample, skewing the count in either direction)
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      st.getJobIdsForGroup(null).length - before
+      jobsRunBy(noop())
     }
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

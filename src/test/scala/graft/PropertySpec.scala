@@ -155,7 +155,7 @@ class PropertySpec extends SparkSpec {
       val base = (0 until 8 + rnd.nextInt(20)).map(_ => vocab(rnd.nextInt(vocab.length)))
       (i, base.mkString(" "))
     }.toDF("doc_id", "text")
-    val banded = Dedup.simhashNearDupPairs(docs, "doc_id", "text", maxHamming = 3)
+    val banded = Dedup.simhashNearDupPairs(docs, "doc_id", "text")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val h = Dedup.simhash60(docs, "doc_id", "text")
     val a = h.select($"doc_id".as("doc_a"), $"simhash".as("ha"))
@@ -257,7 +257,7 @@ class PropertySpec extends SparkSpec {
       }
       val df = rows.toDF("g", "v")
       val zCut = 1.0 + rnd.nextDouble() * 2
-      val got = graft.ops.Analytics.standardizeStats(df, col("g"), col("v"), zCut, scale = 2)
+      val got = graft.ops.Analytics.standardizeStats(df, col("g"), col("v"), zCut)
         .collect().map(r => r.getString(0) ->
           (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4))).toMap
       val ref = df.groupBy(col("g"))

@@ -220,7 +220,7 @@ class SimilaritySpec extends SparkSpec {
       "vec_id", "embedding", "cluster", 5, 3, manyCents)))
   }
 
-  test("big-k IVF probe-broadcast guard: unbounded-Q shuffle path is rank-identical; Measured picks the regime") {
+  test("big-k IVF probe-broadcast guard: unbounded-Q shuffle path is rank-identical") {
     import Similarity.QueryBatchMode
     val cents = Similarity.kmeansFit(emb, "vec_id", "embedding", k = 8, iters = 3)
     val labeled = emb.withColumn("cluster",
@@ -242,18 +242,6 @@ class SimilaritySpec extends SparkSpec {
       s"expected a shuffle-hash probe join:\n$shufflePlan")
     assert(shufflePlan.split("\n").count(_.contains("BroadcastHashJoin")) == 0,
       s"the probe list must not broadcast in Unbounded mode:\n$shufflePlan")
-    // Measured: a threshold below |Q| must take the shuffle plan, a
-    // threshold above it the broadcast plan — same results either way
-    val measuredSmall = Similarity.ivfTopKFittedBigK(qs, labeled, "vec_id", "embedding",
-      "cluster", 5, 3, cents, QueryBatchMode.Measured(maxBroadcastQueries = 2))
-    assert(measuredSmall.queryExecution.executedPlan.toString.contains("ShuffledHashJoin"),
-      "Measured below |Q| must fall back to the shuffle probe join")
-    assert(ranks(measuredSmall) == ranks(viaBroadcast))
-    val measuredBig = Similarity.ivfTopKFittedBigK(qs, labeled, "vec_id", "embedding",
-      "cluster", 5, 3, cents, QueryBatchMode.Measured(maxBroadcastQueries = 1L << 20))
-    assert(measuredBig.queryExecution.executedPlan.toString
-        .split("\n").exists(_.contains("BroadcastHashJoin")),
-      "Measured above |Q| must keep the broadcast probe join")
     // the front door honors the mode too: ivfTopKFitted with Unbounded must
     // route to the shuffled-probe plan even BELOW LiteralCentroidMax (the
     // literal path broadcasts the probe list by construction, so it cannot
@@ -370,7 +358,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("semanticDedup drops planted near-dup copies, keeps min-id reps and all singletons") {
     val corpus = planted(emb) // every vector + a cos≈0.9997 copy at -id-1
-    val kept = Similarity.semanticDedup(corpus, "vec_id", "embedding", threshold = 0.9)
+    val kept = Similarity.semanticDedup(corpus, "vec_id", "embedding")
       .select("vec_id").as[Long].collect().toSet
     val pairs = Similarity.embeddingNearDupPairs(corpus, "vec_id", "embedding", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect()

@@ -555,7 +555,7 @@ class SourcesSinksSpec extends SparkSpec {
       (3L, patPng(baseA ^ 7L)), (10L, patPng(baseB))).toDF("id", "payload")
     val sig = graft.ops.Multimodal.imageAHash(df, "id")
       .select(col("id"), conv(col("ahash_hex"), 16, 10).cast("long").as("h"))
-    val got = graft.ops.Dedup.hammingNearDupPairs(sig, "id", "h", maxHamming = 3)
+    val got = graft.ops.Dedup.hammingNearDupPairs(sig, "id", "h")
       .as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
     // nested masks {0,1,3,7}: all 6 in-group pairs at hamming 1..3
     assert(got === Map((0L, 1L) -> 1, (0L, 2L) -> 2, (0L, 3L) -> 3,

@@ -61,4 +61,18 @@ object TempDirs {
 abstract class SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = TestSession.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Spark jobs submitted while `f` runs. The status store is fed by the
+    * listener bus, so the bus is drained before the first sample (in-flight
+    * events of earlier work would land inside the window) and after `f`
+    * (its own events can post after it returns).
+    */
+  def jobsRunBy(f: => Unit): Int = {
+    val st = spark.sparkContext.statusTracker
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    val before = st.getJobIdsForGroup(null).length
+    f
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    st.getJobIdsForGroup(null).length - before
+  }
 }

@@ -85,7 +85,7 @@ class TextPipelineSpec extends SparkSpec {
 
   test("repetitionSignals: dup and top-gram fractions on a constructed repeater") {
     val docs = Seq((1L, "a b a b a"), (2L, "w x y z")).toDF("doc_id", "text")
-    val got = TextAnalysis.repetitionSignals(docs, "doc_id", "text", n = 2)
+    val got = TextAnalysis.repetitionSignals(docs, "doc_id", "text")
       .select("doc_id", "n_grams", "n_distinct", "dup_frac", "top_frac")
       .as[(Long, Long, Long, Double, Double)].collect().map(r => r._1 -> r).toMap
     assert(got(1L) == ((1L, 4L, 2L, 0.5, 0.5))) // "a b","b a","a b","b a"
@@ -95,7 +95,7 @@ class TextPipelineSpec extends SparkSpec {
   test("contaminationScores: benchmark member scores 1.0, disjoint doc scores 0.0") {
     val corpus = Seq((1L, "p q r s t u"), (2L, "aa bb cc dd ee")).toDF("doc_id", "text")
     val bench = Seq((9L, "p q r s t u and more")).toDF("doc_id", "text")
-    val got = Dedup.contaminationScores(corpus, bench, "doc_id", "text", shingleN = 3)
+    val got = Dedup.contaminationScores(corpus, bench, "doc_id", "text")
       .select("doc_id", "contamination").as[(Long, Double)].collect().toMap
     assert(got(1L) == 1.0) // every 3-gram of doc 1 appears in the benchmark
     assert(got(2L) == 0.0)
@@ -230,8 +230,8 @@ class TextPipelineSpec extends SparkSpec {
   test("bloom-verified contamination EQUALS the exact path (sketch leaves the answer)") {
     val docs = Tables.load(spark, sf0001, "documents")
     val bench = docs.where($"doc_id" % 37 === 0)
-    val exact = Dedup.contaminationScores(docs, bench, "doc_id", "text", shingleN = 3)
-    val verified = Dedup.contaminationScoresBloomVerified(docs, bench, "doc_id", "text", shingleN = 3)
+    val exact = Dedup.contaminationScores(docs, bench, "doc_id", "text")
+    val verified = Dedup.contaminationScoresBloomVerified(docs, bench, "doc_id", "text")
     assert(verified.columns.toSeq == exact.columns.toSeq)
     val mismatches = exact.unionByName(verified)
       .groupBy("doc_id", "n_shingles", "n_contaminated", "contamination")
@@ -806,7 +806,7 @@ class TextPipelineSpec extends SparkSpec {
       (2L, "a b c x y z"),      // 'a b c' seen; 'b c x','c x y','x y z' novel -> 3/4
       (3L, "w q")               // < 3 tokens: no shingles, NULL novelty
     ).toDF("doc_id", "text")
-    val got = graft.ops.TextAnalysis.ngramNovelty(docs, "doc_id", "text", shingleN = 3)
+    val got = graft.ops.TextAnalysis.ngramNovelty(docs, "doc_id", "text")
       .orderBy($"doc_id")
       .as[(Long, Long, Long, Option[Long])].collect().toList
     assert(got === List(
