@@ -203,7 +203,8 @@ object Queries {
     * chain, generated from the same term count so the weights can never
     * drift from the Spark side.
     */
-  private[graft] def ewmaOracleSql(terms: Int): String = {
+  private[graft] def ewmaOracleSql: String = {
+    val terms = graft.ops.Analytics.EwmaTerms
     val num = (0 until terms).map { k =>
       s"COALESCE(lag(v_milli, $k) OVER w, 0) * ${1L << (terms - 1 - k)}"
     }.mkString(" + ")
@@ -732,8 +733,9 @@ object Queries {
     * ONE source of the md5-slice arithmetic, so the self-pair and
     * incremental variants can never desynchronize from each other.
     */
-  private def minhashCtePrefix(shingleN: Int, numHashes: Int, rowsPerBand: Int,
-                               from: String): String = {
+  private def minhashCtePrefix(from: String): String = {
+    import graft.ops.Dedup.{MinhashNumHashes => numHashes, MinhashRowsPerBand => rowsPerBand,
+      MinhashShingleN => shingleN}
     val shingleExpr = (0 until shingleN).map(j => s"toks[i + $j]").mkString(" || ' ' || ")
     val mhCols = (0 until numHashes)
       .map(s => s"min(substring(md5(shingle), ${s * 4 + 1}, 4)) AS mh$s").mkString(", ")
@@ -773,17 +775,15 @@ object Queries {
     * splits the documents table), never a self-join — mirroring
     * `Dedup.incrementalNearDupPairs` definitionally.
     */
-  def minhashIncrementalOracleSql(shingleN: Int, numHashes: Int, rowsPerBand: Int,
-                                  threshold: Double): String =
-    s"""${minhashCtePrefix(shingleN, numHashes, rowsPerBand, "documents")},
+  def minhashIncrementalOracleSql(threshold: Double): String =
+    s"""${minhashCtePrefix("documents")},
     cand AS (SELECT DISTINCT n.doc_id AS doc_new, o.doc_id AS doc_old
       FROM buckets n JOIN buckets o ON n.band = o.band AND n.bucket = o.bucket
       WHERE n.doc_id % 2 = 1 AND o.doc_id % 2 = 0),
     ${minhashVerifyTail("doc_new", "doc_old", threshold)}"""
 
-  def minhashOracleSql(shingleN: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
-                       from: String = "documents"): String =
-    s"""${minhashCtePrefix(shingleN, numHashes, rowsPerBand, from)},
+  def minhashOracleSql(threshold: Double, from: String = "documents"): String =
+    s"""${minhashCtePrefix(from)},
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM buckets a JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket
       WHERE a.doc_id < b.doc_id),
@@ -797,9 +797,8 @@ object Queries {
     * also share a shingle), so `n_missed` independently cross-checks
     * `n_exact − n_found`.
     */
-  def minhashRecallOracleSql(shingleN: Int, numHashes: Int, rowsPerBand: Int,
-                             threshold: Double): String =
-    s"""${minhashCtePrefix(shingleN, numHashes, rowsPerBand,
+  def minhashRecallOracleSql(threshold: Double): String =
+    s"""${minhashCtePrefix(
         """(SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0 AND doc_id < 2048
            UNION ALL SELECT doc_id + 1000000, text || ' closing boilerplate line appended'
            FROM documents WHERE doc_id % 5 = 0 AND doc_id < 2048) samp""")},
@@ -832,7 +831,7 @@ object Queries {
         AS recall_millionths
     FROM m"""
 
-  def simhashOracleSql(maxHamming: Int): String = {
+  def simhashOracleSql: String = {
     // mirrors Dedup.simhash60 definitionally: same 15-hex-char (60-bit) md5
     // prefix, parsed once to a BIGINT ('0x…'::BIGINT == Spark's conv(…,16,10)),
     // same bit-sum rule. The oracle verifies by brute O(N²) scan — the Spark
@@ -851,7 +850,7 @@ object Queries {
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
     FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= $maxHamming
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= ${graft.ops.Dedup.MaxHamming}
     ORDER BY doc_a, doc_b"""
   }
 }

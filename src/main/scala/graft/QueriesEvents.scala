@@ -659,8 +659,7 @@ private[graft] object QueriesEvents {
             (col("n_docs") - col("n_accepted")).as("n_dropped"), col("n_state_rows"))
           .orderBySmall(col("batch"))
       },
-      Some(streamNearDupOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2,
-        minAgree = 4, batches = 3, idBound = 1200))),
+      Some(streamNearDupOracleSql(minAgree = 4, batches = 3, idBound = 1200))),
   )
 
   /** DuckDB replay of [[graft.streaming.Streaming.nearDupFilterSink]]'s
@@ -674,8 +673,9 @@ private[graft] object QueriesEvents {
     * Heavily-referenced CTEs are MATERIALIZED — inlined re-expansion of
     * the signing pipeline measured >200× slower.
     */
-  private def streamNearDupOracleSql(shingleN: Int, numHashes: Int, rowsPerBand: Int,
-                                     minAgree: Int, batches: Int, idBound: Int): String = {
+  private def streamNearDupOracleSql(minAgree: Int, batches: Int, idBound: Int): String = {
+    import graft.ops.Dedup.{MinhashNumHashes => numHashes, MinhashRowsPerBand => rowsPerBand,
+      MinhashShingleN => shingleN}
     def agree(sa: String, sb: String) =
       "(" + (0 until numHashes)
         .map(i => s"(CASE WHEN $sa.mh$i = $sb.mh$i THEN 1 ELSE 0 END)")

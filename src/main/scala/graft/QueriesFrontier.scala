@@ -916,8 +916,7 @@ private[graft] object QueriesFrontier {
             expr("CAST(CASE WHEN n_exact > 0 THEN 1000000 * n_found div n_exact END AS BIGINT)")
               .as("recall_millionths"))
       },
-      Some(minhashRecallOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2,
-        threshold = 0.1))),
+      Some(minhashRecallOracleSql(threshold = 0.1))),
 
     QueryDef("op_mann_whitney",
       // nonparametric two-sample test: does quantity distribute

@@ -356,7 +356,7 @@ private[graft] object QueriesText {
           HAVING CAST(sum(CASE WHEN bn.shingle IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE) < 0.5),
         surv AS (SELECT d.doc_id, d.text FROM documents d
           JOIN rep ON d.doc_id = rep.doc_id JOIN cont ON d.doc_id = cont.doc_id),
-        mp AS (${minhashOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1, from = "surv")}),
+        mp AS (${minhashOracleSql(threshold = 0.1, from = "surv")}),
         e AS (SELECT doc_a AS src, doc_b AS dst FROM mp UNION SELECT doc_b, doc_a FROM mp),
         vs AS (SELECT DISTINCT src AS v FROM e),
         reach AS (
@@ -441,7 +441,7 @@ private[graft] object QueriesText {
             threshold = 0.1),
           "doc_a", "doc_b")
         .orderBy(col("doc_id")),
-      Some(s"""WITH RECURSIVE mp AS (${minhashOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1)}),
+      Some(s"""WITH RECURSIVE mp AS (${minhashOracleSql(threshold = 0.1)}),
         e AS (SELECT doc_a AS src, doc_b AS dst FROM mp UNION SELECT doc_b, doc_a FROM mp),
         vs AS (SELECT DISTINCT src AS v FROM e),
         reach AS (

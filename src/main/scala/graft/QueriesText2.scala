@@ -350,13 +350,13 @@ private[graft] object QueriesText2 {
       (s, d) => Dedup.minhashNearDupPairs(t(s, d, "documents"), "doc_id", "text",
           threshold = 0.1)
         .orderBy(col("doc_a"), col("doc_b")),
-      Some(minhashOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1))),
+      Some(minhashOracleSql(threshold = 0.1))),
 
     QueryDef("dedup_simhash",
       (s, d) => Dedup.simhashNearDupPairs(t(s, d, "documents"), "doc_id", "text")
         .select(col("doc_a"), col("doc_b"), col("hamming").cast("int").as("hamming"))
         .orderBy(col("doc_a"), col("doc_b")),
-      Some(simhashOracleSql(maxHamming = 3))),
+      Some(simhashOracleSql)),
 
     QueryDef("dedup_hamming_capped",
       // Bucket-width-cap certification for the hamming/simhash band family
@@ -766,8 +766,7 @@ private[graft] object QueriesText2 {
             "doc_id", "text", threshold = 0.1)
           .orderBy(col("doc_new"), col("doc_old"))
       },
-      Some(minhashIncrementalOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2,
-        threshold = 0.1))),
+      Some(minhashIncrementalOracleSql(threshold = 0.1))),
 
     QueryDef("pipeline_daily_batch",
       // the production daily-batch chain end to end: incoming batch (odd
@@ -789,7 +788,7 @@ private[graft] object QueriesText2 {
           .orderBySmall(col("split"))
       },
       Some(s"""WITH inc_pairs AS (
-          ${minhashIncrementalOracleSql(shingleN = 3, numHashes = 8, rowsPerBand = 2, threshold = 0.1)})
+          ${minhashIncrementalOracleSql(threshold = 0.1)})
         SELECT CASE
           WHEN ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
           WHEN ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'val'

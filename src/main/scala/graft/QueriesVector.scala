@@ -931,7 +931,7 @@ private[graft] object QueriesVector {
             col("ewma_num"), col("ewma"))
           .orderBy(col("user_id"), col("ts_us"), col("event_id"))
       },
-      Some(ewmaOracleSql(16))),
+      Some(ewmaOracleSql)),
 
     QueryDef("op_rank_normalize",
       // percent-rank normalization (the rank-gauss / quantile-transform

@@ -500,7 +500,8 @@ trait AnalyticsGraphOps extends AnalyticsBase {
       // near-uniform scores (each x·scale < Σx rounds to 0 the PREVIOUS
       // round, then this round's sum is 0 and `div` would yield NULL,
       // silently nulling every score). Fail loudly in-plan instead —
-      // no extra driver job; the fix is a larger `scale` (> node count).
+      // no extra driver job; the fix is a graph with fewer nodes than
+      // `scale`.
       // the UPPER bound gets the same in-plan fail-loudly treatment as the
       // Σx = 0 lower bound: x·scale wraps silently under ANSI-off once a
       // raw score exceeds Long.MaxValue/scale (a hub with in-degree
@@ -513,11 +514,11 @@ trait AnalyticsGraphOps extends AnalyticsBase {
             when(col(c) <= lit(Long.MaxValue / scale), expr(s"$c * ${scale}L div _s"))
               .otherwise(raise_error(lit(
                 "hitsFixedPoint: score * scale would overflow 64-bit — " +
-                  "lower `scale` (or split the hottest hubs) so raw scores stay " +
+                  "split the hottest hubs so raw scores stay " +
                   s"<= ${Long.MaxValue / scale}"))))
             .otherwise(raise_error(lit(
               "hitsFixedPoint: normalization sum collapsed to 0 — " +
-                "scale must exceed the node count for near-uniform graphs")))
+                s"a near-uniform graph must have fewer than $scale nodes (the fixed scale)")))
             .as(out))
         .graftCheckpoint(eager = false)
       lazyCps += norm

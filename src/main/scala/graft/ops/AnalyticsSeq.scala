@@ -98,9 +98,12 @@ trait AnalyticsSeqOps extends AnalyticsBase {
       .withColumn("roll_avg", col("roll_sum") / col("roll_n").cast("double"))
   }
 
-  /** Dyadic EWMA — exponential smoothing with α = 1/2 and a `terms` = 16
-    * term truncated tail, the anomaly-smoothing primitive with EXACT
-    * arithmetic: because the decay is a power of two and the input is
+  /** [[dyadicEwma]]'s term count; [[graft.Queries.ewmaOracleSql]] reads it too. */
+  private[graft] val EwmaTerms = 16
+
+  /** Dyadic EWMA — exponential smoothing with α = 1/2 and a `terms` =
+    * [[EwmaTerms]] term truncated tail, the anomaly-smoothing primitive
+    * with EXACT arithmetic: because the decay is a power of two and the input is
     * integral, the weighted numerator Σₖ v₍ᵢ₋ₖ₎·2^(terms−1−k) is a pure
     * BIGINT expression — no decimal-precision cliffs, no float summation
     * order, engine-identical to the last bit; the one double division at
@@ -115,7 +118,7 @@ trait AnalyticsSeqOps extends AnalyticsBase {
     */
   def dyadicEwma(df: DataFrame, key: Column, order: Seq[Column],
                  valueInt: Column, scaleDiv: Double = 1.0): DataFrame = {
-    val terms = 16
+    val terms = EwmaTerms
     val w = Window.partitionBy(key).orderBy(order: _*)
     val num = (0 until terms).map { k =>
       coalesce(lag(valueInt, k).over(w), lit(0L)) * lit(1L << (terms - 1 - k))

@@ -481,7 +481,7 @@ object Dedup {
     */
   private[graft] val MinhashShingleN = 3
   private[graft] val MinhashNumHashes = 8
-  private val MinhashRowsPerBand = 2
+  private[graft] val MinhashRowsPerBand = 2
 
   /** The LSH sign→bucket→verify chain over a prebuilt shingle table. The
     * caller owns the table's persistence — it is read by four consumers
@@ -552,7 +552,7 @@ object Dedup {
   /** The hamming radius of both banded pair generators: with 4 chunks,
     * pigeonhole guarantees a pair at hamming <= 3 shares a chunk.
     */
-  private val MaxHamming = 3
+  private[graft] val MaxHamming = 3
 
   /** The per-signature (k, chunk) bucket rows both the pair generator and
     * the oversized-bucket audit derive from — one definition so the two

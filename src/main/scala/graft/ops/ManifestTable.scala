@@ -37,7 +37,8 @@ import org.apache.spark.sql.types.StructType
   * schema DDL, so an empty table stays readable and reads skip footer
   * inference.
   *
-  * Semantics by operation:
+  * Semantics by operation (every one commits through one retry loop that
+  * re-reads the latest version per attempt):
   *  - `append`: new dirs = old dirs + one; conflicts retry cheaply (the
   *    data dir is already written; only the manifest CAS re-runs).
   *  - `overwrite`: new dirs = exactly one.
@@ -45,6 +46,11 @@ import org.apache.spark.sql.types.StructType
   *    conflict means the base snapshot changed, so the rewrite itself
   *    recomputes against the new snapshot before retrying — the result is
   *    always a serializable history.
+  *  - `deleteByKeys`: copy-on-write keyed DELETE; new dirs = the one
+  *    rewrite without the tombstoned keys, recomputed on a conflict like
+  *    `merge`'s.
+  *  - `compact`: new dirs = one rewrite of the same rows, recomputed on a
+  *    conflict like `merge`'s.
   *
   * `merge` and `deleteByKeys` rewrite every live dir: the callers' batches
   * span their key range (sha1 ids, key-modulus batches), so per-dir key
@@ -202,7 +208,7 @@ final class ManifestTable private (
     */
   def snapshotAt(version: Long): DataFrame = {
     val m = readManifest(version)
-    readDirs(m, m.dirs)
+    readDirs(m.schemaDdl, m.dirs)
   }
 
   /** CDC between two committed versions: full-row changes from `fromV` to
@@ -232,8 +238,8 @@ final class ManifestTable private (
     require(mFrom.schemaDdl == mTo.schemaDdl,
       s"ManifestTable $rootStr: diff across a schema change ($fromV [${mFrom.schemaDdl}] -> " +
         s"$toV [${mTo.schemaDdl}]) is not defined")
-    val before = readDirs(mFrom, mFrom.dirs)
-    val after = readDirs(mTo, mTo.dirs)
+    val before = readDirs(mFrom.schemaDdl, mFrom.dirs)
+    val after = readDirs(mTo.schemaDdl, mTo.dirs)
     require(!after.columns.map(_.toLowerCase).contains("_change"),
       s"ManifestTable $rootStr: diff reserves the _change column; the table already has one")
     val ins = after.exceptAll(before).withColumn("_change", lit("insert"))
@@ -241,8 +247,8 @@ final class ManifestTable private (
     ins.unionByName(del)
   }
 
-  private def readDirs(m: Manifest, dirs: Seq[String]): DataFrame = {
-    val schema = StructType.fromDDL(m.schemaDdl)
+  private def readDirs(schemaDdl: String, dirs: Seq[String]): DataFrame = {
+    val schema = StructType.fromDDL(schemaDdl)
     if (dirs.isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(dirs.map(d => new Path(dataDir, d).toString): _*)
@@ -251,9 +257,10 @@ final class ManifestTable private (
   // --------------------------------------------------------------- writes
 
   /** Replace the table contents atomically. Returns the committed version. */
-  def overwrite(df: DataFrame, maxRetries: Int = DefaultRetries): Long = {
+  def overwrite(df: DataFrame): Long = {
     val dir = writeData(df)
-    commitWithRetry(maxRetries, "overwrite", normDdl(df.schema), _ => Seq(dir))
+    val ddl = normDdl(df.schema)
+    commitLoop(DefaultRetries)(_ => Right(Commit("overwrite", ddl, Seq(dir))))._1
   }
 
   /** Append a batch atomically. The data is written once; only the manifest
@@ -263,21 +270,9 @@ final class ManifestTable private (
     * (or silently drop a column from the whole table) — `overwrite` is the
     * schema-changing operation. Returns the committed version.
     */
-  def append(df: DataFrame, maxRetries: Int = DefaultRetries): Long = {
-    val ddl = normDdl(df.schema)
-    // fail-fast BEFORE materializing the batch: a drifted schema is fully
-    // predictable from one (cached) manifest read, and failing after
-    // writeData costs a complete data write plus an orphan dir for vacuum.
-    // The in-callback require below stays authoritative under races (an
-    // interleaved overwrite can change the schema after this check).
-    latestVersion().map(readManifest).foreach(requireSameSchema(_, ddl))
-    val dir = writeData(df)
-    commitWithRetry(maxRetries, "append", ddl,
-      prev => {
-        prev.foreach(requireSameSchema(_, ddl))
-        prev.map(_.dirs).getOrElse(Seq.empty) :+ dir
-      })
-  }
+  def append(df: DataFrame, maxRetries: Int = DefaultRetries): Long =
+    appendBatch(df, latestVersion().map(readManifest), maxRetries, txn = None,
+      skipEmpty = false).get
 
   /** [[append]], except an EMPTY batch commits nothing (no version, no
     * empty dir) and returns None — the gate a per-trigger streaming sink
@@ -289,20 +284,9 @@ final class ManifestTable private (
     * deleted best-effort instead of committed. Versioning is identical to
     * the caller-side gate: empty triggers leave the log untouched.
     */
-  def appendNonEmpty(df: DataFrame, maxRetries: Int = DefaultRetries): Option[Long] = {
-    val ddl = normDdl(df.schema)
-    latestVersion().map(readManifest).foreach(requireSameSchema(_, ddl))
-    val obs = org.apache.spark.sql.Observation()
-    val dir = writeData(df.observe(obs, count(lit(1)).as("rows")))
-    if (obs.get("rows").asInstanceOf[Long] == 0L) {
-      bestEffortDelete(dir, "empty-batch dir")
-      None
-    } else Some(commitWithRetry(maxRetries, "append", ddl,
-      prev => {
-        prev.foreach(requireSameSchema(_, ddl))
-        prev.map(_.dirs).getOrElse(Seq.empty) :+ dir
-      }))
-  }
+  def appendNonEmpty(df: DataFrame): Option[Long] =
+    appendBatch(df, latestVersion().map(readManifest), DefaultRetries, txn = None,
+      skipEmpty = true)
 
   /** Exactly-once APPEND for a streaming sink: commit the batch atomically
     * WITH its `(sinkId, batchId)` transaction token, or recognize that this
@@ -320,43 +304,44 @@ final class ManifestTable private (
     * Streaming's epoch contract): "applied" means a token `>= batchId`
     * exists. Returns the version at which the batch is visible.
     */
-  def appendOnce(df: DataFrame, sinkId: String, batchId: Long,
-                 maxRetries: Int = DefaultRetries): Long = {
+  def appendOnce(df: DataFrame, sinkId: String, batchId: Long): Long = {
     require(sinkId.nonEmpty, "appendOnce: sinkId must be non-empty")
-    def appliedAt(base: Option[Long]): Boolean =
-      base.exists(v => readManifest(v).txns.get(sinkId).exists(_ >= batchId))
+    val txn = Some(sinkId -> batchId)
     // fast path BEFORE writing any data: a routine restart replay costs
     // one manifest read, not a parquet write + orphan delete
-    val first = latestVersion()
-    if (appliedAt(first)) return first.get
+    val first = latestVersion().map(readManifest)
+    if (applied(first, txn)) first.get.version
+    else appendBatch(df, first, DefaultRetries, txn, skipEmpty = false).get
+  }
+
+  /** The path every append shares. The schema is checked against `base`
+    * (the latest manifest the caller resolved) BEFORE the batch is
+    * written: a drifted schema is predictable from one cached manifest
+    * read, and failing after writeData costs a complete data write plus an
+    * orphan dir. The check inside the attempt stays authoritative under
+    * races (an interleaved overwrite can change the schema after the
+    * pre-check). The dir is written once and every attempt publishes it.
+    * With `skipEmpty`, a batch whose write observed no rows deletes its dir
+    * and commits nothing (None).
+    */
+  private def appendBatch(df: DataFrame, base: Option[Manifest], maxRetries: Int,
+                          txn: Option[(String, Long)], skipEmpty: Boolean): Option[Long] = {
     val ddl = normDdl(df.schema)
-    // same fail-fast-before-write rationale as append's pre-check
-    first.map(readManifest).foreach(requireSameSchema(_, ddl))
-    val dir = writeData(df)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion()
-      if (appliedAt(base)) {
-        // a racing attempt of the same batch won: our dir is an orphan
-        bestEffortDelete(dir, "duplicate-batch dir")
-        return base.get
+    base.foreach(requireSameSchema(_, ddl))
+    val obs = if (skipEmpty) Some(org.apache.spark.sql.Observation()) else None
+    val dir = writeData(obs.fold(df)(df.observe(_, count(lit(1)).as("rows"))))
+    if (obs.exists(o => observedRows(o)(readDirs(ddl, Seq(dir)).count()) == 0L)) {
+      bestEffortDelete(dir, "empty-batch dir")
+      None
+    } else {
+      val (v, published) = commitLoop(maxRetries, txn) { prev =>
+        prev.foreach(requireSameSchema(_, ddl))
+        Right(Commit("append", ddl, prev.fold(Seq.empty[String])(_.dirs) :+ dir))
       }
-      // parentGuard pins the dedup decision to the exact manifest this
-      // commit publishes on top of — check and commit are atomic under
-      // the CAS (one conditional PUT on the object-store log)
-      commitOnce("append", ddl,
-          prev => {
-            prev.foreach(requireSameSchema(_, ddl))
-            prev.map(_.dirs).getOrElse(Seq.empty) :+ dir
-          }, parentGuard = Some(base), txn = Some(sinkId -> batchId)) match {
-        case Some(v) => return v
-        case None =>
-          attempt += 1
-          if (attempt > maxRetries) failRetries(maxRetries)
-          Thread.sleep(RetrySleepMs * attempt)
-      }
+      // a racing attempt of the same batch won: our dir is an orphan
+      if (!published) bestEffortDelete(dir, "duplicate-batch dir")
+      Some(v)
     }
-    -1L // unreachable
   }
 
   /** The newest committed `batchId` for `sinkId`, if any — the recovery
@@ -387,15 +372,14 @@ final class ManifestTable private (
     * one of the batch's keys between the crash and the replay, re-merging
     * the stale batch would silently REVERT that writer's value. The token
     * makes the replay a provable no-op instead — checked against the exact
-    * manifest the commit lands on (parentGuard), so the decision and the
-    * commit are one conditional PUT. Returns the version at which the
-    * batch is visible; an empty batch commits neither rows nor its token,
-    * as in [[merge]].
+    * manifest the commit lands on, so the decision and the commit are one
+    * conditional PUT, and before any rewrite work is spent. Returns the
+    * version at which the batch is visible; an empty batch commits neither
+    * rows nor its token, as in [[merge]].
     */
-  def mergeOnce(updates: DataFrame, keys: Seq[String], sinkId: String, batchId: Long,
-                maxRetries: Int = DefaultRetries): Long = {
+  def mergeOnce(updates: DataFrame, keys: Seq[String], sinkId: String, batchId: Long): Long = {
     require(sinkId.nonEmpty, "mergeOnce: sinkId must be non-empty")
-    mergeCore(updates, keys, maxRetries, txn = Some(sinkId -> batchId))
+    mergeCore(updates, keys, DefaultRetries, txn = Some(sinkId -> batchId))
   }
 
   private def mergeCore(updates: DataFrame, keys: Seq[String], maxRetries: Int,
@@ -404,17 +388,7 @@ final class ManifestTable private (
     // ONE arbitrary row (dropDuplicates over no columns = global agg) or
     // crash opaquely inside the upsert's keys.reduce on a non-empty one
     require(keys.nonEmpty, "merge: at least one key column is required")
-    var attempt = 0
-    while (true) {
-      val base = latestVersion()
-      // the dedup check runs against the SAME base the commit is pinned to
-      // (and re-runs after every lost CAS): a racing attempt of this batch
-      // — or its first run, crashed after commit — is recognized here
-      // before any rewrite work is spent
-      txn.foreach { case (sid, b) =>
-        if (base.exists(v => readManifest(v).txns.get(sid).exists(_ >= b)))
-          return base.get
-      }
+    commitLoop(maxRetries, txn) { prev =>
       // the batch's row count rides its first write (one Observation per
       // attempt: each is single-use). Observed in the table's session: an
       // Observation completes only from executions in its own session, and
@@ -425,40 +399,16 @@ final class ManifestTable private (
       val obs = org.apache.spark.sql.Observation()
       val observed = org.apache.spark.sql.GraftBridge.inSession(updates, spark)
         .observe(obs, count(lit(1)).as("rows"))
-      val merged = base match {
+      val merged = prev match {
         case None => observed.dropDuplicates(keys)
-        case Some(v) =>
-          val m = readManifest(v)
-          Aggregates.upsert(readDirs(m, m.dirs), observed, keys)
+        case Some(m) => Aggregates.upsert(readDirs(m.schemaDdl, m.dirs), observed, keys)
       }
       val dir = writeData(merged)
-      // AQE replaces a stage it found empty, and the observation inside it
-      // goes missing with it: only then is emptiness probed, not assumed
-      val empty = obs.get.get("rows") match {
-        case Some(n) => n == 0L
-        case None => updates.isEmpty
-      }
-      if (empty) {
+      if (observedRows(obs)(updates.count()) == 0L) {
         bestEffortDelete(dir, "empty-batch dir")
-        return base.getOrElse(-1L)
-      }
-      // single-shot commit: a conflict must re-derive the merge input, not
-      // just re-CAS the same rewrite (that would silently drop the
-      // conflicting winner's rows)
-      commitOnce("merge", normDdl(merged.schema), _ => Seq(dir),
-          parentGuard = Some(base), txn = txn) match {
-        case Some(v) => return v
-        case None =>
-          // the losing attempt's rewrite dir is referenced by no manifest —
-          // delete it now rather than leaving a table-sized orphan per
-          // retry for vacuum to find
-          bestEffortDelete(dir, "conflict-losing dir")
-          attempt += 1
-          if (attempt > maxRetries) failRetries(maxRetries)
-          Thread.sleep(RetrySleepMs * attempt)
-      }
-    }
-    -1L // unreachable
+        Left(prev.fold(-1L)(_.version))
+      } else Right(Commit("merge", normDdl(merged.schema), Seq(dir), rewrite = true))
+    }._1
   }
 
   /** GDPR-style keyed DELETE through the same COW commit protocol:
@@ -469,43 +419,40 @@ final class ManifestTable private (
     * EMPTY tombstones return the current version without writing (no
     * empty-dir churn). Tombstones that match no row return it too: the
     * rows read and the rows kept ride the rewrite's own write as observed
-    * metrics (as in [[merge]]), and equal counts discard the rewrite.
+    * metrics (as in [[merge]]), and equal counts discard the rewrite. On a
+    * CAS conflict the rewrite is recomputed against the winner's snapshot.
     */
-  def deleteByKeys(tombstones: DataFrame, keys: Seq[String],
-                   maxRetries: Int = DefaultRetries): Long = {
+  def deleteByKeys(tombstones: DataFrame, keys: Seq[String]): Long = {
     require(keys.nonEmpty)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion()
-      base match {
-        case None => return -1L
-        case Some(v) =>
-          val m = readManifest(v)
-          // the emptiness probe and the anti join must read the SAME
-          // tombstones, so they are materialized once to a scratch dir.
-          // col with backticks, not selectExpr: a dotted/expression-like
-          // key name that merge accepts (Aggregates.upsert quotes exactly
-          // this way) must not be re-parsed as a nested-field path here
-          val tombSel = tombstones.select(keys.map(k => col(s"`$k`")): _*)
-            .dropDuplicates(keys)
-          val tombDir = writeData(tombSel, ScratchPrefix)
-          // schema pinned: an EMPTY tombstone batch can land zero data
-          // files, and a bare read would die on footer inference before the
-          // no-op early return below — plus the pin keeps the key types the
-          // anti-join condition was planned against (and skips a
-          // footer-inference round trip)
-          val tRead = spark.read.schema(tombSel.schema)
-            .parquet(new Path(dataDir, tombDir).toString)
-          // a delete with nothing to delete must be the advertised no-op —
-          // without this, empty tombstones rewrite the WHOLE table. One
-          // limit-1 probe over the just-written scratch bytes.
-          if (tRead.isEmpty) {
-            bestEffortDelete(tombDir, "tombstone scratch dir")
-            return v
-          }
+    commitLoop(DefaultRetries) {
+      case None => Left(-1L)
+      case Some(m) =>
+        // the emptiness probe and the anti join must read the SAME
+        // tombstones, so they are materialized once to a scratch dir.
+        // col with backticks, not selectExpr: a dotted/expression-like
+        // key name that merge accepts (Aggregates.upsert quotes exactly
+        // this way) must not be re-parsed as a nested-field path here
+        val tombSel = tombstones.select(keys.map(k => col(s"`$k`")): _*)
+          .dropDuplicates(keys)
+        val tombDir = writeData(tombSel, ScratchPrefix)
+        // schema pinned: an EMPTY tombstone batch can land zero data
+        // files, and a bare read would die on footer inference before the
+        // no-op return below — plus the pin keeps the key types the
+        // anti-join condition was planned against (and skips a
+        // footer-inference round trip)
+        val tRead = spark.read.schema(tombSel.schema)
+          .parquet(new Path(dataDir, tombDir).toString)
+        // a delete with nothing to delete must be the advertised no-op —
+        // without this, empty tombstones rewrite the WHOLE table. One
+        // limit-1 probe over the just-written scratch bytes.
+        if (tRead.isEmpty) {
+          bestEffortDelete(tombDir, "tombstone scratch dir")
+          Left(m.version)
+        } else {
           val read = org.apache.spark.sql.Observation()
           val kept = org.apache.spark.sql.Observation()
-          val src = readDirs(m, m.dirs).observe(read, count(lit(1)).as("rows")).alias("_del_b")
+          val src = readDirs(m.schemaDdl, m.dirs).observe(read, count(lit(1)).as("rows"))
+            .alias("_del_b")
           // NULL-SAFE anti join (the Aggregates.upsert convention): with
           // plain equality a null-key tombstone never matches a null-key
           // row, so a delete that reported success would silently leave
@@ -517,26 +464,13 @@ final class ManifestTable private (
           val remaining = src.join(tomb, cond, "left_anti")
           val dir = writeData(remaining.observe(kept, count(lit(1)).as("rows")))
           bestEffortDelete(tombDir, "tombstone scratch dir")
-          // AQE replaces a stage it found empty, and the observation inside
-          // it goes missing with it: only then are the rows counted, not
-          // observed
-          def rows(obs: org.apache.spark.sql.Observation, dirs: Seq[String]): Long =
-            obs.get.get("rows").fold(readDirs(m, dirs).count())(_.asInstanceOf[Long])
-          if (rows(read, m.dirs) == rows(kept, Seq(dir))) {
+          if (observedRows(read)(readDirs(m.schemaDdl, m.dirs).count()) ==
+                observedRows(kept)(readDirs(m.schemaDdl, Seq(dir)).count())) {
             bestEffortDelete(dir, "unchanged delete dir")
-            return v
-          }
-          commitOnce("delete", m.schemaDdl, _ => Seq(dir), parentGuard = Some(base)) match {
-            case Some(nv) => return nv
-            case None =>
-              bestEffortDelete(dir, "conflict-losing delete dir")
-              attempt += 1
-              if (attempt > maxRetries) failRetries(maxRetries)
-              Thread.sleep(RetrySleepMs * attempt)
-          }
-      }
-    }
-    -1L // unreachable
+            Left(m.version)
+          } else Right(Commit("delete", m.schemaDdl, Seq(dir), rewrite = true))
+        }
+    }._1
   }
 
   /** Number of data dirs the latest version's manifest references — the
@@ -556,35 +490,20 @@ final class ManifestTable private (
     * a dir and small files accumulate without bound. The rows are
     * byte-identical (readers cannot observe a compaction except through
     * version numbers); prior versions still time-travel until [[vacuum]]
-    * reclaims their dirs. Committed with a parent guard like [[merge]]: a
-    * concurrent append/merge wins the CAS and the compaction RECOMPUTES
-    * from the winner's snapshot — never discards the winner's rows. Size
-    * `numFiles` at ~128-256 MB/file for the real table. Returns the
-    * committed version, or -1 when there is nothing to compact (empty
-    * table or a single dir already).
+    * reclaims their dirs. Like [[merge]], a concurrent append/merge wins
+    * the CAS and the compaction RECOMPUTES from the winner's snapshot —
+    * never discards the winner's rows. Size `numFiles` at ~128-256 MB/file
+    * for the real table. Returns the committed version, or -1 when there
+    * is nothing to compact (empty table or a single dir already).
     */
-  def compact(numFiles: Int = 1, maxRetries: Int = DefaultRetries): Long = {
+  def compact(numFiles: Int = 1): Long = {
     require(numFiles >= 1)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion()
-      base match {
-        case None => return -1L
-        case Some(v) =>
-          val m = readManifest(v)
-          if (m.dirs.length < 2) return -1L
-          val dir = writeData(readDirs(m, m.dirs).coalesce(numFiles))
-          commitOnce("compact", m.schemaDdl, _ => Seq(dir), parentGuard = Some(base)) match {
-            case Some(nv) => return nv
-            case None =>
-              bestEffortDelete(dir, "conflict-losing compaction dir")
-              attempt += 1
-              if (attempt > maxRetries) failRetries(maxRetries)
-              Thread.sleep(RetrySleepMs * attempt)
-          }
-      }
-    }
-    -1L // unreachable
+    commitLoop(DefaultRetries) {
+      case Some(m) if m.dirs.length >= 2 =>
+        val dir = writeData(readDirs(m.schemaDdl, m.dirs).coalesce(numFiles))
+        Right(Commit("compact", m.schemaDdl, Seq(dir), rewrite = true))
+      case _ => Left(-1L)
+    }._1
   }
 
   /** Delete data directories not referenced by the newest `retainLast`
@@ -680,50 +599,73 @@ final class ManifestTable private (
     dir
   }
 
-  private def commitWithRetry(maxRetries: Int, action: String, schemaDdl: String,
-                              dirs: Option[Manifest] => Seq[String]): Long = {
-    var attempt = 0
+  /** The commit loop every write goes through. Each attempt resolves the
+    * latest version and its manifest, returns that version if it already
+    * carries `txn`'s token (a replayed batch), and otherwise asks `attempt`
+    * what to publish on top of it: `Left(v)` ends the write without a
+    * commit, `Right(c)` is published with one conditional PUT. The token
+    * check, the attempt and the PUT all read the SAME base manifest, so
+    * the dedup decision and the commit are atomic under the CAS. A lost
+    * race deletes the attempt's rewrite dir (no manifest references it —
+    * leaving it would cost a table-sized orphan per retry), backs off and
+    * re-derives from the winner's snapshot: a rewrite must be recomputed,
+    * never re-published, or it would silently drop the winner's rows.
+    * Returns the version and whether this call published it.
+    */
+  private def commitLoop(maxRetries: Int, txn: Option[(String, Long)] = None)(
+      attempt: Option[Manifest] => Either[Long, Commit]): (Long, Boolean) = {
+    var retries = 0
     while (true) {
-      commitOnce(action, schemaDdl, dirs, parentGuard = None) match {
-        case Some(v) => return v
-        case None =>
-          attempt += 1
-          if (attempt > maxRetries) failRetries(maxRetries)
-          Thread.sleep(RetrySleepMs * attempt)
+      val prev = latestVersion().map(readManifest)
+      if (applied(prev, txn)) return (prev.get.version, false)
+      attempt(prev) match {
+        case Left(v) => return (v, false)
+        case Right(c) => commitOnce(prev, c, txn) match {
+          case Some(v) => return (v, true)
+          case None =>
+            if (c.rewrite) bestEffortDelete(c.dirs.head, "conflict-losing dir")
+            retries += 1
+            if (retries > maxRetries) failRetries(maxRetries)
+            Thread.sleep(RetrySleepMs * retries)
+        }
       }
     }
-    -1L // unreachable
+    (-1L, false) // unreachable
   }
 
-  /** One CAS attempt at version latest+1. None = lost the race (or, with a
-    * `parentGuard`, the latest version is no longer the guarded one —
-    * including a fresh table that gained its first commit): re-derive and
-    * retry. `parentGuard = Some(p)` means "commit only on top of exactly
-    * p"; plain None means "on top of whatever is latest".
+  /** Whether `prev` already carries `txn`'s token or a later one for the
+    * same sink.
     */
-  private def commitOnce(action: String, schemaDdl: String,
-                         dirs: Option[Manifest] => Seq[String],
-                         parentGuard: Option[Option[Long]],
-                         txn: Option[(String, Long)] = None): Option[Long] = {
-    // a guarded commit trusts the caller's just-read latest instead of
-    // re-LISTing (halving LIST traffic on the billed path): versions are
-    // DENSE (next = latest+1 always), so if the real latest has moved past
-    // the guard, guarded+1 already exists and the conditional PUT itself
-    // rejects the attempt — the CAS is the staleness check
-    val prevV = parentGuard.getOrElse(latestVersion())
-    val prev = prevV.map(readManifest)
-    val next = prevV.getOrElse(-1L) + 1
-    // everything that can fail for non-race reasons (schema validation in
-    // the callback, manifest assembly) happens BEFORE the publish
-    val allDirs = dirs(prev)
+  private def applied(prev: Option[Manifest], txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (sid, b) => prev.exists(_.txns.get(sid).exists(_ >= b)) }
+
+  /** A write's row count observed as metric "rows", or `orElse` when the
+    * observation went missing: AQE replaces a stage it found empty, and an
+    * observation inside it goes missing with it, so only then are the
+    * rows counted another way.
+    */
+  private def observedRows(obs: org.apache.spark.sql.Observation)(orElse: => Long): Long =
+    obs.get.get("rows").fold(orElse)(_.asInstanceOf[Long])
+
+  /** One CAS attempt: publish `c` as the version after `prev` (version 0
+    * on a fresh table), carrying `prev`'s tokens plus `txn`. None = lost
+    * the race: `prev` is no longer the latest. The caller's just-read base
+    * is trusted instead of re-listing: versions are DENSE (next = latest+1
+    * always), so if the real latest has moved past `prev`, the next
+    * version already exists and the conditional PUT itself rejects the
+    * attempt — the CAS is the staleness check.
+    */
+  private def commitOnce(prev: Option[Manifest], c: Commit,
+                         txn: Option[(String, Long)]): Option[Long] = {
+    val next = prev.fold(0L)(_.version + 1)
     val body = new StringBuilder()
       .append(Magic).append('\n')
       .append(s"version=$next\n")
-      .append(s"action=$action\n")
+      .append(s"action=${c.action}\n")
       // URL-encoded: a backticked column name may legally contain a newline,
       // which would otherwise corrupt the line-oriented manifest
-      .append(s"schema=${enc(schemaDdl)}\n")
-    allDirs.foreach(d => body.append(s"dir=$d\n"))
+      .append(s"schema=${enc(c.schemaDdl)}\n")
+    c.dirs.foreach(d => body.append(s"dir=$d\n"))
     // transaction tokens survive every commit (any action, any writer):
     // an exactly-once sink's dedup lookup is O(1) on the latest manifest.
     // Sorted for a deterministic body; writer uniqueness for the
@@ -733,7 +675,7 @@ final class ManifestTable private (
       body.append(s"txn=${enc(sid)}|$b\n")
     }
     val bodyBytes = body.toString.getBytes(UTF_8)
-    // lost the race: the retry loop re-lands here until retries exhaust
+    // lost the race: the commit loop re-derives and retries
     if (!log.publishIfAbsent(next, bodyBytes)) return None
     // warm the cache with the EXACT published bytes: the committer's own
     // follow-up reads (a streaming sink's replay token check, the next
@@ -769,15 +711,15 @@ final class ManifestTable private (
   private def failRetries(maxRetries: Int): Nothing =
     throw new java.io.IOException(
       s"ManifestTable $rootStr: commit failed after $maxRetries retries; live writers " +
-        "kept winning each version — raise maxRetries or shard writers")
+        "kept winning each version — shard writers")
 
   /** Published manifests are IMMUTABLE (the whole commit protocol rests on
     * it: a version is one conditional PUT, never rewritten), so parsed
     * manifests cache safely per table handle. This matters on an object
-    * store, where one mergeOnce attempt would otherwise GET the same
-    * latest manifest three times (token check, merge-input read,
-    * commitOnce's own read) per CAS attempt — each a real-latency, billed
-    * request. Bounded: a long-lived handle over many
+    * store, where a write would otherwise GET the same latest manifest
+    * again for its schema pre-check, each commit attempt, a replay's
+    * token check and the snapshot that follows — each a real-latency,
+    * billed request. Bounded: a long-lived handle over many
     * versions clears rather than grows.
     */
   private val manifestCache =
@@ -850,6 +792,13 @@ object ManifestTable {
   private final case class Manifest(
       version: Long, action: String, schemaDdl: String, dirs: Seq[String],
       txns: Map[String, Long] = Map.empty)
+
+  /** What one commit attempt publishes: the manifest's action, schema and
+    * live dirs. `rewrite` marks `dirs` as the attempt's own rewrite, which
+    * a lost race deletes (an append's dir is written once and re-published).
+    */
+  private final case class Commit(
+      action: String, schemaDdl: String, dirs: Seq[String], rewrite: Boolean = false)
 
   private def enc(s: String): String = URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String = URLDecoder.decode(s, "UTF-8")

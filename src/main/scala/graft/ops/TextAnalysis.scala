@@ -653,7 +653,8 @@ object TextAnalysis {
         raise_error(concat(lit("removeDupWindowSpans: negative id "), col(idCol))))
       .when(col(idCol).cast("long") >= Long.MaxValue / maxDocTokens,
         raise_error(concat(lit("removeDupWindowSpans: id "), col(idCol),
-          lit(s" would overflow the id*$maxDocTokens occurrence key — lower maxDocTokens or re-key"))))
+          lit(s" would overflow the id*$maxDocTokens occurrence key — re-key ids below " +
+            s"${Long.MaxValue / maxDocTokens}"))))
       .when(size(col("_t")) >= maxDocTokens,
         raise_error(concat(lit(s"removeDupWindowSpans: doc of "), size(col("_t")),
           lit(s" tokens exceeds maxDocTokens=$maxDocTokens"))))

@@ -582,6 +582,44 @@ class ManifestTableSpec extends SparkSpec {
     assert(client.putAttempts >= 13)
   }
 
+  test("object-store log: each guarded write that loses one race re-derives on top of the winner, leaving no orphan") {
+    // table: v0 = {1, 2}, v1 = {3} (two dirs, so compact has work). On the
+    // write's first PUT of v2, a second handle on the same client commits
+    // a foreign append {9} at v2 first; the write must land at v3 on top
+    // of it (overwrite replaces it, as overwrite does)
+    val foreignRow = 9L -> 9.0
+    val cases: Seq[(String, ManifestTable => Long, List[(Long, Double)])] = Seq(
+      ("overwrite", _.overwrite(kv(5L -> 5.0)), List(5L -> 5.0)),
+      ("appendOnce", _.appendOnce(kv(5L -> 5.0), "s", 0L),
+        List(1L -> 1.0, 2L -> 2.0, 3L -> 3.0, 5L -> 5.0, foreignRow)),
+      ("mergeOnce", _.mergeOnce(kv(2L -> 20.0, 5L -> 5.0), Seq("k"), "s", 0L),
+        List(1L -> 1.0, 2L -> 20.0, 3L -> 3.0, 5L -> 5.0, foreignRow)),
+      ("deleteByKeys", _.deleteByKeys(Seq(2L).toDF("k"), Seq("k")),
+        List(1L -> 1.0, 3L -> 3.0, foreignRow)),
+      ("compact", _.compact(), List(1L -> 1.0, 2L -> 2.0, 3L -> 3.0, foreignRow)))
+    for ((name, write, expected) <- cases) {
+      val (t, client, root) = objectStoreTable()
+      t.overwrite(kv(1L -> 1.0, 2L -> 2.0))
+      t.append(kv(3L -> 3.0))
+      val foreign = ManifestTable.onObjectStore(spark, root, client)
+      var raced = false
+      client.putFault = (key, n) => {
+        if (key.endsWith("v00000000000000000002.txt") && n == 1) {
+          assert(foreign.append(kv(foreignRow)) == 2L)
+          raced = true
+        }
+        InMemoryObjectStore.Ok
+      }
+      assert(write(t) == 3L, s"$name must commit on top of the winner")
+      assert(raced, s"$name never reached the conditional PUT of v2")
+      assert(t.versions() == (0L to 3L), s"$name: versions must stay contiguous")
+      assert(t.snapshotAt(2L).where($"k" === foreignRow._1).count() == 1L)
+      assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList == expected, name)
+      assert(t.vacuum(retainLast = t.versions().length, graceMs = 0).isEmpty,
+        s"$name left an orphan data dir")
+    }
+  }
+
   test("object-store log: transient 503 before commit — the same append call retries and lands") {
     val (t, client, _) = objectStoreTable()
     t.overwrite(kv(1L -> 1.0))
