@@ -339,7 +339,7 @@ private[graft] object QueriesRelational {
         for (i <- 0 until 5)
           mt.append(docs.where(col("doc_id") % 5 === i))
         val dirsBefore = mt.dirCount()
-        mt.compact(numFiles = 1)
+        mt.compact()
         val dirsAfter = mt.dirCount()
         mt.snapshot()
           .groupBy(col("source"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,12 +15,22 @@ object Aggregates {
     * (SURVEY.md §7.4.2).
     */
   def dedupFirst(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+    // quoted as in [[upsert]]: a dotted key names a column, not a field path
+    val w = Window.partitionBy(keys.map(k => col(s"`$k`")): _*).orderBy(order: _*)
     // collision-safe helper name: withColumn REPLACES an existing column,
     // so a hardcoded "_rn" would silently drop a business column of that
     // name from the output
     val rn = Iterator.from(0).map(i => s"_rn$i").filterNot(df.columns.contains).next()
     df.withColumn(rn, row_number().over(w)).where(col(rn) === 1).drop(rn)
+  }
+
+  /** The in-batch duplicate rule of every keyed write, described at [[upsert]]. */
+  private[graft] def dedupByContent(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val order = df.schema.fields.collect {
+      case f if !keys.contains(f.name) && RowOrdering.isOrderable(f.dataType) =>
+        col(s"`${f.name}`").asc_nulls_last
+    }
+    if (order.isEmpty) df.dropDuplicates(keys) else dedupFirst(df, keys, order.toSeq)
   }
 
   /** MERGE/upsert semantics relationally: rows of `updates` replace
@@ -30,17 +41,13 @@ object Aggregates {
     * bucketed on the key (`Sinks.bucketedTable`) the base side's exchange
     * disappears entirely.
     *
-    * Duplicate keys WITHIN `updates` are resolved ANY-WINS
-    * (`dropDuplicates` on the keys) so the result upholds the MERGE
-    * invariant of at most one surviving row per key — a SQL MERGE would
-    * raise on a multi-match; a relational emulation can't detect it
-    * without an extra aggregation. Which duplicate survives is
-    * partitioning-dependent (NOT deterministic across runs): callers
-    * needing a specific or reproducible winner must pre-reduce with
-    * [[dedupFirst]] and an explicit order.
+    * Duplicate keys WITHIN `updates` keep one row, the first when the key's
+    * rows are ordered on every orderable non-key column ascending, nulls
+    * last: rows that differ in content never tie, so the survivor does not
+    * depend on partitioning. Rows differing only in map-typed columns tie.
     */
   def upsert(base: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
-    val u = updates.dropDuplicates(keys)
+    val u = dedupByContent(updates, keys)
     // NULL-SAFE anti join: with plain equality a null-key base row never
     // matches a null-key update, so BOTH would survive the union — two
     // rows for one key, violating the MERGE invariant. `<=>` treats null
@@ -62,15 +69,14 @@ object Aggregates {
   /** Op 18 — idempotent append: `INSERT ... ON CONFLICT DO NOTHING`
     * (global_dag.py:144, PK at create_death_table.sql:5). Returns only the
     * batch rows whose keys are absent from the existing sink, deduplicated
-    * within the batch; appending the result is a no-op on re-run. The
-    * anti-join is NULL-SAFE (the upsert convention): a plain-equality
-    * anti-join never matches a null-keyed batch row against an existing
-    * null-keyed sink row, so every re-run would re-emit — and the sinks
-    * built on this would re-append — the null-key row, breaking the
-    * documented no-op contract.
+    * within the batch by [[upsert]]'s rule; appending the result is a no-op
+    * on re-run. The anti-join is NULL-SAFE (the upsert convention): a
+    * plain-equality anti-join never matches a null-keyed batch row against
+    * an existing null-keyed sink row, so every re-run would re-emit — and
+    * the sinks built on this would re-append — the null-key row.
     */
   def idempotentNewRows(batch: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame = {
-    val b = batch.dropDuplicates(keys).alias("_inr_b")
+    val b = dedupByContent(batch, keys).alias("_inr_b")
     val e = existing.select(keys.map(k => col(s"`$k`")): _*).alias("_inr_e")
     val cond = keys.map(k => col(s"_inr_b.`$k`") <=> col(s"_inr_e.`$k`"))
       .reduce(_ && _)

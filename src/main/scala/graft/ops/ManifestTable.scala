@@ -352,9 +352,10 @@ final class ManifestTable private (
 
   /** Copy-on-write MERGE: last-write-wins upsert of `updates` by `keys`
     * (exactly [[Aggregates.upsert]]'s semantics, including null-safe key
-    * matching), committed atomically. Every live dir is rewritten (see
-    * class doc). On a CAS conflict the rewrite is recomputed against the
-    * winner's snapshot. Returns the committed version.
+    * matching and its in-batch rule: the smallest row by content survives,
+    * on a fresh table too), committed atomically. Every live dir is
+    * rewritten (see class doc). On a CAS conflict the rewrite is
+    * recomputed against the winner's snapshot. Returns the committed version.
     *
     * An EMPTY batch commits nothing — no version, no data dir — and
     * returns the current version (-1 on a table with no commits), like
@@ -385,7 +386,7 @@ final class ManifestTable private (
   private def mergeCore(updates: DataFrame, keys: Seq[String], maxRetries: Int,
                         txn: Option[(String, Long)]): Long = {
     // empty keys would silently collapse a fresh table's first commit to
-    // ONE arbitrary row (dropDuplicates over no columns = global agg) or
+    // ONE row (a dedup over no key columns is one global group) or
     // crash opaquely inside the upsert's keys.reduce on a non-empty one
     require(keys.nonEmpty, "merge: at least one key column is required")
     commitLoop(maxRetries, txn) { prev =>
@@ -400,7 +401,7 @@ final class ManifestTable private (
       val observed = org.apache.spark.sql.GraftBridge.inSession(updates, spark)
         .observe(obs, count(lit(1)).as("rows"))
       val merged = prev match {
-        case None => observed.dropDuplicates(keys)
+        case None => Aggregates.dedupByContent(observed, keys)
         case Some(m) => Aggregates.upsert(readDirs(m.schemaDdl, m.dirs), observed, keys)
       }
       val dir = writeData(merged)
@@ -432,8 +433,7 @@ final class ManifestTable private (
         // col with backticks, not selectExpr: a dotted/expression-like
         // key name that merge accepts (Aggregates.upsert quotes exactly
         // this way) must not be re-parsed as a nested-field path here
-        val tombSel = tombstones.select(keys.map(k => col(s"`$k`")): _*)
-          .dropDuplicates(keys)
+        val tombSel = tombstones.select(keys.map(k => col(s"`$k`")): _*).distinct()
         val tombDir = writeData(tombSel, ScratchPrefix)
         // schema pinned: an EMPTY tombstone batch can land zero data
         // files, and a bare read would die on footer inference before the
@@ -485,22 +485,24 @@ final class ManifestTable private (
   }
 
   /** OPTIMIZE-style compaction: rewrites the whole current dir set into
-    * `numFiles` balanced files committed as ONE dir — the maintenance
-    * operation an append-per-trigger table needs, since every append adds
+    * balanced files of ~128 MiB (at least one) committed as ONE dir — the
+    * maintenance an append-per-trigger table needs, since every append adds
     * a dir and small files accumulate without bound. The rows are
     * byte-identical (readers cannot observe a compaction except through
     * version numbers); prior versions still time-travel until [[vacuum]]
     * reclaims their dirs. Like [[merge]], a concurrent append/merge wins
     * the CAS and the compaction RECOMPUTES from the winner's snapshot —
-    * never discards the winner's rows. Size `numFiles` at ~128-256 MB/file
-    * for the real table. Returns the committed version, or -1 when there
-    * is nothing to compact (empty table or a single dir already).
+    * never discards the winner's rows. Returns the committed version, or -1
+    * when there is nothing to compact (empty table or a single dir already).
     */
-  def compact(numFiles: Int = 1): Long = {
-    require(numFiles >= 1)
+  def compact(): Long = {
     commitLoop(DefaultRetries) {
       case Some(m) if m.dirs.length >= 2 =>
-        val dir = writeData(readDirs(m.schemaDdl, m.dirs).coalesce(numFiles))
+        val src = readDirs(m.schemaDdl, m.dirs)
+        // sized by the file index the read already listed: no extra job
+        val bytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
+        val files = ((bytes + CompactFileBytes - 1) / CompactFileBytes).max(1).toInt
+        val dir = writeData(src.coalesce(files))
         Right(Commit("compact", m.schemaDdl, Seq(dir), rewrite = true))
       case _ => Left(-1L)
     }._1
@@ -788,6 +790,7 @@ object ManifestTable {
   // operation's leaked scratch still collects, just later).
   private val ScratchPrefix = "scratch-"
   private val ScratchVacuumGraceMs = 24 * 60 * 60 * 1000L
+  private val CompactFileBytes = 128L << 20
 
   private final case class Manifest(
       version: Long, action: String, schemaDdl: String, dirs: Seq[String],

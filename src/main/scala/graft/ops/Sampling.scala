@@ -104,19 +104,6 @@ object Sampling {
     conv(substring(md5(key.cast("string")), 1, 13), 16, 10).cast("double") /
       lit((1L << 52).toDouble)
 
-  /** Token-budget corpus mixture — the "sample each source to hit a target
-    * token composition" step of assembling a training mix. Each source s
-    * with mixture weight w_s is kept at rate
-    * `r_s = min(1, budget·w_s / tokens_s)`, i.i.d. per row by [[hashUnit]]
-    * of the row key, so the expected kept token mass is budget·w_s (capped
-    * by what the source has — an undersized source keeps everything rather
-    * than inventing data). Sources without a weight are dropped.
-    *
-    * Scale shape: one map-side partial aggregation for the per-source token
-    * totals (source cardinality is metadata-small), broadcast back, then a
-    * pure filter — the corpus itself never shuffles, and the decision is
-    * reproducible row-for-row across runs, engines, and repartitionings.
-    */
   /** Temperature-flattened source mixture (the XLM-R / GPT-3 α-sampling
     * standard for balancing multilingual / multi-source corpora): target
     * share p_s ∝ n_s^α over the measured per-source token masses, then the
@@ -173,6 +160,19 @@ object Sampling {
     docs.where(hashUnit(key) < rate)
   }
 
+  /** Token-budget corpus mixture — the "sample each source to hit a target
+    * token composition" step of assembling a training mix. Each source s
+    * with mixture weight w_s is kept at rate
+    * `r_s = min(1, budget·w_s / tokens_s)`, i.i.d. per row by [[hashUnit]]
+    * of the row key, so the expected kept token mass is budget·w_s (capped
+    * by what the source has — an undersized source keeps everything rather
+    * than inventing data). Sources without a weight are dropped.
+    *
+    * Scale shape: one map-side partial aggregation for the per-source token
+    * totals (source cardinality is metadata-small), broadcast back, then a
+    * pure filter — the corpus itself never shuffles, and the decision is
+    * reproducible row-for-row across runs, engines, and repartitionings.
+    */
   def mixByTokenBudget(docs: DataFrame, key: Column, source: Column, tokensCol: Column,
                        weights: Map[String, Double], tokenBudget: Long): DataFrame = {
     require(weights.values.forall(_ >= 0), "mixture weights must be nonnegative")

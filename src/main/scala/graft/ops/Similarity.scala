@@ -655,18 +655,6 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** kNN classification composed from [[bruteForceTopK]] (the
-    * label-propagation serving shape): top-k cosine neighbors per query,
-    * majority vote with a fully deterministic tie-break — max votes, then
-    * SMALLEST label — folded in ONE `max(struct)` aggregation (no window
-    * pass). Output: (query_id, pred_label, votes).
-    *
-    * Scale: the neighbor-label join and the two vote aggregations are
-    * sort-merge/partial-aggregable over the |Q|·k candidate table; the
-    * corpus itself only streams through the top-k scan. Bounded-|Q|
-    * contract inherited from [[bruteForceTopK]]; swap the first stage for
-    * [[ivfTopK]]/[[pqAdcTopK]] shortlists when |Q| is corpus-scale.
-    */
   /** Embedding-distribution drift between two cohorts (model/data
     * monitoring: did this week's embeddings move?): per label, the cosine
     * between the two cohorts' centroid directions, computed ENTIRELY in
@@ -736,6 +724,18 @@ object Similarity {
         col("_n.r").as("neg_rank"), col("_n.id").as("neg_id"))
   }
 
+  /** kNN classification composed from [[bruteForceTopK]] (the
+    * label-propagation serving shape): top-k cosine neighbors per query,
+    * majority vote with a fully deterministic tie-break — max votes, then
+    * SMALLEST label — folded in ONE `max(struct)` aggregation (no window
+    * pass). Output: (query_id, pred_label, votes).
+    *
+    * Scale: the neighbor-label join and the two vote aggregations are
+    * sort-merge/partial-aggregable over the |Q|·k candidate table; the
+    * corpus itself only streams through the top-k scan. Bounded-|Q|
+    * contract inherited from [[bruteForceTopK]]; swap the first stage for
+    * [[ivfTopK]]/[[pqAdcTopK]] shortlists when |Q| is corpus-scale.
+    */
   def knnClassify(queries: DataFrame, corpus: DataFrame, idCol: String,
                   vecCol: String, labelCol: String, k: Int): DataFrame = {
     val topk = bruteForceTopK(queries, corpus, idCol, vecCol, k)

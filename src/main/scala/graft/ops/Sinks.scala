@@ -27,8 +27,9 @@ object Sinks {
     if (df.isEmpty) false else { write(df); true }
 
   /** Ops 18+24+25 — idempotent append to a parquet table: dedup within the
-    * batch, anti-join against the existing table on the key (the PK +
-    * `ON CONFLICT DO NOTHING` semantics), append only the new rows.
+    * batch by content ([[Aggregates.upsert]]'s rule), anti-join against the
+    * existing table on the key (the PK + `ON CONFLICT DO NOTHING`
+    * semantics), append only the new rows.
     * Re-running with the same batch is a no-op. Creates the table on first
     * write (op 25's CREATE IF NOT EXISTS).
     *
@@ -55,7 +56,7 @@ object Sinks {
     val newRows =
       (if (existsNonEmpty(spark, path))
         Aggregates.idempotentNewRows(batch, spark.read.schema(batch.schema).parquet(path), keys)
-      else batch.dropDuplicates(keys))
+      else Aggregates.dedupByContent(batch, keys))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // persist so the count and the write share one evaluation of the
@@ -84,7 +85,7 @@ object Sinks {
     // this function exists to prevent. Real failures propagate.
     val newRows = (if (jdbcTableExists(url, table, props))
       Aggregates.idempotentNewRows(batch, spark.read.jdbc(url, table, props), keys)
-    else batch.dropDuplicates(keys))
+    else Aggregates.dedupByContent(batch, keys))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = newRows.count()

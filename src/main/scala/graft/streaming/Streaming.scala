@@ -66,11 +66,8 @@ object Streaming {
     * counts the batch's rows on its own write and spends no version on
     * zero.
     *
-    * Duplicate keys WITHIN one micro-batch resolve by content: a key's
-    * rows are ordered on every orderable non-key column ascending, nulls
-    * last, and the first survives. Rows that differ in content never tie,
-    * so a crash replay merges the same survivor; only rows that differ in
-    * non-orderable (map-typed) columns alone can still tie.
+    * Duplicate keys WITHIN one micro-batch resolve by content, as in
+    * [[graft.ops.ManifestTable.merge]]: a crash replay keeps the same row.
     *
     * Replays: a micro-batch replayed after a restart re-merges the same
     * rows, which last-write-wins makes a no-op at rest — unless another
@@ -84,15 +81,7 @@ object Streaming {
   def acidMergeSink(df: DataFrame, table: graft.ops.ManifestTable, keys: Seq[String])
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val order = batch.schema.fields.collect {
-        case f if !keys.contains(f.name) &&
-            org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(f.dataType) =>
-          col(s"`${f.name}`").asc_nulls_last
-      }
-      val resolved =
-        if (order.isEmpty) batch
-        else graft.ops.Aggregates.dedupFirst(batch, keys, order.toSeq)
-      table.merge(resolved, keys)
+      table.merge(batch, keys)
       ()
     }
 

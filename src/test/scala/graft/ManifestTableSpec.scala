@@ -56,7 +56,7 @@ class ManifestTableSpec extends SparkSpec {
       walk(new java.io.File(root, "data")).count(_.getName.endsWith(".parquet"))
     }
     val filesBefore = dataFiles()
-    val v = t.compact(numFiles = 1)
+    val v = t.compact()
     assert(v == 3L, s"compact must commit a new version, got $v")
     // readers cannot observe the compaction except through the version log
     assert(t.snapshot().orderBy("k").as[(Long, Double)].collect().toList == before)

@@ -181,6 +181,53 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  private type R = (Option[Long], Option[Int], Option[String])
+
+  test("keyed writes keep the smallest row by content per key, at any partitioning") {
+    // every keyed write resolves a batch's duplicate keys by content: the
+    // row first on (a, b) ascending, nulls last. Duplicates here differ in
+    // content (NULLs included), arrive shuffled, and run at 1 and 7
+    // partitions; each path must keep exactly that row
+    val rnd = new scala.util.Random(16)
+    val root = tempDir("graft-prop-keyed")
+    def opt[T](v: => T): Option[T] = if (rnd.nextInt(4) == 0) None else Some(v)
+    def smallest(rows: Seq[R]): Map[Option[Long], R] =
+      rows.groupBy(_._1).map { case (k, rs) =>
+        k -> rs.minBy(r => (r._2.isEmpty, r._2.getOrElse(0), r._3.isEmpty, r._3.getOrElse("")))
+      }
+    def byKey(df: org.apache.spark.sql.DataFrame): Map[Option[Long], R] = {
+      val rows = df.as[R].collect().toSeq
+      assert(rows.map(_._1).distinct.size == rows.size, s"one row per key: $rows")
+      rows.map(r => r._1 -> r).toMap
+    }
+    for (trial <- 1 to 3) {
+      val batch: Seq[R] = Seq.fill(40)((opt(rnd.nextInt(8).toLong),
+        opt(rnd.nextInt(4)), opt(Seq("x", "y", "z")(rnd.nextInt(3)))))
+      val base: Seq[R] = (0L until 12L by 2L).map(k => (Some(k), Some(-1), Some("base")))
+      val want = smallest(batch)
+      val wantUpsert = base.map(r => r._1 -> r).toMap ++ want
+      val baseDf = base.toDF("k", "a", "b")
+      val existing = baseDf.select("k")
+      for (parts <- Seq(1, 7)) {
+        val df = rnd.shuffle(batch).toDF("k", "a", "b").repartition(parts)
+        val ctx = s"trial $trial, $parts partitions"
+        assert(byKey(graft.ops.Aggregates.upsert(baseDf, df, Seq("k"))) == wantUpsert, ctx)
+        assert(byKey(graft.ops.Aggregates.idempotentNewRows(df, existing, Seq("k"))) ==
+          want.filter { case (k, _) => !base.exists(_._1 == k) }, ctx)
+        val fresh = graft.ops.ManifestTable(spark, s"$root/fresh-$trial-$parts")
+        fresh.merge(df, Seq("k"))
+        assert(byKey(fresh.snapshot()) == want, ctx)
+        val table = graft.ops.ManifestTable(spark, s"$root/existing-$trial-$parts")
+        table.overwrite(baseDf)
+        table.merge(df, Seq("k"))
+        assert(byKey(table.snapshot()) == wantUpsert, ctx)
+        val path = s"$root/sink-$trial-$parts"
+        graft.ops.Sinks.idempotentParquetAppend(spark, df, path, Seq("k"))
+        assert(byKey(spark.read.schema(df.schema).parquet(path)) == want, ctx)
+      }
+    }
+  }
+
   test("substringDupStats == brute window-multiset scan on random repetitive corpora") {
     val rnd = new scala.util.Random(23)
     val vocab = Vector("a", "b", "c", "d")

@@ -143,6 +143,20 @@ class StreamingSpec extends SparkSpec {
     assert(table.snapshotAt(0).count() == 2)
   }
 
+  test("stream -> ACID merge sink: a dotted key names a column, as in merge") {
+    implicit val sqlCtx = spark.sqlContext
+    val table = graft.ops.ManifestTable(spark, tempDir("graft-acid-dotted").toString + "/tbl")
+    val input = MemoryStream[(Long, String)]
+    val q = Streaming.acidMergeSink(input.toDF().toDF("user.id", "v"), table, keys = Seq("user.id"))
+      .option("checkpointLocation", tempDir("graft-acid-dotted-ckpt").toString).start()
+    input.addData((1L, "b"), (1L, "a"), (2L, "c"))
+    q.processAllAvailable()
+    input.addData((2L, "C2"))
+    q.processAllAvailable()
+    q.stop()
+    assert(table.snapshot().as[(Long, String)].collect().toMap == Map(1L -> "a", 2L -> "C2"))
+  }
+
   test("streaming near-dedup against history: dups of earlier batches drop; state survives replay semantics") {
     implicit val sqlCtx = spark.sqlContext
     val dir = tempDir("graft-neardup-sink")
