@@ -641,14 +641,6 @@ final class ManifestTable private (
   private def applied(prev: Option[Manifest], txn: Option[(String, Long)]): Boolean =
     txn.exists { case (sid, b) => prev.exists(_.txns.get(sid).exists(_ >= b)) }
 
-  /** A write's row count observed as metric "rows", or `orElse` when the
-    * observation went missing: AQE replaces a stage it found empty, and an
-    * observation inside it goes missing with it, so only then are the
-    * rows counted another way.
-    */
-  private def observedRows(obs: org.apache.spark.sql.Observation)(orElse: => Long): Long =
-    obs.get.get("rows").fold(orElse)(_.asInstanceOf[Long])
-
   /** One CAS attempt: publish `c` as the version after `prev` (version 0
     * on a fresh table), carrying `prev`'s tokens plus `txn`. None = lost
     * the race: `prev` is no longer the latest. The caller's just-read base
@@ -791,6 +783,14 @@ object ManifestTable {
   private val ScratchPrefix = "scratch-"
   private val ScratchVacuumGraceMs = 24 * 60 * 60 * 1000L
   private val CompactFileBytes = 128L << 20
+
+  /** A write's row count observed as metric "rows", or `orElse` when the
+    * observation went missing: AQE replaces a stage it found empty, and an
+    * observation inside it goes missing with it, so only then are the
+    * rows counted another way.
+    */
+  private[graft] def observedRows(obs: org.apache.spark.sql.Observation)(orElse: => Long): Long =
+    obs.get.get("rows").fold(orElse)(_.asInstanceOf[Long])
 
   private final case class Manifest(
       version: Long, action: String, schemaDdl: String, dirs: Seq[String],

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Sink operators (SURVEY.md §2.5, ops 21-25).
   *
@@ -31,7 +32,16 @@ object Sinks {
     * existing table on the key (the PK + `ON CONFLICT DO NOTHING`
     * semantics), append only the new rows.
     * Re-running with the same batch is a no-op. Creates the table on first
-    * write (op 25's CREATE IF NOT EXISTS).
+    * write (op 25's CREATE IF NOT EXISTS). Returns the rows appended.
+    *
+    * One job: the anti-join and the write run together and the count rides
+    * the write as an observed metric. Reading the table in the job that
+    * appends to it is safe because the read's file list is fixed when the
+    * read is built, and the write's files become visible only when the job
+    * commits; the anti-join never sees the rows it is appending.
+    * A no-op re-run of a non-partitioned table appends no row, but Spark's
+    * writer still leaves one empty `part-00000` file, as it does whenever
+    * partition 0 of an append is empty; a partitioned table gets no file.
     *
     * `partitionBy` should be a low-cardinality derived column (the deaths
     * table partitions by death year) so a 100-TB table prunes on read.
@@ -54,27 +64,25 @@ object Sinks {
     // with a key that is also a partition column, distinct string keys
     // could conflate in the anti-join and silently drop new rows
     val newRows =
-      (if (existsNonEmpty(spark, path))
+      if (existsNonEmpty(spark, path))
         Aggregates.idempotentNewRows(batch, spark.read.schema(batch.schema).parquet(path), keys)
-      else Aggregates.dedupByContent(batch, keys))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // persist so the count and the write share one evaluation of the
-      // dedup + anti-join (the anti-join rescans the existing table)
-      val n = newRows.count()
-      if (n > 0) {
-        val w = newRows.write.mode(SaveMode.Append)
-        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-      }
-      n
-    } finally newRows.unpersist()
+      else Aggregates.dedupByContent(batch, keys)
+    val obs = Observation()
+    val w = newRows.observe(obs, count(lit(1)).as("rows")).write.mode(SaveMode.Append)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
+    // a missing observation means AQE proved the new rows empty and
+    // replaced their plan; re-running `newRows` instead would anti-join
+    // against the rows just written and report 0 for any batch
+    ManifestTable.observedRows(obs)(0L)
   }
 
   /** Idempotent JDBC append: the same dedup + anti-join-on-key contract as
     * [[idempotentParquetAppend]] (`ON CONFLICT DO NOTHING` done
-    * relationally) for stores without native upsert. The anti-join is
-    * materialized (persist + count) BEFORE the append so the write never
-    * scans the table it is inserting into. Creates the table on first write.
+    * relationally) for stores without native upsert. A JDBC read has no
+    * file list fixed at build time, so unlike the parquet sink the
+    * anti-join is materialized (persist + count) BEFORE the append and the
+    * write never scans the table it is inserting into. Creates the table
+    * on first write.
     */
   def idempotentJdbcAppend(
       spark: SparkSession, batch: DataFrame, url: String, table: String,

@@ -5,18 +5,29 @@ import org.apache.spark.sql.functions._
 import graft.Death
 import graft.ops.{Aggregates, Sources, Transforms, Joins}
 
-/** The reference's death staging pipeline as ONE lazy DataFrame expression
-  * (SURVEY.md §3.2; /root/reference/dags/global_dag.py:94-148).
+/** The reference's death staging pipeline (SURVEY.md §3.2; its
+  * `dags/global_dag.py:94-148`), whose corpus is read once per pass
+  * however many consumers the staged frame feeds.
   *
   * Raw fixed-width `death_*` files → byte-sliced fields → sha1 privacy id →
   * multi-format date parse (nulls on `00` months, exactly like strptime
   * failure) → broadcast INSEE→geo lookup (inner: unknown communes dropped)
   * → validity filter → within-batch dedup on id.
   *
-  * Scale: the only non-narrow step is the final dropDuplicates (one hash
-  * shuffle on id); the geo lookup broadcasts (~35k communes in the real
-  * data). At 100 TB the txt scan parallelizes per file-split and the plan is
+  * Scale: the only non-narrow step is the final dedup (one hash shuffle on
+  * id); the geo lookup broadcasts (~35k communes in the real data). At
+  * 100 TB the txt scan parallelizes per file-split and the plan is
   * unchanged.
+  *
+  * Read once: [[apply]] returns the frame over its own executed plan
+  * ([[org.apache.spark.sql.GraftBridge.onExecutedPlan]]), so the first
+  * action writes the dedup's shuffle and every later action (the radius
+  * join, each idempotent append) reads that shuffle output instead of
+  * re-scanning, re-parsing and re-hashing the corpus. Nothing is
+  * persisted: the shuffle files Spark writes anyway are the shared state,
+  * and they live as long as the frame. Building the frame starts the geo
+  * broadcast's job; with AQE it also runs the dedup's shuffle stage then
+  * (one more job), which the first action would otherwise run.
   */
 object StageDeaths {
 
@@ -41,7 +52,13 @@ object StageDeaths {
       .withColumn("date_of_birth", Transforms.parseDateMulti(col("birth_raw")))
       .withColumn("date_of_death", Transforms.parseDateMulti(col("death_raw")))
 
-  def apply(spark: SparkSession, deathGlob: String, cityGeoPath: String): DataFrame = {
+  def apply(spark: SparkSession, deathGlob: String, cityGeoPath: String): DataFrame =
+    org.apache.spark.sql.GraftBridge.onExecutedPlan(plan(spark, deathGlob, cityGeoPath))
+
+  /** The staging as one lazy expression, which every action re-runs from
+    * the raw files; [[apply]] shares one run of it.
+    */
+  private[graft] def plan(spark: SparkSession, deathGlob: String, cityGeoPath: String): DataFrame = {
     graft.Prep.ensure(spark)
     val parsed = parsedRecords(spark.read.text(deathGlob))
     // the op-10 helper IS this filter (null + NaN per dtype) — one

@@ -40,6 +40,24 @@ object GraftBridge {
       case _ => false
     }
 
+  /** `ds` as a leaf over its own executed plan: the `LogicalRDD` that
+    * `checkpoint` builds, with nothing persisted or checkpointed. Every
+    * action on the result runs the same RDD, so a shuffle inside `ds`
+    * writes its map output once and later actions skip that stage; the
+    * work up to the first shuffle (scan, parse, broadcast) runs once.
+    * The leaf keeps `ds`'s statistics and the partitioning and ordering
+    * its executed plan claims; under AQE, whose final plan may coalesce
+    * shuffle partitions, that claim is `UnknownPartitioning`. Building it
+    * prepares `ds`'s physical plan, which starts its broadcasts' jobs;
+    * under AQE it also runs `ds`'s shuffle stages (as a lazy
+    * `localCheckpoint` does).
+    */
+  def onExecutedPlan(ds: Dataset[_]): DataFrame = {
+    val c = ds.asInstanceOf[classic.Dataset[_]]
+    classic.Dataset.ofRows(c.sparkSession,
+      execution.LogicalRDD.fromDataset(c.queryExecution.toRdd, c, isStreaming = false))
+  }
+
   /** Delete `dir` recursively when the JVM shuts down, after the
     * SparkContext has stopped (Spark's own temp-dir hook; registering a
     * dir twice is a no-op).

@@ -90,4 +90,90 @@ class PipelineSpec extends SparkSpec {
     assert(stored.count() == 1)
     assert(stored.where(col("death_year") === "2022").count() == 1) // partition pruning path
   }
+
+  test("one StageDeaths frame feeds three actions from one read of the corpus, AQE on and off") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    // a corpus that dwarfs every other input the actions read: 3,000 lines
+    // over 30 names (each name's copies differ in birth year, so the dedup
+    // has a survivor to choose), half of them near the Belleville plant
+    val d = tempDir("graft-shared")
+    (0 until 3).foreach { f =>
+      Files.writeString(d.resolve(s"death_$f.txt"), (0 until 1000).map { i =>
+        deathLine(f"NAME${i % 30}%02d*SHARED/", f"19${40 + i / 30 % 50}%02d0101", "20220804",
+          if (i % 2 == 0) "01007" else "18026")
+      }.mkString("\n"))
+    }
+    Files.writeString(d.resolve("city_geo.csv"),
+      """code_commune_INSEE,nom_commune,latitude,longitude
+        |01007,AMBRONAY,46.005,5.359
+        |18026,BELLEVILLE,47.51,2.87
+        |""".stripMargin)
+    val corpusBytes = (0 until 3).map(f => Files.size(d.resolve(s"death_$f.txt"))).sum
+    val plants = StagePlants(spark, s"$dir/thermal.csv", s"$dir/nuclear.csv")
+      .select(col("plant_name"), col("latitude").as("p_lat"), col("longitude").as("p_lon"))
+    def perPlant(deaths: DataFrame): Seq[String] =
+      graft.ops.Joins.radiusJoin(deaths, plants, deaths("latitude"), deaths("longitude"),
+          plants("p_lat"), plants("p_lon"),
+          radiusKm = 10.0, latCellDeg = 0.1, lonCellDeg = 0.15, maxAbsLatDeg = 52.0)
+        .groupBy(col("plant_name"), year(col("date_of_death")).as("year"))
+        .agg(count(lit(1)).as("n")).collect().map(_.toString).sorted.toSeq
+    def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytesRead.addAndGet(m.inputMetrics.bytesRead))
+    }
+    val conf = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    val was = conf.map(spark.conf.get)
+    try Seq("true", "false").foreach { aqe =>
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val store = tempDir("graft-shared-store").toString + "/deaths"
+      def append(deaths: DataFrame): Long =
+        graft.ops.Sinks.idempotentParquetAppend(spark,
+          deaths.withColumn("death_year", year(col("date_of_death"))), store,
+          keys = Seq("id"), partitionBy = Seq("death_year"))
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      bytesRead.set(0L)
+      spark.sparkContext.addSparkListener(listener)
+      val shared = StageDeaths(spark, s"$d/death_*", s"$d/city_geo.csv")
+      val (counts, n1, n2) =
+        try (perPlant(shared), append(shared), append(shared))
+        finally {
+          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      // the unshared plan re-reads the corpus once per action (3x)
+      assert(bytesRead.get >= corpusBytes && bytesRead.get < 2 * corpusBytes,
+        s"AQE $aqe: read ${bytesRead.get} bytes for a $corpusBytes-byte corpus")
+      val unshared = StageDeaths.plan(spark, s"$d/death_*", s"$d/city_geo.csv")
+      assert(counts == perPlant(unshared) && counts.exists(_.startsWith("[BELLEVILLE 1,")))
+      assert(rowsOf(shared) == rowsOf(unshared) && unshared.count() == 30)
+      assert(n1 == 30 && n2 == 0 && spark.read.parquet(store).count() == 30)
+      // the leaf claims its shuffle's hash partitioning only where the RDD
+      // is that partitioning (no AQE coalescing); a join on id must agree
+      // with the unshared plan at any partition count of the other side
+      val claimed = shared.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.outputPartitioning
+      }
+      assert(claimed.size == 1)
+      claimed.head match {
+        case h: HashPartitioning =>
+          assert(aqe == "false" &&
+            h.numPartitions == spark.conf.get("spark.sql.shuffle.partitions").toInt)
+        case p => assert(p.isInstanceOf[UnknownPartitioning], s"AQE $aqe: claims $p")
+      }
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val other = StageDeaths.plan(spark, s"$d/death_*", s"$d/city_geo.csv")
+        .select(col("id"), col("date_of_birth").as("dob2"))
+      (1 to 7).foreach { n =>
+        val o = other.repartition(n, col("id"))
+        assert(rowsOf(shared.join(o, "id")) == rowsOf(unshared.join(o, "id")),
+          s"AQE $aqe: join on id against $n partitions")
+      }
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", was(1))
+    } finally conf.zip(was).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }

@@ -83,6 +83,50 @@ class SourcesSinksSpec extends SparkSpec {
     assert(stored.where($"yr" === "2023").count() == 1)
   }
 
+  test("idempotentParquetAppend returns the rows it added, in one job, AQE on and off") {
+    def files(path: String): Set[String] = {
+      val root = java.nio.file.Paths.get(path)
+      val s = Files.walk(root)
+      try s.filter(p => Files.isRegularFile(p)).map(p => root.relativize(p).toString)
+        .toArray.map(_.toString).toSet
+      finally s.close()
+    }
+    def stored(path: String): Long = spark.read.parquet(path).count()
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    try Seq("true", "false").foreach { aqe =>
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val root = tempDir("graft-sink-obs")
+      val batch1 = Seq((1, "2022", "a"), (2, "2022", "b"), (2, "2022", "c")).toDF("id", "yr", "v")
+      val batch2 = Seq((2, "2022", "b"), (3, "2023", "d")).toDF("id", "yr", "v")
+      Seq(Seq("yr"), Nil).foreach { part =>
+        val path = root.resolve(s"t${part.size}").toString
+        def append(b: org.apache.spark.sql.DataFrame): Long =
+          Sinks.idempotentParquetAppend(spark, b, path, Seq("id"), part)
+        val where = s"AQE $aqe, partitionBy $part"
+        assert(append(batch1) == 2 && stored(path) == 2, where) // fresh path
+        assert(append(batch2) == 1 && stored(path) == 3, where) // existing path
+        val before = files(path)
+        assert(append(batch2) == 0 && stored(path) == 3, where) // no-op re-run
+        // partitioned: no file at all; flat: Spark's writer may leave one
+        // empty part file (documented on the sink), never a row
+        if (part.nonEmpty) assert(files(path) == before, where)
+        assert(append(batch2.where(lit(false))) == 0 && stored(path) == 3, where)
+        val fresh = root.resolve(s"empty${part.size}").toString
+        assert(Sinks.idempotentParquetAppend(
+          spark, batch1.where(lit(false)), fresh, Seq("id"), part) == 0, where)
+        assert(Sinks.idempotentParquetAppend(spark, batch1, fresh, Seq("id"), part) == 2, where)
+        assert(stored(fresh) == 2, where)
+      }
+      if (aqe == "false") {
+        // the count rides the write: no persist + count job before it
+        val path = root.resolve("onejob").toString
+        var n = -1L
+        val jobs = jobsRunBy { n = Sinks.idempotentParquetAppend(spark, batch1, path, Seq("id"), Seq("yr")) }
+        assert(n == 2 && jobs == 1, s"a fresh-path append ran $jobs jobs")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+  }
+
   test("op21: writeIfNonEmpty skips the write for empty frames") {
     var written = 0
     assert(!Sinks.writeIfNonEmpty(Seq.empty[Int].toDF("x"), _ => written += 1))
